@@ -4,13 +4,12 @@
     python3 perfbench/run.py --workload contract_mix --seed 7 --seconds 12 --trace 0
 
 Run from the root of a checkout. The first run builds the engine and this
-package from source with sbt (offline) into .bench_build/, together with a
-class-data-sharing archive the measured JVM starts from. Each run then
+package from source with sbt (offline) into .bench_build/. Each run then
 starts one leg JVM (perfbench.Leg), pinned with taskset to all nproc cores,
 which
 
   1. generates the workload's input from the seed with graft.corpus.CorpusGen;
-  2. warms up at local[nproc/2]; for untraced contract_mix it then measures
+  2. warms up at local[nproc/2]; for traced contract_mix it then measures
      the N-core leg, N = max(1, nproc/4), on N/nproc of the input, for
      scaling_eff;
   3. times the workload's passes at local[nproc] and checks its output
@@ -33,30 +32,27 @@ import statistics
 import subprocess
 import sys
 import time
-import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BENCH = os.path.join(ROOT, "perfbench")
 BUILD = os.path.join(ROOT, ".bench_build", "perfbench")
 
-WORKLOADS = ("contract_mix", "resume_enhanced", "near_dup")
+WORKLOADS = ("contract_mix", "resume_enhanced")
 # Input files per measured core; a file holds 200 rows (two 100-row blocks
 # of the CorpusGen mix) and is one Spark task.
 FILES_PER_CORE = 5
-# contract_mix: share of --seconds the nproc leg measures; the N-core leg
-# gets the rest.
-BIG_LEG_SHARE = 0.65
+# Traced contract_mix: share of --seconds the N-core leg measures.
+SMALL_LEG_SHARE = 0.25
 # Untimed passes before the timed ones, at local[nproc/2] so the JIT, which
-# compiles the engine for the first 20-30 s of passes, has cores to itself.
-WARM_SECONDS = 5
+# compiles the engine for the first 30-40 s of passes, has cores to itself.
+WARM_SECONDS = 10
 # Layer groups each workload exercises; a traced run reports 0 for the
 # per-layer metrics of every other group (that layer does no work there).
 LAYER_GROUPS = {
     "contract_mix": {"extract", "html", "pdf", "tables", "analyzers", "encode",
-                     "spark", "trace", "class"},
+                     "spark", "trace", "class", "scaling_eff"},
     "resume_enhanced": {"extract", "html", "pdf", "tables", "analyzers", "encode",
                         "spark", "trace", "class", "checkpoint"},
-    "near_dup": {"dedup", "spark", "trace"},
 }
 ADD_OPENS = [
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
@@ -105,14 +101,6 @@ def stamp():
     return h.hexdigest()
 
 
-def jar_dir(d, out):
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_STORED) as z:
-        for base, _, files in os.walk(d):
-            for f in sorted(files):
-                p = os.path.join(base, f)
-                z.write(p, os.path.relpath(p, d))
-
-
 def build():
     """Compiles with sbt when the sources changed; returns the classpath."""
     digest = stamp()
@@ -138,44 +126,23 @@ def build():
     if r.returncode != 0 or not lines:
         sys.stderr.write(r.stdout[-4000:] + r.stderr[-4000:])
         raise RuntimeError("sbt build failed")
-    # class directories become jars: the class-data-sharing archive only
-    # takes classes from jars
-    entries = []
-    for i, e in enumerate(lines[-1].strip().split(os.pathsep)):
-        if os.path.isdir(e):
-            out = os.path.join(BUILD, f"classes-{i}.jar")
-            jar_dir(e, out)
-            entries.append(out)
-        elif os.path.exists(e):
-            entries.append(e)
-    cp = os.pathsep.join(entries)
+    cp = lines[-1].strip()
     with open(cp_file, "w") as f:
         f.write(cp)
-    log("archiving the classes the legs load")
-    warm = os.path.join(BUILD, "warmup")
-    java(cpus(), "perfbench.Warmup", ["--work", warm], cp, warm, 600,
-         [f"-XX:ArchiveClassesAtExit={archive()}"])
-    shutil.rmtree(warm, ignore_errors=True)
     with open(stamp_file, "w") as f:
         f.write(digest)
     return cp
 
 
-def archive():
-    return os.path.join(BUILD, "legs.jsa")
-
-
 # ---------------------------------------------------------------- legs
 
-def java(cores, main, args, cp, work, timeout, extra=()):
+def java(cores, main, args, cp, work, timeout):
     """Runs `main` pinned to `cores`; returns (stdout lines, seconds)."""
     os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
     opts = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in ADD_OPENS]
     opts += [f"-Xmx{heap_mb()}m", "-XX:+UseParallelGC", "-XX:NewRatio=1",
              f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}"]
-    if not extra and os.path.exists(archive()):
-        opts.append(f"-XX:SharedArchiveFile={archive()}")
-    cmd = ["taskset", "-c", ",".join(map(str, cores)), "java", *opts, *extra,
+    cmd = ["taskset", "-c", ",".join(map(str, cores)), "java", *opts,
            "-cp", cp, main, *args, "--t0-ns", str(time.time_ns())]
     t = time.monotonic()
     log_path = os.path.join(work, f"{main}.log")
@@ -213,16 +180,15 @@ def run(workload, seed, seconds, trace):
     small = cores[-max(1, len(cores) // 4):]
     files = FILES_PER_CORE * len(cores)
     inputs = os.path.join(work, "input")
-    scaled = workload == "contract_mix" and not trace
-    big_s = seconds * BIG_LEG_SHARE if scaled else seconds
+    scaled = workload == "contract_mix" and trace
     leg_lines, leg_s = java(cores, "perfbench.Leg", [
         "--workload", workload, "--seed", str(seed), "--cores", str(len(cores)),
         "--cpus", ",".join(map(str, cores)),
         "--input", inputs, "--files", str(files), "--work", os.path.join(work, "leg"),
-        "--seconds", str(big_s), "--warm-cores", str(max(1, len(cores) // 2)),
+        "--seconds", str(seconds), "--warm-cores", str(max(1, len(cores) // 2)),
         "--warm-seconds", str(WARM_SECONDS), "--trace", str(trace),
         "--small-cores", str(len(small) if scaled else 0), "--small-cpus", ",".join(map(str, small)),
-        "--small-files", str(FILES_PER_CORE * len(small)), "--small-seconds", str(seconds - big_s)],
+        "--small-files", str(FILES_PER_CORE * len(small)), "--small-seconds", str(seconds * SMALL_LEG_SHARE)],
         cp, work, 170)
     leg = tagged(leg_lines, "LEG")
     log(f"{workload}: leg JVM {leg_s:.1f} s; passes at {len(cores)} cores "
@@ -231,15 +197,15 @@ def run(workload, seed, seconds, trace):
 
     figures = {k: v for k, v in leg.items() if isinstance(v, (int, float))}
     figures["failed_share"] = leg["check_failed"] / leg["check_attempted"]
+    docs_per_s = rate(leg["docs"], leg["pass_s"])
     if not trace:
-        docs_per_s = rate(leg["docs"], leg["pass_s"])
         figures.update({
             "docs_per_s": docs_per_s,
             "payload_mb_per_s": leg["payload_bytes"] / 1e6 / statistics.median(leg["pass_s"]),
         })
-        if scaled:
-            figures["scaling_eff"] = docs_per_s / (
-                len(cores) / len(small) * rate(leg["small_docs"], leg["small_pass_s"]))
+    if scaled:
+        figures["scaling_eff"] = docs_per_s / (
+            len(cores) / len(small) * rate(leg["small_docs"], leg["small_pass_s"]))
     return figures, leg["check_attempted"], leg["check_failed"]
 
 
@@ -277,8 +243,6 @@ def main():
     extra = ""
     if not a.trace:
         extra = f", failed_share={figures['failed_share']:.6g} ratio"
-        if "scaling_eff" in figures:
-            extra += f", scaling_eff={figures['scaling_eff']:.6g} ratio"
         if "resume_s" in figures:
             extra += f", resume_s={figures['resume_s']:.6g} s"
     print(f"perfbench {a.workload} seed={a.seed}: {summary}{extra}")

@@ -79,7 +79,13 @@ object Session {
     s
   }
 
-  /** Peak resident memory of this process so far (VmHWM), in MB. */
+  /** Sets this process's peak-memory mark (VmHWM) back to its current
+    * resident memory. Heap the JVM committed earlier and still holds stays
+    * resident, so it still counts. */
+  def resetPeakRss(): Unit =
+    java.nio.file.Files.write(java.nio.file.Paths.get("/proc/self/clear_refs"), "5".getBytes)
+
+  /** Peak resident memory of this process since the last reset (VmHWM), in MB. */
   def peakRssMb(): Double = {
     val src = scala.io.Source.fromFile("/proc/self/status")
     try src.getLines().collectFirst {

@@ -45,56 +45,12 @@ object Inputs {
     d.map(b => f"${b & 0xff}%02x").mkString
   }
 
-  // ------------------------------------------------------------- near_dup
-
-  /** Ids of planted copies start here; an original keeps its row index. */
-  val CopyIdBase: Long = 1L << 40
-
-  private def mix(x: Long): Long = { // splitmix64 finaliser
-    var z = x + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  /** One in ten HTML article rows gets a planted near-duplicate copy. Only
-    * article rows (50+ words) are planted: a one-word edit keeps their
-    * shingle Jaccard at 0.88 or more, well above the 0.7 threshold, so a
-    * missed pair is the engine's miss and not MinHash sampling noise. */
-  def isPlanted(seed: Long, i: Long): Boolean =
-    i % 100 < 70 && java.lang.Long.remainderUnsigned(mix(seed * 31 + i), 10) == 0
-
-  /** The copy: the word after the middle space replaced by "revised". */
-  def plantedCopy(text: String): String = {
-    val mid = text.indexOf(' ', text.length / 2)
-    require(mid > 0, "planted text needs at least two words")
-    var end = mid + 1
-    while (end < text.length && !Character.isWhitespace(text.charAt(end))) end += 1
-    text.substring(0, mid + 1) + "revised" + text.substring(end)
-  }
-
-  /** near_dup rows for one index: the original text, and its copy when
-    * planted. Rows without text (images, empty and corrupt payloads) are
-    * left out: identical empty texts are trivially duplicates of each other
-    * and would only measure the LSH mega-bucket guard. */
-  def nearDupRows(seed: Long, i: Long): Seq[(Long, String)] =
-    CorpusGen.expectedText(i) match {
-      case Some(t) if t.trim.nonEmpty =>
-        if (isPlanted(seed, i)) Seq((i, t), (CopyIdBase + i, plantedCopy(t))) else Seq((i, t))
-      case _ => Nil
-    }
-
-  def kindOf(workload: String): String = if (workload == "near_dup") "near_dup" else "contract"
-
-  /** Writes `files` input files of `kind` for `seed` to `out`. */
-  def write(spark: SparkSession, kind: String, seed: Long, files: Int, out: String): Unit = {
+  /** Writes `files` CorpusGen input files for `seed` to `out`. */
+  def write(spark: SparkSession, seed: Long, files: Int, out: String): Unit = {
     import spark.implicits._
     val from = offset(seed)
-    val rows = spark.range(from, from + files.toLong * RowsPerFile, 1, files)
-    val df = kind match {
-      case "contract" => rows.map(CorpusGen.row(_)).toDF()
-      case "near_dup" => rows.flatMap(i => nearDupRows(seed, i)).toDF("id", "text")
-    }
-    df.write.mode("overwrite").parquet(out)
+    spark.range(from, from + files.toLong * RowsPerFile, 1, files)
+      .map(CorpusGen.row(_)).toDF()
+      .write.mode("overwrite").parquet(out)
   }
 }

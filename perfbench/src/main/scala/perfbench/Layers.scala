@@ -2,8 +2,7 @@ package perfbench
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions.col
 
@@ -40,24 +39,6 @@ object Layers {
 
   private def contractInput(df: DataFrame): DataFrame =
     df.select(col("url"), col("warc_ts"), col("html"), col("lang"))
-
-  /** `Pipeline.run`'s map with one `extract` span around every
-    * `Extractor.extract` call and nothing else: the pass whose throughput,
-    * set against the untraced pass, gives the tracing overhead. */
-  def spannedRun(df: DataFrame, analysis: Boolean): Dataset[DocResult] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    contractInput(df).as[Pipeline.InputRow].mapPartitions { rows =>
-      val t = new TaskTrace
-      TaskContext.get().addTaskCompletionListener[Unit](_ => Tracer.finish(t))
-      rows.map { r =>
-        val t0 = System.nanoTime()
-        val d = Extractor.extract(r.url, r.warc_ts, r.html, r.lang, analysis)
-        t.record(Extract, t0, System.nanoTime(), -1, -1)
-        d
-      }
-    }
-  }
 
   /** The layer pass: decode each input row with the `InputRow` encoder,
     * extract it, encode the `DocResult`, then replay every layer call. */
@@ -164,10 +145,11 @@ object Layers {
       blocks, content, nTables)
   }
 
-  /** Per-layer figures from the traces of one replay pass. Every
-    * `*_us_per_doc` divides by all documents of the pass, so the layers of
-    * one document class add up to `extract.total_us_per_doc`. */
-  def summarize(traces: Seq[TaskTrace]): Map[String, Double] = {
+  /** Per-layer figures from the traces of `passes` replay passes. Every
+    * `*_us_per_doc` divides by all documents traced, so the layers of one
+    * document class add up to `extract.total_us_per_doc`; status counts
+    * are per pass. */
+  def summarize(traces: Seq[TaskTrace], passes: Int): Map[String, Double] = {
     val nLayers = Tracer.Layers.length
     // nanoseconds by [class][layer]; class 0 = typical, 1 = mega
     val ns = Array.ofDim[Double](2, nLayers)
@@ -216,8 +198,7 @@ object Layers {
     m += "html.content_block_ratio" -> (if (blocks > 0) content / blocks else 0.0)
     m += "pdf.pages_per_doc" -> (if (pdfDocs > 0) pdfPages / pdfDocs else 0.0)
     m += "tables.enhance_us_per_table" -> (if (tables > 0) us("tables.enhance") / tables else 0.0)
-    m += "extract.docs" -> docs
-    Seq("ok", "empty", "error", "unsupported", "oversize").foreach(s => m += s"extract.status.$s" -> status(s))
+    Seq("ok", "empty", "error", "unsupported", "oversize").foreach(s => m += s"extract.status.$s" -> status(s) / passes)
     m.result()
   }
 

@@ -8,15 +8,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.extract.Pipeline
-import graft.ops.{Checkpoint, Dedup}
+import graft.ops.Checkpoint
 
 /** The measured legs of one run: a child JVM, pinned by the launcher to
   * `--cores` cores, that writes the workload's input, warms up, measures
-  * the N-core leg if asked, then runs the workload at local[cores] and
-  * checks its output.
+  * the N-core leg if asked (traced contract_mix), then runs the workload
+  * at local[cores] and checks its output.
   * Prints a single `LEG {...}` line of raw figures. Options:
   *
-  *   --workload contract_mix|resume_enhanced|near_dup --seed N
+  *   --workload contract_mix|resume_enhanced --seed N
   *   --cores N --input DIR --files F (input files to write and read)
   *   --work DIR (scratch) --seconds S (timed-pass budget)
   *   --warm-cores C --warm-seconds W (untimed passes first, for the JIT)
@@ -57,17 +57,19 @@ object Leg {
     val trace = o.flag("trace")
     val seconds = o.double("seconds")
     // Warm-up runs at local[warm-cores] (half the cores): the JIT compiles
-    // this engine with ~1.5 cores for its first ~20 s of passes, and with
-    // cores left free it finishes in the warm-up instead of in the timed
-    // passes.
+    // this engine with ~1.5 cores for its first 30-40 s of passes, and with
+    // cores left free it gets further in the warm-up, so the timed passes
+    // meet a steadier JIT.
     def phase(name: String): Unit =
       System.err.println(f"perfbench phase $name at ${(Stats.epochNs() - t0) / 1e9}%.1f s")
-    var spark = Session.create(o.int("warm-cores"), work)
+    var spark = Session.create(cores, work)
     val sessionS = (Stats.epochNs() - t0) / 1e9
     try {
-      Inputs.write(spark, Inputs.kindOf(workload), o.long("seed"), files, input)
-      val (warmDf, resolveS) = resolve(spark, input, files)
+      Inputs.write(spark, o.long("seed"), files, input)
+      spark.stop()
       phase("input written")
+      spark = Session.create(o.int("warm-cores"), work)
+      val (warmDf, resolveS) = resolve(spark, input, files)
       val state = new RunState
       new Leg(spark, warmDf, o.int("warm-cores"), work, state).warm(workload, o.double("warm-seconds"))
       spark.stop()
@@ -91,8 +93,9 @@ object Leg {
       spark = Session.create(cores, work)
       val (df, _) = resolve(spark, input, files)
       val leg = new Leg(spark, df, cores, work, state)
-      // a traced run keeps ~60% of its time for the traced passes
-      val measured = leg.measure(workload, if (trace) seconds * 0.4 else seconds)
+      // a traced run gives these passes 0.3 of its seconds and the layer
+      // passes most of the rest (the N-core leg had 0.25)
+      val measured = leg.measure(workload, if (trace) seconds * 0.3 else seconds)
       val rss = Session.peakRssMb()
       phase("measured")
       val figures = measured.figures ++ (if (trace) leg.traced(workload, measured, seconds) else Nil) ++
@@ -171,10 +174,6 @@ final class RunState {
   var invalidated = Seq.empty[Int]
   var invalidDocs = 0L
   var recomputed = Vector.empty[(Long, Long, Int)] // docs, bytes, buckets per resume
-  // near_dup: the output of the last timed pass and, traced, the
-  // components of a split run
-  var lastDedup: DataFrame = _
-  var components: Option[DataFrame] = None
 }
 
 final class Leg(spark: SparkSession, df: DataFrame, cores: Int, work: String, state: RunState) {
@@ -204,10 +203,8 @@ final class Leg(spark: SparkSession, df: DataFrame, cores: Int, work: String, st
   private def contractPass(analysis: Boolean): Unit =
     noop(Pipeline.contractView(Pipeline.run(df, analysis = analysis)))
 
-  private def dedup(): DataFrame = Dedup.dedupByMinhash(df, "id", "text")
-
-  private def payloadBytes(column: String): Double =
-    df.agg(sum(octet_length(col(column)))).head().getLong(0).toDouble
+  private def htmlBytes: Double =
+    df.agg(sum(octet_length(col("html")))).head().getLong(0).toDouble
 
   /** resume_enhanced: invalidates the fixed buckets and resumes. */
   private def resume(): Unit = {
@@ -236,30 +233,26 @@ final class Leg(spark: SparkSession, df: DataFrame, cores: Int, work: String, st
         }
         // the full run counts as the first warm-up pass
         timed(left, if (first) 0 else 1)(resume())
-      case "near_dup" => timed(left, 1)(noop(dedup()))
       case w => sys.error(s"unknown workload $w")
     }
   }
 
-  /** One untimed pass in this session, then timed passes for `budgetS`. */
+  /** One untimed pass in this session, then timed passes for `budgetS`.
+    * The peak-memory mark is reset in between, so `peak_rss_mb` leaves out
+    * input generation and warm-up. */
   def measure(workload: String, budgetS: Double): Measured = {
     warm(workload, 0)
+    Session.resetPeakRss()
     workload match {
       case "contract_mix" =>
         val passS = metrics.tagged("timed")(timed(budgetS, 3)(contractPass(analysis = false)))
-        Measured(df.count().toDouble, payloadBytes("html"), passS)
+        Measured(df.count().toDouble, htmlBytes, passS)
       case "resume_enhanced" =>
         state.recomputed = Vector.empty
         val passS = metrics.tagged("timed")(timed(budgetS, 3)(resume()))
         val r = state.recomputed
         Measured(Stats.median(r.map(_._1.toDouble)), Stats.median(r.map(_._2.toDouble)), passS,
           Seq("resume_s" -> Stats.median(passS)))
-      case "near_dup" =>
-        val passS = metrics.tagged("timed")(timed(budgetS, 3) {
-          state.lastDedup = dedup()
-          noop(state.lastDedup)
-        })
-        Measured(df.count().toDouble, payloadBytes("text"), passS)
     }
   }
 
@@ -271,8 +264,7 @@ final class Leg(spark: SparkSession, df: DataFrame, cores: Int, work: String, st
     val counters = sparkFigures("timed", m)
     workload match {
       case "contract_mix" =>
-        counters ++ traceOverhead(analysis = false, seconds * 0.3) ++
-          layerFigures(analysis = false)
+        counters ++ layerFigures(analysis = false, seconds * 0.45)
       case "resume_enhanced" =>
         val readMs = (0 until 3).map { _ =>
           val t = System.nanoTime()
@@ -283,17 +275,7 @@ final class Leg(spark: SparkSession, df: DataFrame, cores: Int, work: String, st
           "checkpoint.buckets_recomputed" -> Stats.median(state.recomputed.map(_._3.toDouble)),
           "checkpoint.recompute_ratio" -> m.docs / state.invalidDocs,
           "checkpoint.metrics_read_ms" -> Stats.median(readMs)) ++
-          traceOverhead(analysis = true, seconds * 0.2) ++
-          layerFigures(analysis = true)
-      case "near_dup" =>
-        var runs = Vector.empty[(Double, Double, Double, DataFrame, DataFrame)]
-        val (plain, split) = alternate(seconds * 0.3)(noop(dedup()), runs :+= splitDedup())
-        state.components = Some(runs.head._5)
-        counters ++ Seq(
-          "dedup.pairs_s" -> Stats.median(runs.map(_._1)),
-          "dedup.components_s" -> Stats.median(runs.map(_._2)),
-          "dedup.pairs" -> runs.head._4.count().toDouble) ++
-          overhead(m.docs / Stats.median(plain), m.docs / Stats.median(split))
+          layerFigures(analysis = true, seconds * 0.6)
     }
   }
 
@@ -310,25 +292,8 @@ final class Leg(spark: SparkSession, df: DataFrame, cores: Int, work: String, st
       "spark.tasks_per_pass" -> t.tasks / passes,
       "spark.scan_ms_per_pass" -> t.scanMs / passes,
       "spark.output_bytes_per_doc" -> t.outputBytes / (m.docs * passes),
-      "spark.shuffle_write_bytes" -> t.shuffleWriteBytes / passes,
-      "spark.shuffle_fetch_wait_ms" -> t.shuffleFetchWaitMs / passes,
       "spark.spill_bytes" -> t.spillBytes / passes)
   }
-
-  /** Tracing overhead: untraced passes and passes with one span per
-    * document, in A-B-B-A order so the JIT's and the host's drift fall on
-    * both alike. */
-  private def traceOverhead(analysis: Boolean, budgetS: Double): Seq[(String, Any)] = {
-    val docs = df.count().toDouble
-    val (plain, spanned) = alternate(budgetS)(contractPass(analysis),
-      noop(Pipeline.contractView(Layers.spannedRun(df, analysis))))
-    Tracer.drain()
-    overhead(docs / Stats.median(plain), docs / Stats.median(spanned))
-  }
-
-  private def overhead(untraced: Double, traced: Double): Seq[(String, Any)] =
-    Seq("trace.untraced_docs_per_s" -> untraced, "trace.traced_docs_per_s" -> traced,
-      "trace.overhead_share" -> (1.0 - traced / untraced))
 
   /** Seconds of passes of `a` and of `b`, run A-B-B-A (at least once
     * through) while another round fits `budgetS`. */
@@ -343,24 +308,21 @@ final class Leg(spark: SparkSession, df: DataFrame, cores: Int, work: String, st
     (as, bs)
   }
 
-  private def layerFigures(analysis: Boolean): Seq[(String, Any)] = {
+  /** The layer passes ([[Layers.replayPass]]) against untraced passes of
+    * the same extraction, A-B-B-A within `budgetS`: the per-layer figures
+    * come from every layer pass, and the tracing overhead is measured on
+    * those same passes. */
+  private def layerFigures(analysis: Boolean, budgetS: Double): Seq[(String, Any)] = {
+    val docs = df.count().toDouble
     Tracer.drain()
-    metrics.tagged("replay")(Layers.replayPass(df, analysis))
+    val (plain, traced) = alternate(budgetS)(contractPass(analysis), Layers.replayPass(df, analysis))
     val traces = Tracer.drain()
     Layers.writeSpans(traces, Paths.get(work, "spans.tsv"))
-    Layers.summarize(traces).toSeq
-  }
-
-  /** dedupByMinhash in its three steps, each materialised and timed:
-    * (pairs s, components s, final anti-join s, pairs, components). */
-  private def splitDedup(): (Double, Double, Double, DataFrame, DataFrame) = {
-    val t0 = System.nanoTime()
-    val pairs = Dedup.minhashDupPairs(df, "id", "text").localCheckpoint()
-    val t1 = System.nanoTime()
-    val comps = Dedup.components(pairs).localCheckpoint()
-    val t2 = System.nanoTime()
-    noop(df.join(comps.filter(col("id") =!= col("component")).select(col("id")), Seq("id"), "left_anti"))
-    ((t1 - t0) / 1e9, (t2 - t1) / 1e9, Stats.secondsSince(t2), pairs, comps)
+    val untracedRate = docs / Stats.median(plain)
+    val tracedRate = docs / Stats.median(traced)
+    Layers.summarize(traces, traced.length).toSeq ++ Seq(
+      "trace.untraced_docs_per_s" -> untracedRate, "trace.traced_docs_per_s" -> tracedRate,
+      "trace.overhead_share" -> (1.0 - tracedRate / untracedRate))
   }
 
   // --------------------------------------------------------------- check
@@ -373,8 +335,6 @@ final class Leg(spark: SparkSession, df: DataFrame, cores: Int, work: String, st
       case "resume_enhanced" =>
         checkContract(Checkpoint.output(spark, state.checkpointDir)
           .select(col("url"), col("status"), col("fullText").as("text")))
-      case "near_dup" =>
-        checkNearDup()
     }
     Seq("check_attempted" -> attempted, "check_failed" -> failed)
   }
@@ -402,29 +362,6 @@ final class Leg(spark: SparkSession, df: DataFrame, cores: Int, work: String, st
     }
     report(wrong ++ Seq.fill(extra.toInt)("unexpected url"))
     (urls.length.toLong, extra + wrong.length)
-  }
-
-  /** The last timed pass's deduplicated output must hold exactly the
-    * originals: every planted copy dropped, no original dropped. A traced
-    * run also requires every planted copy in its original's component and
-    * every other original alone. */
-  private def checkNearDup(): (Long, Long) = {
-    val ids = df.select(col("id")).as[Long].collect()
-    val kept = state.lastDedup.select(col("id")).as[Long].collect().toSet
-    val label = state.components.map(_.select(col("id"), col("component")).as[(Long, Long)].collect().toMap)
-    val idSet = ids.toSet
-    val wrong = ids.toSeq.flatMap { id =>
-      val original = if (id >= Inputs.CopyIdBase) id - Inputs.CopyIdBase else id
-      val planted = idSet.contains(Inputs.CopyIdBase + original)
-      val clustered = label.forall { l =>
-        if (planted) l.get(id).contains(original) else l.get(id).forall(_ == id)
-      }
-      if (!clustered) Some(if (planted) "planted pair not clustered" else "original merged")
-      else if (kept.contains(id) != (id < Inputs.CopyIdBase)) Some("wrong row kept or dropped")
-      else None
-    }
-    report(wrong)
-    (ids.length.toLong, wrong.length.toLong)
   }
 
   /** Failures go to stderr, counted by kind, so a finding names its rows. */

@@ -14,7 +14,7 @@ final class SparkMetrics(spark: SparkSession) {
     var tasks = 0L
     val taskMs = mutable.ArrayBuffer[Double]()
     var runMs, gcMs = 0.0
-    var shuffleWriteBytes, shuffleFetchWaitMs, spillBytes, outputBytes = 0.0
+    var spillBytes, outputBytes = 0.0
     var scanMs = 0.0 // SQL metric "scan time" of the file scans
   }
   private val byTag = mutable.Map[String, Totals]()
@@ -38,8 +38,6 @@ final class SparkMetrics(spark: SparkSession) {
           t.taskMs += e.taskInfo.duration.toDouble
           t.runMs += m.executorRunTime
           t.gcMs += m.jvmGCTime
-          t.shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
-          t.shuffleFetchWaitMs += m.shuffleReadMetrics.fetchWaitTime
           t.spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
           t.outputBytes += m.outputMetrics.bytesWritten
           e.taskInfo.accumulables.foreach { a =>
