@@ -45,7 +45,9 @@ FILES_PER_CORE = 5
 SMALL_LEG_SHARE = 0.25
 # Untimed passes before the timed ones, at local[nproc/2] so the JIT, which
 # compiles the engine for the first 30-40 s of passes, has cores to itself.
-WARM_SECONDS = 10
+# Passes still speed up by a quarter to a half across a 20 s window after a
+# 10 s warm-up, and the later passes vary less from run to run.
+WARM_SECONDS = 20
 # Layer groups each workload exercises; a traced run reports 0 for the
 # per-layer metrics of every other group (that layer does no work there).
 LAYER_GROUPS = {
@@ -107,7 +109,10 @@ def build():
     stamp_file = os.path.join(BUILD, "stamp")
     cp_file = os.path.join(BUILD, "classpath.txt")
     if os.path.exists(stamp_file) and open(stamp_file).read() == digest:
-        return open(cp_file).read()
+        cp = open(cp_file).read()
+        # sbt's class directories live outside .bench_build/
+        if all(os.path.exists(e) for e in cp.split(os.pathsep)):
+            return cp
     if not os.path.exists(os.path.join(ROOT, "build.sbt")):
         raise RuntimeError("no build.sbt at the checkout root: the engine's sources are missing")
     shutil.rmtree(BUILD, ignore_errors=True)

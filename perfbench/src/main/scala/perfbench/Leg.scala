@@ -66,12 +66,16 @@ object Leg {
     val sessionS = (Stats.epochNs() - t0) / 1e9
     try {
       Inputs.write(spark, o.long("seed"), files, input)
+      val (_, resolveS) = resolve(spark, input, files)
       spark.stop()
       phase("input written")
       spark = Session.create(o.int("warm-cores"), work)
-      val (warmDf, resolveS) = resolve(spark, input, files)
+      val warmStart = System.nanoTime()
+      val (warmDf, _) = resolve(spark, input, files)
       val state = new RunState
-      new Leg(spark, warmDf, o.int("warm-cores"), work, state).warm(workload, o.double("warm-seconds"))
+      val warmLeg = new Leg(spark, warmDf, o.int("warm-cores"), work, state)
+      warmLeg.prepare(workload)
+      warmLeg.warm(workload, o.double("warm-seconds") - Stats.secondsSince(warmStart))
       spark.stop()
       phase("warmed up")
       val small = o.int("small-cores")
@@ -214,27 +218,22 @@ final class Leg(spark: SparkSession, df: DataFrame, cores: Int, work: String, st
       r.processedBuckets))
   }
 
-  /** Untimed passes for `seconds` (at least one); resume_enhanced first
-    * writes the full checkpoint its resumes invalidate. */
-  def warm(workload: String, seconds: Double): Unit = {
-    val start = System.nanoTime()
-    def left = seconds - Stats.secondsSince(start)
-    workload match {
-      case "contract_mix" => timed(left, 1)(contractPass(analysis = false))
-      case "resume_enhanced" =>
-        val first = state.checkpointDir.isEmpty
-        if (first) {
-          state.checkpointDir = Paths.get(work, s"checkpoint-$cores").toString
-          Leg.deleteTree(Paths.get(state.checkpointDir))
-          val full = Checkpoint.runResumable(df, state.checkpointDir, Leg.NBuckets, "full")
-          state.invalidated = Leg.pickInvalidated(full.lineage.map(l => l.bucket -> l.inputBytes).toMap)
-          state.invalidDocs = full.lineage.filter(l => state.invalidated.contains(l.bucket))
-            .map(_.docCount).sum
-        }
-        // the full run counts as the first warm-up pass
-        timed(left, if (first) 0 else 1)(resume())
-      case w => sys.error(s"unknown workload $w")
-    }
+  /** resume_enhanced: writes the full checkpoint its resumes invalidate
+    * and picks the buckets they invalidate. */
+  def prepare(workload: String): Unit = if (workload == "resume_enhanced") {
+    state.checkpointDir = Paths.get(work, "checkpoint").toString
+    Leg.deleteTree(Paths.get(state.checkpointDir))
+    val full = Checkpoint.runResumable(df, state.checkpointDir, Leg.NBuckets, "full")
+    state.invalidated = Leg.pickInvalidated(full.lineage.map(l => l.bucket -> l.inputBytes).toMap)
+    state.invalidDocs = full.lineage.filter(l => state.invalidated.contains(l.bucket))
+      .map(_.docCount).sum
+  }
+
+  /** Untimed passes for `seconds`, at least one. */
+  def warm(workload: String, seconds: Double): Unit = workload match {
+    case "contract_mix" => timed(seconds, 1)(contractPass(analysis = false))
+    case "resume_enhanced" => timed(seconds, 1)(resume())
+    case w => sys.error(s"unknown workload $w")
   }
 
   /** One untimed pass in this session, then timed passes for `budgetS`.
