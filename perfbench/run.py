@@ -47,7 +47,7 @@ SMALL_LEG_SHARE = 0.25
 # compiles the engine for the first 30-40 s of passes, has cores to itself.
 # Passes still speed up by a quarter to a half across a 20 s window after a
 # 10 s warm-up, and the later passes vary less from run to run.
-WARM_SECONDS = 20
+WARM_SECONDS = 18
 # Layer groups each workload exercises; a traced run reports 0 for the
 # per-layer metrics of every other group (that layer does no work there).
 LAYER_GROUPS = {
