@@ -47,9 +47,7 @@ object MicroBench {
     val texts = doms.map(d => graft.html.Boilerplate.segment(d)
       .filter(_.isContent).map(_.text).mkString("\n"))
     stage("sha256")(() => htmlRows.foreach(r => graft.extract.Extractor.sha256Hex(r.html)))
-    stage("pageStats")(() => texts.foreach(graft.analyzers.LangScript.pageStats))
-    stage("script")(() => texts.foreach(graft.analyzers.LangScript.detectScript))
-    stage("langid")(() => texts.foreach(t => graft.analyzers.LangScript.detectLanguage(t)))
+    stage("page-scan")(() => texts.foreach(graft.analyzers.LangScript.scan))
 
     // analyzer-suite split (the analysis=true path)
     import graft.analyzers.TextAnalyzer

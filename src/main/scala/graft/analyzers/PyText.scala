@@ -49,15 +49,6 @@ object PyText {
     s.substring(a, b)
   }
 
-  /** `strip(s).length` without the substring allocation (hot path). */
-  def strippedLength(s: String): Int = {
-    var a = 0
-    var b = s.length
-    while (a < b && isPyWs(s.charAt(a))) a += 1
-    while (b > a && isPyWs(s.charAt(b - 1))) b -= 1
-    b - a
-  }
-
   /** Python `round(x, n)` — round-half-even on the exact binary value. */
   def pyRound(x: Double, n: Int): Double = {
     if (x.isNaN || x.isInfinite) return x

@@ -20,6 +20,7 @@ import graft.pdf.{PdfParser, PdfTables}
 object Extractor {
 
   val PageBreak = "\n\n--- PAGE BREAK ---\n\n"
+  private val pageBreakScan = LangScript.scan(PageBreak)
   val DirectConfidence = 0.99
 
   /** Magic-byte format sniff (SURVEY.md S3, `smart_router.py:146-164`,
@@ -110,70 +111,10 @@ object Extractor {
     new String(out)
   }
 
-  /** Handwritten-signature text patterns (E7, `ocr_engine.py:669-735` —
-    * text-pattern part only; vector-drawing check documented out of scope). */
-  private val sigPatterns = Seq("signature", "signed by", "sign here", "per:", "by:", "signé", "firma")
-
-  /** `haystack.toLowerCase(ROOT).contains(needle)` without materializing
-    * the lowered copy — needle must be lowercase. ASCII fast path with an
-    * exact fallback for the non-ASCII pattern chars (é). */
-  private[extract] def containsAsciiLower(haystack: String, needle: String): Boolean = {
-    val n = needle.length
-    if (n == 0) return true
-    val max = haystack.length - n
-    var i = 0
-    while (i <= max) {
-      var k = 0
-      var ok = true
-      while (ok && k < n) {
-        val h = haystack.charAt(i + k)
-        val lh = if (h >= 'A' && h <= 'Z') (h + 32).toChar else Character.toLowerCase(h)
-        if (lh != needle.charAt(k)) ok = false
-        k += 1
-      }
-      if (ok) return true
-      i += 1
-    }
-    false
-  }
-
-  // first lowercase chars of sigPatterns — the single-pass scan only
-  // attempts a pattern match at positions starting with one of these
-  private val sigFirstChars: Set[Char] = sigPatterns.map(_.charAt(0)).toSet
-  private val sigPatternsArr: Array[String] = sigPatterns.toArray
-
-  /** One pass over the document for the E7 handwriting scan: equivalent
-    * to `sigPatterns.exists(lower.contains)` without building the
-    * lowered copy or scanning once per pattern. */
-  private[extract] def containsAnySigPattern(haystack: String): Boolean = {
-    val n = haystack.length
-    var i = 0
-    while (i < n) {
-      val h = haystack.charAt(i)
-      val lh = if (h >= 'A' && h <= 'Z') (h + 32).toChar else Character.toLowerCase(h)
-      if (sigFirstChars.contains(lh)) {
-        val ps = sigPatternsArr
-        var p = 0
-        while (p < ps.length) {
-          val needle = ps(p)
-          if (needle.charAt(0) == lh && i + needle.length <= n) {
-            var k = 1
-            var ok = true
-            while (ok && k < needle.length) {
-              val c = haystack.charAt(i + k)
-              val lc = if (c >= 'A' && c <= 'Z') (c + 32).toChar else Character.toLowerCase(c)
-              if (lc != needle.charAt(k)) ok = false
-              k += 1
-            }
-            if (ok) return true
-          }
-          p += 1
-        }
-      }
-      i += 1
-    }
-    false
-  }
+  /** E7 handwriting text-pattern scan (`ocr_engine.py:669-735` — the
+    * patterns live with the page kernel, `LangScript.scan`). */
+  private[extract] def containsAnySigPattern(haystack: String): Boolean =
+    LangScript.scan(haystack).sigPattern
 
   /** E7 drawings-intersection check for PDFs (`ocr_engine.py:700-735`):
     * a signature text pattern counts as handwritten only when vector
@@ -201,14 +142,16 @@ object Extractor {
     }
   }
 
-  /** @param analysis run the doc-level analyzer suite (T4-T12: word
+  /** Extract one payload into its DocResult.
+    *
+    * @param analysis run the doc-level analyzer suite (T4-T12: word
     *   cloud, summary, doc type, keywords, entities). The extraction
     *   contract (text, spans, pages, language, structure) is unaffected;
     *   callers that only consume the contract columns pass false — the
     *   compute analog of column pruning (the reference also runs
     *   doc_analyzer only when building the enhanced output,
-    *   `ocr_engine.py:1826-1833`). */
-  /** @param unruledTables also run the heuristic whitespace-aligned
+    *   `ocr_engine.py:1826-1833`).
+    * @param unruledTables also run the heuristic whitespace-aligned
     *   table detector on PDF pages (`PdfTables.detectUnruled`) —
     *   off by default (the text strategy can false-positive on
     *   coincidentally aligned prose, so callers opt in). */
@@ -238,7 +181,6 @@ object Extractor {
               }
             assemble(url, warcTs, langHint, format, hash, bytes.length,
               title = "",
-              pageTexts = doc.pages.map(_.text),
               pageBlocks = doc.pages.map(p => Vector(("paragraph", p.text))),
               signatures = doc.signatures.map(s => SignatureOut(s.fieldName, s.signed)),
               tables = tables,
@@ -252,7 +194,6 @@ object Extractor {
           val dom = graft.html.DomBuilder.parse(htmlStr)
           val blocks = Boilerplate.segment(dom).filter(_.isContent)
           val title = Boilerplate.title(dom)
-          val pageText = blocks.map(_.text).mkString("\n")
           val typed = blocks.map { b =>
             val bt = if (b.isHeading) "heading"
                      else if (b.tag == "li" || b.tag == "dd" || b.tag == "dt") "list_item"
@@ -263,14 +204,13 @@ object Extractor {
           val htmlTables = graft.html.HtmlTables.extract(dom)
             .filter(_.nonEmpty).zipWithIndex
             .map { case (m, idx) => toTableOut(m.map(_.toSeq), page = 1, idx) }
-          if (pageText.isEmpty)
+          if (blocks.isEmpty)
             // table-only pages: no main-content text, but detected tables
             // and the title still belong on the result row
             emptyResult(url, warcTs, langHint, format, hash, bytes.length)
               .copy(title = title, tables = htmlTables)
           else assemble(url, warcTs, langHint, format, hash, bytes.length,
             title = title,
-            pageTexts = Vector(pageText),
             pageBlocks = Vector(typed),
             signatures = Vector.empty,
             tables = htmlTables,
@@ -288,10 +228,6 @@ object Extractor {
     }
   }
 
-  /** Assemble the full DocResult from per-page text + typed blocks.
-    * Lines within a block = non-empty stripped '\n'-splits, 1-based per
-    * page (E1/E5); spans are char offsets into fullText (each page's
-    * slice is [page.start, page.end), pages joined by PageBreak). */
   /** V1–V6 enhancement of a detected raw matrix → flat TableOut row. */
   private def toTableOut(matrix: Seq[Seq[String]], page: Int, idx: Int): TableOut = {
     val t = graft.tables.Tables.enhance(matrix, page, idx)
@@ -344,9 +280,16 @@ object Extractor {
     math.min(100, score)
   }
 
+  /** Assemble the full DocResult from per-page typed blocks. A page's
+    * text is its blocks joined by '\n'; lines within a block = non-empty
+    * stripped '\n'-splits, 1-based per page (E1/E5); spans are char
+    * offsets into fullText (each page's slice is [page.start, page.end),
+    * pages joined by PageBreak). Each page's text is scanned once
+    * (`LangScript.scan`); the document's script and E7 flag are rolled
+    * up from the page scans. */
   private def assemble(url: String, warcTs: Timestamp, langHint: String,
       format: String, hash: String, size: Long, title: String,
-      pageTexts: Seq[String], pageBlocks: Seq[Seq[(String, String)]],
+      pageBlocks: Seq[Seq[(String, String)]],
       signatures: Seq[SignatureOut], tables: Seq[TableOut] = Nil,
       pageImages: Seq[Int] = Nil, pageCoverage: Seq[Double] = Nil,
       // Some(x) = the caller already ran a geometry-aware handwriting
@@ -355,86 +298,57 @@ object Extractor {
       handwrittenOverride: Option[Boolean] = None,
       analysis: Boolean = true): DocResult = {
 
-    // single-page fast path: mkString would copy the whole text through a
-    // StringBuilder for a 1-element join (most HTML docs)
+    // a page's text is its blocks joined by '\n', so block and line spans
+    // follow from the block lengths; one-element joins are not copied
+    val pageTexts = pageBlocks.map(bs =>
+      if (bs.length == 1) bs.head._2 else bs.iterator.map(_._2).mkString("\n"))
     val fullText =
       if (pageTexts.length == 1) pageTexts.head else pageTexts.mkString(PageBreak)
     // one tokenize pass shared across the doc-level analyzers (language
     // ID has its own zero-alloc marker scanner and no longer needs it)
     val tokens = if (analysis) TextAnalyzer.tokenize(fullText) else null
 
+    val scans = pageTexts.map(LangScript.scan)
     var pageOffset = 0 // running start of the current page's fullText slice
     val pages = pageTexts.zipWithIndex.map { case (rawText, pi) =>
       val pStart = pageOffset
       pageOffset += rawText.length + PageBreak.length
       var lineNo = 0
-      var cursor = 0
+      var cursor = 0 // start of the current block in rawText
       val blocks = pageBlocks(pi).flatMap { case (blockType, blockText) =>
-        if (blockText.isEmpty) None
+        val start = cursor
+        val len = blockText.length
+        cursor += len + 1 // past the '\n' separator
+        if (len == 0) None
         else {
-          // Blocks compose rawText ("\n"-joined by both engine paths), so
-          // the next block sits at cursor or cursor+1 (past the
-          // separator) — verify with regionMatches (O(len)) instead of
-          // indexOf (O(page·len)); indexOf remains as the fallback and,
-          // by first-match-at-or-after-cursor semantics, returns the same
-          // position whenever the fast path matches.
-          val len = blockText.length
-          val start =
-            if (cursor + len <= rawText.length &&
-                rawText.regionMatches(cursor, blockText, 0, len)) cursor
-            else if (cursor + 1 + len <= rawText.length &&
-                rawText.regionMatches(cursor + 1, blockText, 0, len)) cursor + 1
-            else { val f = rawText.indexOf(blockText, cursor); if (f >= 0) f else cursor }
-          val verified = start + len <= rawText.length &&
-            rawText.regionMatches(start, blockText, 0, len)
-          val end = start + len
-          cursor = end
+          // lines = the non-empty stripped '\n'-splits of the block
           val lines = new scala.collection.mutable.ArrayBuffer[LineOut](4)
-          if (verified) {
-            // rawText[start,end) == blockText: line spans are arithmetic
-            // (the search path provably returns the same offsets — the
-            // region between consecutive stripped lines is pure
-            // whitespace, which can never contain the next line's text)
-            var ls = 0
-            while (ls <= len) {
-              var le = blockText.indexOf('\n', ls)
-              if (le < 0) le = len
-              var a = ls; var b = le
-              while (a < b && PyText.isPyWs(blockText.charAt(a))) a += 1
-              while (b > a && PyText.isPyWs(blockText.charAt(b - 1))) b -= 1
-              if (b > a) {
-                lineNo += 1
-                lines += LineOut(lineNo, pStart + start + a, pStart + start + b)
-              }
-              ls = le + 1
+          var ls = 0
+          while (ls <= len) {
+            var le = blockText.indexOf('\n', ls)
+            if (le < 0) le = len
+            var a = ls; var b = le
+            while (a < b && PyText.isPyWs(blockText.charAt(a))) a += 1
+            while (b > a && PyText.isPyWs(blockText.charAt(b - 1))) b -= 1
+            if (b > a) {
+              lineNo += 1
+              lines += LineOut(lineNo, pStart + start + a, pStart + start + b)
             }
-          } else {
-            var lineCursor = start
-            PyText.splitKeepEmpty(blockText, "\n").foreach { rawLine =>
-              val stripped = PyText.strip(rawLine)
-              if (stripped.nonEmpty) {
-                lineNo += 1
-                val ls = rawText.indexOf(stripped, lineCursor)
-                val lStart = if (ls >= 0) ls else lineCursor
-                lines += LineOut(lineNo, pStart + lStart,
-                  pStart + lStart + stripped.length)
-                lineCursor = lStart + stripped.length
-              }
-            }
+            ls = le + 1
           }
-          Some(BlockOut(blockType, pStart + start, pStart + end,
+          Some(BlockOut(blockType, pStart + start, pStart + start + len,
             DirectConfidence, lines.toSeq))
         }
       }
-      val stats = LangScript.pageStats(rawText)
-      val lr = LangScript.detectLanguage(rawText)
+      val scan = scans(pi)
+      val lr = LangScript.language(scan)
       val imgCount = if (pi < pageImages.length) pageImages(pi) else 0
       val coverage = if (pi < pageCoverage.length) pageCoverage(pi) else 0.0
       val (pType, pMethod, _, _, _) =
-        classifyPage(PyText.strippedLength(rawText), imgCount, coverage)
+        classifyPage(scan.strippedLength, imgCount, coverage)
       PageOut(pi + 1, pStart, pStart + rawText.length,
-        stats.charCount, stats.wordCount,
-        stats.lineCount, stats.paragraphCount, lr.script, lr.detected,
+        scan.charCount, scan.wordCount,
+        scan.lineCount, scan.paragraphCount, lr.script, lr.detected,
         DirectConfidence, blocks, pType, pMethod, imgCount)
     }
 
@@ -459,27 +373,24 @@ object Extractor {
     // doc-level analysis (doc_analyzer suite, T4-T12) over the shared
     // token array — skipped wholesale when the caller only consumes the
     // extraction contract
-    val (wc, summary, docType, cats, kws, ents, handwritten) =
+    val (wc, summary, docType, cats, kws, ents) =
       if (analysis) {
         // no full-document toLowerCase copy: the indicator automaton
-        // folds case during its own pass, and the E7 scan uses the same
-        // zero-copy scanner as the contract path
+        // folds case during its own pass
         val (dt, cats) = TextAnalyzer.docTypeAndCategoriesFoldCase(fullText)
         (TextAnalyzer.wordCloudFromTokens(tokens),
           TextAnalyzer.summarize(fullText, tokens),
           dt, cats,
           TextAnalyzer.keywordsFromTokens(tokens),
-          TextAnalyzer.entities(fullText),
-          handwrittenOverride.getOrElse(containsAnySigPattern(fullText))) // E7
+          TextAnalyzer.entities(fullText))
       } else {
-        // E7 handwriting scan stays on (signatureStatus is contract
-        // metadata, not an analyzer) — containsIgnoreCaseAscii avoids
-        // materializing the lowered copy of the document
         (TextAnalyzer.WordCloud(Nil, 0.0, 0L, 0L),
           TextAnalyzer.Summary("", "", Nil, 0.0),
-          "other", Nil, Nil, Nil,
-          handwrittenOverride.getOrElse(containsAnySigPattern(fullText)))
+          "other", Nil, Nil, Nil)
       }
+    // E7 stays on with analysis off (signatureStatus is contract
+    // metadata, not an analyzer); no pattern spans a PageBreak
+    val handwritten = handwrittenOverride.getOrElse(scans.exists(_.sigPattern))
     val digital = signatures.nonEmpty
     val sigStatus =
       if (digital && handwritten) "both"
@@ -508,12 +419,7 @@ object Extractor {
       summaryBrief = summary.brief, summaryDetailed = summary.detailed,
       keyPoints = summary.keyPoints,
       detectedLanguage = detectedLang,
-      // single page ⇒ fullText == rawText; detectLanguage already ran
-      // detectScript on it when ≥20 stripped chars — reuse, skip a scan
-      script =
-        if (pages.length == 1 && PyText.strippedLength(fullText) >= 20)
-          pages.head.script
-        else LangScript.detectScript(fullText),
+      script = LangScript.joinedScript(scans, pageBreakScan),
       totalChars = pages.map(_.charCount.toLong).sum,
       totalWords = pages.map(_.wordCount.toLong).sum,
       avgConfidence = avgConf,

@@ -50,10 +50,13 @@ case class LevenshteinBounded(first: Expression, second: Expression,
 object LevenshteinBounded {
 
   /** Banded DP. Returns the exact distance when ≤ k, else −1. */
-  def compute(s: String, t: String, k: Int): Int = {
-    if (k < 0) return -1
+  def compute(s: String, t: String, bound: Int): Int = {
+    if (bound < 0) return -1
     val m = s.length
     val n = t.length
+    // the distance never exceeds max(m, n): a larger bound changes
+    // nothing, and clamping keeps k + 1 and i + k from overflowing
+    val k = math.min(bound, math.max(m, n))
     if (math.abs(m - n) > k) return -1
     if (m == 0) return n // n = |m-n| <= k here
     if (n == 0) return m

@@ -40,7 +40,7 @@ object Boilerplate {
 
   /** Block-level boundary tags: entering or leaving one flushes the
     * current text run into a block. */
-  private val blockTags = Set(
+  private[html] val blockTags = Set(
     "address", "article", "aside", "blockquote", "body", "caption", "dd",
     "div", "dl", "dt", "fieldset", "figcaption", "figure", "footer",
     "form", "h1", "h2", "h3", "h4", "h5", "h6", "header", "hr", "html",
@@ -48,13 +48,16 @@ object Boilerplate {
     "tbody", "td", "tfoot", "th", "thead", "tr", "ul")
 
   /** Subtrees that contribute no body text at all. */
-  private val skipTags = Set(
+  private[html] val skipTags = Set(
     "script", "style", "noscript", "template", "head", "iframe", "svg",
     "object", "select", "option", "datalist", "button")
 
-  private val structuralBoiler = Set("nav", "header", "footer", "aside", "form")
-  private val headingTags = Set("h1", "h2", "h3", "h4", "h5", "h6")
+  private[html] val structuralBoiler = Set("nav", "header", "footer", "aside", "form")
+  private[html] val headingTags = Set("h1", "h2", "h3", "h4", "h5", "h6")
 
+  /** The text run between two block boundaries, kept whitespace-normalized
+    * as it grows: words joined by single spaces, as `normalizeWs` of the
+    * space-joined text nodes would give. */
   private final class Run {
     val sb = new java.lang.StringBuilder(64)
     var words = 0
@@ -62,37 +65,53 @@ object Boilerplate {
     var tag = "body"
     var heading = false
     var boilerCtx = false
-    def nonEmpty: Boolean = { var i = 0; var any = false
-      while (i < sb.length && !any) { if (!Character.isWhitespace(sb.charAt(i))) any = true; i += 1 }; any }
+    def reset(): Unit = { sb.setLength(0); words = 0; anchorWords = 0 }
+
+    /** Appends the words of text node `t` in one pass; returns their count. */
+    def append(t: String): Int = {
+      val n = t.length
+      var w = 0
+      var i = 0
+      while (i < n) {
+        if (isWordPart(t.charAt(i))) {
+          val start = i
+          i += 1
+          while (i < n && isWordPart(t.charAt(i))) i += 1
+          if (sb.length > 0) sb.append(' ')
+          sb.append(t, start, i)
+          w += 1
+        } else i += 1
+      }
+      w
+    }
   }
+
+  /** Not whitespace in the sense of `normalizeWs`. */
+  private def isWordPart(c: Char): Boolean =
+    (c > ' ' && c < '\u007F') || !(Character.isWhitespace(c) || c == '\u00A0')
 
   /** Segment the DOM into classified blocks. */
   def segment(root: Element): Vector[HtmlBlock] = {
     val raw = new ArrayBuffer[HtmlBlock](32)
-    var run = new Run
+    val run = new Run
 
     def flush(): Unit = {
-      if (run.nonEmpty) {
-        val text = normalizeWs(run.sb.toString)
-        if (text.nonEmpty) raw += HtmlBlock(
-          text, run.tag, run.words, run.anchorWords, run.heading,
-          run.boilerCtx, isContent = false)
-      }
-      run = new Run
+      if (run.sb.length > 0) raw += HtmlBlock(
+        run.sb.toString, run.tag, run.words, run.anchorWords, run.heading,
+        run.boilerCtx, isContent = false)
+      run.reset()
     }
 
     def walk(node: Node, inAnchor: Boolean, boilerDepth: Int, curTag: String, inHeading: Boolean): Unit = node match {
       case TextNode(t) =>
-        if (t.exists(!Character.isWhitespace(_))) {
-          val w = countWords(t)
-          run.words += w
-          if (inAnchor) run.anchorWords += w
-          run.tag = curTag
-          run.heading = inHeading
-          run.boilerCtx = boilerDepth > 0
-          if (run.sb.length > 0) run.sb.append(' ')
-          run.sb.append(t)
-        }
+        // tag, heading and context are the same for every node of a run:
+        // each changes only at a block tag, and block tags flush the run
+        val w = run.append(t)
+        run.words += w
+        if (inAnchor) run.anchorWords += w
+        run.tag = curTag
+        run.heading = inHeading
+        run.boilerCtx = boilerDepth > 0
       case el: Element =>
         if (!skipTags(el.tag)) {
           val isBlock = blockTags(el.tag)
@@ -170,16 +189,5 @@ object Boilerplate {
       i += 1
     }
     sb.toString
-  }
-
-  def countWords(s: String): Int = {
-    var i = 0; var count = 0; var inWord = false
-    while (i < s.length) {
-      val ws = Character.isWhitespace(s.charAt(i)) || s.charAt(i) == '\u00A0'
-      if (!ws && !inWord) { count += 1; inWord = true }
-      else if (ws) inWord = false
-      i += 1
-    }
-    count
   }
 }

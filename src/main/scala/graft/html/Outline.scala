@@ -18,6 +18,9 @@ import org.apache.spark.sql.functions.col
   * flattened), whitespace-collapsed; a heading with no text still
   * emits (its number still advances the outline).
   *
+  * Unclosed headings close as an HTML parser closes them: at any h1-h6
+  * end tag, at the next h1-h6 start tag, or at the end of the input.
+  *
   * Scale shape: one typed flatMap per document, map-only.
   */
 object Outline {
@@ -48,23 +51,25 @@ object Outline {
     val out = Vector.newBuilder[(Int, String, String)]
     val counters = new Array[Int](7)
     var curLevel = 0 // 0 = not inside a heading
-    var curTag: String = null
     val sb = new StringBuilder
+    def close(): Unit = {
+      val l = curLevel
+      counters(l) += 1
+      var i = l + 1
+      while (i <= 6) { counters(i) = 0; i += 1 }
+      out += ((l, (1 to l).map(counters).mkString("."),
+        collapseWs(sb.toString)))
+      curLevel = 0
+    }
     tokenize(Option(html).getOrElse("")).foreach {
-      case StartTag(t, _, selfClosing) if levelOf.contains(t) &&
-        curLevel == 0 && !selfClosing =>
-        curLevel = levelOf(t); curTag = t; sb.setLength(0)
-      case EndTag(t) if curLevel != 0 && t == curTag =>
-        val l = curLevel
-        counters(l) += 1
-        var i = l + 1
-        while (i <= 6) { counters(i) = 0; i += 1 }
-        out += ((l, (1 to l).map(counters).mkString("."),
-          collapseWs(sb.toString)))
-        curLevel = 0; curTag = null
+      case StartTag(t, _, selfClosing) if levelOf.contains(t) && !selfClosing =>
+        if (curLevel != 0) close()
+        curLevel = levelOf(t); sb.setLength(0)
+      case EndTag(t) if curLevel != 0 && levelOf.contains(t) => close()
       case Text(t) if curLevel != 0 => sb.append(t)
       case _ => ()
     }
+    if (curLevel != 0) close()
     out.result()
   }
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
 
 import graft.analyzers.{PyText, TextAnalyzer}
 import graft.html.{Boilerplate, DomBuilder}
@@ -155,16 +155,12 @@ object GraftProps extends Properties("graft") {
         PyText.splitKeepEmpty(s, "\n\n").count(p => PyText.strip(p).nonEmpty)
     }
 
-  property("strippedLength equals strip(s).length") = forAll(anyText) { s =>
-    PyText.strippedLength(s) == PyText.strip(s).length
-  }
-
   property("zero-alloc language scorer equals the token-membership scorer") =
     forAll(anyText) { s =>
       import graft.analyzers.LangScript
       val got = LangScript.detectLanguage(s)
       // reference scorer: tokenize + Set membership (the pre-round-2 form)
-      if (PyText.strippedLength(s) < 20 ||
+      if (PyText.strip(s).length < 20 ||
           !Seq("Latin", "Other", "Mixed", "unknown").contains(LangScript.detectScript(s))) true
       else {
         val tokens = TextAnalyzer.tokenize(s)
@@ -180,6 +176,79 @@ object GraftProps extends Properties("graft") {
             got.confidence == PyText.pyRound(expected._2, 3)
         }
       }
+    }
+
+  // Text for the page kernel: every script range T14 counts, surrogate
+  // pairs (letters and not) and lone halves, U+0085 / U+00A0 and other
+  // Python-only whitespace, '\n\n' runs, '[\\]^_`{|}~' (inside the Latin
+  // range), marker words and E7 patterns in mixed case, and chars whose
+  // per-char lowercase differs from String.toLowerCase (U+0130, U+212A).
+  private val kernelText: Gen[String] = {
+    val markers = graft.analyzers.LangScript.profiles.flatMap(_._2).toIndexedSeq
+    val sigs = Seq("signature", "signed by", "sign here", "per:", "by:", "signé",
+      "firma", "SIGNÉ", "Signed  by", "sİgnature", "pe", "sig", "fir")
+    val pieces = Seq("Le", "the", "Und", "word", "x", "ab-cd", "a_b", "42",
+      "привет", "Мир", "مرحبا", "中文", "ひらがな", "カタカナ", "\uD835\uDC00",
+      "\uD83D\uDE00", "\uD840\uDC00", "\uD800", "\uDC00", "\u0085", "\u00A0",
+      "\u2028", "\u3000", "\u000B", "\u001C", "\n", "\n\n", "\n\n\n", " ", "\t",
+      "[\\]^_`{|}~", "İ", "\u212A", "ß", "ẞ", "é", "É", ".", ",", "-", ":")
+    Gen.listOf(Gen.frequency(
+      4 -> Gen.oneOf(pieces),
+      2 -> Gen.oneOf(markers).flatMap(w => Gen.oneOf(w, w.toUpperCase, w.capitalize)),
+      1 -> Gen.oneOf(sigs).flatMap(w => Gen.oneOf(w, w.toUpperCase, w.capitalize)),
+      1 -> Gen.asciiPrintableStr.map(_.take(8))))
+      .map(_.mkString)
+  }
+
+  property("page kernel equals the reference page-stats, script, marker and E7 loops") =
+    forAll(kernelText) { s =>
+      val m = graft.analyzers.LangScriptReference.mismatch(s)
+      m.isEmpty :| m.getOrElse("")
+    }
+
+  property("page kernel equals the reference loops around every single char") = {
+    val bad = (0 to 0xFFFF).iterator.flatMap { code =>
+      val c = code.toChar
+      Seq(s"a${c}b", s"$c", s"${c}ignature", s"s${c}gnature", s"sign$c",
+        s"\n$c\n", s"$c${c}er:").iterator
+        .flatMap(t => graft.analyzers.LangScriptReference.mismatch(t).map(m => f"U+$code%04X in ${t.length}-char text: $m"))
+    }
+    val first = bad.nextOption()
+    first.isEmpty :| first.getOrElse("")
+  }
+
+  property("document script and E7 flag roll up from the page scans") =
+    forAll(Gen.listOf(kernelText)) { pages =>
+      import graft.analyzers.{LangScript, LangScriptReference}
+      val joined = pages.mkString(graft.extract.Extractor.PageBreak)
+      val scans = pages.map(LangScript.scan)
+      LangScript.joinedScript(scans, LangScript.scan(graft.extract.Extractor.PageBreak)) ==
+        LangScriptReference.detectScript(joined) &&
+      scans.exists(_.sigPattern) == LangScriptReference.containsAnySigPattern(joined)
+    }
+
+  // markup whose text nodes hit the fused run's cases: nbsp-only and
+  // whitespace-only nodes, words split across inline tags, anchors,
+  // headings, structural containers and skipped subtrees
+  private val markup: Gen[String] = {
+    val words = Gen.listOfN(20, Gen.oneOf("alpha", "beta", "gamma", "x", "Lorem"))
+      .map(_.mkString(" "))
+    Gen.listOf(Gen.frequency(
+      3 -> Gen.oneOf("word", "two words", " ", "\n\t ", "\u00A0", "&nbsp;", " &#160; ",
+        "a\u00A0b", "\u2028", "\u0085", "tail "),
+      1 -> words,
+      3 -> Gen.oneOf("<p>", "</p>", "<div>", "</div>", "<span>", "</span>",
+        "<a href='/x'>", "</a>", "<h2>", "</h2>", "<li>", "<td>", "<br>",
+        "<nav>", "</nav>", "<footer>", "</footer>", "<b>", "</b>",
+        "<script>var t = 'text';</script>", "<style>p { }</style>",
+        "<button>Go</button>")))
+      .map(_.mkString("<html><body>", "", "</body></html>"))
+  }
+
+  property("fused Boilerplate.segment equals the pre-fusion segment") =
+    forAll(markup) { html =>
+      val dom = DomBuilder.parse(html)
+      Boilerplate.segment(dom) == graft.html.BoilerplateReference.segment(dom)
     }
 
   property("html text nodes survive the tokenizer+dom for markup-free text") =

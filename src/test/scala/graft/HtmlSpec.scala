@@ -69,7 +69,8 @@ class HtmlSpec extends AnyFunSuite {
 
   test("boilerplate: whitespace normalization and nbsp") {
     assert(Boilerplate.normalizeWs("  a\n\t b  c  ") == "a b c")
-    assert(Boilerplate.countWords("a b  c") == 3)
+    val block = Boilerplate.segment(DomBuilder.parse("<p>a b  c</p>")).head
+    assert(block.words == 3 && block.text == "a b c")
   }
 
   test("entities: legacy unterminated named ref") {

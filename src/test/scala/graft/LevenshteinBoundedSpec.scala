@@ -36,6 +36,12 @@ class LevenshteinBoundedSpec extends AnyFunSuite {
     assert(LevenshteinBounded.compute("a", "b", -1) == -1)
   }
 
+  test("an unbounded radius returns the exact distance (no Int overflow)") {
+    assert(LevenshteinBounded.compute("kitten", "sitting", Int.MaxValue) == 3)
+    assert(LevenshteinBounded.compute("abc", "", Int.MaxValue) == 3)
+    assert(LevenshteinBounded.compute("flaw", "lawn", Int.MaxValue - 1) == 2)
+  }
+
   test("the SQL expression matches the built-in inside the radius") {
     import spark.implicits._
     GraftExtensions.register(spark)

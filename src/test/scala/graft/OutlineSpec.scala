@@ -29,8 +29,13 @@ class OutlineSpec extends AnyFunSuite {
     assert(got == Vector((1, "1", ""), (1, "2", "real")))
   }
 
-  test("unclosed heading never emits; null safe") {
-    assert(Outline.headings("<h1>dangling").isEmpty)
+  test("unclosed heading closes at the next heading or at EOF; null safe") {
+    assert(Outline.headings("<h1>dangling") == Vector((1, "1", "dangling")))
+    assert(Outline.headings("<h1>One<h2>A</h2><h2>B") == Vector(
+      (1, "1", "One"), (2, "1.1", "A"), (2, "1.2", "B")))
+    // any h1-h6 end tag closes the open heading
+    assert(Outline.headings("<h1>One</h2><p>body</p><h2>A</h2>") == Vector(
+      (1, "1", "One"), (2, "1.1", "A")))
     assert(Outline.headings(null).isEmpty)
   }
 }
