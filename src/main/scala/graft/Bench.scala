@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Per-round benchmark (driver contract): times every SparkEntry query at
+/** Per-round benchmark (driver contract): times every registry query at
   * local[32] on SPARK_GRAFT_SF_DIR and prints ONE JSON line. Additionally
   * measures the north-rule scaling criterion — extraction throughput on
   * the same parquet corpus at local[8] vs local[32] (the sandbox stand-in
@@ -47,12 +47,12 @@ object Bench {
 
     // ---- phase 1: headline queries at local[cpus] ----
     var spark = newSession(cpus)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = graft.queries.Queries.all.sortBy(_.name).map { q =>
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
+      val ok = try { q.build(spark, sfDir).count(); true }
                catch { case _: Throwable => false }
       val sec = (System.nanoTime() - t0) / 1e9
-      (name, if (ok) sec else -1.0)
+      (q.name, if (ok) sec else -1.0)
     }
 
     // ---- phase 2: extraction scaling, same corpus parquet, 8 vs 32 ----
@@ -116,7 +116,7 @@ object Bench {
       // exposure, biasing the ratio down.
       val cmd = Seq("taskset", "-c", s"0-${cores - 1}", javaBin) ++ jvmArgs ++
         Seq("-cp", System.getProperty("java.class.path"),
-          "graft.BenchLeg", cores.toString, path, "2", "1")
+          "graft.BenchLeg", cores.toString, path)
       val pb = new ProcessBuilder(cmd: _*)
       pb.redirectErrorStream(true) // Spark logs merge in; we grep LEG
       val proc = pb.start()

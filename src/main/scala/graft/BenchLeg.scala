@@ -10,18 +10,16 @@ import org.apache.spark.sql.functions.col
   * small leg's GC/JIT ride free on the idle cores, inflating its
   * throughput and understating the scaling ratio.)
   *
-  * args: <cores> <corpusPath> <warmPasses> <measuredPasses> — runs
-  * warmPasses unmeasured passes (JIT plateau) then measuredPasses timed
-  * passes and reports the FASTEST (a single hypervisor-steal burst or
-  * GC hiccup inside one 7s pass otherwise tanks a whole round; both
-  * parallelism levels get the identical best-of treatment); prints the
-  * single line `LEG {"sec":S,"docs":N}` on stdout. */
+  * args: <cores> <corpusPath> — runs `WarmPasses` unmeasured passes
+  * (JIT plateau) then ONE timed pass, the same for every leg (best-of-k
+  * would expose the legs to unequal amounts of VM weather and bias the
+  * ratio); prints the single line `LEG {"sec":S,"docs":N}` on stdout. */
 object BenchLeg {
+  private val WarmPasses = 2
+
   def main(args: Array[String]): Unit = {
     val cores = args(0).toInt
     val corpusPath = args(1)
-    val warmPasses = if (args.length > 2) args(2).toInt else 1
-    val measuredPasses = if (args.length > 3) args(3).toInt else 2
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -39,8 +37,8 @@ object BenchLeg {
         .filter(col("status") =!= "error").count()
       ((System.nanoTime() - t0) / 1e9, n)
     }
-    (0 until warmPasses).foreach(_ => pass())
-    val (sec, n) = (0 until math.max(1, measuredPasses)).map(_ => pass()).minBy(_._1)
+    (0 until WarmPasses).foreach(_ => pass())
+    val (sec, n) = pass()
     println(s"""LEG {"sec":$sec,"docs":$n}""")
     spark.stop()
   }

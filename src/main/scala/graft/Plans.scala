@@ -1,24 +1,18 @@
 package graft
 
-import java.io.ByteArrayOutputStream
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
-/** Writes PLANS.md: formatted physical plans of the load-bearing queries
-  * with the properties each one must keep (pruning, pushdown, broadcast,
-  * partial agg, codegen). Run whenever plans are touched:
-  * `sbt -batch "runMain graft.Plans"`. */
+import graft.queries.{LibraryPlans, PlanView, Queries}
+
+/** Writes PLANS.md: every plan property in the registry (driver queries
+  * and `LibraryPlans`), checked against one run on sf0.001 and a
+  * 200-doc corpus, as a table of query, property and pass/fail. The plan
+  * of an entry is printed only when one of its properties fails.
+  * PlanQualitySpec asserts the same properties. Run whenever plans are
+  * touched: `sbt -batch "runMain graft.Plans"`. */
 object Plans {
-
-  private def captured(df: DataFrame): String = {
-    val out = new ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-      df.explain("formatted")
-    }
-    out.toString("UTF-8")
-  }
 
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
@@ -28,504 +22,33 @@ object Plans {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
-
     val corpusPath = Files.createTempDirectory("graft_plans_").toString + "/corpus"
     corpus.CorpusGen.generate(spark, 200, 4).toDF()
       .write.mode("overwrite").parquet(corpusPath)
 
-    val sections = Seq(
-      ("Extraction contract query (scan → typed extract → projection)",
-        """Must hold: the FileScan ReadSchema lists ONLY url, warc_ts, html,
-          |lang — the pre-extracted `text` column never leaves the footer.
-          |DeserializeToObject/SerializeFromObject bracket ONE fused
-          |mapPartitions (parse + extract + analyzers); the serializer is
-          |pruned to the 4 contract fields by the projection.""".stripMargin,
-        graft.extract.Pipeline.contractView(
-          graft.extract.Pipeline.run(spark.read.parquet(corpusPath)))),
-
-      ("Filter pushdown + column pruning on the corpus scan",
-        """Must hold: PushedFilters carries the lang predicate into the
-          |parquet reader; ReadSchema excludes the heavy html column.""".stripMargin,
-        spark.read.parquet(corpusPath)
-          .filter(col("lang") === "en").select("url", "warc_ts")),
-
-      ("q5: small-dimension joins",
-        """Must hold: nation and region arrive via BroadcastExchange /
-          |BroadcastHashJoin — the supplier side never shuffles for them.""".stripMargin,
-        SparkEntry.queries("q5_region_suppliers")(spark, sf)),
-
-      ("q1: aggregate shape",
-        """Must hold: two HashAggregate nodes (partial before the exchange,
-          |final after), all inside WholeStageCodegen spans.""".stripMargin,
-        SparkEntry.queries("q1_agg")(spark, sf)),
-
-      ("MinHash-LSH candidate generation",
-        """Must hold: the join key is (band, bandHash); shuffled rows carry
-          |id + signature only — the document text column appears in no
-          |Exchange below the join. The mega-bucket guard is a partial-agg
-          |groupBy count of oversized keys + BroadcastHashJoin LeftAnti —
-          |NO Window/Sort of the banded rows (round-2 shape sorted every
-          |partition by (band, bandHash) just to count bucket sizes). The
-          |cross-band pair dedup runs AFTER scoring, so its Exchange moves
-          |(id, id, double) rows — not signature arrays — and aggregates
-          |as partial+final HashAggregate, not SortAggregate.""".stripMargin,
-        ops.Dedup.minhashDupPairs(
-          spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text")),
-
-      ("SimHash candidate generation (guarded chunk buckets)",
-        """Must hold: same guard shape as MinHash — oversized (chunk,
-          |chunkVal) buckets leave via a broadcast anti-join before the
-          |candidate self-join; bit_count verification stays in codegen.""".stripMargin,
-        ops.Dedup.simhashDupPairs(
-          spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text")),
-
-      ("Entities view (stage-2 explode)",
-        """Must hold: exactly ONE DeserializeToObject/MapPartitions pair —
-          |the three entity kinds are concatenated into one array-of-structs
-          |column and exploded once (Generate), never recomputed per kind.""".stripMargin,
-        graft.extract.Pipeline.entitiesView(
-          graft.extract.Pipeline.run(spark.read.parquet(corpusPath)))),
-
-      ("ANN IVF top-k (inverted lists + broadcast probes)",
-        """Must hold: probes arrive via BroadcastExchange; the scoring
-          |projection uses the native codegen graft_cosine expression; the
-          |centroid training sample is hash-thinned (pmod filter) before
-          |its TakeOrderedAndProject — no full-corpus ordering pass.""".stripMargin,
-        {
-          val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-          ops.Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 4), k = 5,
-            nCentroids = 8, nProbe = 2)
-        }),
-
-      ("ANN brute-force top-k (bounded per-partition heaps)",
-        """Must hold: the pre-shuffle stage is a typed MapPartitions whose
-          |output is at most partitions x queries x k candidate rows; the
-          |window re-rank shuffles ONLY those candidates, never the N x Q
-          |scored cross product.""".stripMargin,
-        {
-          val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-          ops.Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 4), k = 5)
-        }),
-
-      ("events_rollup: grouping sets in one pass",
-        """Must hold: ONE Expand node feeds a partial+final HashAggregate
-          |pair — all three ROLLUP levels ((type,day), (type), ()) come
-          |from a single scan, never one re-aggregation per level.""".stripMargin,
-        SparkEntry.queries("events_rollup")(spark, sf)),
-
-      ("q10: returned-item revenue (selective multi-join)",
-        """Must hold: the o_orderdate range predicate reaches the orders
-          |scan as PushedFilters (the probe side shrinks before any join);
-          |nation arrives via BroadcastExchange; the revenue aggregate is
-          |partial+final HashAggregate under TakeOrderedAndProject — the
-          |top-20 never materializes the full group set on one node.""".stripMargin,
-        SparkEntry.queries("q10_returned_revenue")(spark, sf)),
-
-      ("events_user_percentiles: distinct count + exact percentiles",
-        """Must hold: the single COUNT(DISTINCT user_id) plans as the
-          |(event_type, user_id)-keyed ObjectHashAggregate chain with
-          |partial_percentile combining MAP-SIDE before the first
-          |exchange and partial_count(distinct) two-phase — one events
-          |scan, no Union, no per-aggregate re-scan. (Expand appears only
-          |for multiple distinct columns.)""".stripMargin,
-        SparkEntry.queries("events_user_percentiles")(spark, sf)),
-
-      ("events_props_json: JSON-path extraction in the scan projection",
-        """Must hold: get_json_object evaluates as a codegen expression
-          |inside the scan-side projection (no UDF, no eval-python node);
-          |the roll-up is a partial+final HashAggregate pair inside
-          |WholeStageCodegen.""".stripMargin,
-        SparkEntry.queries("events_props_json")(spark, sf)),
-
-      ("quality_gopher: curation filter signals as pure column expressions",
-        """Must hold: every Gopher/C4 signal (word bands, duplicate-line
-          |fraction, punct-line fraction, symbol ratio, keep flag) is a
-          |codegen column expression over ONE documents scan — no UDF, no
-          |eval-python, no second pass.""".stripMargin,
-        SparkEntry.queries("quality_gopher")(spark, sf)),
-
-      ("contamination: k-gram containment against the corpus set",
-        """Must hold: the corpus side collapses to a DISTINCT shingle set
-          |(partial+final aggregate) before a single equi-join on the
-          |shingle key marks candidate hits — no cartesian/nested-loop
-          |join, and with hashed=true the join key is a 64-bit
-          |fingerprint, never shingle text.""".stripMargin,
-        {
-          val docs = spark.read.parquet(s"$sf/documents.parquet")
-            .select(col("doc_id"), col("text"))
-          ops.Dedup.contaminationReport(
-            docs.filter(col("doc_id") >= 40), docs.filter(col("doc_id") < 40),
-            "doc_id", "text", k = 3)
-        }),
-
-      ("wordcloud/keyword top-k: token total folded in-plan",
-        """Must hold: exactly ONE documents FileScan — the token total is
-          |sum(cnt) over an unbounded window above the ALREADY-AGGREGATED
-          |vocabulary (every token lands in one group, so the sum of group
-          |counts IS the token total), replacing the round-4 driver-side
-          |toks.count() second scan. The SinglePartition exchange the
-          |window needs sees one row per distinct word, never token
-          |grain.""".stripMargin,
-        SparkEntry.queries("wordcloud_top10")(spark, sf)),
-
-      ("url canonicalization: pure-codegen dedup key",
-        """Must hold: every normalization step (fragment drop, scheme/host
-          |lowercase, default-port strip, query-param sort) is a codegen
-          |column expression over ONE scan — no UDF, no eval-python; the
-          |whole projection can run inside the scan stage of a url-level
-          |dedup.""".stripMargin,
-        SparkEntry.queries("url_canonical")(spark, sf)),
-
-      ("pii redaction: map-only codegen scrub",
-        """Must hold: counts (regexp_count) and the sequential
-          |email->phone->IP regexp_replace chain are ONE codegen
-          |projection over ONE scan — no UDF, no extra pass; at 100 TB
-          |the scrub rides the scan for free and the audit roll-up is a
-          |map-side-combined aggregate downstream.""".stripMargin,
-        SparkEntry.queries("pii_redact")(spark, sf)),
-
-      ("curation funnel: one scan, digest-keyed dedup window",
-        """Must hold: gopher flags, the dedup rank, and the stratified
-          |keep decision all derive from ONE documents scan; the only
-          |exchange is hashpartitioning on the 32-byte sha-256 digest
-          |(never the text column), and the 4-stage report is a single
-          |stack over one aggregate row.""".stripMargin,
-        SparkEntry.queries("curation_funnel")(spark, sf)),
-
-      ("paragraph dedup: hash-keyed first-seen window",
-        """Must hold: one documents scan; the first-seen window
-          |partitions on the 8-byte xxhash64 of the paragraph (each
-          |paragraph string crosses the wire once, with its (id, pos)
-          |coordinate — raw text is never a shuffle key); reassembly is
-          |the only other exchange, keyed on doc_id. At 100 TB stage 2
-          |drops and kept paragraphs write straight from the flag
-          |view.""".stripMargin,
-        SparkEntry.queries("para_dedup")(spark, sf)),
-
-      ("bigram LM scoring: vocab-bounded model, order-free integer sum",
-        """Must hold: training is ONE grouping-sets pass — bigram and
-          |head counts share a scan and a map-side-combined shuffle of
-          |(word[,word], count) rows (vocab-bounded, tiny next to the
-          |corpus) — whose persisted model feeds all three consumers;
-          |the smoothing vocab size joins as a broadcast 1-row cross
-          |join (never a driver-side collect, never a cartesian);
-          |scoring is an equi-join of the bigram stream against the
-          |model; per-term log-probs quantize to integer micro-nats so
-          |the per-doc sum is summation-order-free at any
-          |partitioning.""".stripMargin,
-        SparkEntry.queries("lm_score")(spark, sf)),
-
-      ("snapshot delta: digest-only full-outer diff",
-        """Must hold: one full-outer shuffle join on the key; each side
-          |carries only (key, 32-byte digest) computed in the scan
-          |projection — document text never moves; classification is a
-          |pure column expression. This is what lets a 100 TB pipeline
-          |reprocess only added/changed rows each crawl cycle.""".stripMargin,
-        SparkEntry.queries("snapshot_delta")(spark, sf)),
-
-      ("host cap: WindowGroupLimit rank-filter pushdown",
-        """Must hold: the row_number<=k filter rewrites into
-          |WindowGroupLimit so every map task pre-prunes to its local
-          |top-k PER HOST before the exchange — a mega-host with 10^8
-          |docs ships k*numPartitions candidate rows, not 10^8; the
-          |window equivalent of a map-side combine.""".stripMargin,
-        SparkEntry.queries("host_cap")(spark, sf)),
-
-      ("domain blocklist: broadcast anti-join application",
-        """Must hold: deriving the blocklist shuffles only (host, count,
-          |sum) roll-up rows (domain-bounded — megabytes at web scale);
-          |the median threshold joins as a broadcast 1-row cross join;
-          |APPLYING the blocklist is a BroadcastHashJoin LeftAnti — the
-          |100 TB corpus side never shuffles to drop a spam
-          |domain.""".stripMargin,
-        SparkEntry.queries("domain_blocklist")(spark, sf)),
-
-      ("host PageRank: host-cardinality iterations over a persisted graph",
-        """Must hold: the edge list derives from the corpus ONCE (explode
-          |+ distinct; text never enters the graph) and is persisted —
-          |each power iteration reads InMemoryTableScan, joins edges to
-          |the rank table on src, and runs a map-side-combined sum keyed
-          |on dst. Everything after the derivation runs at HOST
-          |cardinality (millions of rows, not the corpus's 100 TB);
-          |ranks are integer micro-units so any partitioning yields the
-          |same bytes.""".stripMargin,
-        SparkEntry.queries("host_pagerank")(spark, sf)),
-
-      ("BM25 search: filtered postings, broadcast stats, bounded-heap top-k",
-        """Must hold: the postings stream filters to the query terms
-          |BEFORE any join (term predicate — prunable when postings are
-          |stored bucketed by term); per-term document frequencies and
-          |the 1-row corpus totals broadcast; the final top-k is
-          |TakeOrderedAndProject (per-partition bounded heaps) — at
-          |100 TB nothing global-sorts and nothing unbounded crosses the
-          |wire.""".stripMargin,
-        SparkEntry.queries("bm25_search")(spark, sf)),
-
-      ("anchor extraction: one typed flatMap over one scan",
-        """Must hold: link extraction is a single typed flatMap stage
-          |(one SerializeFromObject) over one corpus scan — map-only,
-          |no state across rows; at 100 TB the anchor stream feeds the
-          |link-graph and frontier-rule stages without ever
-          |re-reading pages.""".stripMargin,
-        SparkEntry.queries("anchor_rows")(spark, sf)),
-
-      ("robots permission: broadcast robots, memoized typed eval",
-        """Must hold: the per-host robots table (domain cardinality —
-          |megabytes at web scale) joins the frontier as a broadcast;
-          |evaluation is ONE typed mapPartitions whose per-partition
-          |host→rules memo parses each robots body once per (partition,
-          |host), not once per URL — at 100 TB the frontier never
-          |shuffles to be permission-checked.""".stripMargin,
-        SparkEntry.queries("robots_allowed")(spark, sf)),
-
-      ("phrase search: term-filtered positional joins",
-        """Must hold: every join input is first filtered to ONE query
-          |term (df(term)-sized — prunable when postings are stored
-          |bucketed by term); the n−1 equi-joins key on (doc_id,
-          |aligned position); no cartesian product, and the corpus-
-          |sized postings stream itself never joins.""".stripMargin,
-        SparkEntry.queries("phrase_search")(spark, sf)),
-
-      ("politeness schedule: robots delays broadcast to host waves",
-        """Must hold: the domain-cardinality delay table (one typed
-          |parse of each robots.txt) BROADCASTS onto the frontier; the
-          |wave window partitions by host — the same key the fetcher
-          |shards by — so scheduling adds no extra shuffle beyond the
-          |host partitioning the fetch itself requires.""".stripMargin,
-        SparkEntry.queries("polite_schedule")(spark, sf)),
-
-      ("publication dates: precedence chain rides the scan, map-only",
-        """Must hold: the whole htmldate-style cascade (og > microdata >
-          |meta date > time element > URL path) is ONE typed map riding
-          |the corpus scan — no shuffle, no UDF; at 100 TB date
-          |extraction adds zero exchanges to the metadata pass it
-          |shares with `Meta.metaRows`.""".stripMargin,
-        SparkEntry.queries("pub_dates")(spark, sf)),
-
-      ("html -> markdown: render rides the scan, map-only",
-        """Must hold: tokenizer + DOM build + markdown render is ONE
-          |typed map riding the corpus scan — no shuffle, no UDF;
-          |recursion depth is bounded by DomBuilder.MaxDepth so a
-          |pathological page can't overflow an executor stack at
-          |100 TB.""".stripMargin,
-        SparkEntry.queries("html_markdown")(spark, sf)),
-
-      ("json-ld: typed extraction only, JSON paths stay codegen",
-        """Must hold: the typed flatMap does ONLY what Catalyst can't
-          |(tokenizer-driven block extraction); every JSON path is a
-          |codegen get_json_object on the blob column — malformed JSON
-          |degrades to NULL, nothing throws, and no hand-rolled JSON
-          |parser sits on the 100 TB hot path.""".stripMargin,
-        SparkEntry.queries("jsonld_meta")(spark, sf)),
-
-      ("readability: pure codegen signal, no UDF",
-        """Must hold: Flesch / Flesch-Kincaid milli scores are nothing
-          |but regexp_count + integer arithmetic inside
-          |WholeStageCodegen — no UDF, no typed map, no shuffle; the
-          |cheapest curation signal stays free at 100 TB.""".stripMargin,
-        SparkEntry.queries("readability")(spark, sf)),
-
-      ("PMI collocations: one corpus shuffle, vocab-sized everything else",
-        """Must hold: the corpus is shuffled ONCE (the (a, b) pair
-          |aggregate); unigram counts derive from that pair table and
-          |BROADCAST back onto it; totals are 1-row broadcasts; top-k
-          |plans as TakeOrderedAndProject — at 100 TB nothing
-          |corpus-sized moves twice.""".stripMargin,
-        SparkEntry.queries("pmi_collocations")(spark, sf)),
-
-      ("feed items: discovery parse rides the scan, map-only",
-        """Must hold: RSS/Atom item extraction is ONE typed flatMap
-          |over the corpus scan — no shuffle, no UDF; discovered urls
-          |stream straight into the frontier-rule and politeness
-          |stages without re-reading feed payloads.""".stripMargin,
-        SparkEntry.queries("feed_items")(spark, sf)),
-
-      ("host outliers: host-partitioned medians, broadcast merge-back",
-        """Must hold: both lower-median windows partition by host (the
-          |fetcher's shard key — partitions are host-bounded, never
-          |corpus-bounded) and the host-cardinality median/MAD tables
-          |BROADCAST back; the roll-up reuses the same host
-          |partitioning, so the corpus shuffles on host once per
-          |median pass and nothing else moves.""".stripMargin,
-        SparkEntry.queries("host_outliers")(spark, sf)),
-
-      ("rendezvous assignment: computed per host, broadcast to the corpus",
-        """Must hold: HRW weights are aggregate() column expressions
-          |(no UDF) evaluated on the DISTINCT host table — domain
-          |cardinality — and the assignment BROADCASTS onto the docs;
-          |the corpus never shuffles to learn its fetcher.""".stripMargin,
-        SparkEntry.queries("rendezvous_assign")(spark, sf)),
-
-      ("link reciprocity: host-cardinality semi-join",
-        """Must hold: reciprocated edges come from ONE left_semi
-          |self-join of the host-cardinality edge table on the
-          |reversed key — no duplicate-row explosion, no cartesian,
-          |nothing corpus-sized; the roll-up shares the src
-          |partitioning.""".stripMargin,
-        SparkEntry.queries("reciprocal_links")(spark, sf)),
-
-      ("SURT keys: codegen projection",
-        """Must hold: the archive-index key is pure column expressions
-          |(split/reverse/array_join/sort_array) — usable inside the
-          |scan projection, no UDF, no typed stage; index building
-          |stays scan-speed at 100 TB.""".stripMargin,
-        SparkEntry.queries("surt_keys")(spark, sf)),
-
-      ("passage chunks: explode(sequence) codegen, no typed stage",
-        """Must hold: chunk windows are explode(sequence) + slice /
-          |array_join column expressions riding the scan — no UDF, no
-          |typed map, no shuffle; chunk rows stream straight into
-          |embedding/packing stages at scan speed.""".stripMargin,
-        SparkEntry.queries("passage_chunks")(spark, sf)),
-
-      ("curation funnel v2: one accumulating pass + one threshold pass",
-        """Must hold: trap, dedup, readability, and length-gate flags
-          |accumulate over ONE persisted frame (the dedup keeper
-          |window keys on the canonical digest); the only second pass
-          |computes the data-dependent p99 and joins back as a
-          |broadcast 1-row threshold — at 100 TB the corpus is read
-          |twice, not once per stage.""".stripMargin,
-        SparkEntry.queries("curation_funnel_v2")(spark, sf)),
-
-      ("BPE candidates: corpus once, pairs on the vocab",
-        """Must hold: the corpus is touched once (map-side-combined
-          |word counts); the symbol-pair explosion runs on the VOCAB
-          |table — vocabulary cardinality, not corpus cardinality —
-          |and top-k plans as TakeOrderedAndProject; no UDF, no typed
-          |map anywhere.""".stripMargin,
-        SparkEntry.queries("bpe_candidates")(spark, sf)),
-
-      ("length quantiles: histogram-first exact quantiles",
-        """Must hold: the corpus shuffles ONCE into a (value, count)
-          |histogram with map-side partial_count; the cumulative
-          |window runs over the histogram (value-cardinality-bounded,
-          |never the corpus) and each quantile reads off the
-          |cumulative counts — exact, no interpolation, no corpus
-          |sort, no percentile_approx error.""".stripMargin,
-        SparkEntry.queries("length_quantiles")(spark, sf)),
-
-      ("redirect chains: log-depth pointer doubling",
-        """Must hold: every doubling round is ONE equi-join of the
-          |redirect-cardinality pointer table with itself (never a
-          |cartesian) — 2^r-hop chains resolve in r joins where the
-          |naive walk needs one join per hop; cycles exit as
-          |unresolved rather than looping.""".stripMargin,
-        SparkEntry.queries("redirect_chains")(spark, sf)),
-
-      ("recrawl schedule: one key shuffle for window and roll-up",
-        """Must hold: the change-detection lag window and the schedule
-          |aggregate share ONE hashpartitioning on the key — the
-          |fetcher's shard key, so the schedule lands co-located with
-          |the fetch queues; all arithmetic is integer epoch math in
-          |codegen.""".stripMargin,
-        SparkEntry.queries("recrawl_schedule")(spark, sf)),
-
-      ("fuzzy titles: blocked Levenshtein, quadratic term bounded by block",
-        """Must hold: the self-join keys on the 6-char prefix block
-          |(equi-join — never a cartesian or nested-loop), id1 < id2
-          |halves candidates, and the native codegen `levenshtein`
-          |runs only on block-local pairs; block sizes — not corpus
-          |size — bound the O(n²) term at 100 TB.""".stripMargin,
-        SparkEntry.queries("fuzzy_titles")(spark, sf)),
-
-      ("Count-Min heavy hitters: cells combine map-side, sketch broadcasts",
-        """Must hold: the d·w counter build partial-aggregates map-side
-          |(shuffle bounded by tasks·d·w cells, never row count); the
-          |finished sketch — at most d·w rows — BROADCASTS to the probe
-          |join; all hashing is integer column expressions inside
-          |WholeStageCodegen. Estimates can only overestimate; the
-          |overcount column is the measured collision mass.""".stripMargin,
-        SparkEntry.queries("cms_heavy_hitters")(spark, sf)),
-
-      ("KMV distinct sketch: map-side bottom-k, bounded shuffle",
-        """Must hold: the bottom-k TypedImperativeAggregate plans as
-          |ObjectHashAggregate with a PARTIAL mode — each task ships at
-          |most k longs per group, so the shuffle is groups·k·8 bytes
-          |regardless of row count; no Window ever sees the key column.
-          |countDistinct stays exact beside it for the oracle's error
-          |accounting.""".stripMargin,
-        SparkEntry.queries("kmv_distinct")(spark, sf)),
-
-      ("shard assignment: two-level prefix sum, no global window",
-        """Must hold: the corpus-grain window partitions by _bucket
-          |(parallel, ≤ bucketSize rows each); the ONLY
-          |Exchange SinglePartition in the plan is the exclusive
-          |cumsum over the N/bucketSize-row bucket table; bucket bases
-          |re-join as a broadcast. The naive sum().over(orderBy(id))
-          |— one task holding 100 TB — never appears.""".stripMargin,
-        SparkEntry.queries("shard_assign")(spark, sf)),
-
-      ("bloom seen-set: m/64-row bitmap broadcasts, codegen hashing",
-        """Must hold: the built bitmap is at most m/64 (word, bits)
-          |rows — it BROADCASTS to the probe side so the frontier is
-          |never shuffled to answer membership; build shuffles at most
-          |m/64 groups via partial bit_or; all hashing is integer
-          |column expressions inside WholeStageCodegen (no UDF, no
-          |typed detour). No false negatives by construction.""".stripMargin,
-        SparkEntry.queries("bloom_seen")(spark, sf)),
-
-      ("head metadata: one typed tokenizer stage over the page column",
-        """Must hold: title/description/canonical/robots extraction is
-          |ONE typed map riding the scan — map-only, no Exchange before
-          |the output sort, no UDF; the output is a handful of short
-          |strings per row, so at 100 TB the only bytes that move are
-          |the index-grade fields, never the pages.""".stripMargin,
-        SparkEntry.queries("page_meta")(spark, sf)),
-
-      ("WARC ingest: Content-Length framing in one map-only typed stage",
-        """Must hold: WARC shard → response rows is map-only — ONE
-          |parquet scan, typed stages only, no Exchange before the
-          |output sort. Framing is Content-Length-driven (never a
-          |delimiter scan) and per-record gzip members inflate inside
-          |the same stage, so a 1000-executor ingest of a 100 TB crawl
-          |is embarrassingly parallel with zero shuffle.""".stripMargin,
-        SparkEntry.queries("warc_extract")(spark, sf)),
-
-      ("NB classifier: vocab-bounded model, WindowGroupLimit argmax",
-        """Must hold: training shuffles only (label, term, count) rows —
-          |vocab-bounded, never text; scoring joins the doc term counts
-          |against the model on the term key with the per-label priors
-          |broadcast (|labels| rows); the per-doc argmax is
-          |row_number<=1 written so Catalyst plans WindowGroupLimit —
-          |map tasks pre-prune to their local best before the exchange.
-          |Scores are integer micro-nats: any partitioning, same
-          |confusion matrix.""".stripMargin,
-        SparkEntry.queries("nb_lang_confusion")(spark, sf)),
-
-      ("ann_recall: persisted brute-force ground truth",
-        """Must hold: the brute-force top-k (a full corpus scan — the
-          |heaviest job in the bench) materializes ONCE: the recall rows
-          |read InMemoryTableScan of the persisted Q x k ground-truth
-          |table instead of recomputing the scan per semi-join (the
-          |round-4 form ran it 4x).""".stripMargin,
-        SparkEntry.queries("ann_recall")(spark, sf)),
-
-      ("Checkpoint output read with bucket pruning",
-        """Must hold: PartitionFilters prunes to the requested bucket —
-          |a resume run reads only the partitions it recomputes.""".stripMargin,
-        {
-          val out = Files.createTempDirectory("graft_plans_ck_").toString
-          ops.Checkpoint.runResumable(
-            spark.read.parquet(corpusPath), out, 4, "plans")
-          ops.Checkpoint.output(spark, out).filter(col("bucket") === 1)
-        }))
-
-    val md = new StringBuilder
-    md.append(
-      """# PLANS — physical-plan evidence (generated by `graft.Plans`)
-        |
-        |Formatted plans of the load-bearing queries, with the property each
-        |plan must keep. PlanQualitySpec asserts the same properties in CI;
-        |this file is the human-readable copy. Regenerate with
-        |`sbt -batch "runMain graft.Plans"`.
-        |""".stripMargin)
-    sections.foreach { case (title, contract, df) =>
-      md.append(s"\n## $title\n\n")
-      md.append(contract).append("\n\n```\n")
-      md.append(captured(df).trim).append("\n```\n")
+    val results = (Queries.all ++ LibraryPlans.all(corpusPath)).filter(_.plan.nonEmpty).map { q =>
+      val view = PlanView.of(q.build(spark, sf))
+      (q.name, view, q.plan.map(p => p.what -> p.holds(view)))
     }
+    val md = new StringBuilder(
+      """# PLANS — plan properties (generated by `graft.Plans`)
+        |
+        |Each row is one property a registry entry declares, checked on
+        |sf0.001 and a 200-doc corpus. Scan counts and pushdown read the plan
+        |before execution; every other property reads the AQE final plan.
+        |PlanQualitySpec asserts the same properties. Regenerate with
+        |`sbt -batch "runMain graft.Plans"`.
+        |
+        || query | must hold | status |
+        ||---|---|---|
+        |""".stripMargin)
+    for ((name, _, checks) <- results; (what, ok) <- checks)
+      md.append(s"| `$name` | $what | ${if (ok) "pass" else "FAIL"} |\n")
+    for ((name, view, checks) <- results if checks.exists(!_._2))
+      md.append(s"\n## `$name` (failing)\n\n```\n${view.text.trim}\n```\n")
     Files.writeString(Paths.get("PLANS.md"), md.toString)
-    println(s"wrote PLANS.md (${sections.length} plans)")
+    val failed = results.map(_._3.count(!_._2)).sum
+    println(s"wrote PLANS.md (${results.map(_._3.size).sum} properties, $failed failing)")
     spark.stop()
   }
 }

@@ -1,4581 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.corpus.CorpusGen
-import graft.extract.Pipeline
-import graft.ops.{Dedup, Quality, Similarity}
+import graft.queries.Queries
 
 /** Driver contract (SURVEY.md §7.0): one `queries` entry per implemented
   * operator family, with DuckDB-equivalent `oracleSql` where the
   * semantics are ANSI-SQL-expressible. Non-SQL operators (extraction,
-  * MinHash/SimHash, ANN, quality UDFs) are rows-only checks.
-  *
-  * Determinism rules for the oracle compare: every query has a total
-  * ORDER BY; money aggregates go through DECIMAL casts (exact, no
-  * float summation-order drift); ratios are rounded then cast to double
-  * identically on both sides; aliases match exactly. */
+  * MinHash/SimHash, ANN, quality UDFs) are rows-only checks. Both maps
+  * are views over the registry, `graft.queries.Queries.all`. */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** Synthesized HTML page for the anchor oracles — exercises
-    * uppercase tags, single/double quotes, an entity in a href, nested
-    * inline markup, a relative link, and a dangling (never-closed)
-    * anchor, all derived from doc_id so the DuckDB twin can state the
-    * expected extraction without parsing. */
-  private def anchorTestPage: org.apache.spark.sql.Column = {
-    val id = col("doc_id")
-    concat(
-      lit("<html><body><A HREF=\"https://www.Example"),
-      (id % 7).cast("string"),
-      lit(".com/a?x=1&amp;y=2\">Link "), id.cast("string"),
-      lit(" here</a><p>filler <b>text</b></p><a href='http://site"),
-      (id % 5).cast("string"),
-      lit(".org/p'>second <i>link</i></a>"),
-      when(id % 3 === 0, lit("<a href=\"/relative/path\">rel</a>"))
-        .otherwise(lit("")),
-      when(id % 4 === 0,
-        lit("<a href=\"https://dangling.net/x\">never closed"))
-        .otherwise(lit("")),
-      lit("</body></html>"))
-  }
-
-  /** Synthesized head-metadata page: entity-bearing title (plus a
-    * duplicate-title trap), branchy description/robots/canonical/
-    * charset/og:title, a non-hreflang alternate trap, and id%3
-    * language alternates — all derived from doc_id so the DuckDB twin
-    * states the expected fields without parsing. */
-  private def metaTestPage: org.apache.spark.sql.Column = {
-    val id = col("doc_id")
-    concat(
-      lit("<html><head><TITLE>Page &amp; "), id.cast("string"),
-      lit("</title>"),
-      when(id % 5 === 0, lit("<title>dup ignored</title>"))
-        .otherwise(lit("")),
-      lit("<base href=\"http://w"), (id % 7).cast("string"),
-      lit(".example/dir/\">"),
-      when(id % 3 =!= 0,
-        concat(lit("<meta name=Description content=\"Desc "),
-          id.cast("string"), lit("\">")))
-        .otherwise(lit("")),
-      when(id % 4 === 0, lit("<meta name=robots content=\"noindex, follow\">"))
-        .when(id % 4 === 1, lit("<meta name=ROBOTS content=NONE>"))
-        .when(id % 4 === 2, lit("<meta name=robots content=all>"))
-        .otherwise(lit("")),
-      when(id % 2 === 0,
-        concat(lit("<link rel=canonical href=\"http://c"),
-          (id % 7).cast("string"), lit(".example/p"), id.cast("string"),
-          lit("\">")))
-        .otherwise(lit("<meta charset=UTF-8>")),
-      when(id % 3 === 1,
-        concat(lit("<meta property=\"og:title\" content=\"Og "),
-          id.cast("string"), lit("\">")))
-        .otherwise(lit("")),
-      lit("<link rel=\"alternate stylesheet\" href=\"/s.css\">"),
-      when(id % 3 >= 1, lit("<link rel=alternate hreflang=fr href=\"/fr\">"))
-        .otherwise(lit("")),
-      when(id % 3 === 2, lit("<link rel=ALTERNATE hreflang=de href=\"/de\">"))
-        .otherwise(lit("")),
-      lit("</head><body>content</body></html>"))
-  }
-
-  /** Flagship: main-content extraction over the synthesized corpus. */
-  def entry(spark: SparkSession): DataFrame = {
-    val corpus = CorpusGen.generate(spark, 500, partitions = 8).toDF()
-    Pipeline.run(corpus)
-      .select(col("url"), col("status"), col("format"),
-        length(col("fullText")).as("text_chars"), col("docType"))
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---------------------------------------------------- relational core
-
-    "q1_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
-          sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("sum_price"),
-          sum((col("l_extendedprice") * (lit(1) - col("l_discount"))).cast("decimal(18,4)"))
-            .cast("double").as("revenue"),
-          count(lit(1)).as("cnt"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    "q3_top_orders" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("o_orderkey"))
-        .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount"))).cast("decimal(18,4)"))
-          .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey"))
-        .limit(10)
-    }),
-
-    "q5_region_suppliers" -> ((s, dir) => {
-      val su = t(s, dir, "supplier")
-      val n = t(s, dir, "nation")
-      val r = t(s, dir, "region")
-      su.join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(count(lit(1)).as("n_suppliers"),
-          sum(col("s_acctbal").cast("decimal(18,2)")).cast("double").as("total_acctbal"))
-        .orderBy(col("r_name"))
-    }),
-
-    "q_topk_parts" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val p = t(s, dir, "part")
-      li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_partkey"), col("p_name"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("total_qty"))
-        .orderBy(col("total_qty").desc, col("p_partkey"))
-        .limit(20)
-    }),
-
-    // TPC-H q10 shape: returned-item revenue by customer over a date
-    // window. Scale notes: only nation broadcasts (25 rows); customer is
-    // key-scale so its join shuffles (AQE may still elect broadcast at
-    // small SF), and the o_orderdate filter prunes at the orders scan.
-    "q10_returned_revenue" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      li.filter(col("l_returnflag") === "R")
-        .join(o.filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1996-07-01").cast("timestamp")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-        .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount"))).cast("decimal(18,4)"))
-          .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-    }),
-
-    // multi-level aggregation (ROLLUP grouping sets): per-(type, day)
-    // counts plus per-type and grand-total roll-up rows in one pass —
-    // Spark plans a single Expand + two-phase hash aggregate, no
-    // re-scan per level. NULL group keys are COALESCEd to 'ALL' on both
-    // sides so the driver's column-sorted compare sees identical rows.
-    "events_rollup" -> ((s, dir) => {
-      t(s, dir, "events")
-        .select(col("event_type"), date_format(col("ts"), "yyyy-MM-dd").as("day"),
-          col("value"))
-        .rollup(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
-        .select(coalesce(col("event_type"), lit("ALL")).as("event_type"),
-          coalesce(col("day"), lit("ALL")).as("day"),
-          col("n_events"), col("sum_value"))
-        .orderBy(col("event_type"), col("day"))
-    }),
-
-    // semi-structured extraction: JSON path access inside the scan
-    // projection (get_json_object is codegen'd — no UDF) feeding a
-    // two-phase hash aggregate; the webtext-pipeline shape for
-    // crawl-metadata sidecars carried as JSON strings
-    "events_props_json" -> ((s, dir) => {
-      t(s, dir, "events")
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy(col("event_type"))
-    }),
-
-    // distinct aggregation + exact percentiles: COUNT(DISTINCT) plans the
-    // Expand-based two-phase distinct aggregate; percentile() is the
-    // exact sort-based aggregate (both rounded to 4dp — interpolation
-    // float noise), the shape for per-slice cardinality/latency reports
-    "events_user_percentiles" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("n_users"),
-          round(expr("percentile(value, 0.5)"), 4).as("p50"),
-          round(expr("percentile(value, 0.95)"), 4).as("p95"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q6_filtered_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_quantity") < 24 && col("l_discount") >= 0.05 &&
-          col("l_discount") <= 0.07)
-        .agg(sum((col("l_extendedprice") * col("l_discount")).cast("decimal(18,4)"))
-          .cast("double").as("revenue"),
-          count(lit(1)).as("cnt"))
-    }),
-
-    // --------------------------------------------- documents: analyzers
-
-    "doc_len_hist" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .groupBy(floor(length(col("text")) / 500).as("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(size(split(col("text"), " ", -1)).cast("long")).as("total_tokens"))
-        .orderBy(col("bucket"))
-    }),
-
-    "doc_stats" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          length(col("text")).as("n_chars_actual"),
-          size(split(col("text"), " ", -1)).as("n_tokens"),
-          col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "word_topk" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(explode(split(lower(col("text")), " ", -1)).as("word"))
-        .filter(length(col("word")) > 2)
-        .groupBy(col("word"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("word"))
-        .limit(20)
-    }),
-
-    "wordcloud_top10" -> ((s, dir) => {
-      // token total folded in-plan: every token lands in exactly one
-      // group, so sum(cnt) over the aggregated vocabulary == toks.count()
-      // — computed by an unbounded window over the (bounded, vocabulary-
-      // sized) aggregate instead of a second full corpus scan.
-      val toks = t(s, dir, "documents")
-        .select(explode(split(lower(col("text")), " ", -1)).as("word"))
-        .filter(length(col("word")) > 2)
-      val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
-      toks.groupBy(col("word"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("pct",
-          round(col("cnt") * lit(100.0) / sum(col("cnt")).over(wAll).cast("double"), 2)
-            .cast("double"))
-        .orderBy(col("cnt").desc, col("word"))
-        .limit(10)
-    }),
-
-    "doctype_score" -> ((s, dir) => {
-      def hits(word: String): Column =
-        ((length(col("text")) - length(regexp_replace(col("text"), word, "")))
-          / lit(word.length)).cast("bigint")
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          hits("data").as("data_hits"),
-          hits("table").as("table_hits"),
-          hits("join").as("join_hits"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // R1/R2 page-classification thresholds + single-page structure
-    // roll-up, exercised through Extractor.classifyPage on a synthetic
-    // per-doc "page" (substr slice + synthetic image count/coverage give
-    // ALL FIVE page classes, incl. the coverage-driven mixed_content and
-    // scanned_image branches)
-    "doc_structure" -> ((s, dir) => {
-      val classify = udf { (t: String, imgs: Int, cov: Double) =>
-        val stripped = graft.analyzers.PyText.strip(if (t == null) "" else t)
-        val (pt, _, _, isOcr, isMixed) =
-          graft.extract.Extractor.classifyPage(stripped.length, imgs, cov)
-        (pt,
-          if (isMixed) "mixed"
-          else if (isOcr) "pure_scanned"
-          else "pure_digital")
-      }
-      t(s, dir, "documents")
-        .withColumn("page_text", expr("substring(text, 1, cast(doc_id % 120 as int))"))
-        .withColumn("imgs", (col("doc_id") % 3).cast("int"))
-        .withColumn("cov", (col("doc_id") % 10).cast("double") / 10.0)
-        .withColumn("c", classify(col("page_text"), col("imgs"), col("cov")))
-        .select(col("doc_id"), col("c._1").as("page_type"),
-          col("c._2").as("doc_structure"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // R4 additive complexity (Extractor.complexityScore) with synthetic
-    // page-count / format / language-hint variety so every band fires
-    "complexity_sql" -> ((s, dir) => {
-      val cx = udf { (len: Long, pages: Int, fmt: String, lang: String) =>
-        graft.extract.Extractor.complexityScore(len, pages, fmt, lang)
-      }
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          cx(length(col("text")).cast("long"),
-            (col("doc_id") % 60 + 1).cast("int"),
-            when(col("doc_id") % 2 === 0, "pdf").otherwise("html"),
-            when(col("doc_id") % 7 === 0, lit("zh")).otherwise(col("lang")))
-            .cast("int").as("complexity"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // T5 keyword scoring shape: tf * ln(1 + total/(tf+1)), top 15
-    "keyword_topk_sql" -> ((s, dir) => {
-      // token total folded in-plan (see wordcloud_top10): one corpus scan
-      val toks = t(s, dir, "documents")
-        .select(explode(split(lower(col("text")), " ", -1)).as("word"))
-        .filter(length(col("word")) > 3 && !col("word").rlike("^[0-9]+$"))
-      val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
-      toks.groupBy(col("word"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("score",
-          round(col("cnt") * log(lit(1.0) +
-            sum(col("cnt")).over(wAll).cast("double") / (col("cnt") + 1)), 4))
-        .orderBy(col("score").desc, col("word"))
-        .limit(15)
-    }),
-
-    "lang_rollup" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("text")).cast("long")).as("total_chars"))
-        .orderBy(col("lang"))
-    }),
-
-    "dedup_exact" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .groupBy(md5(col("text")).as("digest"))
-        .agg(count(lit(1)).as("cluster_size"), min(col("doc_id")).as("canonical_id"))
-        .orderBy(col("digest"))
-        .limit(100)
-    }),
-
-    "quality_sql" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          (length(col("text")) - length(regexp_replace(col("text"), "[.,!?;:]", "")))
-            .cast("bigint").as("punct_chars"),
-          size(split(col("text"), " ", -1)).as("n_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ------------------------------------------------- events: roll-ups
-
-    "events_daily" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"),
-          countDistinct(col("user_id")).as("uniq_users"))
-        .orderBy(col("day"), col("event_type"))
-    }),
-
-    "events_user_top" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("value").desc, col("event_id"))
-      t(s, dir, "events")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("event_type"), col("value"))
-        .orderBy(col("user_id"))
-    }),
-
-    // window frame: per-user cumulative sum (ROWS UNBOUNDED PRECEDING)
-    "events_running_sum" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "events")
-        .withColumn("running",
-          sum(col("value").cast("decimal(18,2)")).over(w).cast("double"))
-        .select(col("user_id"), col("event_id"), col("running"))
-        .orderBy(col("user_id"), col("event_id"))
-    }),
-
-    "orders_daily" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"),
-          col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("total"))
-        .orderBy(col("day"), col("o_orderstatus"))
-    }),
-
-    // gap-based sessionization: lag + conditional cumsum assigns session
-    // ids (>30 min silence opens a session), then per-session roll-up
-    "events_sessions" -> ((s, dir) => {
-      val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
-        .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-        .withColumn("new_sess",
-          when(col("prev_ts").isNull ||
-            unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts")) > 1800, 1L)
-            .otherwise(0L))
-        .withColumn("session_id", sum(col("new_sess")).over(
-          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("session_value"))
-        .orderBy(col("user_id"), col("session_id"))
-    }),
-
-    // correlated-subquery shape (TPC-H q2-style): suppliers at their
-    // nation's maximum account balance
-    "q_max_acctbal_suppliers" -> ((s, dir) => {
-      val su = t(s, dir, "supplier")
-      val maxBal = su.groupBy(col("s_nationkey").as("mk"))
-        .agg(max(col("s_acctbal")).as("max_bal"))
-      su.join(broadcast(maxBal),
-          col("s_nationkey") === col("mk") && col("s_acctbal") === col("max_bal"))
-        .select(col("s_nationkey"), col("s_suppkey"),
-          col("s_acctbal").cast("decimal(18,2)").cast("double").as("acctbal"))
-        .orderBy(col("s_nationkey"), col("s_suppkey"))
-    }),
-
-    // as-of join: each event picks up the latest prior per-day order
-    // total of the matching customer (union + carry-forward window —
-    // one shuffle on the key; DuckDB's native ASOF JOIN is the oracle)
-    "events_asof" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val ord = t(s, dir, "orders")
-        .groupBy(col("o_custkey"), col("o_orderdate"))
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
-          .as("order_total"))
-      ops.AsofJoin.asofJoin(ev, ord, "user_id", "o_custkey", "ts", "o_orderdate",
-          Seq("order_total"))
-        .select(col("event_id"), col("user_id"),
-          round(col("order_total"), 2).as("order_total"))
-        .orderBy(col("event_id"))
-    }),
-
-    "skew_salted_stats" -> ((s, dir) => {
-      // two-phase salted aggregation (hot-key path) must equal the direct
-      // group-by; decimal cast makes the cross-salt sum order-exact
-      val ev = t(s, dir, "events")
-        .withColumn("v", col("value").cast("decimal(18,2)"))
-      ops.Skew.saltedStats(ev, "event_type", "v", "event_id", salt = 16)
-        .select(col("event_type"),
-          col("total").cast("double").as("total"), col("cnt"),
-          col("min").cast("double").as("min"),
-          col("max").cast("double").as("max"))
-        .orderBy(col("event_type"))
-    }),
-
-    "value_buckets" -> ((s, dir) => {
-      t(s, dir, "events")
-        .withColumn("bucket",
-          when(col("value") >= 160, "certain")
-            .when(col("value") >= 120, "high")
-            .when(col("value") >= 80, "medium")
-            .when(col("value") >= 40, "low")
-            .otherwise("uncertain"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-        .orderBy(col("bucket"))
-    }),
-
-    // ------------------------------------- extraction engine (rows-only)
-
-    "extract_corpus" -> ((s, dir) => {
-      val n = if (dir.contains("sf0.1")) 5000L else if (dir.contains("sf0.01")) 2000L else 500L
-      val corpus = CorpusGen.generate(s, n, partitions = 32).toDF()
-      Pipeline.run(corpus)
-        .select(col("url"), col("status"), col("format"), col("pageCount"),
-          length(col("fullText")).as("text_chars"), col("docType"),
-          col("signatureStatus"), col("detectedLanguage"),
-          col("documentStructure").as("doc_structure"),
-          col("complexityScore").as("complexity"))
-        .orderBy(col("url"))
-    }),
-
-    // image payloads through the batched multimodal feature stage —
-    // REAL ImageIO decode (JDK built-in readers): src dims, mean luma,
-    // histogram and average-hash all come from actual pixels of the
-    // corpus's synthesized PNG/JPEG/GIF payloads
-    "multimodal_features" -> ((s, dir) => {
-      import s.implicits._
-      val corpus = CorpusGen.generate(s, 1000, partitions = 8)
-      val media = corpus
-        .filter(r => Set("png", "jpg", "gif")(
-          graft.extract.Extractor.sniffFormat(r.html)))
-        .map(r => ops.Multimodal.MediaRow(
-          // url suffix is the numeric corpus index
-          r.url.substring(r.url.lastIndexOf('/') + 1).toLong,
-          r.html,
-          ops.Multimodal.MediaMeta(ops.Multimodal.sniffMime(r.html),
-            32, 32, 1, 0L)))
-      ops.Multimodal.imageFeatures(media)
-        .toDF()
-        .select(col("id"), col("width"), col("height"),
-          col("srcWidth").as("src_width"), col("srcHeight").as("src_height"),
-          col("decoded"),
-          round(col("meanLuma"), 4).as("mean_luma"),
-          // serialized: the driver's pandas compare sorts every column and
-          // cannot hash/sort raw arrays (round-2 err) — keep arrays out of
-          // driver-compared outputs
-          concat_ws(",", col("histogram")).as("histogram"), col("ahash"))
-        .orderBy(col("id"))
-    }),
-
-    // audio payloads through the batched feature stage — REAL
-    // javax.sound.sampled parsing (JDK built-in, the audio analog of the
-    // ImageIO path): sample rate / channels / bit depth / frame count /
-    // duration from the WAV header, RMS + peak from the PCM frames.
-    // Payloads are deterministic synthesized PCM16 square waves (integer
-    // amplitudes — RMS is EXACTLY amp/32768, no trig, bit-stable), plus
-    // PNG bytes to exercise the decoded=false stub branch. Rows-only
-    // (RIFF parsing is not DuckDB-expressible); AudioSpec pins values.
-    "audio_features" -> ((s, dir) => {
-      import s.implicits._
-      val media = s.range(0, 30).as[Long].map { i =>
-        val payload =
-          if (i % 5 == 4) {
-            // undecodable branch: PNG magic + deterministic junk (not
-            // audio — exercises the decoded=false stub row)
-            Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A) ++
-              Array.tabulate(64)(j => ((i * 31 + j * 7) % 251).toByte)
-          } else {
-            val rate = if (i % 2 == 0) 8000 else 16000
-            val channels = (i % 3 + 1).toInt.min(2)
-            val amp = (2048 * (i % 7 + 1)).toInt.toShort
-            val nFrames = 400 + (i * 37 % 400).toInt
-            val half = 8 + (i % 5).toInt
-            val samples = Array.tabulate(nFrames * channels) { k =>
-              val frame = k / channels
-              if ((frame / half) % 2 == 0) amp else (-amp).toShort
-            }
-            ops.Multimodal.synthWavPcm16(rate, channels, samples)
-          }
-        ops.Multimodal.MediaRow(i, payload,
-          ops.Multimodal.MediaMeta(ops.Multimodal.sniffMime(payload), 0, 0, 0, 0L))
-      }
-      ops.Multimodal.audioFeatures(media)
-        .toDF()
-        .select(col("id"), col("decoded"), col("encoding"),
-          col("sampleRate").cast("int").as("sample_rate"),
-          col("channels"), col("sampleSizeBits").as("bits"),
-          col("frames"), col("durationMs").as("duration_ms"),
-          round(col("rms"), 4).as("rms"), round(col("peak"), 4).as("peak"))
-        .orderBy(col("id"))
-    }),
-
-    // video payloads through the container-metadata stage — REAL
-    // from-scratch ISO-BMFF box parsing (ops.Mp4Meta: brand, duration,
-    // tracks, dimensions, codec fourcc from actual bytes; only the frame
-    // DECODE is stubbed — the JDK ships no video codec). Payloads are
-    // deterministic synthesized box trees (independent writer); every
-    // third row is non-MP4 junk exercising the parsed=false branch.
-    "video_meta" -> ((s, dir) => {
-      import s.implicits._
-      val media = s.range(0, 24).as[Long].map { i =>
-        val payload =
-          if (i % 3 == 2)
-            Array.tabulate(48)(j => ((i * 13 + j * 5) % 251).toByte)
-          else {
-            val dur = 1000L + i * 250L
-            val tracks =
-              if (i % 2 == 0)
-                Seq(("vide", "avc1", 320 + (i * 16).toInt, 240 + (i * 8).toInt),
-                  ("soun", "mp4a", 0, 0))
-              else Seq(("soun", "mp4a", 0, 0))
-            ops.Mp4Meta.synthMp4(timescale = 1000L, duration = dur, tracks)
-          }
-        ops.Multimodal.MediaRow(i, payload,
-          ops.Multimodal.MediaMeta(ops.Multimodal.sniffMime(payload), 0, 0, 0, 0L))
-      }
-      ops.Multimodal.videoFeatures(media)
-        .toDF()
-        .select(col("id"), col("parsed"), col("brand"), col("timescale"),
-          col("durationMs").as("duration_ms"), col("nTracks").as("n_tracks"),
-          col("hasVideo").as("has_video"), col("hasAudio").as("has_audio"),
-          col("width"), col("height"),
-          col("videoCodec").as("video_codec"), col("audioCodec").as("audio_codec"))
-        .orderBy(col("id"))
-    }),
-
-    // URL canonicalization — the url-level dedup key every CC-style
-    // curation pipeline computes first (CCNet/RefinedWeb dedupe by
-    // normalized URL before any content hashing). Pure column exprs
-    // (codegen, runnable in the scan projection); messy URLs are
-    // synthesized deterministically from doc_id IDENTICALLY on both
-    // sides so the DuckDB twin checks the normalization itself.
-    "url_canonical" -> ((s, dir) => {
-      val raw = concat(
-        when(col("doc_id") % 2 === 0, "HTTPS").otherwise("http"),
-        lit("://WWW.Example"), (col("doc_id") % 7).cast("string"), lit(".COM"),
-        when(col("doc_id") % 2 === 0, ":443").otherwise(":80"),
-        lit("/Path/"), col("doc_id").cast("string"),
-        when(col("doc_id") % 3 === 0, lit("?b=2&a=1&c=3")).otherwise(lit("")),
-        when(col("doc_id") % 4 === 0, lit("#Frag")).otherwise(lit("")))
-      t(s, dir, "documents")
-        .select(col("doc_id"), raw.as("url_raw"))
-        .withColumn("url", ops.UrlNorm.canonicalizeUrl(col("url_raw")))
-        .orderBy(col("doc_id"))
-    }),
-
-    // URL-level dedup — canonicalization as the dedup KEY: raw forms
-    // that differ only in host case / explicit default port / fragment /
-    // query-param order collapse to one canonical url; keep the smallest
-    // doc_id as canonical. Path is doc_id % 50 so ~10 raw variants share
-    // each canonical key. One hash aggregate on the (short) canonical
-    // string — the url-grain first pass before any content hashing.
-    "url_dedup" -> ((s, dir) => {
-      val raw = concat(lit("https://"),
-        when(col("doc_id") % 2 === 0, "WWW.Example").otherwise("www.example"),
-        (col("doc_id") % 7).cast("string"), lit(".COM"),
-        when(col("doc_id") % 2 === 0, ":443").otherwise(""),
-        lit("/path/"), (col("doc_id") % 50).cast("string"),
-        when(col("doc_id") % 3 === 0, lit("?b=2&a=1"))
-          .when(col("doc_id") % 3 === 1, lit("?a=1&b=2"))
-          .otherwise(lit("?a=1&b=2")),
-        when(col("doc_id") % 4 === 0, lit("#Frag")).otherwise(lit("")))
-      t(s, dir, "documents")
-        .select(col("doc_id"), ops.UrlNorm.canonicalizeUrl(raw).as("url"))
-        .groupBy(col("url"))
-        .agg(min(col("doc_id")).as("canonical_doc_id"),
-          count(lit(1)).as("n_variants"))
-        .orderBy(col("url"))
-    }),
-
-    // frame-sampling integration: the REAL parsed container duration
-    // (Mp4Meta) drives the sampling fan-out — one row per everyMs up to
-    // the mvhd duration; the frame payload slice is the one stubbed step
-    // (no JDK video codec). n_frames per id == durationMs / 500.
-    "video_frames" -> ((s, dir) => {
-      import s.implicits._
-      val media = s.range(0, 12).as[Long].map { i =>
-        val payload = ops.Mp4Meta.synthMp4(1000L, 1000L + (i % 5) * 700L,
-          Seq(("vide", "avc1", 320, 240)))
-        val meta = ops.Mp4Meta.parse(payload)
-        ops.Multimodal.MediaRow(i, payload,
-          ops.Multimodal.MediaMeta("video/mp4", 320, 240, 1, meta.durationMs))
-      }
-      ops.Multimodal.sampleFrames(media, everyMs = 500L)
-        .toDF()
-        .groupBy(col("id"))
-        .agg(count(lit(1)).as("n_frames"), max(col("tsMs")).as("last_ts_ms"),
-          sum(length(col("payload"))).cast("long").as("sliced_bytes"))
-        .orderBy(col("id"))
-    }),
-
-    // sequence packing (concat-and-chunk, GPT-style pretraining batches):
-    // the DISTRIBUTED two-pass prefix sum (per-partition totals →
-    // broadcast offsets → partition-local scan, no single-partition
-    // window) must reproduce the exact sequential cumsum — the DuckDB
-    // twin computes it with an ordered window, so a green row certifies
-    // the distributed scan, not merely that rows landed. Cost unit is
-    // chars + 1 separator; context window 2048.
-    "packing_chunks" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), length(col("text")).as("n_chars"))
-      ops.Packing.concatChunkPack(docs, "doc_id", "n_chars",
-          contextLen = 2048L, sepTokens = 1L)
-        .orderBy(col("doc_id"))
-    }),
-
-    // per-domain curation stats — the domain-mix report every curation
-    // pipeline runs (host = group key, doc count + byte mass per
-    // domain); same deterministic raw-url construction as url_dedup
-    "domain_stats" -> ((s, dir) => {
-      val raw = concat(lit("https://"),
-        when(col("doc_id") % 2 === 0, "WWW.Example").otherwise("www.example"),
-        (col("doc_id") % 7).cast("string"), lit(".COM"),
-        when(col("doc_id") % 2 === 0, ":443").otherwise(""),
-        lit("/path/"), (col("doc_id") % 50).cast("string"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), ops.UrlNorm.hostOf(raw).as("host"),
-          length(col("text")).cast("long").as("n_chars"))
-        .groupBy(col("host"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"),
-          min(col("doc_id")).as("first_doc"))
-        .orderBy(col("host"))
-    }),
-
-    // per-host document cap (domain rate limiting): keep the 20 longest
-    // docs per host (doc_id breaks ties totally); written as
-    // row_number<=k so Catalyst plans a WindowGroupLimit — map tasks
-    // pre-prune to local top-k per host before the shuffle
-    "host_cap" -> ((s, dir) => {
-      val raw = concat(lit("https://www.example"),
-        (col("doc_id") % 7).cast("string"), lit(".com/path/"),
-        col("doc_id").cast("string"))
-      ops.HostCap.capPerHost(
-          t(s, dir, "documents")
-            .select(col("doc_id"), ops.UrlNorm.hostOf(raw).as("host"),
-              length(col("text")).cast("long").as("n_chars")),
-          "host", 20,
-          col("n_chars").desc, col("doc_id").asc)
-        .select(col("doc_id"), col("host"), col("n_chars"),
-          col("host_rank").cast("long").as("host_rank"))
-        .orderBy(col("host"), col("host_rank"))
-    }),
-
-    // per-language length deciles — corpus shape report for curation
-    // dashboards; ntile over a TOTAL order (length, doc_id) so bucket
-    // boundaries are deterministic on any engine
-    "lang_deciles" -> ((s, dir) => {
-      val w = Window.partitionBy(col("lang"))
-        .orderBy(col("n_chars"), col("doc_id"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          length(col("text")).cast("long").as("n_chars"))
-        .withColumn("decile", ntile(10).over(w).cast("long"))
-        .groupBy(col("lang"), col("decile"))
-        .agg(count(lit(1)).as("n_docs"),
-          min(col("n_chars")).as("min_chars"),
-          max(col("n_chars")).as("max_chars"))
-        .orderBy(col("lang"), col("decile"))
-    }),
-
-    // Unicode NFC normalization via the native codegen expression
-    // (functions.NfcNormalize — Spark ships no builtin): decomposed
-    // combining sequences and compatibility singletons are synthesized
-    // deterministically on both sides; DuckDB's nfc_normalize is the
-    // independent twin, so the oracle certifies the normalization
-    // itself byte-for-byte.
-    "nfc_normalize" -> ((s, dir) => {
-      graft.functions.GraftExtensions.register(s)
-      val raw = concat(
-        substring(col("text"), 1, 20),
-        when(col("doc_id") % 3 === 0, lit(" éclair"))
-          .when(col("doc_id") % 3 === 1, lit(" angèle"))
-          .otherwise(lit(" plain")),
-        when(col("doc_id") % 5 === 0, lit(" Å")).otherwise(lit("")))
-      t(s, dir, "documents")
-        .select(col("doc_id"), raw.as("raw"))
-        .withColumn("nfc", graft.functions.NfcNormalize.nfcCol(col("raw")))
-        .select(col("doc_id"),
-          length(col("raw")).cast("long").as("n_chars_raw"),
-          col("nfc"),
-          length(col("nfc")).cast("long").as("n_chars_nfc"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // C4 line-level cleaning — line boundaries synthesized
-    // deterministically on both sides (documents.text has no newlines):
-    // three prose-shaped lines, a short nav stub, a javascript notice,
-    // a variably-terminated line, plus lorem-ipsum / brace lines on a
-    // doc_id cadence so both per-line and per-doc rules exercise.
-    "c4_clean" -> ((s, dir) => {
-      val nl = lit("\n")
-      val ctext = concat(
-        substring(col("text"), 1, 50), lit("."), nl,
-        lit("this is a perfectly fine prose sentence."), nl,
-        lit("menu"), nl,
-        lit("please enable javascript to view this page."), nl,
-        substring(col("text"), 51, 40),
-        when(col("doc_id") % 4 === 0, lit(" and so it ends."))
-          .otherwise(lit(" no terminal")), nl,
-        substring(col("text"), 91, 40), lit(" closing words."),
-        when(col("doc_id") % 10 === 0,
-          concat(nl, lit("lorem ipsum dolor sit amet."))).otherwise(lit("")),
-        when(col("doc_id") % 9 === 0,
-          concat(nl, lit("function f() { return 1; }"))).otherwise(lit("")))
-      ops.C4Clean.cleanLines(
-          t(s, dir, "documents").select(col("doc_id"), ctext.as("ctext")),
-          "ctext")
-        .select(col("doc_id"), col("n_lines"), col("n_kept_lines"),
-          col("c4_keep"), col("cleaned"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // domain blocklist derive + apply — per-host mean quality (doc
-    // length) below the median of host means blocklists the host; the
-    // anti-join drops its docs. Output: per-host survivor roll-up with
-    // checksum (blocked hosts vanish), certifying both the derivation
-    // and the application.
-    "domain_blocklist" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"),
-          concat(lit("www.example"), (col("doc_id") % 7).cast("string"),
-            lit(".com")).as("host"),
-          length(col("text")).cast("long").as("n_chars"))
-      val stats = ops.DomainFilter.hostStats(docs, "host", "n_chars")
-      val kept = ops.DomainFilter.applyBlocklist(
-        docs, ops.DomainFilter.deriveBlocklist(stats), "host")
-      kept.groupBy(col("host"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).cast("long").as("doc_checksum"))
-        .orderBy(col("host"))
-    }),
-
-    // host link graph + 3-iteration integer PageRank — outlink hosts
-    // synthesized deterministically from doc_id (3 targets per doc over
-    // an 11-host universe); ranks are pure integer micro-units, so the
-    // DuckDB twin (unrolled power steps) reproduces them byte-exactly.
-    "host_pagerank" -> ((s, dir) => {
-      val h  = (e: org.apache.spark.sql.Column) =>
-        concat(lit("h"), e.cast("string"))
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"),
-          h(col("doc_id") % 11).as("host"),
-          array(
-            h((col("doc_id") * 3 + 1) % 11),
-            h((col("doc_id") * 7 + 2) % 11),
-            h((col("doc_id") + 5) % 11)).as("out_hosts"))
-      val edges = ops.LinkGraph.hostEdges(docs, "host", "out_hosts")
-      val deg = edges.groupBy(col("src").as("host"))
-        .agg(count(lit(1)).as("out_deg"))
-      ops.LinkGraph.pageRankMicro(edges, iterations = 3)
-        .join(deg, Seq("host"), "left")
-        .select(col("host"),
-          coalesce(col("out_deg"), lit(0L)).as("out_deg"),
-          col("rank_micro"))
-        .orderBy(col("host"))
-    }),
-
-    // BM25 keyword search over the inverted index — integer-rational
-    // tf part and micro-nat-quantized idf make per-doc scores integer
-    // sums, so the DuckDB twin reproduces ranking AND scores
-    // byte-exactly. Top-k plans as TakeOrderedAndProject.
-    "bm25_search" -> ((s, dir) =>
-      ops.Search.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-        Seq("window", "merge", "vector"), 50)),
-
-    // temperature-scaled mixing quotas per language — α=0.5 weights in
-    // integer micro-units (per-group sqrt quantized FIRST, integer-sum
-    // normalizer), doc budget 100k split by weight.
-    "mixing_quotas" -> ((s, dir) =>
-      ops.Mixing.temperatureQuotas(t(s, dir, "documents"), "lang",
-          budget = 100000L)
-        .orderBy(col("lang"))),
-
-    // training-token budget per language — GPT-2-style pre-tokenizer
-    // regex counts (RE2-safe subset, explicit whitespace class) as
-    // codegen regexp_count column exprs; roll-up ships (lang, sums).
-    "token_budget" -> ((s, dir) =>
-      ops.TokenCount.tokenBudget(t(s, dir, "documents"), "text", "lang")
-        .orderBy(col("lang"))),
-
-    // crawl-frontier URL rules — scheme/length/depth/params/trap
-    // checks as pure column exprs, first-failing-rule reasons;
-    // synthesized urls exercise every rule. Output: per-reason tally
-    // with doc_id checksum (certifies WHICH docs each rule caught).
-    "url_rules" -> ((s, dir) => {
-      val url = when(col("doc_id") % 13 === 0,
-          lit("ftp://www.example.com/x"))
-        .otherwise(concat(
-          when(col("doc_id") % 2 === 0, lit("https")).otherwise(lit("http")),
-          lit("://www.example"), (col("doc_id") % 7).cast("string"),
-          lit(".com"),
-          expr("repeat('/p', cast(doc_id % 12 as int))"),
-          when(col("doc_id") % 17 === 0,
-            concat(lit("/"), expr("repeat('z', 2100)"))).otherwise(lit("")),
-          when(col("doc_id") % 5 === 0, lit("?sessionid=abc123"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 11 === 0,
-            lit("?a=1&b=2&c=3&d=4&e=5&f=6&g=7&h=8&i=9"))
-            .otherwise(lit(""))))
-      ops.UrlFilter.withUrlRules(
-          t(s, dir, "documents").select(col("doc_id"), url.as("url")),
-          "url")
-        .groupBy(coalesce(col("url_drop_reason"), lit("kept"))
-          .as("reason"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).cast("long").as("doc_checksum"))
-        .orderBy(col("reason"))
-    }),
-
-    // anchor extraction through the REAL streaming HTML tokenizer —
-    // the synthesized pages exercise uppercase tags, single/double
-    // quotes, entities in hrefs, nested inline markup, implicit-close,
-    // and dangling anchors; the oracle re-derives the expected
-    // (href, text) rows directly from doc_id, independently certifying
-    // the tokenizer path end to end.
-    "anchor_rows" -> ((s, dir) =>
-      html.Anchors.anchorRows(
-          t(s, dir, "documents")
-            .select(col("doc_id"), anchorTestPage.as("page_html")),
-          "doc_id", "page_html")
-        .orderBy(col("doc_id"), col("href"))),
-
-    // per-target-host anchor roll-up — composes the tokenizer-based
-    // anchor stream with UrlNorm.hostOf (relative hrefs drop: no
-    // host); certifies the extraction->link-graph plumbing end to end.
-    "anchor_host_stats" -> ((s, dir) => {
-      val anchors = html.Anchors.anchorRows(
-        t(s, dir, "documents")
-          .select(col("doc_id"), anchorTestPage.as("page_html")),
-        "doc_id", "page_html")
-      anchors
-        .where(col("href").startsWith("http://") ||
-          col("href").startsWith("https://"))
-        .select(col("doc_id"), ops.UrlNorm.hostOf(col("href")).as("target_host"))
-        .groupBy(col("target_host"))
-        .agg(count(lit(1)).as("n_links"),
-          countDistinct(col("doc_id")).as("n_src_docs"),
-          sum(col("doc_id")).cast("long").as("doc_checksum"))
-        .orderBy(col("target_host"))
-    }),
-
-    // multinomial Naive Bayes language classifier, trained and scored
-    // in-corpus — integer micro-nat log-probs make the confusion
-    // matrix engine-exact. Output: (actual, predicted) tally with
-    // doc_id checksums.
-    "nb_lang_confusion" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val (pt, pl) = ops.NaiveBayesText.train(docs, "doc_id", "text", "lang")
-      ops.NaiveBayesText.predict(docs, "doc_id", "text", pt, pl)
-        .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-        .groupBy(col("lang"), col("predicted"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).cast("long").as("doc_checksum"))
-        .orderBy(col("lang"), col("predicted"))
-    }),
-
-    // duplicate-span removal (Lee et al. removal stage) — string-keyed
-    // here so the DuckDB twin can reproduce the cleaned text
-    // byte-exactly; hashed=true is the production path (spec-pinned
-    // equal on fixtures).
-    "span_removal" -> ((s, dir) =>
-      ops.SpanRemoval.removeDuplicateSpans(
-          t(s, dir, "documents"), "doc_id", "text", hashed = false)
-        .orderBy(col("doc_id"))),
-
-    // robots.txt permission evaluation (RFC 9309) — synthesized
-    // frontier exercises group selection (graftbot-specific deny vs
-    // the * group), /private/ prefix rules, the longest-match
-    // allow override, wildcard+anchor patterns, and a host with no
-    // robots at all; the oracle states expected outcomes per branch.
-    "robots_allowed" -> ((s, dir) => {
-      import s.implicits._
-      val m5 = col("doc_id") % 5
-      val frontier = t(s, dir, "documents").select(
-        concat(lit("h"), (col("doc_id") % 4).cast("string"), lit(".com"))
-          .as("host"),
-        when(m5 === 0, lit("/private/data/1"))
-          .when(m5 === 1, lit("/private/pubfile"))
-          .when(m5 === 2, lit("/docs/file.pdf"))
-          .when(m5 === 3, lit("/docs/file.pdfx"))
-          .otherwise(lit("/open/page")).as("path"))
-      val starTxt = "User-agent: *\nDisallow: /private/\n" +
-        "Allow: /private/pub*\nDisallow: /*.pdf$\n"
-      val botTxt = "User-agent: graftbot\nDisallow: /\n\n" +
-        "User-agent: *\nAllow: /\n"
-      val robots = Seq(("h0.com", starTxt), ("h1.com", starTxt),
-        ("h3.com", botTxt)).toDF("host", "robots_txt")
-      ops.Robots.allowedFlags(frontier, robots, "host", "path",
-          "robots_txt", "graftbot")
-        .groupBy(col("host"), col("path"), col("allowed"))
-        .agg(count(lit(1)).as("n_urls"))
-        .orderBy(col("host"), col("path"), col("allowed"))
-    }),
-
-    // WARC container ingest (ISO 28500) — per doc_id a three-record
-    // shard (warcinfo + request + response) is serialized by the WARC
-    // writer, half of them as per-record gzip members (the Common
-    // Crawl layout), then parsed back by the framing parser. The
-    // response body carries a CRLF-CRLF + "WARC/1.1" trap so only
-    // Content-Length-driven framing (never delimiter scans) survives;
-    // the oracle reconstructs every field from doc_id with no parsing.
-    "warc_extract" -> ((s, dir) => {
-      import s.implicits._
-      val blobs = t(s, dir, "documents").select(col("doc_id"))
-        .as[Long]
-        .map { id =>
-          val url = s"http://w${id % 7}.example/p$id"
-          val date = s"2026-01-0${id % 9 + 1}T00:00:00Z"
-          val status = (id % 4) match {
-            case 0 => "404 Not Found"
-            case 1 => "301 Moved Permanently"
-            case _ => "200 OK"
-          }
-          val ctype = (id % 3) match {
-            case 0 => "text/plain"
-            case 1 => "text/html; charset=UTF-8"
-            case _ => "Text/HTML; CHARSET=\"iso-8859-1\""
-          }
-          val body = s"body $id\r\n\r\nWARC/1.1 trap"
-          val http = (s"HTTP/1.1 $status\r\nContent-Type: $ctype" +
-            s"\r\n\r\n$body").getBytes("UTF-8")
-          val recs =
-            ops.Warc.writeRecord("warcinfo",
-              Seq("WARC-Date" -> date),
-              "software: graft".getBytes("UTF-8")) ++
-            ops.Warc.writeRecord("request",
-              Seq("WARC-Target-URI" -> url, "WARC-Date" -> date),
-              s"GET /p$id HTTP/1.1".getBytes("UTF-8")) ++
-            ops.Warc.writeRecord("response",
-              Seq("WARC-Target-URI" -> url, "WARC-Date" -> date),
-              http)
-          if (id % 2 == 0) ops.Warc.gzipMember(recs) else recs
-        }
-        .toDF("blob")
-      ops.Warc.responses(blobs, "blob")
-        .select(col("url"), col("warc_date"), col("status"),
-          col("mime"), col("charset"), col("body"),
-          length(col("body")).cast("long").as("body_len"))
-        .orderBy(col("url"))
-    }),
-
-    // DOM template clustering — three synthesized CMS templates with
-    // per-doc varying text, attribute values, and tag case (all
-    // invariant traps: they must not move the fingerprint); pages
-    // group by the rolling tag-structure hash. The oracle recomputes
-    // the identical polynomial over the literal structure strings.
-    "template_clusters" -> ((s, dir) => {
-      val id = col("doc_id")
-      val page = when(id % 3 === 0, concat(
-          lit("<html><head><title>T"), id.cast("string"),
-          lit("</title></head><body class=c"), id.cast("string"),
-          lit("><p>text "), id.cast("string"), lit("</p></body></html>")))
-        .when(id % 3 === 1, concat(
-          lit("<HTML><BODY><div id=d"), id.cast("string"),
-          lit("><ul><li>item "), id.cast("string"),
-          lit("</li></ul></div></BODY></HTML>")))
-        .otherwise(concat(
-          lit("<html><body><table><tr><td><span>"), id.cast("string"),
-          lit("</span></td></tr></table></body></html>")))
-      html.Template.templateRows(
-          t(s, dir, "documents").select(id, page.as("page_html")),
-          "doc_id", "page_html")
-        .groupBy(col("template_hash"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).cast("long").as("doc_checksum"),
-          max(col("n_tags")).as("n_tags"))
-        .orderBy(col("template_hash"))
-    }),
-
-    // blocked fuzzy title dedup — eight deterministic title variants
-    // per 8-doc group behind a zero-padded 6-char group prefix (the
-    // block key); candidate pairs form ONLY inside the block, and
-    // survive at native Levenshtein distance <= 2. The oracle
-    // reimplements blocking + levenshtein independently in DuckDB
-    // (identical classic edit-distance semantics both engines).
-    "fuzzy_titles" -> ((s, dir) => {
-      val id = col("doc_id")
-      val title = concat(
-        lpad(expr("doc_id div 8").cast("string"), 6, "0"),
-        when(id % 8 === 0, lit(" widget pro"))
-          .when(id % 8 === 1, lit(" widget pros"))
-          .when(id % 8 === 2, lit(" widget pro x"))
-          .when(id % 8 === 3, lit(" widget deluxe kit"))
-          .when(id % 8 === 4, lit(" gadget pro"))
-          .when(id % 8 === 5, lit(" gadget pros"))
-          .when(id % 8 === 6, lit(" alpha beta gamma"))
-          .otherwise(lit(" alpha beta gamm")))
-      ops.FuzzyTitle.nearDupPairs(
-          t(s, dir, "documents").select(id, title.as("title")),
-          "doc_id", "title", maxDist = 2)
-        .withColumn("dist", col("dist").cast("long"))
-        .orderBy(col("id1"), col("id2"))
-    }),
-
-    // publication-date extraction — seven synthesized branches walk
-    // the whole htmldate-style precedence chain (og article >
-    // microdata > meta date > time element > URL path > none) with
-    // validation-fallthrough traps: invalid month 13, non-leap
-    // 2021-02-29, first-wins duplicate metas, attr-less <time>,
-    // slash-format dates, month-only URL day default. The oracle
-    // states date + winning source per branch with no date logic
-    // oracle-side.
-    "pub_dates" -> ((s, dir) => {
-      import s.implicits._
-      val rows = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val dd = f"${id % 28 + 1}%02d"
-          val (url, page) = (id % 7) match {
-            case 0 => (s"http://h0.example/a$id",
-              "<html><head><meta property=\"article:published_time\" " +
-                s"""content="2023-07-${dd}T08:30:00Z"></head>""" +
-                "<body>x</body></html>")
-            case 1 => (s"http://h1.example/a$id",
-              """<meta property="article:published_time" content="2023-13-05">""" +
-                """<meta itemprop="datePublished" content="2021-02-28">""" +
-                """<meta itemprop="datePublished" content="1999-01-01">""")
-            case 2 => (s"http://h2.example/a$id",
-              """<meta name="DATE" content="2019/03/09">""" +
-                """<meta name="date" content="2001-01-01">""")
-            case 3 => (s"http://h3.example/a$id",
-              "<time>not this</time>" +
-                """<time datetime="2020-02-29T12:00:00">leap</time>""")
-            case 4 => (s"http://h4.example/blog/2018/11/$dd/post-$id.html",
-              "<p>plain page</p>")
-            case 5 => (s"http://h5.example/page?id=$id",
-              """<meta property="article:published_time" content="not a date">""" +
-                """<time datetime="2021-02-29">bad leap</time>""")
-            case _ => (s"http://h6.example/archive/2017/06/",
-              "<time>2000-01-01</time>")
-          }
-          (id, url, page)
-        }
-        .toDF("doc_id", "url", "page_html")
-      html.PubDate.pubDateRows(rows, "doc_id", "url", "page_html")
-        .orderBy(col("doc_id"))
-    }),
-
-    // HTML -> Markdown rendering — six synthesized branches cover the
-    // whole pinned dialect: headings + inline markup + links (with a
-    // head-drop trap), nested lists, blockquote + hr, fenced raw pre
-    // (entity trap), GFM pipe table, and script/style/br/img traps.
-    // The oracle states the expected markdown byte-exact per branch
-    // with chr(10) joins — no HTML logic oracle-side.
-    "html_markdown" -> ((s, dir) => {
-      import s.implicits._
-      val rows = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val page = (id % 6) match {
-            case 0 => "<html><head><title>drop me</title></head><body>" +
-              s"<h1>Doc $id</h1><p>Hello <strong>bold</strong> and " +
-              "<em>it</em> plus <code>x=1</code>, see " +
-              "<a href=\"http://e/1\">link</a>.</p><h2>Sect</h2></body></html>"
-            case 1 => "<ol><li>first</li><li>second<ul><li>sub a</li>" +
-              s"<li>sub b</li></ul></li><li>third $id</li></ol>"
-            case 2 => "<blockquote><p>quoted one</p><p>quoted two " +
-              s"$id</p></blockquote><hr><p>after</p>"
-            case 3 => s"<pre>if (a &lt; b) {\n  run($id);\n}</pre>"
-            case 4 => "<table><thead><tr><th>k</th><th>v</th></tr>" +
-              s"</thead><tbody><tr><td>a</td><td>$id</td></tr>" +
-              "<tr><td>b</td><td>9</td></tr></tbody></table>"
-            case _ => "<script>var x = \"<p>no</p>\";</script>" +
-              "<style>p{}</style><p>line one<br>line two</p>" +
-              s"<p><img src=\"http://e/i.png\" alt=\"pic $id\"> tail</p>"
-          }
-          (id, page)
-        }
-        .toDF("doc_id", "page_html")
-      html.Markdown.markdownRows(rows, "doc_id", "page_html")
-        .orderBy(col("doc_id"))
-    }),
-
-    // JSON-LD structured data — five branches: NewsArticle block,
-    // two blocks in order (Product + NewsArticle), case-insensitive
-    // type attr with a non-ld application/json decoy, no block (no
-    // rows), malformed JSON (NULL fields, row survives). JSON paths
-    // evaluate in codegen get_json_object; the oracle states every
-    // field per branch and computes blob_len from the literal string
-    // — no JSON parsing oracle-side.
-    "jsonld_meta" -> ((s, dir) => {
-      import s.implicits._
-      val rows = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          def ld(body: String) =
-            s"""<script type="application/ld+json">$body</script>"""
-          val page = (id % 5) match {
-            case 0 => "<html><body>" + ld(
-              s"""{"@type":"NewsArticle","headline":"Story $id",""" +
-                """"datePublished":"2022-05-06",""" +
-                """"author":{"name":"A. Writer"}}""") +
-              "<p>body</p></body></html>"
-            case 1 => ld("""{"@type":"Product","name":"Widget"}""") +
-              ld(s"""{"@type":"NewsArticle","headline":"Second $id",""" +
-                """"author":{"name":"B"}}""")
-            case 2 => """<script type="application/json">{"not":"ld"}""" +
-              "</script>" +
-              "<script type=\" APPLICATION/LD+JSON \">" +
-              s"""{"@type":"BlogPosting","headline":"Up $id",""" +
-              """"datePublished":"2021-01-02","author":{"name":"C"}}""" +
-              "</script>"
-            case 3 => "<p>no structured data</p>"
-            case _ => ld("{broken")
-          }
-          (id, page)
-        }
-        .toDF("doc_id", "page_html")
-      html.JsonLd.articleRows(rows, "doc_id", "page_html")
-        .orderBy(col("doc_id"), col("block_idx"))
-    }),
-
-    // readability over the REAL corpus text — Flesch reading ease +
-    // Flesch-Kincaid grade in integer milli-units (pinned counting
-    // heuristics; pure codegen regexp_count + integer div). The
-    // oracle reimplements every count and both formulas independently
-    // in DuckDB (RE2 regexes, // division) — byte-exact.
-    "readability" -> ((s, dir) =>
-      ops.Readability.withReadability(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          "text")
-        .select(col("doc_id"), col("n_words"), col("n_sentences"),
-          col("n_syllables"), col("flesch_milli"), col("fk_milli"))
-        .orderBy(col("doc_id"))),
-
-    // PMI collocations over the REAL corpus text — Church & Hanks
-    // 1990, micro-nat-quantized (the ln argument is one integer
-    // rational evaluated in a pinned order). The oracle reimplements
-    // the whole pipeline independently: zipped-unnest pairs, derived
-    // unigrams, identical rational and floor.
-    "pmi_collocations" -> ((s, dir) =>
-      ops.Collocations.pmiTopK(t(s, dir, "documents"), "text",
-        minCount = 3L, k = 20)),
-
-    // RSS/Atom feed items — three branches: RSS with CDATA titles +
-    // entity-escaped links + a channel-title no-leak trap, Atom with
-    // rel=self decoy links beaten by rel=alternate href, and a
-    // non-feed page (no rows). The oracle states every item row per
-    // branch with no XML parsing.
-    "feed_items" -> ((s, dir) => {
-      import s.implicits._
-      val rows = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val h = s"http://s${id % 5}"
-          val xml = (id % 3) match {
-            case 0 => "<?xml version=\"1.0\"?><rss version=\"2.0\">" +
-              s"<channel><title>C</title><link>$h/</link>" +
-              s"<item><title><![CDATA[Post A $id]]></title>" +
-              s"<link>$h/a?x=1&amp;y=$id</link>" +
-              "<pubDate>Mon, 02 Jan 2023 10:00:00 GMT</pubDate></item>" +
-              s"<item><title>Post B</title><link>$h/b</link></item>" +
-              "</channel></rss>"
-            case 1 => "<feed xmlns=\"http://www.w3.org/2005/Atom\">" +
-              s"""<title>F</title><link href="$h/feed" rel="self"/>""" +
-              s"<entry><title>Entry $id</title>" +
-              s"""<link rel="self" href="$h/e.atom"/>""" +
-              s"""<link rel="alternate" href="$h/e$id"/>""" +
-              "<updated>2024-03-04T05:06:07Z</updated></entry>" +
-              s"""<entry><title>Two</title><link href="$h/two"/>""" +
-              "</entry></feed>"
-            case _ => s"<html><body><p>page $id</p></body></html>"
-          }
-          (id, xml)
-        }
-        .toDF("doc_id", "xml")
-      html.Feeds.itemRows(rows, "doc_id", "xml")
-        .orderBy(col("doc_id"), col("item_idx"))
-    }),
-
-    // per-host robust outliers over REAL text lengths — lower-median
-    // + MAD (never interpolated, all int64), outlier gate
-    // cross-multiplied to integers. Same host synthesis as
-    // domain_blocklist. The oracle reimplements both window medians
-    // and the gate independently.
-    "host_outliers" -> ((s, dir) =>
-      ops.Outliers.hostMadOutliers(
-          t(s, dir, "documents").select(col("doc_id"),
-            concat(lit("www.example"), (col("doc_id") % 7).cast("string"),
-              lit(".com")).as("host"),
-            length(col("text")).cast("long").as("v")),
-          "doc_id", "host", "v")
-        .orderBy(col("host"))),
-
-    // rendezvous (HRW) fetcher assignment — 50 hosts sharded onto 8
-    // fetchers by highest-random-weight over the pinned 31-bit
-    // polynomial hash; assignment computed on the DISTINCT host table
-    // and broadcast back to the docs. The oracle recomputes every
-    // (host, worker) weight with the identical list_reduce polynomial
-    // and the same larger-worker tie-break.
-    "rendezvous_assign" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("h"), (col("doc_id") % 50).cast("string")).as("host"))
-      val assigned = ops.Rendezvous.assign(
-        docs.select(col("host")).distinct(), "host",
-        (0 until 8).map(i => s"f$i"))
-      docs.join(broadcast(assigned), Seq("host"))
-        .groupBy(col("worker"))
-        .agg(countDistinct(col("host")).as("n_hosts"),
-          count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).cast("long").as("doc_checksum"))
-        .orderBy(col("worker"))
-    }),
-
-    // link reciprocity — a 12-host synthetic web where hosts 0-3 form
-    // a link-farm clique (mutual edges) on top of a one-way ring:
-    // clique members read ~1.0 reciprocity, ring-only hosts 0. Edges
-    // derive through hostEdges (explode+distinct, self-loops dropped);
-    // the oracle rebuilds the same edge set and reciprocity
-    // independently.
-    "reciprocal_links" -> ((s, dir) => {
-      val k = (col("doc_id") % 12).cast("long")
-      val ring = (k + 1) % 12
-      val targets = when(k < 4,
-        array_distinct(filter(
-          array(ring, lit(0L), lit(1L), lit(2L), lit(3L)),
-          x => x =!= k)))
-        .otherwise(array(ring))
-      val docs = t(s, dir, "documents").select(
-        concat(lit("h"), k.cast("string")).as("src_host"),
-        transform(targets,
-          x => concat(lit("h"), x.cast("string"))).as("target_hosts"))
-      ops.LinkGraph.reciprocalStats(
-          ops.LinkGraph.hostEdges(docs, "src_host", "target_hosts"))
-        .orderBy(col("host"))
-    }),
-
-    // SURT archive-index keys — six synthesized URL branches walk
-    // every rule: case folding, www strip, default-port strip,
-    // non-default port kept, query sort, fragment drop, bare-host
-    // root path, empty-query ?, percent-encoding left undecoded.
-    // Pure codegen expressions; the oracle states the key per branch.
-    "surt_keys" -> ((s, dir) => {
-      val id = col("doc_id")
-      val d = (id % 4).cast("string")
-      val url = (when(id % 6 === 0, concat(
-          lit("HTTPS://WWW.Example"), d, lit(".COM:443/Path/Page?b=2&a="),
-          id.cast("string"), lit("#frag")))
-        .when(id % 6 === 1, concat(lit("http://sub.blog.example"), d,
-          lit(".org/post/"), id.cast("string")))
-        .when(id % 6 === 2, concat(lit("http://example"), d,
-          lit(".net:8080/?z=1&y=2")))
-        .when(id % 6 === 3, concat(lit("http://www.example"), d,
-          lit(".com/a%2Fb?x=%4A")))
-        .when(id % 6 === 4, concat(lit("https://Example"), d,
-          lit(".com")))
-        .otherwise(concat(lit("http://example"), d, lit(".com/x?"))))
-      t(s, dir, "documents").select(id, url.as("url"))
-        .withColumn("surt", ops.UrlNorm.surtKey(col("url")))
-        .orderBy(id)
-    }),
-
-    // sliding-window passage chunks over the REAL corpus text — size
-    // 64, overlap 16; compact roll-up lands per-doc chunk counts plus
-    // corpus-level token/char checksums so chunk boundaries and
-    // contents are both pinned. The oracle reimplements windows with
-    // list_slice over the same \S+ tokens.
-    "passage_chunks" -> ((s, dir) =>
-      ops.Chunking.slidingChunks(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          "doc_id", "text", size = 64, overlap = 16)
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_chunks"),
-          sum(col("n_tokens")).cast("long").as("token_sum"),
-          max(col("token_offset")).as("last_offset"),
-          sum(length(col("chunk_text"))).cast("long").as("char_sum"))
-        .orderBy(col("doc_id"))),
-
-    // robots Sitemap: lines — global per RFC 9309 (collected inside
-    // and outside UA groups): in-group lines, case-insensitive field,
-    // no-space colon, inline comments, empty values, comment-only
-    // files. The oracle states each (host, idx, url) per branch.
-    "robots_sitemaps" -> ((s, dir) => {
-      import s.implicits._
-      val robots = t(s, dir, "documents")
-        .select((col("doc_id") % 6).cast("long").as("k"))
-        .distinct().as[Long]
-        .map { k =>
-          val txt = k match {
-            case 0 => "User-agent: *\nDisallow: /x/\n" +
-              "Sitemap: http://h0.example/s1.xml\n"
-            case 1 => "Sitemap: http://h1.example/a.xml # discovery\n" +
-              "User-agent: g\nSITEMAP: http://h1.example/b.xml\n"
-            case 2 => "User-agent: *\nAllow: /\n"
-            case 3 => "sitemap:http://h3.example/c.xml\n"
-            case 4 => "Sitemap:   \nSitemap: http://h4.example/d.xml\n"
-            case _ => "# only comments\n"
-          }
-          (s"h$k", txt)
-        }.toDF("host", "robots_txt")
-      ops.Robots.sitemapRows(robots, "host", "robots_txt")
-        .orderBy(col("host"), col("sitemap_idx"))
-    }),
-
-    // adaptive recrawl schedule over the events table — Cho &
-    // Garcia-Molina revisit policy: per user_id (standing in for a
-    // url), a change is an observation whose event_type differs from
-    // the previous one (ts + payload tie-broken total order); the
-    // interval is the integer inter-change estimate clamped to
-    // [1h, 7d]. The oracle reimplements the lag window and the clamp.
-    "recrawl_schedule" -> ((s, dir) =>
-      ops.Recrawl.schedule(
-          t(s, dir, "events").select(col("user_id"), col("ts"),
-            col("event_type")),
-          "user_id", "ts", "event_type")
-        .orderBy(col("user_id"))),
-
-    // document outline — four synthesized heading trees walk the
-    // numbering rules: full hierarchy with deeper-counter reset,
-    // skipped-level zero component, inline markup flattening, empty
-    // heading advancing the outline. The oracle states every row.
-    "doc_outline" -> ((s, dir) => {
-      import s.implicits._
-      val rows = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val page = (id % 4) match {
-            case 0 => s"<h1>One $id</h1><h2>A</h2><h3>i</h3><h2>B</h2>" +
-              "<h1>Two</h1><h2>C</h2>"
-            case 1 => "<h2>starts deep</h2><h1>then top</h1>"
-            case 2 => s"<h1>  The <b>Big</b>\n <em>Title $id</em> </h1>"
-            case _ => "<p>no headings</p>"
-          }
-          (id, page)
-        }.toDF("doc_id", "page_html")
-      html.Outline.headingRows(rows, "doc_id", "page_html")
-        .orderBy(col("doc_id"), col("heading_idx"))
-    }),
-
-    // crawl-trap detection — six path/query branches hit each rule
-    // plus the ok case; the oracle REIMPLEMENTS every rule in DuckDB
-    // (nested list lambdas + RE2) rather than stating answers.
-    "crawl_traps" -> ((s, dir) => {
-      val id = col("doc_id")
-      val path = when(id % 6 === 0, lit("/a/b/a/c/a"))
-        .when(id % 6 === 1, lit("/1/2/3/4/5/6/7/8/9/10/11/12/13"))
-        .when(id % 6 === 2, lit("/p"))
-        .when(id % 6 === 3, lit("/p"))
-        .when(id % 6 === 4, lit("/archive/1901/01/"))
-        .otherwise(lit("/a/b/c"))
-      val query = when(id % 6 === 0, lit("x=1"))
-        .when(id % 6 === 2,
-          lit("a=1&b=2&c=3&d=4&e=5&f=6&g=7&h=8&i=9"))
-        .when(id % 6 === 3,
-          lit("sid=0123456789abcdef0123456789abcdef&x=2"))
-        .when(id % 6 === 5, concat(lit("x=1&y="), id.cast("string")))
-        .otherwise(lit(""))
-      ops.TrapDetect.withTrapReason(
-          t(s, dir, "documents").select(id, path.as("path"),
-            query.as("query")),
-          "path", "query")
-        .select(col("doc_id"), col("path"), col("query"),
-          col("trap_reason"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // eTLD+1 registrable domains — suffix-list branches; the oracle
-    // reimplements the label logic with string_split.
-    "registrable_domains" -> ((s, dir) => {
-      val id = col("doc_id")
-      val d = (id % 3).cast("string")
-      val host = when(id % 6 === 0, concat(lit("a.example"), d,
-          lit(".co.uk")))
-        .when(id % 6 === 1, lit("www.example.com"))
-        .when(id % 6 === 2, lit("x.y.z.example.com.au"))
-        .when(id % 6 === 3, lit("localhost"))
-        .when(id % 6 === 4, lit("example.org"))
-        .otherwise(concat(lit("deep.sub.example"), d, lit(".net")))
-      t(s, dir, "documents").select(id, host.as("host"))
-        .withColumn("registrable",
-          ops.Etld.registrableDomain(col("host")))
-        .orderBy(id)
-    }),
-
-    // canonical dedup text key — case/punct/whitespace/Unicode-
-    // composition traps (branch 1 precomposed vs branch 2 DECOMPOSED
-    // must yield the same key shape); md5 digest both engines. The
-    // oracle reruns the identical pipeline with nfc_normalize.
-    "canon_text_key" -> ((s, dir) => {
-      val id = col("doc_id")
-      val text = when(id % 4 === 0,
-          concat(lit("The  QUICK,,, brown--fox! "), id.cast("string")))
-        .when(id % 4 === 1,
-          concat(lit("Café CRÈME "), id.cast("string")))
-        .when(id % 4 === 2,
-          concat(lit("Café CRÈME "), id.cast("string")))
-        .otherwise(concat(lit("  spaces\tand\nnewlines  "),
-          id.cast("string")))
-      ops.CanonKey.withCanonKey(
-          t(s, dir, "documents").select(id, text.as("text")), "text")
-        .select(col("doc_id"), col("canon_key"), col("canon_digest"))
-        .orderBy(id)
-    }),
-
-    // redirect-chain resolution by pointer doubling — a 4-hop chain,
-    // a 3-cycle, a self-loop, and no-edge hosts; the oracle resolves
-    // the same edges with a hop-capped recursive CTE and the same
-    // terminal rule (unresolved -> NULLs).
-    "redirect_chains" -> ((s, dir) => {
-      val k = col("k")
-      val kdf = t(s, dir, "documents")
-        .select((col("doc_id") % 12).as("k")).distinct()
-      val src = when(k <= 3, concat(lit("r"), k.cast("string")))
-        .when(k.between(5, 7), concat(lit("c"), (k - 5).cast("string")))
-        .when(k === 8, lit("s0"))
-      val dst = when(k < 3, concat(lit("r"), (k + 1).cast("string")))
-        .when(k === 3, lit("end.example"))
-        .when(k.between(5, 7),
-          concat(lit("c"), ((k - 4) % 3).cast("string")))
-        .when(k === 8, lit("s0"))
-      ops.Redirects.resolve(
-          kdf.select(src.as("src"), dst.as("dst"))
-            .where(col("src").isNotNull))
-        .orderBy(col("src"))
-    }),
-
-    // meta-refresh soft redirects — plain, quoted+case, delay-only,
-    // invalid-delay (no row), and absent branches; oracle states the
-    // surviving rows.
-    "meta_refresh" -> ((s, dir) => {
-      import s.implicits._
-      val rows = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val page = (id % 5) match {
-            case 0 => "<meta http-equiv=\"refresh\" " +
-              s"""content="0;url=http://h/next$id">"""
-            case 1 => "<meta HTTP-EQUIV=\"Refresh\" " +
-              s"""content="5; URL='http://h/q?a=$id'">"""
-            case 2 => """<meta http-equiv="refresh" content="30">"""
-            case 3 => "<meta http-equiv=\"refresh\" " +
-              """content="abc;url=http://h/x">"""
-            case _ => "<p>no refresh</p>"
-          }
-          (id, page)
-        }.toDF("doc_id", "page_html")
-      html.Meta.refreshRows(rows, "doc_id", "page_html")
-        .orderBy(col("doc_id"))
-    }),
-
-    // exact length quantiles over the REAL corpus — histogram-first,
-    // type-1 (lower, never interpolated); the oracle reimplements the
-    // identical cumulative-rank rule.
-    "length_quantiles" -> ((s, dir) =>
-      ops.Quantiles.exactQuantiles(
-        t(s, dir, "documents")
-          .select(length(col("text")).cast("long").as("v")), "v")),
-
-    // hreflang alternates — ordered pairs with rel-token/case traps,
-    // canonical decoys, and missing-attr skips; oracle states rows.
-    "hreflang_pairs" -> ((s, dir) => {
-      import s.implicits._
-      val rows = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val h = s"http://s${id % 5}"
-          val page = (id % 3) match {
-            case 0 =>
-              s"""<link rel="alternate" hreflang="en" href="$h/en/$id">""" +
-                s"""<link rel="Alternate" hreflang="de" href="$h/de/$id">""" +
-                s"""<link rel="alternate" hreflang="x-default" href="$h/">"""
-            case 1 =>
-              s"""<link rel="canonical" hreflang="es" href="$h/es">""" +
-                s"""<link rel="alternate" href="$h/feed.xml">""" +
-                s"""<link rel="alternate stylesheet" hreflang="fr" href="$h/fr/$id">"""
-            case _ => "<p>no alternates</p>"
-          }
-          (id, page)
-        }.toDF("doc_id", "page_html")
-      html.Meta.alternateRows(rows, "doc_id", "page_html")
-        .orderBy(col("doc_id"), col("alt_idx"))
-    }),
-
-    // BPE merge candidates over the REAL corpus text — Sennrich 2016
-    // first-round pair counts, word-frequency weighted, </w> marker;
-    // the oracle rebuilds vocab + pairs independently with zipped
-    // struct unnests.
-    "bpe_candidates" -> ((s, dir) =>
-      ops.Bpe.mergeCandidates(
-        t(s, dir, "documents").select(col("text")), "text", k = 25)),
-
-    // pagination-chain assembly — rel=next extraction COMPOSED with
-    // pointer-doubling resolution: 4-page article groups chain
-    // p0->p1->p2->p3 (terminal), group 0's last page links back to
-    // its first (gallery-trap cycle -> unresolved). The oracle
-    // derives the same edges and resolves them with the hop-capped
-    // recursive CTE.
-    "pagination_chains" -> ((s, dir) => {
-      import s.implicits._
-      val pages = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val g = id / 4
-          val p = id % 4
-          val url = s"http://s/a$g/p$p"
-          val page =
-            if (p < 3)
-              s"""<link rel="next" href="http://s/a$g/p${p + 1}">"""
-            else if (g == 0)
-              s"""<link rel="NEXT" href="http://s/a$g/p0">"""
-            else "<p>last part</p>"
-          (url, page)
-        }.toDF("url", "page_html")
-      val edges = pages.as[(String, String)]
-        .flatMap { case (u, h) =>
-          val n = html.Meta.nextLink(h)
-          if (n.isEmpty) None else Some((u, n))
-        }.toDF("src", "dst")
-      ops.Redirects.resolve(edges).orderBy(col("src"))
-    }),
-
-    // curation funnel v2 — the round-5 operators COMPOSED end to end
-    // over real text: trap filter -> canonical-key exact dedup (keep
-    // first surviving doc per digest; a planted duplicate family
-    // collapses) -> Flesch floor (the planted duplicate's keeper
-    // scores negative and dies here) -> p99 length gate computed on
-    // the stage-3 survivors. Stage flags accumulate in ONE pass over
-    // the persisted frame (+1 pass for the data-dependent p99). The
-    // oracle reimplements every stage in SQL.
-    "curation_funnel_v2" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val id = col("doc_id")
-      val base = t(s, dir, "documents").select(id, col("text"))
-        .withColumn("path", when(id % 10 === 0, lit("/a/b/a/c/a"))
-          .otherwise(lit("/a/b/c")))
-        .withColumn("query", lit("x=1"))
-        .withColumn("text2", when(id % 9 === 4,
-          lit("Shared   DUPLICATE, text!")).otherwise(col("text")))
-      val t1 = ops.TrapDetect.withTrapReason(base, "path", "query")
-        .withColumn("f1", col("trap_reason") === "ok")
-      val k1 = ops.CanonKey.withCanonKey(t1, "text2")
-      val w = Window.partitionBy(col("canon_digest"))
-        .orderBy(col("f1").desc, col("doc_id"))
-      val flagged = ops.Readability.withReadability(
-          k1.withColumn("rn", row_number().over(w))
-            .withColumn("f2", col("f1") && col("rn") === 1),
-          "text2")
-        .withColumn("f3", col("f2") &&
-          coalesce(col("flesch_milli") >= 30000L, lit(false)))
-        .withColumn("len2", length(col("text2")).cast("long"))
-        .persist()
-      val p99 = ops.Quantiles.exactQuantiles(
-          flagged.where(col("f3")).select(col("len2").as("v")), "v")
-        .select(col("p99"))
-      flagged.crossJoin(broadcast(p99))
-        .agg(count(lit(1)).as("n_total"),
-          sum(when(col("f1"), 1L).otherwise(0L)).as("n_after_traps"),
-          sum(when(col("f2"), 1L).otherwise(0L)).as("n_after_dedup"),
-          sum(when(col("f3"), 1L).otherwise(0L)).as("n_readable"),
-          sum(when(col("f3") && col("len2") <= col("p99"), 1L)
-            .otherwise(0L)).as("n_final"),
-          sum(when(col("f3") && col("len2") <= col("p99"), col("doc_id"))
-            .otherwise(0L)).cast("long").as("survivor_checksum"))
-    }),
-
-    // page-level outlink profiles — four branches: mixed internal/
-    // external with a nofollow and a same-host-absolute (port+case
-    // traps), all-relative, external-only with skipped mailto/
-    // javascript, and no links. The oracle states counts per branch.
-    "outlink_profiles" -> ((s, dir) => {
-      import s.implicits._
-      val rows = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val host = s"site${id % 5}.com"
-          val page = (id % 4) match {
-            case 0 => "<a href=\"/about\">a</a>" +
-              s"""<a href="http://Site${id % 5}.COM:80/deep">c</a>""" +
-              "<a href=\"https://other.net/x\" rel=\"NoFollow\">d</a>" +
-              s"""<a href="https://other.net/y?id=$id">e</a>"""
-            case 1 => "<a href=\"p1.html\">x</a><a href=\"p2.html\">y" +
-              "</a><a href=\"/z\">z</a>"
-            case 2 => "<a href=\"mailto:x@y.z\">m</a>" +
-              "<a href=\"javascript:void(0)\">j</a>" +
-              s"""<a href="http://spam.example/$id" rel="nofollow">s</a>""" +
-              "<a href=\"http://farm.example/\">f</a>"
-            case _ => "<p>no links</p>"
-          }
-          (id, page, host)
-        }.toDF("doc_id", "page_html", "host")
-      html.Anchors.outlinkProfileRows(rows, "doc_id", "page_html",
-          "host")
-        .orderBy(col("doc_id"))
-    }),
-
-    // exact phrase search over positional postings — the trigram
-    // "slow hash batch" against the real corpus text; each join input
-    // filters to ONE term before the (doc, aligned-pos) equi-joins.
-    // The oracle reimplements phrase matching independently with
-    // zipped positional unnests.
-    "phrase_search" -> ((s, dir) =>
-      ops.Search.phraseMatch(
-          ops.Search.positionalPostings(
-            t(s, dir, "documents"), "doc_id", "text"),
-          Seq("slow", "hash", "batch"))
-        .orderBy(col("doc_id"))),
-
-    // robots-aware politeness schedule — the crawl-delay each host's
-    // robots.txt grants graftbot (specific group beats *, absent
-    // delay defaults to 1s, hosts with no robots default too) drives
-    // the per-host fetch waves. Composes Robots.crawlDelays with the
-    // wave window end to end; the oracle states the delay per branch
-    // and recomputes the schedule envelope.
-    "polite_schedule" -> ((s, dir) => {
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val robots = (0 until 6).map { h =>
-        val txt = (h % 3) match {
-          case 0 => s"User-agent: graftbot\nDisallow: /tmp/\n" +
-            s"Crawl-delay: ${h + 1}\n\nUser-agent: *\nCrawl-delay: 9\n"
-          case 1 => s"User-agent: *\nCrawl-delay: ${h + 2}\n"
-          case _ => "User-agent: *\nDisallow: /x/\n"
-        }
-        (s"h$h", txt)
-      }.toDF("host", "robots_txt")
-      val delays = ops.Robots.crawlDelays(robots, "host", "robots_txt",
-        "graftbot", defaultDelay = 1L)
-      val frontier = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("h"), (col("doc_id") % 9).cast("string")).as("host"))
-      val w = Window.partitionBy(col("host")).orderBy(col("doc_id"))
-      frontier.join(broadcast(delays), Seq("host"), "left")
-        .withColumn("delay_sec", coalesce(col("delay_sec"), lit(1L)))
-        .withColumn("wave0", row_number().over(w).cast("long") - 1)
-        .withColumn("fetch_at_sec", col("wave0") * col("delay_sec"))
-        .groupBy(col("host"), col("delay_sec"))
-        .agg(count(lit(1)).as("n_urls"),
-          max(col("fetch_at_sec")).as("makespan_sec"),
-          sum(col("fetch_at_sec")).cast("long").as("schedule_checksum"))
-        .orderBy(col("host"))
-    }),
-
-    // WHATWG charset sniffing — six synthesized byte branches walk
-    // the whole precedence chain: UTF-8 BOM, transport-declared
-    // cp1252, meta-prescan iso-8859-1, UTF-16LE BOM, bare latin-1
-    // bytes (invalid UTF-8 -> cp1252 fallback), and valid undeclared
-    // UTF-8. The oracle states decoded text + charset + decision per
-    // branch with no decoding oracle-side.
-    "charset_decode" -> ((s, dir) => {
-      import s.implicits._
-      val blobs = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val (blob, declared) = (id % 6) match {
-            case 0 => (Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++
-              s"café €$id".getBytes("UTF-8"), "")
-            case 1 => (s"café €$id".getBytes("windows-1252"),
-              "windows-1252")
-            case 2 => (s"<meta charset=iso-8859-1>café $id"
-              .getBytes("ISO-8859-1"), "")
-            case 3 => (Array(0xFF, 0xFE).map(_.toByte) ++
-              s"page $id".getBytes("UTF-16LE"), "")
-            case 4 => (s"café $id".getBytes("ISO-8859-1"), "")
-            case _ => (s"café $id".getBytes("UTF-8"), "")
-          }
-          (id, blob, declared)
-        }
-        .toDF("doc_id", "blob", "declared")
-      ops.Encoding.decodeRows(blobs, "doc_id", "blob", "declared")
-        .orderBy(col("doc_id"))
-    }),
-
-    // Count-Min heavy hitters — per-user event counts from a d·w
-    // counter sketch (min over d hashed counters: overestimate-only).
-    // The exact top-10 sits alongside so the overcount column is the
-    // measured collision mass; the oracle recomputes every counter
-    // with the identical pairwise-independent modular hashes.
-    "cms_heavy_hitters" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("user_id"))
-      val sketch = ops.CountMin.build(ev, "user_id", depth = 4, width = 1024)
-      val exact = ev.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("exact_cnt"))
-        .orderBy(col("exact_cnt").desc, col("user_id")).limit(10)
-      ops.CountMin.estimate(exact.select(col("user_id")), sketch,
-          "user_id", depth = 4, width = 1024)
-        .join(exact, "user_id")
-        .select(col("user_id"), col("exact_cnt"),
-          col("est").as("cms_est"),
-          (col("est") - col("exact_cnt")).as("overcount"))
-        .orderBy(col("exact_cnt").desc, col("user_id"))
-    }),
-
-    // KMV distinct-count sketch (Bar-Yossef et al. 2002) via the
-    // custom bottom-k TypedImperativeAggregate — distinct users per
-    // event type with a groups·k·8-byte shuffle bound instead of
-    // moving every distinct key. The hash 1 + (u·C mod M) (M prime,
-    // C coprime) is a bijection on [0, M), so exact_distinct via the
-    // hash equals exact distinct users, and the estimate is
-    // integer-exact: (k-1)·M div h_k. Oracle recomputes both.
-    "kmv_distinct" -> ((s, dir) => {
-      graft.functions.GraftExtensions.register(s)
-      val M = 2147483647L // 2^31 - 1, prime
-      val K = 32
-      t(s, dir, "events")
-        .select(col("event_type"),
-          (pmod(col("user_id") * lit(2654435761L), lit(M)) + 1).as("h"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("h")).as("exact_distinct"),
-          expr(s"graft_bottomk(h, $K)").as("bk"))
-        .select(col("event_type"), col("n_events"), col("exact_distinct"),
-          when(size(col("bk")) < K, size(col("bk")).cast("long"))
-            .otherwise(expr(s"(${K - 1}L * ${M}L) div element_at(bk, $K)"))
-            .as("kmv_estimate"))
-        .orderBy(col("event_type"))
-    }),
-
-    // byte-balanced shard assignment — global running offsets via the
-    // two-level prefix sum (per-bucket totals -> tiny exclusive-cumsum
-    // window -> broadcast bases -> per-bucket local windows), never a
-    // corpus-wide single-partition window. Oracle recomputes with the
-    // naive single window (correct at oracle scale, not at ours).
-    "shard_assign" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), length(col("text")).cast("long").as("b"))
-      ops.Shards.shardStats(
-        ops.Shards.assign(docs, "doc_id", "b",
-          targetBytes = 100000L, bucketSize = 64L), "doc_id")
-    }),
-
-    // sitemap parsing through the streaming tokenizer — one quarter of
-    // the docs carry a <sitemapindex> (kind=sitemap children), the
-    // rest a <urlset> with a full entry (entity-escaped loc, lastmod,
-    // changefreq, priority), an optional loc-only entry, and a
-    // loc-less trap entry that must drop. Oracle reconstructs every
-    // row from doc_id with no XML parsing.
-    "sitemap_entries" -> ((s, dir) => {
-      val id = col("doc_id")
-      val host = concat(lit("http://s"), (id % 7).cast("string"),
-        lit(".example/"))
-      val xml = when(id % 4 === 3,
-        concat(lit("<?xml version=\"1.0\"?><sitemapindex><sitemap><loc>"),
-          host, lit("s1.xml</loc><lastmod>2026-02-0"),
-          (id % 9 + 1).cast("string"),
-          lit("</lastmod></sitemap><sitemap><loc>"), host,
-          lit("s2.xml</loc></sitemap></sitemapindex>")))
-        .otherwise(concat(
-          lit("<?xml version=\"1.0\"?><urlset><url><loc>"), host,
-          lit("p?x=1&amp;y="), id.cast("string"),
-          lit("</loc><lastmod>2026-01-0"), (id % 9 + 1).cast("string"),
-          lit("</lastmod><changefreq>"),
-          when(id % 3 === 0, lit("daily"))
-            .when(id % 3 === 1, lit("weekly")).otherwise(lit("monthly")),
-          lit("</changefreq><priority>0."), (id % 10).cast("string"),
-          lit("</priority></url>"),
-          when(id % 2 === 0,
-            concat(lit("<url><loc>"), host, lit("q</loc></url>")))
-            .otherwise(lit("")),
-          lit("<url><lastmod>2026-01-01</lastmod></url></urlset>")))
-      html.Sitemap.entryRows(
-          t(s, dir, "documents").select(id, xml.as("sitemap_xml")),
-          "doc_id", "sitemap_xml")
-        .orderBy(col("doc_id"), col("loc"))
-    }),
-
-    // Bloom-filter crawl seen-set — build over the seen keys (docs
-    // with doc_id%3 != 2), probe every doc plus a disjoint unseen
-    // band (+1e6). The (truly_seen, maybe_seen) contingency table is
-    // the contract: the (true,false) cell must be ABSENT (no false
-    // negatives by construction) and the FP band is whatever the
-    // identical modular double-hash yields — the oracle recomputes
-    // every bit.
-    "bloom_seen" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val seen = docs.filter(col("doc_id") % 3 =!= 2)
-        .select(col("doc_id").as("key"))
-      val bitmap = ops.Bloom.build(seen, "key", mBits = 2048, k = 3)
-      val candidates = docs.select(col("doc_id").as("key"))
-        .union(docs.select((col("doc_id") + lit(1000000L)).as("key")))
-      ops.Bloom.probe(candidates, bitmap, "key", mBits = 2048, k = 3)
-        .withColumn("truly_seen",
-          col("key") % 3 =!= 2 && col("key") < 1000000L)
-        .groupBy(col("truly_seen"), col("maybe_seen"))
-        .agg(count(lit(1)).as("n_keys"),
-          sum(col("key")).cast("long").as("key_checksum"))
-        .orderBy(col("truly_seen"), col("maybe_seen"))
-    }),
-
-    // head-metadata extraction through the real streaming tokenizer —
-    // title (RCDATA, entity-decoded, duplicate-title trap), meta
-    // description/robots (none shorthand), canonical, base, charset,
-    // og:title, hreflang alternate count. The oracle reconstructs
-    // every field from doc_id with no parsing oracle-side.
-    "page_meta" -> ((s, dir) =>
-      html.Meta.metaRows(
-          t(s, dir, "documents")
-            .select(col("doc_id"), metaTestPage.as("page_html")),
-          "doc_id", "page_html")
-        .orderBy(col("doc_id"))),
-
-    // vocabulary coverage report — the tokenizer-training question
-    // "how much of the corpus do the top-N words cover": top-32 vocab
-    // (count desc, word asc), cumulative counts, and integer-exact
-    // coverage micros; the running sum windows over 32 rows only.
-    "vocab_coverage" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val counts = t(s, dir, "documents")
-        .select(explode(split(lower(col("text")), " ", -1)).as("word"))
-        .filter(length(col("word")) > 2)
-        .groupBy(col("word"))
-        .agg(count(lit(1)).as("cnt"))
-      val total = counts.agg(sum(col("cnt")).as("total"))
-      val ord = Window.orderBy(col("cnt").desc, col("word"))
-      counts.orderBy(col("cnt").desc, col("word")).limit(32)
-        .crossJoin(broadcast(total))
-        .withColumn("rank", row_number().over(ord).cast("long"))
-        .withColumn("cum_cnt",
-          sum(col("cnt")).over(ord.rowsBetween(Window.unboundedPreceding,
-            Window.currentRow)))
-        .select(col("rank"), col("word"), col("cnt"), col("cum_cnt"),
-          expr("(cum_cnt * 1000000) div total").as("cum_coverage_micro"))
-        .orderBy(col("rank"))
-    }),
-
-    // politeness fetch scheduling — per-host crawl waves under a
-    // per-host delay: wave k fetches at (k-1)*delay. The window keys
-    // on host (the same partitioning the fetcher shards by); output is
-    // the per-host schedule envelope with a checksum over every
-    // assigned fetch time.
-    "fetch_waves" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val f = t(s, dir, "documents").select(col("doc_id"),
-        concat(lit("h"), (col("doc_id") % 9).cast("string")).as("host"),
-        ((col("doc_id") % 9) % 3 + 1).cast("long").as("delay_sec"))
-      val w = Window.partitionBy(col("host")).orderBy(col("doc_id"))
-      f.withColumn("wave0", row_number().over(w).cast("long") - 1)
-        .withColumn("fetch_at_sec", col("wave0") * col("delay_sec"))
-        .groupBy(col("host"), col("delay_sec"))
-        .agg(count(lit(1)).as("n_urls"),
-          max(col("fetch_at_sec")).as("makespan_sec"),
-          sum(col("fetch_at_sec")).cast("long").as("schedule_checksum"))
-        .orderBy(col("host"))
-    }),
-
-    // PII redaction audit — emails/phones/IPv4 scrubbed to typed tokens
-    // with per-type counts (ops.Pii: pure regexp column exprs, codegen,
-    // map-only). The PII is synthesized deterministically from doc_id
-    // IDENTICALLY on both sides, so the DuckDB twin checks the regex
-    // semantics and the sequential email→phone→IP redaction order
-    // themselves, not just that rows landed.
-    "pii_redact" -> ((s, dir) => {
-      val piiText = concat(
-        substring(col("text"), 1, 40),
-        lit(" contact user"), col("doc_id").cast("string"),
-        lit("@mail"), (col("doc_id") % 5).cast("string"),
-        lit(".org call +1-555-"),
-        (col("doc_id") % 900 + 100).cast("string"), lit("-"),
-        (col("doc_id") % 9000 + 1000).cast("string"),
-        lit(" from 10."), (col("doc_id") % 256).cast("string"),
-        lit(".0."), (col("doc_id") % 200).cast("string"), lit(" end"))
-      ops.Pii.withPiiRedacted(
-          t(s, dir, "documents").select(col("doc_id"), piiText.as("pii_text")),
-          "pii_text")
-        .select(col("doc_id"), col("n_emails"), col("n_phones"),
-          col("n_ipv4"), col("redacted"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // deterministic md5-bucket train/val/test assignment — stable across
-    // runs, partitionings, and engines (rand() would leak eval docs into
-    // training between pipeline versions); per-row oracle so the twin
-    // certifies every single assignment, not a count.
-    "split_assign" -> ((s, dir) => {
-      ops.Splits.withSplit(
-          t(s, dir, "documents").select(col("doc_id")), "doc_id")
-        .orderBy(col("doc_id"))
-    }),
-
-    // deterministic stratified rebalance — downsample the dominant
-    // language (en keeps 64/256 = 25%) with a salted hash so the keep
-    // decision is a pure function of the key, decorrelated from split
-    // assignment; per-lang kept-doc_id checksum proves WHICH docs
-    // survive, not just how many.
-    "stratified_sample" -> ((s, dir) => {
-      val thr = when(col("lang") === "en", 64).otherwise(256)
-      t(s, dir, "documents")
-        .withColumn("keep", ops.Splits.stratifiedKeep(col("doc_id"), thr))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_total"),
-          sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
-          sum(when(col("keep"), col("doc_id")).otherwise(0L)).cast("long")
-            .as("kept_checksum"))
-        .orderBy(col("lang"))
-    }),
-
-    // end-to-end curation funnel — the composition every training-data
-    // pipeline runs: gopher shape filter → exact dedup (first-kept per
-    // sha-256 digest, among survivors) → stratified language rebalance.
-    // One scan + one window shuffle on the 32-byte digest (never the
-    // text), then a single 4-stage stack report; the per-stage doc_id
-    // checksum makes the oracle certify WHICH docs survive each stage.
-    "curation_funnel" -> ((s, dir) => {
-      val thr = when(col("lang") === "en", 64).otherwise(256)
-      val w = Window.partitionBy(col("digest"))
-      val flagged = Quality.withGopherColumns(t(s, dir, "documents"))
-        .withColumn("digest", sha2(col("text"), 256))
-        .withColumn("keep1", col("gopher_keep"))
-        .withColumn("first_kept", min(when(col("keep1"), col("doc_id"))).over(w))
-        .withColumn("keep2", col("keep1") && col("doc_id") === col("first_kept"))
-        .withColumn("keep3",
-          col("keep2") && ops.Splits.stratifiedKeep(col("doc_id"), thr))
-      flagged.agg(
-          count(lit(1)).as("n0"), sum(col("doc_id")).cast("long").as("c0"),
-          sum(when(col("keep1"), 1L).otherwise(0L)).as("n1"),
-          sum(when(col("keep1"), col("doc_id")).otherwise(0L)).cast("long").as("c1"),
-          sum(when(col("keep2"), 1L).otherwise(0L)).as("n2"),
-          sum(when(col("keep2"), col("doc_id")).otherwise(0L)).cast("long").as("c2"),
-          sum(when(col("keep3"), 1L).otherwise(0L)).as("n3"),
-          sum(when(col("keep3"), col("doc_id")).otherwise(0L)).cast("long").as("c3"))
-        .select(expr(
-          "stack(4, 0, 'ingest', n0, c0, 1, 'gopher_filter', n1, c1, " +
-          "2, 'exact_dedup', n2, c2, 3, 'stratified_sample', n3, c3) " +
-          "as (stage_id, stage, n_docs, doc_checksum)"))
-        .orderBy(col("stage_id"))
-    }),
-
-    // paragraph-grain exact dedup (CCNet-style) — cross-doc boilerplate
-    // removal that doc-grain dedup can't see. Paragraph boundaries are
-    // synthesized deterministically on BOTH sides (documents.text has no
-    // newlines): a per-doc head slice, a 7-way shared boilerplate block,
-    // a tail slice, and an even-doc-only footer — so the oracle certifies
-    // the first-seen semantics AND the in-order reassembly, per row.
-    "para_dedup" -> ((s, dir) => {
-      val sep = lit(ops.ParaDedup.DefaultSep)
-      val ptext = concat(
-        substring(col("text"), 1, 60), sep,
-        lit("shared boilerplate paragraph "),
-        (col("doc_id") % 7).cast("string"), sep,
-        substring(col("text"), 61, 80),
-        when(col("doc_id") % 2 === 0, concat(sep, lit("even-doc footer")))
-          .otherwise(lit("")))
-      ops.ParaDedup.dedupParagraphs(
-          t(s, dir, "documents").select(col("doc_id"), ptext.as("ptext")),
-          "doc_id", "ptext")
-        .orderBy(col("doc_id"))
-    }),
-
-    // corpus-trained bigram LM scoring (CCNet-style quality signal):
-    // train add-one-smoothed bigram counts (head-count denominator) on
-    // the even-doc reference subset in ONE grouping-sets pass, score
-    // EVERY doc by average bigram log-prob under it.
-    // Per-term log-probs quantize to integer micro-nats so the sum is
-    // order-free and the oracle certifies it byte-exactly.
-    "lm_score" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val ref = docs.where(col("doc_id") % 2 === 0)
-      ops.NgramLm.scoreDocs(docs, ref, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // incremental snapshot delta — diff a new crawl against the previous
-    // snapshot by digest so only added/changed rows reprocess. Snapshots
-    // are synthesized deterministically from documents on BOTH sides:
-    // old = docs except doc_id%10==0 (those become "added"), with text
-    // revised for doc_id%7==3 ("changed"); new = docs except doc_id%10==5
-    // ("removed"). Per-row status oracle.
-    "snapshot_delta" -> ((s, dir) => {
-      val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val old = base.where(col("doc_id") % 10 =!= 0)
-        .withColumn("text",
-          when(col("doc_id") % 7 === 3, concat(col("text"), lit(" v1")))
-            .otherwise(col("text")))
-      val neu = base.where(col("doc_id") % 10 =!= 5)
-      ops.Snapshot.delta(
-          old.select(col("doc_id"), sha2(col("text"), 256).as("digest")),
-          neu.select(col("doc_id"), sha2(col("text"), 256).as("digest")),
-          "doc_id", "digest")
-        .select(col("doc_id"), col("status"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // S2 base64 ingest: payloads arrive base64-encoded (Lambda body
-    // path); unbase64 decode must reproduce the binary-column results
-    "extract_base64" -> ((s, dir) => {
-      val corpus = CorpusGen.generate(s, 300, partitions = 8).toDF()
-        .select(col("url"), col("warc_ts"), base64(col("html")).as("html_b64"),
-          col("lang"))
-      Pipeline.runBase64(corpus)
-        .select(col("url"), col("status"), col("format"),
-          length(col("fullText")).as("text_chars"))
-        .orderBy(col("url"))
-    }),
-
-    "extract_spans" -> ((s, dir) => {
-      val corpus = CorpusGen.generate(s, 300, partitions = 8).toDF()
-      Pipeline.contractView(Pipeline.run(corpus))
-        .select(col("url"), col("status"), length(col("text")).as("text_chars"),
-          size(col("spans")).as("n_spans"))
-        .orderBy(col("url"))
-    }),
-
-    // -------------------- v2.1 enhanced-output JSON sink (rows-only)
-
-    "enhanced_json" -> ((s, dir) => {
-      val corpus = CorpusGen.generate(s, 300, partitions = 8).toDF()
-      val results = Pipeline.run(corpus)
-      Pipeline.enhancedJsonView(results)
-        .select(col("url"), length(col("json")).as("json_chars"),
-          md5(col("json")).as("json_digest"))
-        .orderBy(col("url"))
-    }),
-
-    "enhanced_json_v20" -> ((s, dir) => {
-      val corpus = CorpusGen.generate(s, 300, partitions = 8).toDF()
-      Pipeline.v20JsonView(Pipeline.run(corpus))
-        .select(col("url"), length(col("json")).as("json_chars"),
-          md5(col("json")).as("json_digest"))
-        .orderBy(col("url"))
-    }),
-
-    "entities_exploded" -> ((s, dir) => {
-      val corpus = CorpusGen.generate(s, 300, partitions = 8).toDF()
-      Pipeline.entitiesView(Pipeline.run(corpus))
-        .orderBy(col("url"), col("field_name"), col("value"))
-    }),
-
-    "confidence_dist" -> ((s, dir) => {
-      val corpus = CorpusGen.generate(s, 300, partitions = 8).toDF()
-      Pipeline.confidenceView(Pipeline.run(corpus))
-        .select(col("url"), col("certain"), col("high"), col("medium"),
-          col("low"), col("uncertain"),
-          round(col("avg_confidence"), 4).as("avg_confidence"))
-        .orderBy(col("url"))
-    }),
-
-    // ------------------------- table enhancement V1-V6 (rows-only)
-
-    "tables_enhanced" -> ((s, dir) => {
-      val corpus = CorpusGen.generate(s, 500, partitions = 8).toDF()
-      Pipeline.run(corpus)
-        .select(col("url"), explode(col("tables")).as("t"))
-        .select(col("url"), col("t.tableId").as("table_id"),
-          col("t.rows"), col("t.cols"), col("t.hasHeader").as("has_header"),
-          col("t.isFinancial").as("is_financial"),
-          col("t.hasTotalRow").as("has_total_row"),
-          length(col("t.html")).as("html_chars"),
-          length(col("t.csv")).as("csv_chars"),
-          md5(col("t.markdown")).as("md_digest"))
-        .orderBy(col("url"))
-    }),
-
-    // E9 unruled: whitespace-aligned tables through the engine flag —
-    // inline fixture PDFs (the corpus stays byte-stable), ruled twin rows
-    // prove the two detectors produce the same matrix for the same cells
-    "tables_unruled" -> ((s, dir) => {
-      import s.implicits._
-      val matrix = Seq(Seq("Name", "Qty", "Price"),
-        Seq("widget", "4", "$12.50"), Seq("gadget", "7", "$919.30"),
-        Seq("Total", "", "$931.80"))
-      val rows = (0 until 20).map { i =>
-        val ruled = i % 2 == 0
-        val pdf =
-          if (ruled) graft.corpus.PdfWriter.build(Seq(Seq(s"doc $i")), table = Some(matrix))
-          else graft.corpus.PdfWriter.build(Seq(Seq(s"doc $i")), unruledTable = Some(matrix))
-        (f"pdf://tables/$i%03d", new java.sql.Timestamp(0L), pdf,
-          if (ruled) "ruled" else "unruled")
-      }
-      val input = rows.toDF("url", "warc_ts", "html", "lang")
-      Pipeline.run(input, unruledTables = true).toDF()
-        .select(col("url"), col("lang").as("kind"), explode(col("tables")).as("t"))
-        .select(col("url"), col("kind"), col("t.rows"), col("t.cols"),
-          col("t.hasHeader").as("has_header"),
-          col("t.isFinancial").as("is_financial"),
-          col("t.hasTotalRow").as("has_total_row"),
-          md5(col("t.csv")).as("csv_digest"))
-        .orderBy(col("url"))
-    }),
-
-    // E7 signature-drawings check through the engine: label+rect ⇒
-    // manually_signed, label alone ⇒ unsigned, AcroForm ⇒ digital
-    "signatures_e7" -> ((s, dir) => {
-      import s.implicits._
-      val label = Seq(Seq("Signature:"))
-      val rows = (0 until 30).map { i =>
-        val pdf = (i % 3) match {
-          case 0 => graft.corpus.PdfWriter.build(label,
-            drawnRects = Map(0 -> Seq((100.0, 680.0, 120.0, 2.0))))
-          case 1 => graft.corpus.PdfWriter.build(label)
-          case _ => graft.corpus.PdfWriter.build(label, withSignature = true)
-        }
-        (f"pdf://sig/$i%03d", new java.sql.Timestamp(0L), pdf, "en")
-      }
-      Pipeline.run(rows.toDF("url", "warc_ts", "html", "lang")).toDF()
-        .select(col("url"), col("signatureStatus").as("signature_status"),
-          size(col("signatures")).as("n_digital"))
-        .orderBy(col("url"))
-    }),
-
-    // -------------------------------------- dedup family (rows-only)
-
-    "minhash_pairs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      // guarantee near-dups: a jittered copy of each doc (id + 1e6)
-      val jittered = docs.select((col("doc_id") + 1000000).as("doc_id"),
-        concat(col("text"), lit(" tail")).as("text"))
-      // auditGuard: the driver surface keeps the dropped-bucket audit on
-      // (persisted, so the guard's stats action materializes the banding
-      // pass once and the anti-join reuses it); the library default is a
-      // pure plan-builder with no eager action
-      Dedup.minhashDupPairs(docs.union(jittered).limit(4000), "doc_id", "text",
-          numHashes = 64, bands = 16, threshold = 0.5, auditGuard = true)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "simhash_pairs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val jittered = docs.select((col("doc_id") + 1000000).as("doc_id"),
-        concat(col("text"), lit(" tail")).as("text"))
-      Dedup.simhashDupPairs(docs.union(jittered).limit(4000), "doc_id", "text",
-          maxHamming = 3, auditGuard = true)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "dedup_cluster" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val jittered = docs.select((col("doc_id") + 1000000).as("doc_id"),
-        concat(col("text"), lit(" tail")).as("text"))
-      Dedup.dedupByMinhash(docs.union(jittered).limit(4000), "doc_id", "text",
-          threshold = 0.6)
-        .select(col("doc_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // connected components over the ORACLE-CHECKED exact-Jaccard edge
-    // set (the same 80-doc graph as jaccard_pairs_sql): the DuckDB twin
-    // computes the true transitive closure with a recursive CTE, so a
-    // green row certifies Dedup.components' min-label fixpoint — the
-    // clustering stage of dedupByMinhash — not merely that rows landed.
-    "cluster_components_sql" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"),
-          array_distinct(split(lower(col("text")), " ", -1)).as("toks"))
-      val a = docs.select(col("doc_id").as("id_a"), col("toks").as("toks_a"))
-      val b = docs.select(col("doc_id").as("id_b"), col("toks").as("toks_b"))
-      val pairs = a.crossJoin(b).filter(col("id_a") < col("id_b"))
-        .withColumn("jaccard", round(
-          size(array_intersect(col("toks_a"), col("toks_b"))).cast("double") /
-            size(array_union(col("toks_a"), col("toks_b"))), 4))
-        .filter(col("jaccard") >= 0.9)
-        .select(col("id_a"), col("id_b"))
-      Dedup.components(pairs, rounds = 20)
-        .orderBy(col("id"))
-    }),
-
-    // bounded all-pairs token-set Jaccard — the ORACLE-CHECKED exact
-    // form of the similarity metric (80 docs => 3160 pairs; the scale
-    // path for the same metric is the MinHash-LSH candidate pipeline
-    // below, which never goes all-pairs)
-    // exact token-shingle (3-gram) Jaccard on the jaccard_pairs_sql doc
-    // set — certifies the dedup family's shingle construction
-    // (PyText.splitWs lowercase tokens, k-token space-joined windows,
-    // below-k whole-string fallback) against an independent DuckDB
-    // list-comprehension twin; hash-free string sets on both sides keep
-    // the rounded float byte-exact (murmur is the one step not covered)
-    "shingle_jaccard_sql" -> ((s, dir) => {
-      import s.implicits._
-      // trim(text) != '' matches the twin's len(toks) > 0: python-split
-      // yields zero tokens exactly when the text is all-whitespace, and
-      // two zero-token docs would otherwise emit a jaccard=1.0 row
-      // (empty-set convention) the DuckDB side excludes
-      val docs = t(s, dir, "documents")
-        .filter(col("doc_id") < 80 && trim(col("text")) =!= "")
-        .select(col("doc_id"), col("text"))
-      val a = docs.select(col("doc_id").as("id_a"), col("text").as("text_a"))
-      val b = docs.select(col("doc_id").as("id_b"), col("text").as("text_b"))
-      a.crossJoin(b).filter(col("id_a") < col("id_b"))
-        .as[(Long, String, Long, String)]
-        .map { case (ia, ta, ib, tb) => (ia, ib, Dedup.shingleJaccardExact(ta, tb, 3)) }
-        .toDF("id_a", "id_b", "jaccard")
-        .filter(col("jaccard") > 0)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "jaccard_pairs_sql" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 80)
-        .select(col("doc_id"),
-          array_distinct(split(lower(col("text")), " ", -1)).as("toks"))
-      val a = docs.select(col("doc_id").as("id_a"), col("toks").as("toks_a"))
-      val b = docs.select(col("doc_id").as("id_b"), col("toks").as("toks_b"))
-      a.crossJoin(b).filter(col("id_a") < col("id_b"))
-        .withColumn("jaccard", round(
-          size(array_intersect(col("toks_a"), col("toks_b"))).cast("double") /
-            size(array_union(col("toks_a"), col("toks_b"))), 4))
-        .filter(col("jaccard") >= 0.3)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "ngram_jaccard_pairs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val jittered = docs.select((col("doc_id") + 1000000).as("doc_id"),
-        concat(col("text"), lit(" tail")).as("text"))
-      Dedup.ngramJaccardDupPairs(docs.union(jittered).limit(4000), "doc_id", "text",
-          threshold = 0.6)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // ---------------------------------- similarity search (rows-only)
-
-    // LSH-bucketed near-dup with an EXACT oracle twin: the only pairs at
-    // cos>=0.99 are the 500 source/jittered twins (max natural-pair cos at
-    // sf0.01 is 0.513), so the DuckDB all-source-vs-jitter scan is the
-    // exact expected answer iff LSH recall is total — which the oracle row
-    // then certifies. `vec_id < 500` (not limit) keeps the subset
-    // deterministic at any SF.
-    "embedding_neardup" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").filter(col("vec_id") < 500)
-      import s.implicits._
-      val jittered = emb.as[(Long, Seq[Float], String)]
-        .map { case (id, v, l) => (id + 10000000L, v.updated(0, v.head + 0.01f), l) }
-        .toDF("vec_id", "embedding", "label")
-      Similarity.cosineDupPairs(emb.union(jittered), threshold = 0.99)
-        .withColumn("cos", round(col("cos"), 4))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "ann_ivf_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 10)
-      Similarity.ivfTopK(emb, queries, k = 5, nCentroids = 16, nProbe = 4)
-        .withColumn("cos", round(col("cos"), 4))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "ann_brute_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 10)
-      Similarity.bruteForceTopK(emb, queries, k = 5)
-        .withColumn("cos", round(col("cos"), 4))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // IVF at nProbe = nCentroids degrades to brute force by construction
-    // (every inverted list is probed), so the exact brute-force SQL is its
-    // oracle — a driver-checked equivalence the local SimilarityDedupSpec
-    // already asserts
-    "ann_ivf_full_probe" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 10)
-      Similarity.ivfTopK(emb, queries, k = 5, nCentroids = 8, nProbe = 8)
-        .withColumn("cos", round(col("cos"), 4))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "ann_lsh_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 10)
-      Similarity.lshTopK(emb, queries, k = 5)
-        .withColumn("cos", round(col("cos"), 4))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // recall@k self-evidence for the APPROXIMATE ANN family: lshTopK and
-    // partial-probe ivfTopK scored against bruteForceTopK on the same
-    // embeddings and queries. "Rows landed" says nothing about an
-    // approximate method's quality; these scalar rows do (round 3's LSH
-    // config returned 2 rows at sf0.1 — recall ≈ 0 — and nothing
-    // surfaced it). ivf_full_probe rides along as the 1.0000 sanity
-    // anchor. Rows-only (the hyperplane/centroid constructions are not
-    // DuckDB-expressible); SimilarityDedupSpec pins recall floors.
-    "ann_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 10)
-      val k = 5
-      // persisted: the ground-truth top-k feeds one count + three semi-
-      // joins below — unpersisted, the brute-force corpus scan (the
-      // heaviest job in the bench) re-ran 4x. Q·k = 50 rows cached.
-      val brute = Similarity.bruteForceTopK(emb, queries, k)
-        .select(col("query_id"), col("neighbor_id"))
-        .persist()
-      val nTrue = brute.count()
-      def recallRow(approx: DataFrame, method: String): DataFrame =
-        approx.select(col("query_id"), col("neighbor_id"))
-          .join(brute, Seq("query_id", "neighbor_id"), "left_semi")
-          .agg(count(lit(1)).as("hits"))
-          .select(lit(method).as("method"), lit(k).as("k"), lit(nTrue).as("n_true"),
-            col("hits"), round(col("hits") / lit(nTrue.toDouble), 4).as("recall"))
-      // ivf partial-probe at nProbe = half the centroids: the round-4
-      // registered config (4 of 16) measured recall 0.56 with no floor
-      // documented; 8 of 16 is the config whose band the spec pins
-      // (recall ≥ 0.7 at sf0.01/sf0.1 — SimilarityDedupSpec)
-      recallRow(Similarity.lshTopK(emb, queries, k), "lsh_p8_t8_mp1")
-        .union(recallRow(
-          Similarity.ivfTopK(emb, queries, k, nCentroids = 16, nProbe = 8),
-          "ivf_probe8of16"))
-        .union(recallRow(
-          Similarity.ivfTopK(emb, queries, k, nCentroids = 8, nProbe = 8),
-          "ivf_full_probe"))
-        .orderBy(col("method"))
-    }),
-
-    // ---------------------- resumable checkpoint + lineage (rows-only)
-
-    "resumable_lineage" -> ((s, dir) => {
-      val out = java.nio.file.Files.createTempDirectory("graft_lineage_").toString
-      val corpus = CorpusGen.generate(s, 400, partitions = 8).toDF()
-      ops.Checkpoint.runResumable(corpus, out, nBuckets = 8, runId = "verify")
-      ops.Checkpoint.metrics(s, out)
-        .select(col("bucket"), col("docCount"), col("okCount"),
-          col("failCount"), col("emptyCount"), col("inputBytes"))
-        .orderBy(col("bucket"))
-    }),
-
-    // -------------------- structured-streaming ingest (rows-only)
-
-    "streaming_extract" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_q_").toString
-      CorpusGen.generate(s, 200, partitions = 2).toDF()
-        .write.mode("append").parquet(s"$root/in")
-      val q = graft.streaming.StreamingExtract.start(
-        s, s"$root/in", s"$root/out", s"$root/ckpt")
-      q.awaitTermination()
-      s.read.parquet(s"$root/out/data")
-        .select(col("url"), col("status"), col("format"),
-          length(col("fullText")).as("text_chars"))
-        .orderBy(col("url"))
-    }),
-
-    // windowed streaming aggregation with a DuckDB twin: the events
-    // parquet is drained as a multi-micro-batch stream (complete-mode
-    // memory sink) and the result must equal the one-shot batch
-    // aggregate — the stream ≡ batch invariant is the oracle-checkable
-    // property of the streaming engine (watermark/append semantics are
-    // spec-locked in StreamingSpec; a finite input's final windows never
-    // close in append mode, so complete mode is the honest comparison)
-    "streaming_daily_oracle" -> ((s, dir) => {
-      graft.streaming.StreamingExtract.dailyEventStats(s, s"$dir/events.parquet")
-        .orderBy(col("day"), col("event_type"))
-    }),
-
-    // cross-document exact n-gram duplication report — the discovery
-    // stage of substring-level dedup (Lee et al. 2022); string form here
-    // for the exact DuckDB twin (the operator's scale path groups by the
-    // 64-bit murmur fingerprint instead — see SimilarityDedupSpec)
-    "dup_ngrams_sql" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .filter(col("doc_id") < 200 && trim(col("text")) =!= "")
-        .select(col("doc_id"), col("text"))
-      Dedup.duplicateShingles(docs, "doc_id", "text", k = 3, minDocs = 2,
-          hashed = false)
-        .orderBy(col("n_occurrences").desc, col("shingle"))
-        .limit(100)
-    }),
-
-    // benchmark-decontamination check: distinct-3-gram containment of
-    // "eval" docs (400-449) against the "training" corpus (0-199) —
-    // string shingles for the exact DuckDB twin; the operator's scale
-    // path joins on 64-bit fingerprints
-    "contamination_sql" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = docs.filter(col("doc_id") < 200)
-      val cands = docs.filter(col("doc_id") >= 400 && col("doc_id") < 450)
-      Dedup.contaminationReport(cands, corpus, "doc_id", "text", k = 3,
-          hashed = false)
-        .select(col("id").as("doc_id"), col("n_shingles"), col("n_hit"),
-          col("contamination"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Gopher-style repetition/shape quality signals (Rae et al. 2021
-    // appendix A1) — pure column expressions, exact DuckDB twin
-    "quality_gopher" -> ((s, dir) => {
-      Quality.withGopherColumns(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_words"),
-          round(col("mean_word_len"), 4).as("mean_word_len"),
-          col("n_lines"),
-          round(col("frac_distinct_lines"), 4).as("frac_distinct_lines"),
-          round(col("frac_punct_lines"), 4).as("frac_punct_lines"),
-          round(col("symbol_word_ratio"), 4).as("symbol_word_ratio"),
-          col("gopher_keep"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ------------------------------------------ quality (rows-only)
-
-    "quality_scores" -> ((s, dir) => {
-      Quality.withQualityColumns(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_tokens"), col("n_subwords"),
-          round(col("punct_ratio"), 4).as("punct_ratio"),
-          round(col("stopword_ratio"), 4).as("stopword_ratio"),
-          col("quality_score"), col("fingerprint"), col("detected_lang"))
-        .orderBy(col("doc_id"))
-    }))
-
-  def oracleSql: Map[String, String] = Map(
-
-    // domain blocklist twin: same host synthesis, same median-of-means
-    // rule (7 hosts -> odd count, median is the exact middle mean; the
-    // strict < keeps the median host)
-    "domain_blocklist" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    'www.example' || CAST(doc_id % 7 AS VARCHAR) || '.com' AS host,
-        |    CAST(length(text) AS BIGINT) AS n_chars
-        |  FROM documents),
-        |stats AS (
-        |  SELECT host, COUNT(*) AS n_docs,
-        |    CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS mean_q
-        |  FROM d GROUP BY host),
-        |m AS (SELECT median(mean_q) AS med FROM stats),
-        |blocked AS (
-        |  SELECT host FROM stats CROSS JOIN m WHERE mean_q < med)
-        |SELECT host, COUNT(*) AS n_docs,
-        |  CAST(SUM(doc_id) AS BIGINT) AS doc_checksum
-        |FROM d WHERE host NOT IN (SELECT host FROM blocked)
-        |GROUP BY host ORDER BY host""".stripMargin,
-
-    // NB twin: full independent re-derivation — counts, Laplace
-    // smoothing, micro-nat quantization, argmax with label-asc ties
-    "nb_lang_confusion" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang, word AS term FROM (
-        |    SELECT doc_id, lang,
-        |      unnest(string_split(lower(text), ' ')) AS word
-        |    FROM documents)
-        |  WHERE length(word) > 2),
-        |lt AS (SELECT lang AS label, term, CAST(COUNT(*) AS BIGINT) AS c
-        |       FROM toks GROUP BY 1, 2),
-        |tot AS (SELECT label, CAST(SUM(c) AS BIGINT) AS tot
-        |        FROM lt GROUP BY 1),
-        |voc AS (SELECT CAST(COUNT(DISTINCT term) AS BIGINT) AS v FROM lt),
-        |nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-        |nl AS (SELECT lang AS label, CAST(COUNT(*) AS BIGINT) AS n_label
-        |       FROM documents GROUP BY 1),
-        |pt AS (SELECT lt.label, lt.term,
-        |         CAST(FLOOR(ln(CAST(lt.c + 1 AS DOUBLE)
-        |           / CAST(t.tot + voc.v AS DOUBLE)) * 1e6) AS BIGINT) AS lp
-        |       FROM lt JOIN tot t ON lt.label = t.label CROSS JOIN voc),
-        |pl AS (SELECT nl.label,
-        |         CAST(FLOOR(ln(CAST(nl.n_label AS DOUBLE)
-        |           / CAST(nd.n_docs AS DOUBLE)) * 1e6) AS BIGINT) AS prior,
-        |         CAST(FLOOR(ln(1.0
-        |           / CAST(t.tot + voc.v AS DOUBLE)) * 1e6) AS BIGINT) AS lp0
-        |       FROM nl JOIN tot t ON nl.label = t.label
-        |       CROSS JOIN voc CROSS JOIN nd),
-        |tc AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS cnt
-        |       FROM toks GROUP BY 1, 2),
-        |pdl AS (SELECT tc.doc_id, pl.label,
-        |          CAST(SUM(tc.cnt * COALESCE(pt.lp, pl.lp0)) AS BIGINT) AS ll
-        |        FROM tc CROSS JOIN pl
-        |        LEFT JOIN pt ON tc.term = pt.term AND pl.label = pt.label
-        |        GROUP BY 1, 2),
-        |adl AS (SELECT d.doc_id, pl.label,
-        |          COALESCE(pdl.ll, 0) + pl.prior AS score
-        |        FROM documents d CROSS JOIN pl
-        |        LEFT JOIN pdl ON d.doc_id = pdl.doc_id
-        |          AND pl.label = pdl.label),
-        |pred AS (SELECT doc_id, label AS predicted,
-        |           row_number() OVER (PARTITION BY doc_id
-        |             ORDER BY score DESC, label) AS rk
-        |         FROM adl)
-        |SELECT d.lang, p.predicted, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(d.doc_id) AS BIGINT) AS doc_checksum
-        |FROM pred p JOIN documents d ON p.doc_id = d.doc_id
-        |WHERE p.rk = 1
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // anchor twin: expected rows derived straight from doc_id — no
-    // HTML parsing on the oracle side, so it independently pins what
-    // the tokenizer must produce (entity-decoded href, collapsed text)
-    "anchor_rows" ->
-      """SELECT * FROM (
-        |  SELECT doc_id,
-        |    'https://www.Example' || CAST(doc_id % 7 AS VARCHAR)
-        |      || '.com/a?x=1&y=2' AS href,
-        |    'Link ' || CAST(doc_id AS VARCHAR) || ' here' AS anchor_text
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id,
-        |    'http://site' || CAST(doc_id % 5 AS VARCHAR) || '.org/p',
-        |    'second link'
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id, '/relative/path', 'rel'
-        |  FROM documents WHERE doc_id % 3 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 'https://dangling.net/x', 'never closed'
-        |  FROM documents WHERE doc_id % 4 = 0)
-        |ORDER BY doc_id, href""".stripMargin,
-
-    // fetch-waves twin: same per-host sequence and envelope
-    "fetch_waves" ->
-      """WITH f AS (
-        |  SELECT doc_id, 'h' || CAST(doc_id % 9 AS VARCHAR) AS host,
-        |    CAST((doc_id % 9) % 3 + 1 AS BIGINT) AS delay_sec
-        |  FROM documents),
-        |w AS (SELECT host, delay_sec,
-        |        CAST(row_number() OVER (PARTITION BY host
-        |          ORDER BY doc_id) AS BIGINT) - 1 AS wave0
-        |      FROM f)
-        |SELECT host, delay_sec, CAST(COUNT(*) AS BIGINT) AS n_urls,
-        |  CAST(MAX(wave0 * delay_sec) AS BIGINT) AS makespan_sec,
-        |  CAST(SUM(wave0 * delay_sec) AS BIGINT) AS schedule_checksum
-        |FROM w GROUP BY 1, 2 ORDER BY host""".stripMargin,
-
-    // vocab-coverage twin: same tokenization, same total-order window
-    "vocab_coverage" ->
-      """WITH toks AS (
-        |  SELECT word FROM (
-        |    SELECT unnest(string_split(lower(text), ' ')) AS word
-        |    FROM documents)
-        |  WHERE length(word) > 2),
-        |c AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt
-        |      FROM toks GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS total FROM c),
-        |top AS (SELECT word, cnt FROM c ORDER BY cnt DESC, word LIMIT 32),
-        |r AS (SELECT word, cnt,
-        |        CAST(row_number() OVER (ORDER BY cnt DESC, word)
-        |          AS BIGINT) AS rank,
-        |        CAST(SUM(cnt) OVER (ORDER BY cnt DESC, word
-        |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_cnt
-        |      FROM top)
-        |SELECT rank, word, cnt, cum_cnt,
-        |  (cum_cnt * 1000000) // tot.total AS cum_coverage_micro
-        |FROM r CROSS JOIN tot ORDER BY rank""".stripMargin,
-
-    // robots twin: expected permission per synthesis branch — no
-    // robots parsing on the oracle side
-    "robots_allowed" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    'h' || CAST(doc_id % 4 AS VARCHAR) || '.com' AS host,
-        |    CASE doc_id % 5
-        |      WHEN 0 THEN '/private/data/1'
-        |      WHEN 1 THEN '/private/pubfile'
-        |      WHEN 2 THEN '/docs/file.pdf'
-        |      WHEN 3 THEN '/docs/file.pdfx'
-        |      ELSE '/open/page' END AS path
-        |  FROM documents)
-        |SELECT host, path,
-        |  CASE
-        |    WHEN doc_id % 4 = 2 THEN TRUE
-        |    WHEN doc_id % 4 = 3 THEN FALSE
-        |    WHEN doc_id % 5 = 0 THEN FALSE
-        |    WHEN doc_id % 5 = 2 THEN FALSE
-        |    ELSE TRUE END AS allowed,
-        |  CAST(COUNT(*) AS BIGINT) AS n_urls
-        |FROM f GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    // template twin: the identical rolling hash via list_reduce over
-    // the literal structure strings — integer-exact
-    "template_clusters" ->
-      """WITH fp AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 3
-        |      WHEN 0 THEN
-        |        'html>head>title>/title>/head>body>p>/p>/body>/html'
-        |      WHEN 1 THEN
-        |        'html>body>div>ul>li>/li>/ul>/div>/body>/html'
-        |      ELSE 'html>body>table>tr>td>span>/span>/td>/tr>'
-        |        || '/table>/body>/html' END AS s,
-        |    CAST(CASE doc_id % 3 WHEN 2 THEN 6 ELSE 5 END AS BIGINT)
-        |      AS n_tags
-        |  FROM documents),
-        |h AS (
-        |  SELECT doc_id, n_tags,
-        |    list_reduce(list_transform(range(1, length(s) + 1),
-        |        i -> CAST(ord(substr(s, i, 1)) AS BIGINT)),
-        |      (a, b) -> (a * 131 + b) % 2147483647) AS template_hash
-        |  FROM fp)
-        |SELECT template_hash, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(doc_id) AS BIGINT) AS doc_checksum, MAX(n_tags) AS n_tags
-        |FROM h GROUP BY 1 ORDER BY template_hash""".stripMargin,
-
-    // fuzzy-title twin: independent blocking + DuckDB's native
-    // levenshtein (classic edit distance, same semantics as Spark's)
-    "fuzzy_titles" ->
-      """WITH ttl AS (
-        |  SELECT doc_id,
-        |    lpad(CAST(doc_id // 8 AS VARCHAR), 6, '0') ||
-        |    CASE doc_id % 8
-        |      WHEN 0 THEN ' widget pro'
-        |      WHEN 1 THEN ' widget pros'
-        |      WHEN 2 THEN ' widget pro x'
-        |      WHEN 3 THEN ' widget deluxe kit'
-        |      WHEN 4 THEN ' gadget pro'
-        |      WHEN 5 THEN ' gadget pros'
-        |      WHEN 6 THEN ' alpha beta gamma'
-        |      ELSE ' alpha beta gamm' END AS title
-        |  FROM documents),
-        |b AS (SELECT doc_id, title, lower(substr(title, 1, 6)) AS blk
-        |      FROM ttl)
-        |SELECT x.doc_id AS id1, y.doc_id AS id2,
-        |  CAST(levenshtein(x.title, y.title) AS BIGINT) AS dist
-        |FROM b x JOIN b y ON x.blk = y.blk AND x.doc_id < y.doc_id
-        |WHERE levenshtein(x.title, y.title) <= 2
-        |ORDER BY id1, id2""".stripMargin,
-
-    // pub-date twin: expected date + winning source per branch — no
-    // date parsing or precedence logic oracle-side
-    "pub_dates" ->
-      """SELECT doc_id,
-        |  CASE doc_id % 7
-        |    WHEN 0 THEN '2023-07-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')
-        |    WHEN 1 THEN '2021-02-28'
-        |    WHEN 2 THEN '2019-03-09'
-        |    WHEN 3 THEN '2020-02-29'
-        |    WHEN 4 THEN '2018-11-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')
-        |    WHEN 5 THEN ''
-        |    ELSE '2017-06-01' END AS pub_date,
-        |  CASE doc_id % 7
-        |    WHEN 0 THEN 'og_article'
-        |    WHEN 1 THEN 'microdata'
-        |    WHEN 2 THEN 'meta_date'
-        |    WHEN 3 THEN 'time_elem'
-        |    WHEN 4 THEN 'url_path'
-        |    WHEN 5 THEN 'none'
-        |    ELSE 'url_path' END AS source
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // markdown twin: expected markdown stated byte-exact per branch
-    // (chr(10) line joins) — no HTML logic oracle-side
-    "html_markdown" ->
-      """SELECT doc_id,
-        |  CASE doc_id % 6
-        |    WHEN 0 THEN '# Doc ' || doc_id || chr(10) || chr(10) ||
-        |      'Hello **bold** and *it* plus `x=1`, see ' ||
-        |      '[link](http://e/1).' || chr(10) || chr(10) || '## Sect'
-        |    WHEN 1 THEN '1. first' || chr(10) || '2. second' || chr(10) ||
-        |      '  - sub a' || chr(10) || '  - sub b' || chr(10) ||
-        |      '3. third ' || doc_id
-        |    WHEN 2 THEN '> quoted one' || chr(10) || '>' || chr(10) ||
-        |      '> quoted two ' || doc_id || chr(10) || chr(10) ||
-        |      '---' || chr(10) || chr(10) || 'after'
-        |    WHEN 3 THEN '```' || chr(10) || 'if (a < b) {' || chr(10) ||
-        |      '  run(' || doc_id || ');' || chr(10) || '}' ||
-        |      chr(10) || '```'
-        |    WHEN 4 THEN '| k | v |' || chr(10) || '| --- | --- |' ||
-        |      chr(10) || '| a | ' || doc_id || ' |' || chr(10) ||
-        |      '| b | 9 |'
-        |    ELSE 'line one' || chr(10) || 'line two' || chr(10) ||
-        |      chr(10) || '![pic ' || doc_id || '](http://e/i.png) tail'
-        |    END AS markdown
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // jsonld twin: fields stated per branch; blob_len computed from
-    // the literal blob string — no JSON parsing oracle-side
-    "jsonld_meta" ->
-      """WITH b AS (
-        |  SELECT doc_id, 0 AS block_idx,
-        |    '{"@type":"NewsArticle","headline":"Story ' || doc_id ||
-        |      '","datePublished":"2022-05-06","author":{"name":"A. Writer"}}'
-        |      AS blob,
-        |    'NewsArticle' AS ld_type, 'Story ' || doc_id AS headline,
-        |    '2022-05-06' AS date_published, 'A. Writer' AS author_name
-        |  FROM documents WHERE doc_id % 5 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 0, '{"@type":"Product","name":"Widget"}',
-        |    'Product', NULL, NULL, NULL
-        |  FROM documents WHERE doc_id % 5 = 1
-        |  UNION ALL
-        |  SELECT doc_id, 1,
-        |    '{"@type":"NewsArticle","headline":"Second ' || doc_id ||
-        |      '","author":{"name":"B"}}',
-        |    'NewsArticle', 'Second ' || doc_id, NULL, 'B'
-        |  FROM documents WHERE doc_id % 5 = 1
-        |  UNION ALL
-        |  SELECT doc_id, 0,
-        |    '{"@type":"BlogPosting","headline":"Up ' || doc_id ||
-        |      '","datePublished":"2021-01-02","author":{"name":"C"}}',
-        |    'BlogPosting', 'Up ' || doc_id, '2021-01-02', 'C'
-        |  FROM documents WHERE doc_id % 5 = 2
-        |  UNION ALL
-        |  SELECT doc_id, 0, '{broken', NULL, NULL, NULL, NULL
-        |  FROM documents WHERE doc_id % 5 = 4)
-        |SELECT doc_id, CAST(block_idx AS BIGINT) AS block_idx, ld_type,
-        |  headline, date_published, author_name,
-        |  CAST(length(blob) AS BIGINT) AS blob_len
-        |FROM b ORDER BY doc_id, block_idx""".stripMargin,
-
-    // readability twin: independent DuckDB reimplementation of every
-    // count and both integer milli formulas
-    "readability" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(text, '[A-Za-z]+')) AS BIGINT)
-        |      AS n_words,
-        |    CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
-        |      AS BIGINT) AS n_sentences,
-        |    CAST(len(regexp_extract_all(text, '(?i)[aeiouy]+')) +
-        |         len(regexp_extract_all(text,
-        |           '(?i)\b[b-df-hj-np-tv-xz]+\b')) AS BIGINT)
-        |      AS n_syllables
-        |  FROM documents)
-        |SELECT doc_id, n_words, n_sentences, n_syllables,
-        |  CASE WHEN n_words = 0 THEN NULL
-        |    ELSE 206835 - (1015 * n_words) // n_sentences
-        |       - (84600 * n_syllables) // n_words END AS flesch_milli,
-        |  CASE WHEN n_words = 0 THEN NULL
-        |    ELSE (390 * n_words) // n_sentences
-        |       + (11800 * n_syllables) // n_words - 15590 END AS fk_milli
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    // pmi twin: independent pair/unigram derivation + the identical
-    // pinned rational and floor quantization
-    "pmi_collocations" ->
-      """WITH d AS (
-        |  SELECT list_transform(regexp_extract_all(text, '[A-Za-z]+'),
-        |    t -> lower(t)) AS a
-        |  FROM documents),
-        |pairs AS (
-        |  SELECT unnest(list_transform(range(1, len(a) + 1),
-        |    i -> struct_pack(x := a[i],
-        |      y := CASE WHEN i < len(a) THEN a[i + 1] END))) AS p
-        |  FROM d WHERE len(a) > 0),
-        |pc AS (SELECT p.x AS a, p.y AS b, COUNT(*) AS c
-        |       FROM pairs GROUP BY 1, 2),
-        |uni AS (SELECT a, SUM(c) AS ca FROM pc GROUP BY 1),
-        |tot AS (SELECT SUM(c) AS n,
-        |          SUM(CASE WHEN b IS NOT NULL THEN c END) AS bt
-        |        FROM pc)
-        |SELECT pc.a AS w1, pc.b AS w2, CAST(pc.c AS BIGINT) AS n_pair,
-        |  CAST(u1.ca AS BIGINT) AS n_w1, CAST(u2.ca AS BIGINT) AS n_w2,
-        |  CAST(floor(1000000.0 * ln(
-        |    CAST(pc.c * tot.n * tot.n AS DOUBLE) /
-        |    (u1.ca * u2.ca * tot.bt))) AS BIGINT) AS pmi_micro
-        |FROM pc, uni u1, uni u2, tot
-        |WHERE pc.b IS NOT NULL AND pc.c >= 3
-        |  AND u1.a = pc.a AND u2.a = pc.b
-        |ORDER BY pmi_micro DESC, w1, w2 LIMIT 20""".stripMargin,
-
-    // feed twin: every item row stated per branch — no XML parsing
-    // oracle-side
-    "feed_items" ->
-      """WITH h AS (SELECT doc_id,
-        |    'http://s' || CAST(doc_id % 5 AS VARCHAR) AS b
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, 'rss' AS kind, 0 AS item_idx,
-        |    'Post A ' || doc_id AS title,
-        |    b || '/a?x=1&y=' || doc_id AS link,
-        |    'Mon, 02 Jan 2023 10:00:00 GMT' AS item_date
-        |  FROM h WHERE doc_id % 3 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 'rss', 1, 'Post B', b || '/b', ''
-        |  FROM h WHERE doc_id % 3 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 'atom', 0, 'Entry ' || doc_id,
-        |    b || '/e' || doc_id, '2024-03-04T05:06:07Z'
-        |  FROM h WHERE doc_id % 3 = 1
-        |  UNION ALL
-        |  SELECT doc_id, 'atom', 1, 'Two', b || '/two', ''
-        |  FROM h WHERE doc_id % 3 = 1)
-        |SELECT doc_id, kind, CAST(item_idx AS BIGINT) AS item_idx,
-        |  title, link, item_date
-        |FROM r ORDER BY doc_id, item_idx""".stripMargin,
-
-    // host-outlier twin: lower medians by row_number rank, identical
-    // integer gate
-    "host_outliers" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    'www.example' || CAST(doc_id % 7 AS VARCHAR) || '.com' AS host,
-        |    CAST(length(text) AS BIGINT) AS v
-        |  FROM documents),
-        |m1 AS (
-        |  SELECT host, v,
-        |    row_number() OVER (PARTITION BY host ORDER BY v, doc_id) AS rn,
-        |    COUNT(*) OVER (PARTITION BY host) AS n
-        |  FROM d),
-        |med AS (SELECT host, v AS med_v FROM m1 WHERE rn = (n + 1) // 2),
-        |a AS (
-        |  SELECT d.doc_id, d.host, abs(d.v - med.med_v) AS av, med.med_v
-        |  FROM d JOIN med USING (host)),
-        |m2 AS (
-        |  SELECT host, av,
-        |    row_number() OVER (PARTITION BY host ORDER BY av, doc_id) AS rn,
-        |    COUNT(*) OVER (PARTITION BY host) AS n
-        |  FROM a),
-        |mad AS (SELECT host, av AS mad_v FROM m2 WHERE rn = (n + 1) // 2)
-        |SELECT a.host, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(MAX(a.med_v) AS BIGINT) AS med_v,
-        |  CAST(MAX(mad.mad_v) AS BIGINT) AS mad_v,
-        |  CAST(SUM(CASE WHEN 10000 * a.av > 44478 * mad.mad_v
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM a JOIN mad USING (host)
-        |GROUP BY 1 ORDER BY a.host""".stripMargin,
-
-    // rendezvous twin: identical polynomial weights + larger-worker
-    // tie-break via struct max
-    "rendezvous_assign" ->
-      """WITH hosts AS (
-        |  SELECT DISTINCT 'h' || CAST(doc_id % 50 AS VARCHAR) AS host
-        |  FROM documents),
-        |h0 AS (
-        |  SELECT host, w,
-        |    list_reduce(list_transform(
-        |      range(1, length(w || '|' || host) + 1),
-        |      i -> CAST(ord(substr(w || '|' || host, i, 1)) AS BIGINT)),
-        |      (a, b) -> (a * 131 + b) % 2147483647) AS hr
-        |  FROM hosts,
-        |    (SELECT unnest(['f0','f1','f2','f3','f4','f5','f6','f7'])
-        |       AS w)),
-        |hw AS (SELECT host, w, hr * hr % 2147483647 AS h FROM h0),
-        |best AS (
-        |  SELECT host, w AS worker,
-        |    row_number() OVER (PARTITION BY host
-        |      ORDER BY h DESC, w DESC) AS rn
-        |  FROM hw),
-        |d AS (
-        |  SELECT doc_id, 'h' || CAST(doc_id % 50 AS VARCHAR) AS host
-        |  FROM documents)
-        |SELECT b.worker,
-        |  CAST(COUNT(DISTINCT d.host) AS BIGINT) AS n_hosts,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(d.doc_id) AS BIGINT) AS doc_checksum
-        |FROM d JOIN best b ON d.host = b.host AND b.rn = 1
-        |GROUP BY 1 ORDER BY worker""".stripMargin,
-
-    // reciprocity twin: same synthetic edges, independent reverse-join
-    "reciprocal_links" ->
-      """WITH kk AS (SELECT DISTINCT doc_id % 12 AS k FROM documents),
-        |e0 AS (
-        |  SELECT k, unnest(CASE WHEN k < 4 THEN
-        |      list_distinct(list_filter(
-        |        [(k + 1) % 12, 0, 1, 2, 3], x -> x != k))
-        |    ELSE [(k + 1) % 12] END) AS d
-        |  FROM kk),
-        |e AS (
-        |  SELECT DISTINCT 'h' || CAST(k AS VARCHAR) AS src,
-        |    'h' || CAST(d AS VARCHAR) AS dst
-        |  FROM e0 WHERE k != d),
-        |r AS (
-        |  SELECT e1.src, COUNT(*) AS n_recip
-        |  FROM e e1 JOIN e e2 ON e1.src = e2.dst AND e1.dst = e2.src
-        |  GROUP BY 1)
-        |SELECT e.src AS host, CAST(COUNT(*) AS BIGINT) AS out_deg,
-        |  CAST(COALESCE(MAX(r.n_recip), 0) AS BIGINT) AS n_reciprocal,
-        |  CAST((1000000 * COALESCE(MAX(r.n_recip), 0)) // COUNT(*)
-        |    AS BIGINT) AS reciprocity_micro
-        |FROM e LEFT JOIN r ON e.src = r.src
-        |GROUP BY 1 ORDER BY host""".stripMargin,
-
-    // surt twin: url + key stated per branch — no URL logic
-    // oracle-side
-    "surt_keys" ->
-      """SELECT doc_id,
-        |  CASE doc_id % 6
-        |    WHEN 0 THEN 'HTTPS://WWW.Example' || (doc_id % 4) ||
-        |      '.COM:443/Path/Page?b=2&a=' || doc_id || '#frag'
-        |    WHEN 1 THEN 'http://sub.blog.example' || (doc_id % 4) ||
-        |      '.org/post/' || doc_id
-        |    WHEN 2 THEN 'http://example' || (doc_id % 4) ||
-        |      '.net:8080/?z=1&y=2'
-        |    WHEN 3 THEN 'http://www.example' || (doc_id % 4) ||
-        |      '.com/a%2Fb?x=%4A'
-        |    WHEN 4 THEN 'https://Example' || (doc_id % 4) || '.com'
-        |    ELSE 'http://example' || (doc_id % 4) || '.com/x?'
-        |  END AS url,
-        |  CASE doc_id % 6
-        |    WHEN 0 THEN 'com,example' || (doc_id % 4) ||
-        |      ')/path/page?a=' || doc_id || '&b=2'
-        |    WHEN 1 THEN 'org,example' || (doc_id % 4) ||
-        |      ',blog,sub)/post/' || doc_id
-        |    WHEN 2 THEN 'net,example' || (doc_id % 4) ||
-        |      ':8080)/?y=2&z=1'
-        |    WHEN 3 THEN 'com,example' || (doc_id % 4) || ')/a%2fb?x=%4a'
-        |    WHEN 4 THEN 'com,example' || (doc_id % 4) || ')/'
-        |    ELSE 'com,example' || (doc_id % 4) || ')/x'
-        |  END AS surt
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // chunk twin: identical windows via list_slice over \S+ tokens
-    "passage_chunks" ->
-      """WITH d AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS toks
-        |  FROM documents),
-        |n AS (
-        |  SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n
-        |  FROM d WHERE len(toks) > 0),
-        |c AS (
-        |  SELECT doc_id, toks, n,
-        |    unnest(range(0, CASE WHEN n <= 64 THEN 1
-        |      ELSE ((n - 64) + 47) // 48 + 1 END)) AS chunk_idx
-        |  FROM n),
-        |r AS (
-        |  SELECT doc_id, chunk_idx, chunk_idx * 48 AS token_offset,
-        |    least(64, n - chunk_idx * 48) AS n_tokens,
-        |    array_to_string(list_slice(toks, chunk_idx * 48 + 1,
-        |      chunk_idx * 48 + 64), ' ') AS chunk_text
-        |  FROM c)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_chunks,
-        |  CAST(SUM(n_tokens) AS BIGINT) AS token_sum,
-        |  CAST(MAX(token_offset) AS BIGINT) AS last_offset,
-        |  CAST(SUM(length(chunk_text)) AS BIGINT) AS char_sum
-        |FROM r GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    // robots-sitemap twin: rows stated per branch
-    "robots_sitemaps" ->
-      """WITH hosts AS (SELECT DISTINCT doc_id % 6 AS k FROM documents),
-        |r AS (
-        |  SELECT 'h0' AS host, 0 AS sitemap_idx,
-        |    'http://h0.example/s1.xml' AS sitemap_url
-        |  FROM hosts WHERE k = 0
-        |  UNION ALL SELECT 'h1', 0, 'http://h1.example/a.xml'
-        |    FROM hosts WHERE k = 1
-        |  UNION ALL SELECT 'h1', 1, 'http://h1.example/b.xml'
-        |    FROM hosts WHERE k = 1
-        |  UNION ALL SELECT 'h3', 0, 'http://h3.example/c.xml'
-        |    FROM hosts WHERE k = 3
-        |  UNION ALL SELECT 'h4', 0, 'http://h4.example/d.xml'
-        |    FROM hosts WHERE k = 4)
-        |SELECT host, CAST(sitemap_idx AS BIGINT) AS sitemap_idx,
-        |  sitemap_url
-        |FROM r ORDER BY host, sitemap_idx""".stripMargin,
-
-    // recrawl twin: identical lag window, integer clamp
-    "recrawl_schedule" ->
-      """WITH o AS (
-        |  SELECT user_id,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS e, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_type) AS prev
-        |  FROM events),
-        |a AS (
-        |  SELECT user_id, COUNT(*) AS n_obs,
-        |    SUM(CASE WHEN prev IS NOT NULL AND event_type <> prev
-        |      THEN 1 ELSE 0 END) AS n_changes,
-        |    MAX(e) - MIN(e) AS span_sec, MAX(e) AS last_e
-        |  FROM o GROUP BY 1)
-        |SELECT user_id, CAST(n_obs AS BIGINT) AS n_obs,
-        |  CAST(n_changes AS BIGINT) AS n_changes,
-        |  CAST(span_sec AS BIGINT) AS span_sec,
-        |  CAST(least(greatest(span_sec // greatest(1, n_changes),
-        |    3600), 604800) AS BIGINT) AS interval_sec,
-        |  CAST(last_e + least(greatest(
-        |    span_sec // greatest(1, n_changes), 3600), 604800)
-        |    AS BIGINT) AS next_fetch_epoch
-        |FROM a ORDER BY user_id""".stripMargin,
-
-    // outline twin: every heading row stated per branch
-    "doc_outline" ->
-      """WITH r AS (
-        |  SELECT doc_id, 0 AS heading_idx, 1 AS level, '1' AS section,
-        |    'One ' || doc_id AS heading_text
-        |  FROM documents WHERE doc_id % 4 = 0
-        |  UNION ALL SELECT doc_id, 1, 2, '1.1', 'A'
-        |    FROM documents WHERE doc_id % 4 = 0
-        |  UNION ALL SELECT doc_id, 2, 3, '1.1.1', 'i'
-        |    FROM documents WHERE doc_id % 4 = 0
-        |  UNION ALL SELECT doc_id, 3, 2, '1.2', 'B'
-        |    FROM documents WHERE doc_id % 4 = 0
-        |  UNION ALL SELECT doc_id, 4, 1, '2', 'Two'
-        |    FROM documents WHERE doc_id % 4 = 0
-        |  UNION ALL SELECT doc_id, 5, 2, '2.1', 'C'
-        |    FROM documents WHERE doc_id % 4 = 0
-        |  UNION ALL SELECT doc_id, 0, 2, '0.1', 'starts deep'
-        |    FROM documents WHERE doc_id % 4 = 1
-        |  UNION ALL SELECT doc_id, 1, 1, '1', 'then top'
-        |    FROM documents WHERE doc_id % 4 = 1
-        |  UNION ALL SELECT doc_id, 0, 1, '1',
-        |    'The Big Title ' || doc_id
-        |    FROM documents WHERE doc_id % 4 = 2)
-        |SELECT doc_id, CAST(heading_idx AS BIGINT) AS heading_idx,
-        |  CAST(level AS BIGINT) AS level, section, heading_text
-        |FROM r ORDER BY doc_id, heading_idx""".stripMargin,
-
-    // trap twin: every rule reimplemented (nested list lambdas + RE2)
-    "crawl_traps" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 6
-        |      WHEN 0 THEN '/a/b/a/c/a'
-        |      WHEN 1 THEN '/1/2/3/4/5/6/7/8/9/10/11/12/13'
-        |      WHEN 2 THEN '/p' WHEN 3 THEN '/p'
-        |      WHEN 4 THEN '/archive/1901/01/'
-        |      ELSE '/a/b/c' END AS path,
-        |    CASE doc_id % 6
-        |      WHEN 0 THEN 'x=1'
-        |      WHEN 2 THEN 'a=1&b=2&c=3&d=4&e=5&f=6&g=7&h=8&i=9'
-        |      WHEN 3 THEN 'sid=0123456789abcdef0123456789abcdef&x=2'
-        |      WHEN 5 THEN 'x=1&y=' || doc_id
-        |      ELSE '' END AS query
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, path, query,
-        |    list_filter(string_split(path, '/'), x -> x != '') AS segs,
-        |    list_filter(string_split(query, '&'), x -> x != '')
-        |      AS params,
-        |    regexp_extract(path, '/((?:19|20)[0-9]{2})(?:/|$)', 1) AS y
-        |  FROM f)
-        |SELECT doc_id, path, query,
-        |  CASE
-        |    WHEN len(list_filter(list_distinct(segs),
-        |      d -> len(list_filter(segs, x -> x = d)) >= 3)) > 0
-        |      THEN 'repeat_segment'
-        |    WHEN len(segs) > 12 THEN 'depth'
-        |    WHEN len(params) > 8 THEN 'query_blowup'
-        |    WHEN len(list_filter(params,
-        |      p -> regexp_matches(p, '=[0-9a-f]{32}'))) > 0
-        |      THEN 'session_id'
-        |    WHEN y != '' AND (CAST(y AS INT) < 1995
-        |      OR CAST(y AS INT) > 2030) THEN 'calendar'
-        |    ELSE 'ok' END AS trap_reason
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    // etld twin: label logic reimplemented with string_split
-    "registrable_domains" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 6
-        |      WHEN 0 THEN 'a.example' || (doc_id % 3) || '.co.uk'
-        |      WHEN 1 THEN 'www.example.com'
-        |      WHEN 2 THEN 'x.y.z.example.com.au'
-        |      WHEN 3 THEN 'localhost'
-        |      WHEN 4 THEN 'example.org'
-        |      ELSE 'deep.sub.example' || (doc_id % 3) || '.net'
-        |    END AS host
-        |  FROM documents),
-        |g AS (SELECT doc_id, host, string_split(host, '.') AS l,
-        |        len(string_split(host, '.')) AS n
-        |      FROM f)
-        |SELECT doc_id, host,
-        |  CASE WHEN n <= 1 THEN host
-        |    WHEN n = 2 THEN l[n - 1] || '.' || l[n]
-        |    WHEN (l[n - 1] || '.' || l[n]) IN ('co.uk', 'org.uk',
-        |      'ac.uk', 'gov.uk', 'com.au', 'net.au', 'co.jp', 'ne.jp',
-        |      'com.br', 'co.in', 'co.nz', 'com.cn')
-        |      THEN l[n - 2] || '.' || l[n - 1] || '.' || l[n]
-        |    ELSE l[n - 1] || '.' || l[n] END AS registrable
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    // canon-key twin: identical pipeline with DuckDB nfc_normalize;
-    // branch 2 rebuilds the DECOMPOSED form via chr(769)
-    "canon_text_key" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 4
-        |      WHEN 0 THEN 'The  QUICK,,, brown--fox! ' || doc_id
-        |      WHEN 1 THEN 'Café CRÈME ' || doc_id
-        |      WHEN 2 THEN 'Cafe' || chr(769) || ' CRÈME ' || doc_id
-        |      ELSE '  spaces' || chr(9) || 'and' || chr(10) ||
-        |        'newlines  ' || doc_id END AS text
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(nfc_normalize(lower(text)),
-        |      '[^\p{L}\p{N}]+', ' ', 'g')) AS canon_key
-        |  FROM f)
-        |SELECT doc_id, canon_key, md5(canon_key) AS canon_digest
-        |FROM k ORDER BY doc_id""".stripMargin,
-
-    // redirect twin: hop-capped recursive CTE + the same terminal rule
-    "redirect_chains" ->
-      """WITH RECURSIVE kk AS (
-        |  SELECT DISTINCT doc_id % 12 AS k FROM documents),
-        |e AS (
-        |  SELECT 'r' || k AS src,
-        |    CASE WHEN k < 3 THEN 'r' || (k + 1)
-        |      ELSE 'end.example' END AS dst
-        |  FROM kk WHERE k <= 3
-        |  UNION ALL
-        |  SELECT 'c' || (k - 5), 'c' || ((k - 4) % 3)
-        |  FROM kk WHERE k BETWEEN 5 AND 7
-        |  UNION ALL SELECT 's0', 's0' FROM kk WHERE k = 8),
-        |walk AS (
-        |  SELECT src, dst, 1 AS hops FROM e
-        |  UNION ALL
-        |  SELECT w.src, e.dst, w.hops + 1
-        |  FROM walk w JOIN e ON w.dst = e.src WHERE w.hops < 64),
-        |term AS (
-        |  SELECT w.src, w.dst, w.hops FROM walk w
-        |  WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.src = w.dst))
-        |SELECT s.src, term.dst AS final_dst,
-        |  CAST(term.hops AS BIGINT) AS hops,
-        |  term.src IS NOT NULL AS resolved
-        |FROM (SELECT DISTINCT src FROM e) s
-        |LEFT JOIN term ON s.src = term.src
-        |ORDER BY s.src""".stripMargin,
-
-    // refresh twin: surviving rows stated per branch
-    "meta_refresh" ->
-      """WITH r AS (
-        |  SELECT doc_id, 0 AS delay_sec,
-        |    'http://h/next' || doc_id AS target_url
-        |  FROM documents WHERE doc_id % 5 = 0
-        |  UNION ALL
-        |  SELECT doc_id, 5, 'http://h/q?a=' || doc_id
-        |  FROM documents WHERE doc_id % 5 = 1
-        |  UNION ALL
-        |  SELECT doc_id, 30, '' FROM documents WHERE doc_id % 5 = 2)
-        |SELECT doc_id, CAST(delay_sec AS BIGINT) AS delay_sec,
-        |  target_url
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    // quantile twin: identical histogram + cumulative-rank rule
-    "length_quantiles" ->
-      """WITH d AS (
-        |  SELECT CAST(length(text) AS BIGINT) AS v FROM documents),
-        |h AS (SELECT v, COUNT(*) AS c FROM d GROUP BY 1),
-        |cum AS (SELECT v, SUM(c) OVER (ORDER BY v) AS cum FROM h),
-        |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM d)
-        |SELECT n,
-        |  (SELECT MIN(v) FROM cum, tot
-        |     WHERE cum >= (50 * n + 99) // 100) AS p50,
-        |  (SELECT MIN(v) FROM cum, tot
-        |     WHERE cum >= (90 * n + 99) // 100) AS p90,
-        |  (SELECT MIN(v) FROM cum, tot
-        |     WHERE cum >= (99 * n + 99) // 100) AS p99
-        |FROM tot""".stripMargin,
-
-    // hreflang twin: rows stated per branch
-    "hreflang_pairs" ->
-      """WITH h AS (SELECT doc_id,
-        |    'http://s' || CAST(doc_id % 5 AS VARCHAR) AS b
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, 0 AS alt_idx, 'en' AS hreflang,
-        |    b || '/en/' || doc_id AS href
-        |  FROM h WHERE doc_id % 3 = 0
-        |  UNION ALL SELECT doc_id, 1, 'de', b || '/de/' || doc_id
-        |    FROM h WHERE doc_id % 3 = 0
-        |  UNION ALL SELECT doc_id, 2, 'x-default', b || '/'
-        |    FROM h WHERE doc_id % 3 = 0
-        |  UNION ALL SELECT doc_id, 0, 'fr', b || '/fr/' || doc_id
-        |    FROM h WHERE doc_id % 3 = 1)
-        |SELECT doc_id, CAST(alt_idx AS BIGINT) AS alt_idx, hreflang,
-        |  href
-        |FROM r ORDER BY doc_id, alt_idx""".stripMargin,
-
-    // bpe twin: independent vocab + pair derivation
-    "bpe_candidates" ->
-      """WITH w AS (
-        |  SELECT unnest(list_transform(
-        |    regexp_extract_all(text, '[A-Za-z]+'),
-        |    t -> lower(t))) AS word
-        |  FROM documents),
-        |v AS (SELECT word, COUNT(*) AS freq FROM w GROUP BY 1),
-        |p AS (
-        |  SELECT freq, unnest(list_transform(
-        |    range(1, length(word) + 1),
-        |    i -> struct_pack(a := substr(word, i, 1),
-        |      b := CASE WHEN i < length(word)
-        |        THEN substr(word, i + 1, 1) ELSE '</w>' END))) AS pr
-        |  FROM v)
-        |SELECT pr.a AS sym1, pr.b AS sym2,
-        |  CAST(SUM(freq) AS BIGINT) AS pair_count
-        |FROM p GROUP BY 1, 2
-        |ORDER BY pair_count DESC, sym1, sym2 LIMIT 25""".stripMargin,
-
-    // pagination twin: same derived edges + the recursive-CTE resolver
-    "pagination_chains" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT doc_id, doc_id // 4 AS g, doc_id % 4 AS p
-        |  FROM documents),
-        |e AS (
-        |  SELECT 'http://s/a' || g || '/p' || p AS src,
-        |    'http://s/a' || g || '/p' ||
-        |      CASE WHEN p < 3 THEN p + 1 ELSE 0 END AS dst
-        |  FROM d WHERE p < 3 OR g = 0),
-        |walk AS (
-        |  SELECT src, dst, 1 AS hops FROM e
-        |  UNION ALL
-        |  SELECT w.src, e.dst, w.hops + 1
-        |  FROM walk w JOIN e ON w.dst = e.src WHERE w.hops < 64),
-        |term AS (
-        |  SELECT w.src, w.dst, w.hops FROM walk w
-        |  WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.src = w.dst))
-        |SELECT s.src, term.dst AS final_dst,
-        |  CAST(term.hops AS BIGINT) AS hops,
-        |  term.src IS NOT NULL AS resolved
-        |FROM (SELECT DISTINCT src FROM e) s
-        |LEFT JOIN term ON s.src = term.src
-        |ORDER BY s.src""".stripMargin,
-
-    // funnel-v2 twin: every stage reimplemented — trap rule, nfc+md5
-    // canonical dedup with the same keeper order, Flesch floor,
-    // histogram p99 over stage-3 survivors
-    "curation_funnel_v2" ->
-      """WITH base AS (
-        |  SELECT doc_id, text,
-        |    CASE WHEN doc_id % 10 = 0 THEN '/a/b/a/c/a'
-        |      ELSE '/a/b/c' END AS path,
-        |    CASE WHEN doc_id % 9 = 4 THEN 'Shared   DUPLICATE, text!'
-        |      ELSE text END AS text2
-        |  FROM documents),
-        |s1 AS (
-        |  SELECT *, (SELECT len(list_filter(list_distinct(segs),
-        |      d -> len(list_filter(segs, x -> x = d)) >= 3)) = 0
-        |    FROM (SELECT list_filter(string_split(path, '/'),
-        |      x -> x != '') AS segs)) AS f1
-        |  FROM base),
-        |k AS (
-        |  SELECT *, md5(trim(regexp_replace(
-        |    nfc_normalize(lower(text2)), '[^\p{L}\p{N}]+', ' ', 'g')))
-        |    AS dg
-        |  FROM s1),
-        |r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY dg
-        |    ORDER BY CASE WHEN f1 THEN 0 ELSE 1 END, doc_id) AS rn
-        |  FROM k),
-        |fl AS (SELECT *, f1 AND rn = 1 AS f2 FROM r),
-        |rd AS (
-        |  SELECT *,
-        |    CAST(len(regexp_extract_all(text2, '[A-Za-z]+')) AS BIGINT)
-        |      AS w,
-        |    CAST(greatest(len(regexp_extract_all(text2, '[.!?]+')), 1)
-        |      AS BIGINT) AS sct,
-        |    CAST(len(regexp_extract_all(text2, '(?i)[aeiouy]+')) +
-        |      len(regexp_extract_all(text2,
-        |        '(?i)\b[b-df-hj-np-tv-xz]+\b')) AS BIGINT) AS y
-        |  FROM fl),
-        |f3t AS (
-        |  SELECT *, f2 AND w > 0 AND
-        |    (206835 - (1015 * w) // sct - (84600 * y) // w) >= 30000
-        |      AS f3,
-        |    CAST(length(text2) AS BIGINT) AS len2
-        |  FROM rd),
-        |hist AS (SELECT len2 AS v, COUNT(*) AS c FROM f3t WHERE f3
-        |         GROUP BY 1),
-        |cum AS (SELECT v, SUM(c) OVER (ORDER BY v) AS cum,
-        |          SUM(c) OVER () AS n3
-        |        FROM hist),
-        |p99 AS (SELECT MIN(v) AS p99v FROM cum
-        |        WHERE cum >= (99 * n3 + 99) // 100)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_total,
-        |  CAST(SUM(CASE WHEN f1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_after_traps,
-        |  CAST(SUM(CASE WHEN f2 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_after_dedup,
-        |  CAST(SUM(CASE WHEN f3 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_readable,
-        |  CAST(SUM(CASE WHEN f3 AND len2 <= p99.p99v THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_final,
-        |  CAST(SUM(CASE WHEN f3 AND len2 <= p99.p99v THEN doc_id
-        |    ELSE 0 END) AS BIGINT) AS survivor_checksum
-        |FROM f3t, p99""".stripMargin,
-
-    // outlink twin: counts stated per branch
-    "outlink_profiles" ->
-      """SELECT doc_id,
-        |  CAST(CASE doc_id % 4 WHEN 0 THEN 4 WHEN 1 THEN 3
-        |    WHEN 2 THEN 2 ELSE 0 END AS BIGINT) AS n_links,
-        |  CAST(CASE doc_id % 4 WHEN 0 THEN 2 WHEN 1 THEN 3
-        |    ELSE 0 END AS BIGINT) AS n_internal,
-        |  CAST(CASE doc_id % 4 WHEN 0 THEN 2 WHEN 2 THEN 2
-        |    ELSE 0 END AS BIGINT) AS n_external,
-        |  CAST(CASE doc_id % 4 WHEN 0 THEN 1 WHEN 2 THEN 1
-        |    ELSE 0 END AS BIGINT) AS n_nofollow
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // phrase twin: independent positional reimplementation — zipped
-    // unnests, window-free
-    "phrase_search" ->
-      """WITH d AS (
-        |  SELECT doc_id, string_split(lower(text), ' ') AS a
-        |  FROM documents),
-        |m AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(len(a) - 2),
-        |      i -> CASE WHEN a[i+1] = 'slow' AND a[i+2] = 'hash'
-        |        AND a[i+3] = 'batch' THEN 1 ELSE 0 END)) AS hit
-        |  FROM d WHERE len(a) >= 3)
-        |SELECT doc_id, CAST(SUM(hit) AS BIGINT) AS n_occurrences
-        |FROM m GROUP BY 1 HAVING SUM(hit) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    // polite-schedule twin: RFC-derived delay per host branch + the
-    // identical wave schedule
-    "polite_schedule" ->
-      """WITH f AS (
-        |  SELECT doc_id, 'h' || CAST(doc_id % 9 AS VARCHAR) AS host,
-        |    CAST(CASE doc_id % 9
-        |      WHEN 0 THEN 1 WHEN 1 THEN 3 WHEN 2 THEN 1
-        |      WHEN 3 THEN 4 WHEN 4 THEN 6 WHEN 5 THEN 1
-        |      ELSE 1 END AS BIGINT) AS delay_sec
-        |  FROM documents),
-        |w AS (SELECT host, delay_sec,
-        |        CAST(row_number() OVER (PARTITION BY host
-        |          ORDER BY doc_id) AS BIGINT) - 1 AS wave0
-        |      FROM f)
-        |SELECT host, delay_sec, CAST(COUNT(*) AS BIGINT) AS n_urls,
-        |  CAST(MAX(wave0 * delay_sec) AS BIGINT) AS makespan_sec,
-        |  CAST(SUM(wave0 * delay_sec) AS BIGINT) AS schedule_checksum
-        |FROM w GROUP BY 1, 2 ORDER BY host""".stripMargin,
-
-    // charset twin: expected text/charset/decision per branch — no
-    // byte decoding oracle-side
-    "charset_decode" ->
-      """SELECT doc_id,
-        |  CASE doc_id % 6
-        |    WHEN 0 THEN 'café €' || CAST(doc_id AS VARCHAR)
-        |    WHEN 1 THEN 'café €' || CAST(doc_id AS VARCHAR)
-        |    WHEN 2 THEN '<meta charset=iso-8859-1>café '
-        |      || CAST(doc_id AS VARCHAR)
-        |    WHEN 3 THEN 'page ' || CAST(doc_id AS VARCHAR)
-        |    ELSE 'café ' || CAST(doc_id AS VARCHAR) END AS text,
-        |  CASE doc_id % 6
-        |    WHEN 0 THEN 'utf-8' WHEN 1 THEN 'windows-1252'
-        |    WHEN 2 THEN 'iso-8859-1' WHEN 3 THEN 'utf-16le'
-        |    WHEN 4 THEN 'windows-1252' ELSE 'utf-8' END AS charset,
-        |  CASE doc_id % 6
-        |    WHEN 0 THEN 'bom' WHEN 1 THEN 'declared' WHEN 2 THEN 'meta'
-        |    WHEN 3 THEN 'bom' WHEN 4 THEN 'fallback' ELSE 'utf8'
-        |    END AS how
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // cms twin: every counter recomputed with the identical modular
-    // hashes; min over the d cells per probed key
-    "cms_heavy_hitters" ->
-      """WITH c(r, a, b) AS (VALUES
-        |  (0, 2654435761, 97), (1, 40503, 1013904223),
-        |  (2, 2246822519, 374761393), (3, 3266489917, 668265263)),
-        |cell AS (
-        |  SELECT r, ((user_id * a + b) % 2147483647) % 1024 AS idx,
-        |    CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM events CROSS JOIN c GROUP BY 1, 2),
-        |exact AS (
-        |  SELECT user_id, CAST(COUNT(*) AS BIGINT) AS exact_cnt
-        |  FROM events GROUP BY 1
-        |  ORDER BY exact_cnt DESC, user_id LIMIT 10),
-        |probe AS (
-        |  SELECT e.user_id, e.exact_cnt, MIN(cell.cnt) AS est
-        |  FROM exact e CROSS JOIN c
-        |  JOIN cell ON cell.r = c.r
-        |    AND cell.idx = ((e.user_id * c.a + c.b) % 2147483647) % 1024
-        |  GROUP BY 1, 2)
-        |SELECT user_id, exact_cnt, est AS cms_est,
-        |  est - exact_cnt AS overcount
-        |FROM probe ORDER BY exact_cnt DESC, user_id""".stripMargin,
-
-    // kmv twin: bottom-k via a window (fine at oracle scale) + the
-    // identical integer estimate
-    "kmv_distinct" ->
-      """WITH h AS (
-        |  SELECT DISTINCT event_type,
-        |    1 + (user_id * 2654435761) % 2147483647 AS h
-        |  FROM events),
-        |r AS (
-        |  SELECT event_type, h,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn,
-        |    COUNT(*) OVER (PARTITION BY event_type) AS nd
-        |  FROM h),
-        |a AS (
-        |  SELECT event_type, CAST(MAX(nd) AS BIGINT) AS exact_distinct,
-        |    MAX(CASE WHEN rn = 32 THEN h END) AS h32
-        |  FROM r GROUP BY 1),
-        |e AS (
-        |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events
-        |  FROM events GROUP BY 1)
-        |SELECT e.event_type, e.n_events, a.exact_distinct,
-        |  CAST(CASE WHEN a.exact_distinct < 32 THEN a.exact_distinct
-        |    ELSE (CAST(31 AS BIGINT) * 2147483647) // a.h32
-        |    END AS BIGINT) AS kmv_estimate
-        |FROM e JOIN a ON e.event_type = a.event_type
-        |ORDER BY e.event_type""".stripMargin,
-
-    // shard twin: the naive single-window cumsum — fine at oracle
-    // scale, exactly what the two-level prefix sum must reproduce
-    "shard_assign" ->
-      """WITH d AS (
-        |  SELECT doc_id, CAST(length(text) AS BIGINT) AS bytes
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, bytes,
-        |    CAST(SUM(bytes) OVER (ORDER BY doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) - bytes AS start_off
-        |  FROM d)
-        |SELECT start_off // 100000 AS shard,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(bytes) AS BIGINT) AS shard_bytes,
-        |  MIN(doc_id) AS first_id, MAX(doc_id) AS last_id
-        |FROM c GROUP BY 1 ORDER BY shard""".stripMargin,
-
-    // sitemap twin: expected entries per synthesis branch — no XML
-    // parsing oracle-side (certifies the real tokenizer path)
-    "sitemap_entries" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    'http://s' || CAST(doc_id % 7 AS VARCHAR) || '.example/'
-        |      AS host
-        |  FROM documents),
-        |e AS (
-        |  SELECT doc_id, 'sitemap' AS kind, host || 's1.xml' AS loc,
-        |    '2026-02-0' || CAST(doc_id % 9 + 1 AS VARCHAR) AS lastmod,
-        |    '' AS changefreq, '' AS priority
-        |  FROM h WHERE doc_id % 4 = 3
-        |  UNION ALL
-        |  SELECT doc_id, 'sitemap', host || 's2.xml', '', '', ''
-        |  FROM h WHERE doc_id % 4 = 3
-        |  UNION ALL
-        |  SELECT doc_id, 'url',
-        |    host || 'p?x=1&y=' || CAST(doc_id AS VARCHAR),
-        |    '2026-01-0' || CAST(doc_id % 9 + 1 AS VARCHAR),
-        |    CASE doc_id % 3 WHEN 0 THEN 'daily' WHEN 1 THEN 'weekly'
-        |      ELSE 'monthly' END,
-        |    '0.' || CAST(doc_id % 10 AS VARCHAR)
-        |  FROM h WHERE doc_id % 4 <> 3
-        |  UNION ALL
-        |  SELECT doc_id, 'url', host || 'q', '', '', ''
-        |  FROM h WHERE doc_id % 4 <> 3 AND doc_id % 2 = 0)
-        |SELECT doc_id, kind, loc, lastmod, changefreq, priority
-        |FROM e ORDER BY doc_id, loc""".stripMargin,
-
-    // bloom twin: the identical Kirsch–Mitzenmacher modular double
-    // hash recomputed bit for bit in SQL — integer-exact
-    "bloom_seen" ->
-      """WITH seen AS (
-        |  SELECT doc_id AS key FROM documents WHERE doc_id % 3 <> 2),
-        |ii AS (SELECT unnest([0, 1, 2]) AS i),
-        |bits AS (
-        |  SELECT DISTINCT
-        |    ((key * 2654435761) % 2048
-        |      + i * (1 + (key * 40503) % 2047)) % 2048 AS pos
-        |  FROM seen CROSS JOIN ii),
-        |cand AS (
-        |  SELECT doc_id AS key FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 FROM documents),
-        |cpos AS (
-        |  SELECT key,
-        |    ((key * 2654435761) % 2048
-        |      + i * (1 + (key * 40503) % 2047)) % 2048 AS pos
-        |  FROM cand CROSS JOIN ii),
-        |probe AS (
-        |  SELECT key, bool_and(b.pos IS NOT NULL) AS maybe_seen
-        |  FROM cpos LEFT JOIN bits b ON cpos.pos = b.pos
-        |  GROUP BY key)
-        |SELECT (key % 3 <> 2 AND key < 1000000) AS truly_seen,
-        |  maybe_seen, CAST(COUNT(*) AS BIGINT) AS n_keys,
-        |  CAST(SUM(key) AS BIGINT) AS key_checksum
-        |FROM probe GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // page-meta twin: expected head fields per synthesis branch — no
-    // HTML parsing oracle-side (certifies the real tokenizer path)
-    "page_meta" ->
-      """SELECT doc_id,
-        |  'Page & ' || CAST(doc_id AS VARCHAR) AS title,
-        |  CASE WHEN doc_id % 3 <> 0
-        |    THEN 'Desc ' || CAST(doc_id AS VARCHAR) ELSE '' END
-        |    AS description,
-        |  CASE WHEN doc_id % 2 = 0
-        |    THEN 'http://c' || CAST(doc_id % 7 AS VARCHAR) || '.example/p'
-        |      || CAST(doc_id AS VARCHAR) ELSE '' END AS canonical,
-        |  'http://w' || CAST(doc_id % 7 AS VARCHAR) || '.example/dir/'
-        |    AS base_href,
-        |  CASE WHEN doc_id % 2 = 1 THEN 'utf-8' ELSE '' END AS charset,
-        |  CASE WHEN doc_id % 3 = 1
-        |    THEN 'Og ' || CAST(doc_id AS VARCHAR) ELSE '' END AS og_title,
-        |  doc_id % 4 IN (0, 1) AS noindex,
-        |  doc_id % 4 = 1 AS nofollow,
-        |  CAST(doc_id % 3 AS INTEGER) AS n_alternates
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // warc twin: every field reconstructed from doc_id — no WARC
-    // parsing oracle-side; byte-exact body incl. the CRLF trap
-    "warc_extract" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    'http://w' || CAST(doc_id % 7 AS VARCHAR) || '.example/p'
-        |      || CAST(doc_id AS VARCHAR) AS url,
-        |    '2026-01-0' || CAST(doc_id % 9 + 1 AS VARCHAR)
-        |      || 'T00:00:00Z' AS warc_date,
-        |    CASE doc_id % 4 WHEN 0 THEN 404 WHEN 1 THEN 301
-        |      ELSE 200 END AS status,
-        |    CASE doc_id % 3 WHEN 0 THEN 'text/plain'
-        |      ELSE 'text/html' END AS mime,
-        |    CASE doc_id % 3 WHEN 0 THEN '' WHEN 1 THEN 'utf-8'
-        |      ELSE 'iso-8859-1' END AS charset,
-        |    'body ' || CAST(doc_id AS VARCHAR) || chr(13) || chr(10)
-        |      || chr(13) || chr(10) || 'WARC/1.1 trap' AS body
-        |  FROM documents)
-        |SELECT url, warc_date, status, mime, charset, body,
-        |  CAST(length(body) AS BIGINT) AS body_len
-        |FROM f ORDER BY url""".stripMargin,
-
-    // span-removal twin: zipped unnests give (pos, token) and
-    // (pos, shingle); identical coverage + ordered reassembly
-    "span_removal" ->
-      """WITH d AS (
-        |  SELECT doc_id, string_split(text, ' ') AS arr FROM documents),
-        |s AS (SELECT doc_id,
-        |        unnest(range(len(arr) - 2)) AS p,
-        |        unnest(list_transform(range(len(arr) - 2),
-        |          i -> array_to_string(arr[i+1:i+3], ' '))) AS sh
-        |      FROM d WHERE len(arr) >= 3),
-        |dup AS (SELECT sh FROM s GROUP BY sh HAVING COUNT(*) >= 2),
-        |cov AS (SELECT DISTINCT s.doc_id, s.p + o.o AS pos
-        |        FROM s JOIN dup USING (sh)
-        |        CROSS JOIN (SELECT unnest(range(3)) AS o) o),
-        |toks AS (SELECT doc_id, unnest(range(len(arr))) AS pos,
-        |           unnest(arr) AS tok FROM d),
-        |kept AS (SELECT t.doc_id, t.pos, t.tok FROM toks t
-        |         WHERE NOT EXISTS (SELECT 1 FROM cov c
-        |           WHERE c.doc_id = t.doc_id AND c.pos = t.pos)),
-        |ka AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept,
-        |         string_agg(tok, ' ' ORDER BY pos) AS cleaned
-        |       FROM kept GROUP BY doc_id)
-        |SELECT d.doc_id, CAST(len(d.arr) AS BIGINT) AS n_tokens,
-        |  CAST(len(d.arr) - COALESCE(ka.n_kept, 0) AS BIGINT)
-        |    AS n_removed,
-        |  COALESCE(ka.cleaned, '') AS cleaned
-        |FROM d LEFT JOIN ka ON d.doc_id = ka.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // anchor-host twin: expected hosts derived from doc_id; the
-    // relative link contributes no host
-    "anchor_host_stats" ->
-      """WITH a AS (
-        |  SELECT doc_id,
-        |    'www.example' || CAST(doc_id % 7 AS VARCHAR) || '.com' AS target_host
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id, 'site' || CAST(doc_id % 5 AS VARCHAR) || '.org'
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id, 'dangling.net'
-        |  FROM documents WHERE doc_id % 4 = 0)
-        |SELECT target_host, CAST(COUNT(*) AS BIGINT) AS n_links,
-        |  CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_src_docs,
-        |  CAST(SUM(doc_id) AS BIGINT) AS doc_checksum
-        |FROM a GROUP BY target_host ORDER BY target_host""".stripMargin,
-
-    // url-rules twin: same synthesis, same CASE precedence
-    "url_rules" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 13 = 0 THEN 'ftp://www.example.com/x'
-        |    ELSE
-        |      (CASE WHEN doc_id % 2 = 0 THEN 'https' ELSE 'http' END)
-        |      || '://www.example' || CAST(doc_id % 7 AS VARCHAR) || '.com'
-        |      || repeat('/p', CAST(doc_id % 12 AS INT))
-        |      || (CASE WHEN doc_id % 17 = 0 THEN '/' || repeat('z', 2100)
-        |          ELSE '' END)
-        |      || (CASE WHEN doc_id % 5 = 0 THEN '?sessionid=abc123'
-        |          ELSE '' END)
-        |      || (CASE WHEN doc_id % 11 = 0
-        |          THEN '?a=1&b=2&c=3&d=4&e=5&f=6&g=7&h=8&i=9'
-        |          ELSE '' END)
-        |    END AS url
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id,
-        |    CASE
-        |      WHEN NOT (url LIKE 'http://%' OR url LIKE 'https://%')
-        |        THEN 'scheme'
-        |      WHEN length(url) > 2048 THEN 'too_long'
-        |      WHEN length(regexp_extract_all(url, '/')) - 2 > 8
-        |        THEN 'too_deep'
-        |      WHEN length(regexp_extract_all(url, '[?&][^?&=]+=')) > 8
-        |        THEN 'too_many_params'
-        |      WHEN regexp_matches(url, '/tag/')
-        |        OR regexp_matches(url, 'sessionid=')
-        |        OR regexp_matches(url, '/calendar/[0-9]{4}')
-        |        OR regexp_matches(url, 'replytocom=')
-        |        THEN 'trap_pattern'
-        |      ELSE 'kept' END AS reason
-        |  FROM u)
-        |SELECT reason, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(doc_id) AS BIGINT) AS doc_checksum
-        |FROM r GROUP BY reason ORDER BY reason""".stripMargin,
-
-    // token-budget twin: identical RE2 patterns ('' = escaped quote)
-    "token_budget" ->
-      """WITH c AS (
-        |  SELECT lang,
-        |    CAST(length(regexp_extract_all(text,
-        |      '''(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^ \t\n\r\p{L}\p{N}]+'))
-        |      AS BIGINT) AS bpe,
-        |    CAST(length(regexp_extract_all(text, '[^ \t\n\r]+'))
-        |      AS BIGINT) AS ws,
-        |    CAST(length(text) AS BIGINT) AS nc
-        |  FROM documents)
-        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(bpe) AS BIGINT) AS bpe_tokens,
-        |  CAST(SUM(ws) AS BIGINT) AS ws_tokens,
-        |  CAST(SUM(nc) AS BIGINT) AS sum_chars,
-        |  (CAST(SUM(bpe) AS BIGINT) * 1000) // CAST(SUM(nc) AS BIGINT)
-        |    AS bpe_per_kchar
-        |FROM c GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // mixing twin: same quantize-then-normalize integer rule
-    "mixing_quotas" ->
-      """WITH c AS (
-        |  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
-        |  FROM documents GROUP BY lang),
-        |s AS (
-        |  SELECT lang, n_docs,
-        |    CAST(FLOOR(sqrt(CAST(n_docs AS DOUBLE)) * 1e6) AS BIGINT)
-        |      AS s_micro
-        |  FROM c),
-        |t AS (SELECT CAST(SUM(s_micro) AS BIGINT) AS total_micro FROM s)
-        |SELECT lang, n_docs,
-        |  (s_micro * 1000000) // total_micro AS weight_micro,
-        |  (100000 * s_micro) // total_micro AS quota_docs
-        |FROM s CROSS JOIN t ORDER BY lang""".stripMargin,
-
-    // BM25 twin: same tokenization (word_topk's), same integer-rational
-    // score — (idf_micro*22*tf*L) // (10*tf*L + 3*L + 9*len*N)
-    "bm25_search" ->
-      """WITH toks AS (
-        |  SELECT doc_id, word AS term FROM (
-        |    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
-        |    FROM documents)
-        |  WHERE length(word) > 2),
-        |post AS (
-        |  SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf FROM toks
-        |  WHERE term IN ('window', 'merge', 'vector')
-        |  GROUP BY term, doc_id),
-        |dfs AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df
-        |        FROM post GROUP BY term),
-        |lens AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS len
-        |         FROM toks GROUP BY doc_id),
-        |tot AS (SELECT
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM toks) AS corpus_len,
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_docs),
-        |scored AS (
-        |  SELECT p.doc_id,
-        |    (CAST(FLOOR(ln(CAST(2*t.n_docs+2 AS DOUBLE)
-        |                   / CAST(2*d.df+1 AS DOUBLE)) * 1e6) AS BIGINT)
-        |      * 22 * p.tf * t.corpus_len)
-        |    // (10*p.tf*t.corpus_len + 3*t.corpus_len + 9*l.len*t.n_docs)
-        |      AS term_score
-        |  FROM post p
-        |  JOIN dfs d ON p.term = d.term
-        |  JOIN lens l ON p.doc_id = l.doc_id
-        |  CROSS JOIN tot t)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hit_terms,
-        |  CAST(SUM(term_score) AS BIGINT) AS score_micro
-        |FROM scored GROUP BY doc_id
-        |ORDER BY score_micro DESC, doc_id LIMIT 50""".stripMargin,
-
-    // PageRank twin: same edge synthesis, three unrolled integer power
-    // steps (`//` = `div` on positive BIGINTs; sums cast back to BIGINT
-    // because DuckDB widens SUM to HUGEINT)
-    "host_pagerank" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    'h' || CAST(doc_id % 11 AS VARCHAR) AS src,
-        |    ['h' || CAST((doc_id*3+1) % 11 AS VARCHAR),
-        |     'h' || CAST((doc_id*7+2) % 11 AS VARCHAR),
-        |     'h' || CAST((doc_id+5) % 11 AS VARCHAR)] AS targets
-        |  FROM documents),
-        |e AS (
-        |  SELECT DISTINCT src, dst FROM
-        |    (SELECT src, unnest(targets) AS dst FROM d)
-        |  WHERE src <> dst),
-        |nodes AS (SELECT src AS host FROM e UNION SELECT dst FROM e),
-        |od AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-        |r0 AS (SELECT host, CAST(1000000 AS BIGINT) AS r FROM nodes),
-        |c1 AS (SELECT e.dst AS host, CAST(SUM(r0.r // od.deg) AS BIGINT) AS s
-        |       FROM e JOIN r0 ON e.src = r0.host JOIN od ON e.src = od.src
-        |       GROUP BY e.dst),
-        |r1 AS (SELECT n.host,
-        |         CAST(150000 + COALESCE((85 * c1.s) // 100, 0) AS BIGINT) AS r
-        |       FROM nodes n LEFT JOIN c1 ON n.host = c1.host),
-        |c2 AS (SELECT e.dst AS host, CAST(SUM(r1.r // od.deg) AS BIGINT) AS s
-        |       FROM e JOIN r1 ON e.src = r1.host JOIN od ON e.src = od.src
-        |       GROUP BY e.dst),
-        |r2 AS (SELECT n.host,
-        |         CAST(150000 + COALESCE((85 * c2.s) // 100, 0) AS BIGINT) AS r
-        |       FROM nodes n LEFT JOIN c2 ON n.host = c2.host),
-        |c3 AS (SELECT e.dst AS host, CAST(SUM(r2.r // od.deg) AS BIGINT) AS s
-        |       FROM e JOIN r2 ON e.src = r2.host JOIN od ON e.src = od.src
-        |       GROUP BY e.dst),
-        |r3 AS (SELECT n.host,
-        |         CAST(150000 + COALESCE((85 * c3.s) // 100, 0) AS BIGINT) AS r
-        |       FROM nodes n LEFT JOIN c3 ON n.host = c3.host)
-        |SELECT n.host, COALESCE(od.deg, 0) AS out_deg, r3.r AS rank_micro
-        |FROM nodes n
-        |LEFT JOIN od ON n.host = od.src
-        |JOIN r3 ON n.host = r3.host
-        |ORDER BY n.host""".stripMargin,
-
-    // C4 cleaning twin: identical synthesized lines, independent list
-    // expressions
-    "c4_clean" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    substr(text, 1, 50) || '.' || chr(10)
-        |    || 'this is a perfectly fine prose sentence.' || chr(10)
-        |    || 'menu' || chr(10)
-        |    || 'please enable javascript to view this page.' || chr(10)
-        |    || substr(text, 51, 40)
-        |    || CASE WHEN doc_id % 4 = 0 THEN ' and so it ends.'
-        |            ELSE ' no terminal' END || chr(10)
-        |    || substr(text, 91, 40) || ' closing words.'
-        |    || CASE WHEN doc_id % 10 = 0
-        |            THEN chr(10) || 'lorem ipsum dolor sit amet.'
-        |            ELSE '' END
-        |    || CASE WHEN doc_id % 9 = 0
-        |            THEN chr(10) || 'function f() { return 1; }'
-        |            ELSE '' END AS ctext
-        |  FROM documents),
-        |l AS (
-        |  SELECT doc_id, ctext,
-        |    string_split(ctext, chr(10)) AS lines,
-        |    list_filter(string_split(ctext, chr(10)), x ->
-        |      (x LIKE '%.' OR x LIKE '%!' OR x LIKE '%?' OR x LIKE '%"')
-        |      AND len(list_filter(string_split_regex(x, '\s+'),
-        |            w -> w != '')) >= 5
-        |      AND NOT contains(lower(x), 'javascript')) AS kept
-        |  FROM c)
-        |SELECT doc_id,
-        |  CAST(len(lines) AS BIGINT) AS n_lines,
-        |  CAST(len(kept) AS BIGINT) AS n_kept_lines,
-        |  (NOT contains(lower(ctext), 'lorem ipsum')
-        |   AND NOT contains(ctext, '{')
-        |   AND len(kept) >= 3) AS c4_keep,
-        |  array_to_string(kept, chr(10)) AS cleaned
-        |FROM l ORDER BY doc_id""".stripMargin,
-
-    // NFC twin: identical synthesized denormalized text; DuckDB's
-    // independent nfc_normalize implementation must agree byte-for-byte
-    "nfc_normalize" ->
-      """WITH r AS (
-        |  SELECT doc_id,
-        |    substr(text, 1, 20)
-        |    || CASE WHEN doc_id % 3 = 0 THEN ' e' || chr(769) || 'clair'
-        |            WHEN doc_id % 3 = 1 THEN ' ange' || chr(768) || 'le'
-        |            ELSE ' plain' END
-        |    || CASE WHEN doc_id % 5 = 0 THEN ' ' || chr(8491)
-        |            ELSE '' END AS raw
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(length(raw) AS BIGINT) AS n_chars_raw,
-        |  nfc_normalize(raw) AS nfc,
-        |  CAST(length(nfc_normalize(raw)) AS BIGINT) AS n_chars_nfc
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    // per-host cap twin: same synthesized hosts, same total order
-    "host_cap" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    'www.example' || CAST(doc_id % 7 AS VARCHAR) || '.com' AS host,
-        |    CAST(length(text) AS BIGINT) AS n_chars
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, host, n_chars,
-        |    row_number() OVER (PARTITION BY host
-        |      ORDER BY n_chars DESC, doc_id) AS host_rank
-        |  FROM d)
-        |SELECT doc_id, host, n_chars, host_rank
-        |FROM r WHERE host_rank <= 20
-        |ORDER BY host, host_rank""".stripMargin,
-
-    // per-language decile twin: ntile over the identical total order
-    "lang_deciles" ->
-      """WITH d AS (
-        |  SELECT doc_id, lang, CAST(length(text) AS BIGINT) AS n_chars
-        |  FROM documents),
-        |n AS (
-        |  SELECT lang, n_chars,
-        |    ntile(10) OVER (PARTITION BY lang
-        |      ORDER BY n_chars, doc_id) AS decile
-        |  FROM d)
-        |SELECT lang, decile, COUNT(*) AS n_docs,
-        |  MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars
-        |FROM n GROUP BY lang, decile ORDER BY lang, decile""".stripMargin,
-
-    // independent snapshot-delta twin: DuckDB diffs the same synthesized
-    // snapshots on the RAW text (same equivalence classes as the Spark
-    // side's sha-256 digest)
-    "snapshot_delta" ->
-      """WITH old AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 3 THEN text || ' v1' ELSE text END AS t
-        |  FROM documents WHERE doc_id % 10 != 0),
-        |neu AS (
-        |  SELECT doc_id, text AS t FROM documents WHERE doc_id % 10 != 5)
-        |SELECT COALESCE(old.doc_id, neu.doc_id) AS doc_id,
-        |  CASE WHEN old.doc_id IS NULL THEN 'added'
-        |       WHEN neu.doc_id IS NULL THEN 'removed'
-        |       WHEN old.t = neu.t THEN 'unchanged'
-        |       ELSE 'changed' END AS status
-        |FROM old FULL OUTER JOIN neu ON old.doc_id = neu.doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    // independent bigram-LM re-implementation: tokenize, train add-one
-    // counts on even docs, score all docs; micro-nat quantization
-    // (floor(1e6*ln p) summed as BIGINT) makes the sum order-free
-    "lm_score" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\s+'),
-        |      t -> t != '') AS ts
-        |  FROM documents),
-        |train_bg AS (
-        |  SELECT w1, w2, COUNT(*) AS c2 FROM (
-        |    SELECT UNNEST(ts[1:len(ts)-1]) AS w1,
-        |           UNNEST(ts[2:len(ts)]) AS w2
-        |    FROM toks WHERE doc_id % 2 = 0 AND len(ts) >= 2)
-        |  GROUP BY w1, w2),
-        |train_ug AS (
-        |  SELECT w1, CAST(SUM(c2) AS BIGINT) AS c1 FROM train_bg
-        |  GROUP BY w1),
-        |v AS (SELECT COUNT(*) AS vocab FROM train_ug),
-        |score_bg AS (
-        |  SELECT doc_id, UNNEST(ts[1:len(ts)-1]) AS w1,
-        |         UNNEST(ts[2:len(ts)]) AS w2
-        |  FROM toks WHERE len(ts) >= 2),
-        |j AS (
-        |  SELECT s.doc_id,
-        |    CAST(COALESCE(b.c2, 0) + 1 AS DOUBLE)
-        |      / CAST(COALESCE(u.c1, 0) + v.vocab AS DOUBLE) AS p,
-        |    b.c2 IS NULL AS oov
-        |  FROM score_bg s
-        |  LEFT JOIN train_bg b ON s.w1 = b.w1 AND s.w2 = b.w2
-        |  LEFT JOIN train_ug u ON s.w1 = u.w1
-        |  CROSS JOIN v)
-        |SELECT doc_id, COUNT(*) AS n_bigrams,
-        |  CAST(SUM(CASE WHEN oov THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-        |  CAST(SUM(CAST(floor(ln(p) * 1000000) AS BIGINT)) AS BIGINT)
-        |    AS sum_lp_micro,
-        |  CAST(SUM(CAST(floor(ln(p) * 1000000) AS BIGINT)) AS DOUBLE)
-        |    / COUNT(*) / 1000000.0 AS avg_logprob
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // independent paragraph-dedup re-implementation: same synthesized
-    // paragraph text, but DuckDB keys the first-seen window on the RAW
-    // paragraph string (hash-free ground truth — same equivalence
-    // classes as Spark's xxhash64 key) and reassembles via an ordered
-    // string_agg
-    "para_dedup" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |    substr(text, 1, 60) || chr(10) || chr(10)
-        |    || 'shared boilerplate paragraph ' || CAST(doc_id % 7 AS VARCHAR)
-        |    || chr(10) || chr(10) || substr(text, 61, 80)
-        |    || CASE WHEN doc_id % 2 = 0
-        |            THEN chr(10) || chr(10) || 'even-doc footer' ELSE '' END
-        |      AS ptext
-        |  FROM documents),
-        |ex AS (
-        |  SELECT doc_id,
-        |    UNNEST(generate_series(1, len(paras))) - 1 AS pos,
-        |    UNNEST(paras) AS para
-        |  FROM (SELECT doc_id,
-        |          string_split(ptext, chr(10) || chr(10)) AS paras
-        |        FROM p)),
-        |flags AS (
-        |  SELECT doc_id, pos, para,
-        |    row_number() OVER (PARTITION BY para ORDER BY doc_id, pos) = 1
-        |      AS kept
-        |  FROM ex)
-        |SELECT doc_id,
-        |  COUNT(*) AS n_paras,
-        |  CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |  COALESCE(string_agg(CASE WHEN kept THEN para END,
-        |    chr(10) || chr(10) ORDER BY pos), '') AS cleaned
-        |FROM flags GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // independent RE2 re-implementation of ops.Pii over the
-    // identically-synthesized PII text (counts over the original text;
-    // sequential email -> phone -> IPv4 redaction)
-    "pii_redact" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |    substr(text, 1, 40) || ' contact user' || CAST(doc_id AS VARCHAR)
-        |    || '@mail' || CAST(doc_id % 5 AS VARCHAR) || '.org call +1-555-'
-        |    || CAST(doc_id % 900 + 100 AS VARCHAR) || '-'
-        |    || CAST(doc_id % 9000 + 1000 AS VARCHAR)
-        |    || ' from 10.' || CAST(doc_id % 256 AS VARCHAR)
-        |    || '.0.' || CAST(doc_id % 200 AS VARCHAR) || ' end' AS pii_text
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(pii_text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(pii_text,
-        |    '\+\d{1,2}-\d{3}-\d{3}-\d{4}')) AS BIGINT) AS n_phones,
-        |  CAST(len(regexp_extract_all(pii_text,
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ipv4,
-        |  regexp_replace(regexp_replace(regexp_replace(pii_text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\+\d{1,2}-\d{3}-\d{3}-\d{4}', '<PHONE>', 'g'),
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS redacted
-        |FROM p ORDER BY doc_id""".stripMargin,
-
-    // independent md5-bucket recomputation (strpos arithmetic instead of
-    // Spark's conv) — certifies every per-row assignment
-    "split_assign" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |    CAST((strpos('0123456789abcdef',
-        |        substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-        |      + strpos('0123456789abcdef',
-        |        substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1 AS INT) AS bucket
-        |  FROM documents)
-        |SELECT doc_id, bucket,
-        |  CASE WHEN bucket < 208 THEN 'train'
-        |       WHEN bucket < 232 THEN 'val' ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin,
-
-    // salted-bucket stratified keep, per-lang roll-up with kept-doc
-    // checksum
-    "stratified_sample" ->
-      """WITH b AS (
-        |  SELECT doc_id, lang,
-        |    (strpos('0123456789abcdef',
-        |        substr(md5('strat:' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-        |      + strpos('0123456789abcdef',
-        |        substr(md5('strat:' || CAST(doc_id AS VARCHAR)), 2, 1)) - 1 AS bucket
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id, lang,
-        |    bucket < (CASE WHEN lang = 'en' THEN 64 ELSE 256 END) AS keep
-        |  FROM b)
-        |SELECT lang, COUNT(*) AS n_total,
-        |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |  CAST(SUM(CASE WHEN keep THEN doc_id ELSE 0 END) AS BIGINT) AS kept_checksum
-        |FROM k GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // full independent funnel: gopher signals re-derived as in the
-    // quality_gopher twin, dedup as a window over the raw text (same
-    // equivalence classes as the Spark side's sha-256 digest), stratified
-    // keep via the salted md5 bucket
-    "curation_funnel" ->
-      """WITH g0 AS (
-        |  SELECT doc_id, lang, text,
-        |    CAST(len(list_filter(regexp_split_to_array(text, '\s+'), w -> w != '')) AS INT) AS n_words,
-        |    length(regexp_replace(text, '\s', '', 'g')) AS nonws_chars,
-        |    list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)), l -> l != '') AS lines,
-        |    length(text) - length(replace(text, '#', '')) AS hash_chars,
-        |    length(text) - length(replace(text, '...', '')) AS ell_chars
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, lang, text,
-        |    (n_words >= 50 AND n_words <= 100000
-        |     AND (CASE WHEN n_words = 0 THEN 0.0 ELSE CAST(nonws_chars AS DOUBLE) / n_words END) >= 3.0
-        |     AND (CASE WHEN n_words = 0 THEN 0.0 ELSE CAST(nonws_chars AS DOUBLE) / n_words END) <= 10.0
-        |     AND (CASE WHEN len(lines) = 0 THEN 1.0 ELSE CAST(len(list_distinct(lines)) AS DOUBLE) / len(lines) END) >= 0.7
-        |     AND (CASE WHEN n_words = 0 THEN 0.0 ELSE CAST(hash_chars + ell_chars / 3 AS DOUBLE) / n_words END) <= 0.1) AS keep1
-        |  FROM g0),
-        |d AS (
-        |  SELECT doc_id, lang, keep1,
-        |    MIN(CASE WHEN keep1 THEN doc_id END) OVER (PARTITION BY text) AS first_kept
-        |  FROM g),
-        |k AS (
-        |  SELECT doc_id, keep1,
-        |    (keep1 AND doc_id = first_kept) AS keep2,
-        |    (keep1 AND doc_id = first_kept
-        |     AND (strpos('0123456789abcdef',
-        |         substr(md5('strat:' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-        |       + strpos('0123456789abcdef',
-        |         substr(md5('strat:' || CAST(doc_id AS VARCHAR)), 2, 1)) - 1
-        |       < (CASE WHEN lang = 'en' THEN 64 ELSE 256 END)) AS keep3
-        |  FROM d),
-        |a AS (
-        |  SELECT COUNT(*) AS n0, CAST(SUM(doc_id) AS BIGINT) AS c0,
-        |    CAST(SUM(CASE WHEN keep1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(SUM(CASE WHEN keep1 THEN doc_id ELSE 0 END) AS BIGINT) AS c1,
-        |    CAST(SUM(CASE WHEN keep2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |    CAST(SUM(CASE WHEN keep2 THEN doc_id ELSE 0 END) AS BIGINT) AS c2,
-        |    CAST(SUM(CASE WHEN keep3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
-        |    CAST(SUM(CASE WHEN keep3 THEN doc_id ELSE 0 END) AS BIGINT) AS c3
-        |  FROM k)
-        |SELECT * FROM (
-        |  SELECT 0 AS stage_id, 'ingest' AS stage, n0 AS n_docs, c0 AS doc_checksum FROM a
-        |  UNION ALL SELECT 1, 'gopher_filter', n1, c1 FROM a
-        |  UNION ALL SELECT 2, 'exact_dedup', n2, c2 FROM a
-        |  UNION ALL SELECT 3, 'stratified_sample', n3, c3 FROM a)
-        |ORDER BY stage_id""".stripMargin,
-
-    // independent re-implementation of UrlNorm.canonicalizeUrl in
-    // DuckDB SQL over the identically-synthesized raw URLs
-    "url_canonical" ->
-      """WITH raw AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS' ELSE 'http' END)
-        |    || '://WWW.Example' || CAST(doc_id % 7 AS VARCHAR) || '.COM'
-        |    || (CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE ':80' END)
-        |    || '/Path/' || CAST(doc_id AS VARCHAR)
-        |    || (CASE WHEN doc_id % 3 = 0 THEN '?b=2&a=1&c=3' ELSE '' END)
-        |    || (CASE WHEN doc_id % 4 = 0 THEN '#Frag' ELSE '' END) AS url_raw
-        |  FROM documents),
-        |p1 AS (
-        |  SELECT doc_id, url_raw, split_part(url_raw, '#', 1) AS nofrag FROM raw),
-        |p2 AS (
-        |  SELECT doc_id, url_raw,
-        |    split_part(nofrag, '?', 1) AS preq,
-        |    CASE WHEN contains(nofrag, '?') THEN split_part(nofrag, '?', 2)
-        |         ELSE '' END AS query
-        |  FROM p1),
-        |p3 AS (
-        |  SELECT doc_id, url_raw, query,
-        |    lower(split_part(preq, '://', 1)) AS scheme,
-        |    split_part(split_part(preq, '://', 2), '/', 1) AS hostport,
-        |    substr(split_part(preq, '://', 2),
-        |      length(split_part(split_part(preq, '://', 2), '/', 1)) + 1) AS path
-        |  FROM p2),
-        |p4 AS (
-        |  SELECT doc_id, url_raw, query, scheme, path,
-        |    CASE WHEN scheme = 'https' THEN regexp_replace(lower(hostport), ':443$', '')
-        |         WHEN scheme = 'http'  THEN regexp_replace(lower(hostport), ':80$', '')
-        |         ELSE lower(hostport) END AS host
-        |  FROM p3),
-        |p5 AS (
-        |  SELECT doc_id, url_raw, scheme, host, path,
-        |    array_to_string(list_sort(string_split(query, '&')), '&') AS sortedq
-        |  FROM p4)
-        |SELECT doc_id, url_raw,
-        |  scheme || '://' || host || path ||
-        |  (CASE WHEN sortedq = '' THEN '' ELSE '?' || sortedq END) AS url
-        |FROM p5 ORDER BY doc_id""".stripMargin,
-
-    // sequential window cumsum — the independent ground truth for the
-    // distributed two-pass prefix sum in Packing.concatChunkPack
-    "packing_chunks" ->
-      """WITH t AS (
-        |  SELECT doc_id, CAST(length(text) + 1 AS BIGINT) AS padded_tokens
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, padded_tokens,
-        |    CAST(COALESCE(SUM(padded_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |      AS start_offset
-        |  FROM t)
-        |SELECT doc_id, padded_tokens, start_offset,
-        |  start_offset // 2048 AS chunk_id,
-        |  start_offset % 2048 AS offset_in_chunk,
-        |  CAST(CASE WHEN start_offset // 2048 !=
-        |    (start_offset + padded_tokens - 1) // 2048 THEN 1 ELSE 0 END AS INT)
-        |    AS spans_boundary
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // domain-mix roll-up over the independently-extracted host
-    "domain_stats" ->
-      """WITH raw AS (
-        |  SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
-        |    'https://'
-        |    || (CASE WHEN doc_id % 2 = 0 THEN 'WWW.Example' ELSE 'www.example' END)
-        |    || CAST(doc_id % 7 AS VARCHAR) || '.COM'
-        |    || (CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE '' END)
-        |    || '/path/' || CAST(doc_id % 50 AS VARCHAR) AS u
-        |  FROM documents),
-        |h AS (
-        |  SELECT doc_id, n_chars,
-        |    lower(split_part(split_part(split_part(split_part(
-        |      split_part(u, '#', 1), '?', 1), '://', 2), '/', 1), ':', 1)) AS host
-        |  FROM raw)
-        |SELECT host, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-        |  MIN(doc_id) AS first_doc
-        |FROM h GROUP BY host ORDER BY host""".stripMargin,
-
-    // url-grain dedup over the canonical key; the collision-rich raw
-    // construction (host case / default port / fragment / param order
-    // vary, path is doc_id % 50) mirrors the Spark side exactly
-    "url_dedup" ->
-      """WITH raw AS (
-        |  SELECT doc_id,
-        |    'https://'
-        |    || (CASE WHEN doc_id % 2 = 0 THEN 'WWW.Example' ELSE 'www.example' END)
-        |    || CAST(doc_id % 7 AS VARCHAR) || '.COM'
-        |    || (CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE '' END)
-        |    || '/path/' || CAST(doc_id % 50 AS VARCHAR)
-        |    || (CASE WHEN doc_id % 3 = 0 THEN '?b=2&a=1' ELSE '?a=1&b=2' END)
-        |    || (CASE WHEN doc_id % 4 = 0 THEN '#Frag' ELSE '' END) AS u
-        |  FROM documents),
-        |p1 AS (SELECT doc_id, split_part(u, '#', 1) AS nofrag FROM raw),
-        |p2 AS (
-        |  SELECT doc_id, split_part(nofrag, '?', 1) AS preq,
-        |    CASE WHEN contains(nofrag, '?') THEN split_part(nofrag, '?', 2)
-        |         ELSE '' END AS query
-        |  FROM p1),
-        |p3 AS (
-        |  SELECT doc_id, query,
-        |    lower(split_part(preq, '://', 1)) AS scheme,
-        |    split_part(split_part(preq, '://', 2), '/', 1) AS hostport,
-        |    substr(split_part(preq, '://', 2),
-        |      length(split_part(split_part(preq, '://', 2), '/', 1)) + 1) AS path
-        |  FROM p2),
-        |p4 AS (
-        |  SELECT doc_id, query, scheme, path,
-        |    CASE WHEN scheme = 'https' THEN regexp_replace(lower(hostport), ':443$', '')
-        |         WHEN scheme = 'http'  THEN regexp_replace(lower(hostport), ':80$', '')
-        |         ELSE lower(hostport) END AS host
-        |  FROM p3),
-        |canon AS (
-        |  SELECT doc_id,
-        |    scheme || '://' || host || path ||
-        |    (CASE WHEN array_to_string(list_sort(string_split(query, '&')), '&') = ''
-        |          THEN ''
-        |          ELSE '?' || array_to_string(list_sort(string_split(query, '&')), '&')
-        |     END) AS url
-        |  FROM p4)
-        |SELECT url, MIN(doc_id) AS canonical_doc_id, COUNT(*) AS n_variants
-        |FROM canon GROUP BY url ORDER BY url""".stripMargin,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        | CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        | COUNT(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_top_orders" ->
-      """SELECT o_orderkey,
-        | CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        | JOIN customer ON o_custkey = c_custkey
-        |GROUP BY o_orderkey ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q5_region_suppliers" ->
-      """SELECT r_name, COUNT(*) AS n_suppliers,
-        | CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_acctbal
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        | JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-
-    "q_topk_parts" ->
-      """SELECT p_partkey, p_name,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_partkey, p_name ORDER BY total_qty DESC, p_partkey LIMIT 20""".stripMargin,
-
-    "q6_filtered_agg" ->
-      """SELECT
-        | CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        | COUNT(*) AS cnt
-        |FROM lineitem
-        |WHERE l_quantity < 24 AND l_discount >= 0.05 AND l_discount <= 0.07""".stripMargin,
-
-    "doc_len_hist" ->
-      """SELECT CAST(FLOOR(length(text) / 500) AS BIGINT) AS bucket,
-        | COUNT(*) AS n_docs,
-        | CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS total_tokens
-        |FROM documents GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "doc_stats" ->
-      """SELECT doc_id, length(text) AS n_chars_actual,
-        | len(string_split(text, ' ')) AS n_tokens, lang
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "word_topk" ->
-      """SELECT word, COUNT(*) AS cnt FROM (
-        | SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents)
-        |WHERE length(word) > 2
-        |GROUP BY word ORDER BY cnt DESC, word LIMIT 20""".stripMargin,
-
-    "wordcloud_top10" ->
-      """WITH f AS (
-        | SELECT word FROM (
-        |  SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents)
-        | WHERE length(word) > 2)
-        |SELECT word, COUNT(*) AS cnt,
-        | CAST(ROUND(COUNT(*) * 100.0 / (SELECT COUNT(*) FROM f), 2) AS DOUBLE) AS pct
-        |FROM f GROUP BY word ORDER BY cnt DESC, word LIMIT 10""".stripMargin,
-
-    "doctype_score" ->
-      """SELECT doc_id,
-        | CAST((length(text) - length(replace(text, 'data', ''))) / length('data') AS BIGINT) AS data_hits,
-        | CAST((length(text) - length(replace(text, 'table', ''))) / length('table') AS BIGINT) AS table_hits,
-        | CAST((length(text) - length(replace(text, 'join', ''))) / length('join') AS BIGINT) AS join_hits
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "lang_rollup" ->
-      """SELECT lang, COUNT(*) AS n_docs,
-        | CAST(SUM(length(text)) AS BIGINT) AS total_chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // mirror of the FULL Extractor.classifyPage decision chain
-    // (ocr_engine.py:926-970) incl. the coverage branches, + the
-    // single-page R2 roll-up; ws set = Python str.strip ASCII chars
-    "doc_structure" ->
-      """WITH p AS (
-        | SELECT doc_id,
-        |  length(trim(substr(text, 1, CAST(doc_id % 120 AS INT)),
-        |    ' ' || chr(9) || chr(10) || chr(13) || chr(12) || chr(11))) AS sc,
-        |  CAST(doc_id % 3 AS INT) AS imgs,
-        |  CAST(doc_id % 10 AS DOUBLE) / 10.0 AS cov
-        | FROM documents),
-        |c AS (
-        | SELECT doc_id,
-        |  CASE WHEN sc < 10 AND imgs = 0 THEN 'empty'
-        |   WHEN sc >= 50 AND cov <= 0.3 THEN 'digital_text'
-        |   WHEN sc < 50 AND cov > 0.7 THEN 'scanned_image'
-        |   WHEN sc >= 50 AND cov > 0.3 THEN 'mixed_content'
-        |   WHEN sc < 50 AND imgs > 0 THEN 'image_with_text'
-        |   ELSE 'scanned_image' END AS page_type
-        | FROM p)
-        |SELECT doc_id, page_type,
-        | CASE WHEN page_type = 'mixed_content' THEN 'mixed'
-        |  WHEN page_type IN ('scanned_image', 'image_with_text') THEN 'pure_scanned'
-        |  ELSE 'pure_digital' END AS doc_structure
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // mirror of Extractor.complexityScore (smart_router.py:218-242)
-    "complexity_sql" ->
-      """SELECT doc_id, CAST(LEAST(100, 50
-        | + CASE WHEN length(text) > 10485760 THEN 20
-        |        WHEN length(text) > 1048576 THEN 10 ELSE 0 END
-        | + CASE WHEN doc_id % 60 + 1 > 50 THEN 20
-        |        WHEN doc_id % 60 + 1 > 10 THEN 10 ELSE 0 END
-        | + CASE WHEN doc_id % 2 = 0 THEN 10 ELSE 0 END
-        | + CASE WHEN (CASE WHEN doc_id % 7 = 0 THEN 'zh' ELSE lang END)
-        |        IN ('zh','ja','ko','ar') THEN 15 ELSE 0 END) AS INT) AS complexity
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "keyword_topk_sql" ->
-      """WITH toks AS (
-        | SELECT word FROM (
-        |  SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents)
-        | WHERE length(word) > 3 AND NOT regexp_matches(word, '^[0-9]+$'))
-        |SELECT word, COUNT(*) AS cnt,
-        | ROUND(COUNT(*) * ln(1.0 + (SELECT COUNT(*) FROM toks) / (COUNT(*) + 1)), 4) AS score
-        |FROM toks GROUP BY word ORDER BY score DESC, word LIMIT 15""".stripMargin,
-
-    "events_running_sum" ->
-      """SELECT user_id, event_id,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
-        |  PARTITION BY user_id ORDER BY ts, event_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-
-    "orders_daily" ->
-      """SELECT strftime(o_orderdate, '%Y-%m-%d') AS day, o_orderstatus,
-        | COUNT(*) AS n,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "events_sessions" ->
-      """WITH g AS (
-        | SELECT user_id, event_id, ts, value,
-        |  CASE WHEN prev_ts IS NULL
-        |        OR epoch(ts) - epoch(prev_ts) > 1800 THEN 1 ELSE 0 END AS new_sess
-        | FROM (
-        |  SELECT user_id, event_id, ts, value,
-        |   LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-        |  FROM events)),
-        |sess AS (
-        | SELECT user_id, event_id, value,
-        |  CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        | FROM g)
-        |SELECT user_id, session_id, COUNT(*) AS n_events,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS session_value
-        |FROM sess GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_max_acctbal_suppliers" ->
-      """SELECT s_nationkey, s_suppkey,
-        | CAST(CAST(s_acctbal AS DECIMAL(18,2)) AS DOUBLE) AS acctbal
-        |FROM supplier s
-        |WHERE s_acctbal = (SELECT MAX(s2.s_acctbal) FROM supplier s2
-        |                   WHERE s2.s_nationkey = s.s_nationkey)
-        |ORDER BY s_nationkey, s_suppkey""".stripMargin,
-
-    "dedup_exact" ->
-      """SELECT md5(text) AS digest, COUNT(*) AS cluster_size, MIN(doc_id) AS canonical_id
-        |FROM documents GROUP BY 1 ORDER BY digest LIMIT 100""".stripMargin,
-
-    // same shingle construction as shingle_jaccard_sql's twin, WITHOUT
-    // the distinct (occurrences count every window), grouped cross-doc
-    "dup_ngrams_sql" ->
-      """WITH d AS (
-        | SELECT doc_id,
-        |  list_filter(regexp_split_to_array(lower(text), '[ \t\n\r\f\v]+'), t -> t != '') AS toks
-        | FROM documents WHERE doc_id < 200 AND trim(text) != ''),
-        |s AS (
-        | SELECT doc_id,
-        |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |       ELSE list_transform(range(1, len(toks) - 1),
-        |         i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) END AS sh
-        | FROM d WHERE len(toks) > 0),
-        |u AS (SELECT doc_id, unnest(sh) AS shingle FROM s)
-        |SELECT shingle, COUNT(DISTINCT doc_id) AS n_docs,
-        | COUNT(*) AS n_occurrences
-        |FROM u GROUP BY shingle HAVING COUNT(DISTINCT doc_id) >= 2
-        |ORDER BY n_occurrences DESC, shingle LIMIT 100""".stripMargin,
-
-    // same shingle construction; DISTINCT per doc, containment vs the
-    // distinct corpus shingle set
-    "contamination_sql" ->
-      """WITH d AS (
-        | SELECT doc_id,
-        |  list_filter(regexp_split_to_array(lower(text), '[ \t\n\r\f\v]+'), t -> t != '') AS toks
-        | FROM documents WHERE doc_id < 200 OR (doc_id >= 400 AND doc_id < 450)),
-        |s AS (
-        | SELECT doc_id,
-        |  list_distinct(CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |       ELSE list_transform(range(1, len(toks) - 1),
-        |         i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) END) AS sh
-        | FROM d WHERE len(toks) > 0),
-        |corp AS (SELECT DISTINCT unnest(sh) AS shingle FROM s WHERE doc_id < 200),
-        |cand AS (SELECT doc_id, unnest(sh) AS shingle FROM s
-        |         WHERE doc_id >= 400 AND doc_id < 450)
-        |SELECT doc_id, COUNT(*) AS n_shingles,
-        | CAST(SUM(CASE WHEN shingle IN (SELECT shingle FROM corp)
-        |   THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-        | ROUND(CAST(SUM(CASE WHEN shingle IN (SELECT shingle FROM corp)
-        |   THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 4) AS contamination
-        |FROM cand GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // exact mirror of Quality.withGopherColumns' column expressions
-    "quality_gopher" ->
-      """WITH g AS (
-        | SELECT doc_id,
-        |  CAST(len(list_filter(regexp_split_to_array(text, '\s+'), w -> w != '')) AS INT) AS n_words,
-        |  length(regexp_replace(text, '\s', '', 'g')) AS nonws_chars,
-        |  list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)), l -> l != '') AS lines,
-        |  length(text) - length(replace(text, '#', '')) AS hash_chars,
-        |  length(text) - length(replace(text, '...', '')) AS ell_chars
-        | FROM documents)
-        |SELECT doc_id, n_words,
-        | ROUND(CASE WHEN n_words = 0 THEN CAST(0.0 AS DOUBLE)
-        |  ELSE CAST(nonws_chars AS DOUBLE) / n_words END, 4) AS mean_word_len,
-        | CAST(len(lines) AS INT) AS n_lines,
-        | ROUND(CASE WHEN len(lines) = 0 THEN CAST(1.0 AS DOUBLE)
-        |  ELSE CAST(len(list_distinct(lines)) AS DOUBLE) / len(lines) END, 4) AS frac_distinct_lines,
-        | ROUND(CASE WHEN len(lines) = 0 THEN CAST(0.0 AS DOUBLE)
-        |  ELSE CAST(len(list_filter(lines, l -> regexp_matches(l, '[.!?"]$'))) AS DOUBLE) / len(lines) END, 4) AS frac_punct_lines,
-        | ROUND(CASE WHEN n_words = 0 THEN CAST(0.0 AS DOUBLE)
-        |  ELSE CAST(hash_chars + ell_chars / 3 AS DOUBLE) / n_words END, 4) AS symbol_word_ratio,
-        | (n_words >= 50 AND n_words <= 100000
-        |  AND (CASE WHEN n_words = 0 THEN 0.0 ELSE CAST(nonws_chars AS DOUBLE) / n_words END) >= 3.0
-        |  AND (CASE WHEN n_words = 0 THEN 0.0 ELSE CAST(nonws_chars AS DOUBLE) / n_words END) <= 10.0
-        |  AND (CASE WHEN len(lines) = 0 THEN 1.0 ELSE CAST(len(list_distinct(lines)) AS DOUBLE) / len(lines) END) >= 0.7
-        |  AND (CASE WHEN n_words = 0 THEN 0.0 ELSE CAST(hash_chars + ell_chars / 3 AS DOUBLE) / n_words END) <= 0.1) AS gopher_keep
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    "quality_sql" ->
-      """SELECT doc_id,
-        | CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS BIGINT) AS punct_chars,
-        | len(string_split(text, ' ')) AS n_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "events_daily" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS day, event_type, COUNT(*) AS n,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
-        | COUNT(DISTINCT user_id) AS uniq_users
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "events_user_top" ->
-      """SELECT user_id, event_type, value FROM (
-        | SELECT user_id, event_type, value,
-        |  ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS rn
-        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-    // min reachable id per node == connected component: the recursive
-    // CTE's UNION-dedup fixpoint is the ground-truth transitive closure
-    // the Spark side's bounded min-label propagation must agree with
-    "cluster_components_sql" ->
-      """WITH RECURSIVE d AS (
-        | SELECT doc_id, list_distinct(string_split(lower(text), ' ')) AS toks
-        | FROM documents WHERE doc_id < 200),
-        |p AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        | FROM d a JOIN d b ON a.doc_id < b.doc_id
-        | WHERE ROUND(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-        |   / len(list_distinct(a.toks || b.toks)), 4) >= 0.9),
-        |e AS (
-        | SELECT id_a AS na, id_b AS nb FROM p
-        | UNION ALL SELECT id_b, id_a FROM p),
-        |cc AS (
-        | SELECT na AS node, na AS label FROM e
-        | UNION
-        | SELECT e.nb, cc.label FROM cc JOIN e ON e.na = cc.node)
-        |SELECT node AS id, MIN(label) AS component
-        |FROM cc GROUP BY node ORDER BY id""".stripMargin,
-
-    // quantile_cont matches Spark's exact percentile() (same (N-1)
-    // linear-interpolation convention); 4dp rounding absorbs float noise
-    "events_user_percentiles" ->
-      """SELECT event_type,
-        | CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-        | ROUND(quantile_cont(value, 0.5), 4) AS p50,
-        | ROUND(quantile_cont(value, 0.95), 4) AS p95
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // SUM(BIGINT) cast back to BIGINT per the HUGEINT->float64 rule
-    "events_props_json" ->
-      """SELECT event_type, COUNT(*) AS n,
-        | CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k,
-        | MIN(CAST(props->>'$.k' AS BIGINT)) AS min_k,
-        | MAX(CAST(props->>'$.k' AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q10_returned_revenue" ->
-      """SELECT c_custkey, c_name, n_name,
-        | CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        | JOIN customer ON o_custkey = c_custkey
-        | JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        | AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-07-01'
-        |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-
-    "events_rollup" ->
-      """WITH e AS (
-        | SELECT event_type, strftime(ts, '%Y-%m-%d') AS day, value FROM events)
-        |SELECT coalesce(event_type, 'ALL') AS event_type,
-        | coalesce(day, 'ALL') AS day,
-        | COUNT(*) AS n_events,
-        | CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM e GROUP BY ROLLUP (event_type, day)
-        |ORDER BY event_type, day""".stripMargin,
-
-    // same shingle construction as Dedup.shingleStrings: python-split
-    // lowercase tokens, 3-token space-joined windows, below-k texts
-    // collapse to one whole-string shingle; string-set jaccard
-    "shingle_jaccard_sql" ->
-      """WITH d AS (
-        | SELECT doc_id,
-        |  list_filter(regexp_split_to_array(lower(text), '[ \t\n\r\f\v]+'), t -> t != '') AS toks
-        | FROM documents WHERE doc_id < 80 AND len(text) > 0),
-        |s AS (
-        | SELECT doc_id,
-        |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |       ELSE list_distinct(list_transform(range(1, len(toks) - 1),
-        |         i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) END AS sh
-        | FROM d WHERE len(toks) > 0)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        | ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |   / len(list_distinct(a.sh || b.sh)), 4) AS jaccard
-        |FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |WHERE len(list_intersect(a.sh, b.sh)) > 0
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "jaccard_pairs_sql" ->
-      """WITH d AS (
-        | SELECT doc_id, list_distinct(string_split(lower(text), ' ')) AS toks
-        | FROM documents WHERE doc_id < 80),
-        |p AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  ROUND(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-        |    / len(list_distinct(a.toks || b.toks)), 4) AS jaccard
-        | FROM d a JOIN d b ON a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, jaccard FROM p
-        |WHERE jaccard >= 0.3 ORDER BY id_a, id_b""".stripMargin,
-
-    // exact cosine top-k — DuckDB list_cosine_similarity over DOUBLE[]
-    // casts reproduces Similarity.cosineScalar's sequential double
-    // accumulation bit-for-bit (verified); rank cast to INT matches
-    // Spark's int32 row_number
-    "ann_brute_topk" ->
-      """WITH q AS (
-        | SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS emb_q
-        | FROM embeddings WHERE vec_id < 10),
-        |c AS (
-        | SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS emb_n
-        | FROM embeddings),
-        |scored AS (
-        | SELECT query_id, neighbor_id,
-        |  list_cosine_similarity(emb_q, emb_n) AS cos
-        | FROM q JOIN c ON query_id <> neighbor_id),
-        |ranked AS (
-        | SELECT query_id, neighbor_id, cos,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |   ORDER BY cos DESC, neighbor_id) AS INT) AS "rank"
-        | FROM scored)
-        |SELECT query_id, neighbor_id, ROUND(cos, 4) AS cos, "rank"
-        |FROM ranked WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin,
-
-    // IVF with nProbe = nCentroids ≡ brute force — same exact oracle
-    "ann_ivf_full_probe" ->
-      """WITH q AS (
-        | SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS emb_q
-        | FROM embeddings WHERE vec_id < 10),
-        |c AS (
-        | SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS emb_n
-        | FROM embeddings),
-        |scored AS (
-        | SELECT query_id, neighbor_id,
-        |  list_cosine_similarity(emb_q, emb_n) AS cos
-        | FROM q JOIN c ON query_id <> neighbor_id),
-        |ranked AS (
-        | SELECT query_id, neighbor_id, cos,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |   ORDER BY cos DESC, neighbor_id) AS INT) AS "rank"
-        | FROM scored)
-        |SELECT query_id, neighbor_id, ROUND(cos, 4) AS cos, "rank"
-        |FROM ranked WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin,
-
-    // exact expected answer for the LSH near-dup query: only the
-    // source/jittered twins reach cos>=0.99 (max natural-pair cosine at
-    // sf0.01 is 0.513), and the jitter (head + 0.01f in float32) is
-    // replicated with FLOAT-typed arithmetic before the DOUBLE[] cosine
-    "embedding_neardup" ->
-      """WITH j AS (
-        | SELECT vec_id AS id_a, vec_id + 10000000 AS id_b,
-        |  CAST(embedding AS DOUBLE[]) AS semb,
-        |  CAST(list_concat(
-        |    [CAST(embedding[1] + CAST(0.01 AS FLOAT) AS FLOAT)],
-        |    embedding[2:]) AS DOUBLE[]) AS jemb
-        | FROM embeddings WHERE vec_id < 500)
-        |SELECT id_a, id_b,
-        | ROUND(list_cosine_similarity(semb, jemb), 4) AS cos
-        |FROM j
-        |WHERE list_cosine_similarity(semb, jemb) >= 0.99
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "events_asof" ->
-      """WITH ord AS (
-        | SELECT o_custkey, o_orderdate,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS order_total
-        | FROM orders GROUP BY 1, 2)
-        |SELECT e.event_id, e.user_id, ROUND(o.order_total, 2) AS order_total
-        |FROM events e ASOF LEFT JOIN ord o
-        | ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
-        |ORDER BY e.event_id""".stripMargin,
-
-    "skew_salted_stats" ->
-      """SELECT event_type,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total,
-        | COUNT(value) AS cnt,
-        | CAST(MIN(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS min,
-        | CAST(MAX(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS max
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // the BATCH aggregate the streaming job must reproduce exactly
-    "streaming_daily_oracle" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
-        | COUNT(*) AS n_events,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "value_buckets" ->
-      """SELECT CASE WHEN value >= 160 THEN 'certain'
-        |  WHEN value >= 120 THEN 'high'
-        |  WHEN value >= 80 THEN 'medium'
-        |  WHEN value >= 40 THEN 'low'
-        |  ELSE 'uncertain' END AS bucket,
-        | COUNT(*) AS n,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin)
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Queries.all.map(q => q.name -> q.build).toMap
+
+  def oracleSql: Map[String, String] =
+    Queries.all.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

@@ -1,7 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+import graft.queries.{Queries, Query}
+/** Driver-run correctness dump: each registry query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -15,7 +16,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    Queries.all.foreach { case Query(name, build, _, _) =>
       // Driver contract (the driver's own stub wrote `$outDir/$name`): the
       // oracle lookup is keyed by the dump's directory basename, so the
       // round-1 `.parquet`-suffixed layout made every lookup miss
@@ -24,7 +25,7 @@ object Verify {
       // convention the driver globs resolves — oracle_sql.json carries
       // both keys.
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        build(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         copyDir(Paths.get(s"$outDir/$name"), Paths.get(s"$outDir/$name.parquet"))
       } catch { case e: Throwable =>
@@ -48,7 +49,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     System.err.println(
-      s"[verify] wrote ${SparkEntry.queries.size} query dumps and " +
+      s"[verify] wrote ${Queries.all.size} query dumps and " +
       s"${SparkEntry.oracleSql.size} oracle SQL entries to $outDir/oracle_sql.json")
     spark.stop()
   }

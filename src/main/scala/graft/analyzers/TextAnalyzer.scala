@@ -319,7 +319,7 @@ object TextAnalyzer {
   // one fold-case Aho-Corasick pass replaces lowercase-copy + 10
   // substring scans per sentence (count > 0 ⇔ lower.contains(ind));
   // scoreSentence runs per sentence per document — the analyzer suite's
-  // hottest loop by MicroBench
+  // hottest loop
   private lazy val keyIndicatorMatcher = new MultiPattern(keyIndicators)
 
   /** `_score_sentence` (doc_analyzer.py:305-342). */

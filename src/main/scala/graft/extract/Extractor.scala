@@ -111,14 +111,10 @@ object Extractor {
     new String(out)
   }
 
-  /** E7 handwriting text-pattern scan (`ocr_engine.py:669-735` — the
-    * patterns live with the page kernel, `LangScript.scan`). */
-  private[extract] def containsAnySigPattern(haystack: String): Boolean =
-    LangScript.scan(haystack).sigPattern
-
   /** E7 drawings-intersection check for PDFs (`ocr_engine.py:700-735`):
-    * a signature text pattern counts as handwritten only when vector
-    * drawings intersect the band below the pattern's text run —
+    * a signature text pattern (`ocr_engine.py:669-735`; the patterns
+    * live with the page kernel, `LangScript.scan`) counts as handwritten
+    * only when vector drawings intersect the band below its text run —
     * x ∈ [x0 − 20, x1 + 150], 60 pt below the baseline (PDF y-up; the
     * reference expands rect.y1 down 60 pt). Drawings in our documented
     * subset are the content stream's `re` rects (the same primitives the
@@ -129,7 +125,7 @@ object Extractor {
   private[extract] def pdfHandwrittenSignature(doc: graft.pdf.PdfParser.PdfDoc): Boolean = {
     doc.pages.exists { p =>
       p.rects.nonEmpty && p.runs.exists { r =>
-        containsAnySigPattern(r.text) && {
+        LangScript.scan(r.text).sigPattern && {
           val x0 = r.x - 20
           val x1 = r.x + 6.0 * r.text.length + 150
           val yTop = r.y

@@ -57,12 +57,19 @@ object NgramLm {
 
   /** One-pass model: grouping sets ((w1,w2),(w1)) over the reference
     * bigram stream — gid 0 rows are bigram counts, gid 1 rows are
-    * head counts. Vocab-bounded; callers persist it. */
+    * head counts. Vocab-bounded; callers persist it. The two sets come
+    * from an explode, not `groupingSets`: a cached Expand is matched
+    * only by its first consumer in a query (the plan dedup renames the
+    * Expand's outputs in the other copies), so the head and vocab
+    * consumers would re-train from the corpus. */
   def trainModel(ref: DataFrame, idCol: String, textCol: String): DataFrame =
     bigramStream(ref, idCol, textCol)
-      .groupingSets(Seq(Seq(col("w1"), col("w2")), Seq(col("w1"))),
-        col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c"), grouping_id().as("gid"))
+      .select(explode(array(
+        struct(col("w1"), col("w2"), lit(0L).as("gid")),
+        struct(col("w1"), lit(null).cast("string").as("w2"), lit(1L).as("gid")))).as("g"))
+      .groupBy(col("g.w1").as("w1"), col("g.w2").as("w2"), col("g.gid").as("gid"))
+      .agg(count(lit(1)).as("c"))
+      .select(col("w1"), col("w2"), col("c"), col("gid"))
 
   /** Per-doc LM score against a reference corpus. Emits n_bigrams,
     * n_oov (bigrams unseen in the reference), sum_lp_micro (BIGINT

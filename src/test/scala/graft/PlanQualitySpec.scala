@@ -2,23 +2,25 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.CorpusGen
 import graft.extract.Pipeline
+import graft.queries.{LibraryPlans, PlanProp, PlanView, Queries}
 
-/** Physical-plan quality gates (SURVEY.md §4.2): these assert the plans
-  * the 100 TB design depends on — column pruning into the parquet scan,
-  * predicate pushdown, broadcast joins for small dimensions, partial
-  * aggregation, whole-stage codegen — so a regression that silently
-  * de-optimizes a plan fails CI, not a cluster run. */
+/** Physical-plan quality gates (SURVEY.md §4.2): every plan property the
+  * registry declares — column pruning into the parquet scan, predicate
+  * pushdown, broadcast joins for small dimensions, partial aggregation,
+  * whole-stage codegen — is asserted here, so a regression that silently
+  * de-optimizes a plan fails CI, not a cluster run. PLANS.md is the
+  * generated report of the same properties (`graft.Plans`). */
 class PlanQualitySpec extends AnyFunSuite {
 
   private val spark = SparkTestBase.spark
   import spark.implicits._
+  private val sf = "/root/testdata/sf0.001"
 
   private lazy val corpusPath: String = {
     val p = Files.createTempDirectory("graft_plan_corpus_").toString + "/corpus"
@@ -27,668 +29,122 @@ class PlanQualitySpec extends AnyFunSuite {
     p
   }
 
-  private def finalPlans(df: org.apache.spark.sql.DataFrame)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    val plan = df.queryExecution.executedPlan
-    val unwrapped = plan.collect { case a: AdaptiveSparkPlanExec => a.executedPlan }
-    plan +: unwrapped
+  private lazy val registry =
+    (Queries.all ++ LibraryPlans.all(corpusPath)).map(q => q.name -> q).toMap
+
+  /** Runs each named entry once and asserts every one of its props. */
+  private def check(names: String*): Unit = names.foreach { name =>
+    val q = registry(name)
+    assert(q.plan.nonEmpty, s"$name declares no plan properties")
+    val view = PlanView.of(q.build(spark, sf))
+    val failed = q.plan.filterNot(_.holds(view)).map(_.what)
+    assert(failed.isEmpty, s"$name: ${failed.mkString("; ")}\n${view.text.take(3000)}")
   }
 
-  private def scans(df: org.apache.spark.sql.DataFrame): Seq[FileSourceScanExec] =
-    finalPlans(df).flatMap(_.collect { case s: FileSourceScanExec => s })
+  // Each titled test runs every prop of the entries it names.
+  private val titled = Seq(
+    "extraction pipeline prunes the text column out of the scan" -> Seq("extract_contract"),
+    "lang filter pushes down to the parquet scan" -> Seq("lang_filter"),
+    "small-dimension joins broadcast (no shuffle of the big side)" -> Seq("q5_region_suppliers"),
+    "aggregations run partial+final with whole-stage codegen" -> Seq("q1_agg"),
+    "events_rollup computes all grouping-set levels from one Expand" -> Seq("events_rollup"),
+    "q10 pushes the order-date window into the orders scan" -> Seq("q10_returned_revenue"),
+    "events_user_percentiles: two-phase distinct + partial percentiles, one scan" ->
+      Seq("events_user_percentiles"),
+    "events_props_json: JSON-path extraction stays in codegen, no UDF" -> Seq("events_props_json"),
+    "quality_gopher signals stay fully codegen (no UDF)" -> Seq("quality_gopher"),
+    "contamination joins the distinct corpus set — never a cross product" ->
+      Seq("contamination_sql"),
+    "wordcloud/keyword fold the token total in-plan: one scan per query" ->
+      Seq("wordcloud_top10", "keyword_topk_sql"),
+    "pii/split/sample are map-only codegen column expressions (no UDF)" ->
+      Seq("pii_redact", "split_assign", "stratified_sample", "nfc_normalize"),
+    "curation_funnel: one documents scan; dedup shuffles the digest, not text" ->
+      Seq("curation_funnel"),
+    "para_dedup: first-seen window keys on the paragraph hash, never raw text" -> Seq("para_dedup"),
+    "lm_score: vocab-bounded model joins, no cartesian product, no UDF" -> Seq("lm_score"),
+    "snapshot_delta: one join on the key; digests shuffle, text never does" -> Seq("snapshot_delta"),
+    "host_cap plans a WindowGroupLimit (map-side top-k before the shuffle)" -> Seq("host_cap"),
+    "c4_clean: map-only line filtering — one scan, no UDF, no wide shuffle" -> Seq("c4_clean"),
+    "domain_blocklist: the corpus side anti-joins against a broadcast" -> Seq("domain_blocklist"),
+    "host_pagerank: the graph is persisted, not re-derived per iteration" -> Seq("host_pagerank"),
+    "bm25_search: bounded-heap top-k, broadcast stats, no UDF" -> Seq("bm25_search"),
+    "token_budget and url_rules stay codegen map-only (no UDF, one scan)" ->
+      Seq("token_budget", "url_rules"),
+    "anchor_rows: one typed flatMap stage over one scan" -> Seq("anchor_rows"),
+    "nb_lang_confusion: argmax plans as WindowGroupLimit, no UDF" -> Seq("nb_lang_confusion"),
+    "robots_allowed: robots table broadcasts; one typed eval stage" -> Seq("robots_allowed"),
+    "template_clusters: one typed fingerprint stage; hash-only shuffle" -> Seq("template_clusters"),
+    "fuzzy_titles: block-keyed equi-join, native levenshtein" -> Seq("fuzzy_titles"),
+    "pub_dates: map-only typed path, one scan, no UDF" -> Seq("pub_dates"),
+    "html_markdown: map-only typed path, one scan, no UDF" -> Seq("html_markdown"),
+    "jsonld_meta: typed flatMap + codegen JSON paths, no UDF" -> Seq("jsonld_meta"),
+    "readability: pure codegen expressions, no UDF, no typed map" -> Seq("readability"),
+    "pmi_collocations: unigrams broadcast; one corpus shuffle; top-k" -> Seq("pmi_collocations"),
+    "feed_items: typed flatMap rides the scan, no UDF" -> Seq("feed_items"),
+    "host_outliers: host-partitioned windows; medians broadcast back" -> Seq("host_outliers"),
+    "rendezvous_assign: host-table assignment broadcasts; no UDF" -> Seq("rendezvous_assign"),
+    "reciprocal_links: host-cardinality semi-join, never a row blowup" -> Seq("reciprocal_links"),
+    "surt_keys: pure codegen expressions, no UDF, no typed map" -> Seq("surt_keys"),
+    "passage_chunks: codegen explode path, no UDF, no typed map" -> Seq("passage_chunks"),
+    "recrawl_schedule: one key shuffle shared by window and roll-up" -> Seq("recrawl_schedule"),
+    "doc_outline: typed flatMap rides the scan, no UDF" -> Seq("doc_outline"),
+    "crawl_traps / registrable_domains / canon_text_key: pure codegen" ->
+      Seq("crawl_traps", "registrable_domains", "canon_text_key"),
+    "redirect_chains: log-depth doubling joins, no cartesian" -> Seq("redirect_chains"),
+    "length_quantiles: histogram-first — corpus shuffles once, window runs on the histogram" ->
+      Seq("length_quantiles"),
+    "bpe_candidates: corpus touched once; pairs explode on the vocab" -> Seq("bpe_candidates"),
+    "curation_funnel_v2: stage flags accumulate; digest-keyed window" -> Seq("curation_funnel_v2"),
+    "outlink_profiles: map-only typed path, one scan" -> Seq("outlink_profiles"),
+    "phrase_search: join inputs are term-filtered, never cartesian" -> Seq("phrase_search"),
+    "polite_schedule: delays broadcast; wave window keys on host" -> Seq("polite_schedule"),
+    "charset_decode: map-only typed path, one scan, no UDF" -> Seq("charset_decode"),
+    "cms_heavy_hitters: sketch cells partial-aggregate; sketch broadcasts" ->
+      Seq("cms_heavy_hitters"),
+    "kmv_distinct: bottom-k aggregates map-side, never a key-wide window" -> Seq("kmv_distinct"),
+    "shard_assign: prefix sum is two-level — no corpus-wide single-partition window" ->
+      Seq("shard_assign"),
+    "sitemap_entries: one typed tokenizer stage, one scan, no UDF" -> Seq("sitemap_entries"),
+    "bloom_seen: bitmap broadcasts to the probe; pure codegen hashing" -> Seq("bloom_seen"),
+    "page_meta: one typed tokenizer stage, one scan, no UDF" -> Seq("page_meta"),
+    "warc_extract: map-only framing — one scan, shuffle only to sort" -> Seq("warc_extract"),
+    "ann_recall caches the brute-force ground truth (no 4x corpus scan)" -> Seq("ann_recall"),
+    "ANN / embedding-dedup plans use the native codegen cosine" ->
+      Seq("ann_cosine_lsh", "ann_cosine_ivf", "ann_cosine_pairs"),
+    "entities view runs exactly one extraction MapPartitions" -> Seq("entities_view"))
 
-  test("extraction pipeline prunes the text column out of the scan") {
-    val df = Pipeline.run(spark.read.parquet(corpusPath)).toDF()
-      .select(col("url"), length(col("fullText")))
-    val scan = scans(df)
-    assert(scan.nonEmpty)
-    val readCols = scan.head.requiredSchema.fieldNames.toSet
-    assert(readCols == Set("url", "warc_ts", "html", "lang"),
-      s"scan reads $readCols — the pre-extracted `text` column must never be read")
+  for ((title, names) <- titled) test(title)(check(names: _*))
+
+  // entries no title names get one test each (the corpus path is not
+  // needed to list names: no frame is built here)
+  private val covered = titled.flatMap(_._2).toSet
+  for (name <- (Queries.all ++ LibraryPlans.all("")).filter(_.plan.nonEmpty)
+      .map(_.name) if !covered(name))
+    test(s"$name: plan properties")(check(name))
+
+  test("count props read the final plan once, not the AQE wrapper's copies") {
+    val df = spark.range(100).groupBy((col("id") % 3).as("k")).count()
+    val view = PlanView.of(df)
+    assert(view.count("HashAggregate") == 2)
+    // the AQE wrapper's string repeats the final plan and adds the
+    // initial one, so counting in it reads every node 3x and would pass
+    // a single aggregate as "at least 2"
+    val root = df.queryExecution.executedPlan
+    val old = (root +: root.collect { case a: AdaptiveSparkPlanExec => a.executedPlan })
+      .map(_.toString).mkString("\n")
+    assert("HashAggregate".r.findAllIn(old).length == 6)
+    val partial = view.after.filter(_.nodeName == "HashAggregate").last
+    val one = new PlanView(Nil, partial.collect { case n => n }, partial.toString)
+    assert(one.count("HashAggregate") == 1)
+    assert(!PlanProp.atLeast("HashAggregate", 2).holds(one))
   }
 
-  test("lang filter pushes down to the parquet scan") {
-    val df = spark.read.parquet(corpusPath).filter(col("lang") === "en")
-      .select(col("url"))
-    val scan = scans(df)
-    assert(scan.nonEmpty)
-    val pushed = scan.head.metadata.getOrElse("PushedFilters", "")
-    assert(pushed.contains("EqualTo(lang,en)") || pushed.contains("IsNotNull(lang)"),
-      s"expected lang pushdown, got: $pushed")
-    val readCols = scan.head.requiredSchema.fieldNames.toSet
-    assert(!readCols.contains("html"),
-      "projection-only query must not read the heavy html column")
-  }
-
-  test("small-dimension joins broadcast (no shuffle of the big side)") {
-    val q = SparkEntry.queries("q5_region_suppliers")(spark, "/root/testdata/sf0.001")
-    q.collect() // materialize so AQE finalizes the plan
-    val planStr = finalPlans(q).map(_.toString).mkString("\n")
-    assert(planStr.contains("BroadcastHashJoin"),
-      s"q5 should broadcast nation/region:\n$planStr")
-    assert(!planStr.contains("SortMergeJoin"), "no sort-merge join expected for tiny dims")
-  }
-
-  test("aggregations run partial+final with whole-stage codegen") {
-    val q = SparkEntry.queries("q1_agg")(spark, "/root/testdata/sf0.001")
-    q.collect()
-    val planStr = finalPlans(q).map(_.toString).mkString("\n")
-    // whole-stage codegen shows as "*(n)" stage markers in the plan string
-    assert(planStr.contains("*("), s"agg must stay inside codegen:\n$planStr")
-    val hashAggs = "HashAggregate".r.findAllIn(planStr).length
-    assert(hashAggs >= 2, s"expected partial+final HashAggregate, got $hashAggs")
-  }
-
-  test("events_rollup computes all grouping-set levels from one Expand") {
-    val q = SparkEntry.queries("events_rollup")(spark, "/root/testdata/sf0.001")
-    q.collect()
-    val planStr = finalPlans(q).map(_.toString).mkString("\n")
-    assert("Expand".r.findAllIn(planStr).length >= 1,
-      s"rollup must plan an Expand node:\n$planStr")
-    val hashAggs = "HashAggregate".r.findAllIn(planStr).length
-    assert(hashAggs >= 2, s"expected partial+final HashAggregate, got $hashAggs")
-    // one scan feeds every level — no per-level re-aggregation union
-    assert(!planStr.contains("Union"), "rollup must not union per-level scans")
-  }
-
-  test("q10 pushes the order-date window into the orders scan") {
-    val q = SparkEntry.queries("q10_returned_revenue")(spark, "/root/testdata/sf0.001")
-    // read scans off the pre-execution plan: after collect(), AQE wraps
-    // finalized stages in QueryStageExec and TreeNode.collect no longer
-    // reaches the FileSourceScanExec leaves
-    val ordersScan = scans(q).filter(_.requiredSchema.fieldNames.contains("o_orderdate"))
-    q.collect()
-    assert(ordersScan.nonEmpty, "orders scan not found")
-    val pushed = ordersScan.head.metadata.getOrElse("PushedFilters", "")
-    assert(pushed.contains("GreaterThanOrEqual(o_orderdate") &&
-      pushed.contains("LessThan(o_orderdate"),
-      s"date window must reach the parquet reader, got: $pushed")
-    val planStr = finalPlans(q).map(_.toString).mkString("\n")
-    assert(planStr.contains("TakeOrderedAndProject"),
-      "top-20 must run as TakeOrderedAndProject, not a global sort")
-  }
-
-  test("events_user_percentiles: two-phase distinct + partial percentiles, one scan") {
-    val q = SparkEntry.queries("events_user_percentiles")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).map(_.toString).mkString("\n")
-    // a single COUNT(DISTINCT) plans as the (key, distinct-col)-keyed
-    // aggregate chain (Expand only appears for >1 distinct columns);
-    // what must hold: the percentile buffers combine map-side BEFORE the
-    // first exchange, the distinct count is partial+final, and both ride
-    // ONE events scan
-    assert(planStr.contains("partial_percentile"),
-      s"percentile must combine map-side before the shuffle:\n$planStr")
-    assert(planStr.contains("partial_count(distinct"),
-      s"distinct count must be two-phase:\n$planStr")
-    assert("ObjectHashAggregate".r.findAllIn(planStr).length >= 3,
-      s"expected the 3-level distinct aggregate chain:\n$planStr")
-    assert(!planStr.contains("Union"),
-      "distinct + percentile must not re-scan per aggregate")
-    assert("FileScan".r.findAllIn(finalPlans(q).head.toString).length == 1,
-      s"one events scan expected:\n$planStr")
-  }
-
-  test("events_props_json: JSON-path extraction stays in codegen, no UDF") {
-    val q = SparkEntry.queries("events_props_json")(spark, "/root/testdata/sf0.001")
-    q.collect()
-    val planStr = finalPlans(q).map(_.toString).mkString("\n")
-    assert(planStr.contains("get_json_object"),
-      s"expected the codegen get_json_object expression:\n$planStr")
-    assert(!planStr.contains("ScalaUDF") && !planStr.contains("BatchEvalPython"),
-      "JSON path must not fall back to a UDF")
-    assert(planStr.contains("*("), s"must stay inside whole-stage codegen:\n$planStr")
-    val hashAggs = "HashAggregate".r.findAllIn(planStr).length
-    assert(hashAggs >= 2, s"expected partial+final HashAggregate, got $hashAggs")
-  }
-
-  test("quality_gopher signals stay fully codegen (no UDF)") {
-    val q = SparkEntry.queries("quality_gopher")(spark, "/root/testdata/sf0.001")
-    // scan count read pre-collect (post-AQE trees hide leaves in stages)
-    assert("FileScan".r.findAllIn(finalPlans(q).head.toString).length == 1,
-      "one documents scan expected")
-    q.collect() // finalize AQE so codegen spans render
-    val planStr = finalPlans(q).map(_.toString).mkString("\n")
-    assert(!planStr.contains("ScalaUDF") && !planStr.contains("BatchEvalPython"),
-      s"gopher signals must be pure column expressions:\n$planStr")
-    assert(planStr.contains("*("), s"must run inside whole-stage codegen:\n$planStr")
-  }
-
-  test("contamination joins the distinct corpus set — never a cross product") {
-    val q = SparkEntry.queries("contamination_sql")(spark, "/root/testdata/sf0.001")
-    q.collect()
-    val planStr = finalPlans(q).map(_.toString).mkString("\n")
-    assert(!planStr.contains("CartesianProduct") &&
-      !planStr.contains("BroadcastNestedLoopJoin"),
-      s"containment must be an equi-join on the shingle key:\n$planStr")
-    // both the corpus set and the per-candidate distinct run as
-    // partial+final aggregates before/after their exchanges
-    val hashAggs = "HashAggregate".r.findAllIn(planStr).length
-    assert(hashAggs >= 4, s"expected distinct+count aggregate pairs, got $hashAggs")
-  }
-
-  test("wordcloud/keyword fold the token total in-plan: one scan per query") {
-    // round-4 forms took a driver-side toks.count() before the aggregate
-    // — a second full corpus scan per query at 100 TB. The total now
-    // comes from an unbounded window over the (vocabulary-sized)
-    // aggregate, so exactly ONE scan of documents may appear.
-    for (name <- Seq("wordcloud_top10", "keyword_topk_sql")) {
-      val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-      // count on the pre-execution plan: the executed AQE wrapper's
-      // toString repeats the tree under "Initial Plan" and would double-
-      // count the single scan
-      val planStr = finalPlans(df).head.toString
-      val n = "FileScan".r.findAllIn(planStr).length
-      assert(n == 1,
-        s"$name reads documents $n times — the token total must fold in-plan:\n$planStr")
-      assert(planStr.contains("Window"),
-        s"$name: expected the total as a window over the aggregate")
-    }
-  }
-
-  test("pii/split/sample are map-only codegen column expressions (no UDF)") {
-    // the scrub and the split decision must be free riders on the scan
-    // projection at 100 TB: one FileScan, zero UDFs, inside codegen
-    for (name <- Seq("pii_redact", "split_assign", "stratified_sample",
-                     "nfc_normalize")) {
-      val q = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-      assert("FileScan".r.findAllIn(finalPlans(q).head.toString).length == 1,
-        s"$name: one documents scan expected")
-      q.collect()
-      val planStr = finalPlans(q).map(_.toString).mkString("\n")
-      assert(!planStr.contains("ScalaUDF") && !planStr.contains("BatchEvalPython"),
-        s"$name must stay pure column expressions:\n${planStr.take(2000)}")
-      assert(planStr.contains("*("),
-        s"$name must run inside whole-stage codegen")
-    }
-  }
-
-  test("curation_funnel: one documents scan; dedup shuffles the digest, not text") {
-    val q = SparkEntry.queries("curation_funnel")(spark, "/root/testdata/sf0.001")
-    // single pass: all three stage flags compute over ONE scan
-    assert("FileScan".r.findAllIn(finalPlans(q).head.toString).length == 1,
-      "funnel must compute all stage flags from one documents scan")
-    q.collect()
-    val planStr = finalPlans(q).map(_.toString).mkString("\n")
-    // the only wide dependency is the dedup window, keyed on the 32-byte
-    // sha-256 digest — never the document text
-    assert(planStr.contains("hashpartitioning(digest"),
-      s"dedup window must partition by digest:\n${planStr.take(2000)}")
-    assert(!planStr.contains("hashpartitioning(text"),
-      "document text must never be a shuffle key")
-    assert(!planStr.contains("ScalaUDF"),
-      "funnel stages must stay pure column expressions")
-  }
-
-  test("para_dedup: first-seen window keys on the paragraph hash, never raw text") {
-    val q = SparkEntry.queries("para_dedup")(spark, "/root/testdata/sf0.001")
-    assert("FileScan".r.findAllIn(finalPlans(q).head.toString).length == 1,
-      "paragraph dedup must read documents once")
-    q.collect()
-    val planStr = finalPlans(q).map(_.toString).mkString("\n")
-    assert(planStr.contains("hashpartitioning(para_hash"),
-      s"dedup window must partition by the 8-byte paragraph hash:\n${planStr.take(2000)}")
-    assert(!planStr.contains("hashpartitioning(para,")
-        && !planStr.contains("hashpartitioning(ptext"),
-      "raw paragraph/document text must never be a shuffle key")
-    assert(!planStr.contains("ScalaUDF"),
-      "paragraph dedup must stay pure column expressions")
-  }
-
-  test("lm_score: vocab-bounded model joins, no cartesian product, no UDF") {
-    val q = SparkEntry.queries("lm_score")(spark, "/root/testdata/sf0.001")
-    q.collect()
-    // AdaptiveSparkPlan.toString appends an "== Initial Plan ==" section
-    // that duplicates every node — gate on the final plan only
-    val planStr = finalPlans(q).head.toString.split("== Initial Plan ==").head
-    // training is ONE grouping-sets pass whose persisted model feeds the
-    // bigram join, the head join, and the vocab aggregate; scoring is
-    // one more pass — so the whole query reads documents at most twice
-    assert("FileScan".r.findAllIn(planStr).length <= 2,
-      s"LM must train in one pass and score in one:\n${planStr.take(3000)}")
-    assert(planStr.contains("InMemoryTableScan"),
-      "model consumers must read the persisted one-pass model")
-    assert(!planStr.contains("CartesianProduct"),
-      "the 1-row vocab must join as a broadcast, never a cartesian")
-    assert(!planStr.contains("ScalaUDF"),
-      "LM scoring must stay pure column expressions")
-  }
-
-  test("snapshot_delta: one join on the key; digests shuffle, text never does") {
-    val q = SparkEntry.queries("snapshot_delta")(spark, "/root/testdata/sf0.001")
-    q.collect()
-    val planStr = finalPlans(q).head.toString.split("== Initial Plan ==").head
-    assert(!planStr.contains("hashpartitioning(text")
-        && !planStr.contains("hashpartitioning(t,"),
-      "snapshot diff must shuffle (key, digest) rows only")
-    assert("SortMergeJoin|ShuffledHashJoin".r.findAllIn(planStr).length <= 1,
-      s"delta is ONE full-outer join on the key:\n${planStr.take(2000)}")
-    assert(!planStr.contains("ScalaUDF"),
-      "classification must stay pure column expressions")
-  }
-
-  test("host_cap plans a WindowGroupLimit (map-side top-k before the shuffle)") {
-    val q = SparkEntry.queries("host_cap")(spark, "/root/testdata/sf0.001")
-    q.collect()
-    val planStr = finalPlans(q).head.toString.split("== Initial Plan ==").head
-    // row_number<=k must rewrite to WindowGroupLimit: a mega-host ships
-    // k candidates per map task, not its whole row set
-    assert(planStr.contains("WindowGroupLimit"),
-      s"rank filter must push into the window as a group limit:\n${planStr.take(2000)}")
-    assert(!planStr.contains("ScalaUDF"))
-  }
-
-  test("c4_clean: map-only line filtering — one scan, no UDF, no wide shuffle") {
-    val q = SparkEntry.queries("c4_clean")(spark, "/root/testdata/sf0.001")
-    q.collect()
-    val planStr = finalPlans(q).head.toString.split("== Initial Plan ==").head
-    assert("FileScan".r.findAllIn(planStr).length == 1,
-      "line cleaning must ride a single documents scan")
-    assert(!planStr.contains("ScalaUDF"),
-      "per-line rules must stay higher-order column expressions")
-    // the only exchange is the deterministic output ordering
-    assert(!planStr.contains("hashpartitioning("),
-      s"cleaning is map-only — no hash shuffle:\n${planStr.take(2000)}")
-  }
-
-  test("domain_blocklist: the corpus side anti-joins against a broadcast") {
-    val q = SparkEntry.queries("domain_blocklist")(spark, "/root/testdata/sf0.001")
-    q.collect()
-    val planStr = finalPlans(q).head.toString.split("== Initial Plan ==").head
-    assert(planStr.contains("BroadcastHashJoin") && planStr.contains("LeftAnti"),
-      s"blocklist application must be a broadcast left-anti join:\n${planStr.take(2000)}")
-    assert(!planStr.contains("ScalaUDF"))
-  }
-
-  test("host_pagerank: the graph is persisted, not re-derived per iteration") {
-    val q = SparkEntry.queries("host_pagerank")(spark, "/root/testdata/sf0.001")
-    q.collect()
-    val planStr = finalPlans(q).map(_.toString).mkString("\n")
-    assert(planStr.contains("InMemoryTableScan") || planStr.contains("InMemoryRelation"),
-      "edges/nodes must be persisted — each power iteration otherwise " +
-        s"recomputes the explode+distinct from the corpus scan:\n${planStr.take(2000)}")
-    assert(!planStr.contains("CartesianProduct") && !planStr.contains("ScalaUDF"))
-  }
-
-  test("bm25_search: bounded-heap top-k, broadcast stats, no UDF") {
-    val q = SparkEntry.queries("bm25_search")(spark, "/root/testdata/sf0.001")
-    q.collect()
-    val planStr = finalPlans(q).map(_.toString).mkString("\n")
-    assert(planStr.contains("TakeOrderedAndProject"),
-      s"top-k must plan as per-partition bounded heaps, not a global sort:\n${planStr.take(2000)}")
-    assert(planStr.contains("BroadcastHashJoin") ||
-      planStr.contains("BroadcastNestedLoopJoin"),
-      s"term df / corpus totals must broadcast:\n${planStr.take(2000)}")
-    assert(!planStr.contains("ScalaUDF") && !planStr.contains("CartesianProduct"))
-  }
-
-  test("token_budget and url_rules stay codegen map-only (no UDF, one scan)") {
-    for (name <- Seq("token_budget", "url_rules")) {
-      // inspect the pre-execution plan: AQE hides scans inside leaf
-      // query stages once materialized
-      val q = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-      val planStr = finalPlans(q).map(_.toString).mkString("\n")
-      assert(!planStr.contains("ScalaUDF"),
-        s"$name must be pure column expressions:\n${planStr.take(1500)}")
-      assert(scans(q).size == 1,
-        s"$name must read the corpus exactly once")
-    }
-  }
-
-  test("anchor_rows: one typed flatMap stage over one scan") {
-    val q = SparkEntry.queries("anchor_rows")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(planStr.linesIterator.count(_.contains("SerializeFromObject")) == 1,
-      s"anchor extraction must be a single typed stage:\n${planStr.take(1500)}")
-    assert(scans(q).size == 1, "anchor extraction must read the corpus once")
-  }
-
-  test("nb_lang_confusion: argmax plans as WindowGroupLimit, no UDF") {
-    val q = SparkEntry.queries("nb_lang_confusion")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).map(_.toString).mkString("\n")
-    assert(planStr.contains("WindowGroupLimit"),
-      "the per-doc argmax must pre-prune map-side (row_number <= 1 " +
-        s"rewrite):\n${planStr.take(2000)}")
-    assert(!planStr.contains("ScalaUDF"))
-  }
-
-  test("robots_allowed: robots table broadcasts; one typed eval stage") {
-    val q = SparkEntry.queries("robots_allowed")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(planStr.contains("BroadcastHashJoin"),
-      s"the domain-cardinality robots table must broadcast:\n${planStr.take(2000)}")
-    assert(planStr.linesIterator.count(_.contains("SerializeFromObject")) == 1,
-      s"permission evaluation must be a single typed stage:\n${planStr.take(2000)}")
-  }
-
-  test("template_clusters: one typed fingerprint stage; hash-only shuffle") {
-    val q = SparkEntry.queries("template_clusters")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF"))
-    assert(planStr.linesIterator.count(_.contains("SerializeFromObject")) == 1,
-      s"fingerprinting must be a single typed stage:\n${planStr.take(2000)}")
-  }
-
-  test("fuzzy_titles: block-keyed equi-join, native levenshtein") {
-    val q = SparkEntry.queries("fuzzy_titles")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("CartesianProduct") &&
-        !planStr.contains("BroadcastNestedLoopJoin"),
-      s"pairs must form only inside prefix blocks (equi-join):\n${planStr.take(2000)}")
-    assert(!planStr.contains("ScalaUDF"))
-    assert(planStr.contains("graft_levenshtein_bounded"),
-      "distance must be the native BANDED levenshtein expression " +
-        "(O(L*k) Ukkonen band, not the built-in full matrix)")
-  }
-
-  test("pub_dates: map-only typed path, one scan, no UDF") {
-    val q = SparkEntry.queries("pub_dates")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF"))
-    val exchanges = planStr.linesIterator.count(_.contains("Exchange"))
-    assert(exchanges <= 1,
-      s"date extraction must ride the scan (only the orderBy may " +
-        s"exchange):\n${planStr.take(2000)}")
-  }
-
-  test("html_markdown: map-only typed path, one scan, no UDF") {
-    val q = SparkEntry.queries("html_markdown")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF"))
-    val exchanges = planStr.linesIterator.count(_.contains("Exchange"))
-    assert(exchanges <= 1,
-      s"markdown rendering must ride the scan (only the orderBy may " +
-        s"exchange):\n${planStr.take(2000)}")
-  }
-
-  test("jsonld_meta: typed flatMap + codegen JSON paths, no UDF") {
-    val q = SparkEntry.queries("jsonld_meta")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF"))
-    assert(planStr.contains("get_json_object"),
-      s"JSON paths must be codegen expressions, not typed-map logic:\n" +
-        planStr.take(2000))
-  }
-
-  test("readability: pure codegen expressions, no UDF, no typed map") {
-    val q = SparkEntry.queries("readability")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF") &&
-      !planStr.contains("SerializeFromObject"),
-      s"readability must be column expressions riding the scan:\n" +
-        planStr.take(2000))
-    val exchanges = planStr.linesIterator.count(_.contains("Exchange"))
-    assert(exchanges <= 1)
-  }
-
-  test("pmi_collocations: unigrams broadcast; one corpus shuffle; top-k") {
-    val q = SparkEntry.queries("pmi_collocations")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(planStr.contains("BroadcastHashJoin"),
-      s"vocab-sized unigram counts must broadcast onto the bigram " +
-        s"side:\n${planStr.take(2000)}")
-    assert(planStr.contains("TakeOrderedAndProject"),
-      "top-k must plan as TakeOrderedAndProject, never a global sort")
-    assert(!planStr.contains("CartesianProduct"))
-  }
-
-  test("feed_items: typed flatMap rides the scan, no UDF") {
-    val q = SparkEntry.queries("feed_items")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF"))
-    val exchanges = planStr.linesIterator.count(_.contains("Exchange"))
-    assert(exchanges <= 1,
-      s"feed parsing must be map-only (only the orderBy may " +
-        s"exchange):\n${planStr.take(2000)}")
-  }
-
-  test("host_outliers: host-partitioned windows; medians broadcast back") {
-    val q = SparkEntry.queries("host_outliers")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(planStr.contains("hashpartitioning(host"),
-      s"both median windows must partition by the host shard key:\n" +
-        planStr.take(2000))
-    assert(planStr.contains("BroadcastHashJoin"),
-      "host-cardinality median/MAD tables must broadcast back")
-    assert(!planStr.contains("CartesianProduct"))
-  }
-
-  test("rendezvous_assign: host-table assignment broadcasts; no UDF") {
-    val q = SparkEntry.queries("rendezvous_assign")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(planStr.contains("BroadcastHashJoin"),
-      s"the domain-cardinality assignment must broadcast onto the " +
-        s"corpus:\n${planStr.take(2000)}")
-    assert(!planStr.contains("ScalaUDF"),
-      "HRW weights must be aggregate() column expressions, not a UDF")
-  }
-
-  test("reciprocal_links: host-cardinality semi-join, never a row blowup") {
-    val q = SparkEntry.queries("reciprocal_links")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(planStr.contains("LeftSemi"),
-      s"reciprocated edges must come from a left_semi join (no " +
-        s"duplicate-row explosion):\n${planStr.take(2000)}")
-    assert(!planStr.contains("CartesianProduct"))
-  }
-
-  test("surt_keys: pure codegen expressions, no UDF, no typed map") {
-    val q = SparkEntry.queries("surt_keys")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF") &&
-      !planStr.contains("SerializeFromObject"),
-      s"SURT keys must be column expressions usable in a scan " +
-        s"projection:\n${planStr.take(2000)}")
-  }
-
-  test("passage_chunks: codegen explode path, no UDF, no typed map") {
-    val q = SparkEntry.queries("passage_chunks")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF") &&
-      !planStr.contains("SerializeFromObject"),
-      s"chunking must be explode(sequence) + slice column " +
-        s"expressions:\n${planStr.take(2000)}")
-    assert(planStr.contains("Generate"),
-      "chunks must come from a Generate (explode), one scan")
-  }
-
-  test("recrawl_schedule: one key shuffle shared by window and roll-up") {
-    val q = SparkEntry.queries("recrawl_schedule")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(planStr.contains("hashpartitioning(user_id"),
-      s"the lag window must partition by the schedule key:\n" +
-        planStr.take(2000))
-    assert(!planStr.contains("ScalaUDF"))
-  }
-
-  test("doc_outline: typed flatMap rides the scan, no UDF") {
-    val q = SparkEntry.queries("doc_outline")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF"))
-    val exchanges = planStr.linesIterator.count(_.contains("Exchange"))
-    assert(exchanges <= 1)
-  }
-
-  test("crawl_traps / registrable_domains / canon_text_key: pure codegen") {
-    for (name <- Seq("crawl_traps", "registrable_domains",
-        "canon_text_key")) {
-      val q = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-      assert(scans(q).length == 1, s"$name must read one scan")
-      val planStr = finalPlans(q).head.toString
-      assert(!planStr.contains("ScalaUDF") &&
-        !planStr.contains("SerializeFromObject"),
-        s"$name must be column expressions riding the scan:\n" +
-          planStr.take(1500))
-    }
-  }
-
-  test("redirect_chains: log-depth doubling joins, no cartesian") {
-    val q = SparkEntry.queries("redirect_chains")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("CartesianProduct") &&
-      !planStr.contains("BroadcastNestedLoopJoin"),
-      s"every doubling round must be an equi-join:\n${planStr.take(2000)}")
-    assert(!planStr.contains("ScalaUDF"))
-  }
-
-  test("length_quantiles: histogram-first — corpus shuffles once, " +
-    "window runs on the histogram") {
-    val q = SparkEntry.queries("length_quantiles")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(planStr.contains("partial_count"),
-      s"the histogram aggregate must combine map-side:\n" +
-        planStr.take(2000))
-    assert(!planStr.contains("ScalaUDF"))
-  }
-
-  test("bpe_candidates: corpus touched once; pairs explode on the vocab") {
-    val q = SparkEntry.queries("bpe_candidates")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF") &&
-      !planStr.contains("SerializeFromObject"))
-    assert(planStr.contains("TakeOrderedAndProject"),
-      "top-k must plan as TakeOrderedAndProject, never a global sort")
-    assert(planStr.contains("partial_count"),
-      s"the word-count aggregate must combine map-side:\n" +
-        planStr.take(2000))
-  }
-
-  test("curation_funnel_v2: stage flags accumulate; digest-keyed window") {
-    val q = SparkEntry.queries("curation_funnel_v2")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(planStr.contains("hashpartitioning(canon_digest"),
-      s"the dedup keeper window must key on the digest:\n" +
-        planStr.take(2000))
-    assert(!planStr.contains("ScalaUDF"),
-      "every stage is codegen or a registered native expression")
-    assert(!planStr.contains("CartesianProduct"),
-      "the p99 gate joins a broadcast 1-row threshold, never a " +
-        "cartesian over data")
-  }
-
-  test("outlink_profiles: map-only typed path, one scan") {
-    val q = SparkEntry.queries("outlink_profiles")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF"))
-    val exchanges = planStr.linesIterator.count(_.contains("Exchange"))
-    assert(exchanges <= 1)
-  }
-
-  test("phrase_search: join inputs are term-filtered, never cartesian") {
-    val q = SparkEntry.queries("phrase_search")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("CartesianProduct"))
-    assert(planStr.contains("= slow") && planStr.contains("= batch"),
-      s"each join input must filter to its term before joining:\n${planStr.take(2000)}")
-  }
-
-  test("polite_schedule: delays broadcast; wave window keys on host") {
-    val q = SparkEntry.queries("polite_schedule")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(planStr.contains("BroadcastHashJoin"),
-      s"domain-cardinality delays must broadcast:\n${planStr.take(2000)}")
-    assert(planStr.contains("hashpartitioning(host"),
-      "the schedule window must partition by the fetcher's host shard key")
-  }
-
-  test("charset_decode: map-only typed path, one scan, no UDF") {
-    val q = SparkEntry.queries("charset_decode")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF"))
-    val exchanges = planStr.linesIterator.count(_.contains("Exchange"))
-    assert(exchanges <= 1,
-      s"decode must not shuffle (only the output sort may):\n${planStr.take(2000)}")
-  }
-
-  test("cms_heavy_hitters: sketch cells partial-aggregate; sketch broadcasts") {
-    val q = SparkEntry.queries("cms_heavy_hitters")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(planStr.contains("partial_count"),
-      s"cell counts must combine map-side (shuffle <= tasks*d*w):\n${planStr.take(2000)}")
-    assert(planStr.contains("BroadcastHashJoin"),
-      "the <= d*w-row sketch must broadcast to the probe")
-    assert(!planStr.contains("ScalaUDF") && !planStr.contains("SerializeFromObject"),
-      "hashing must stay in codegen column expressions")
-  }
-
-  test("kmv_distinct: bottom-k aggregates map-side, never a key-wide window") {
-    val q = SparkEntry.queries("kmv_distinct")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(planStr.contains("partial_graft_bottomk"),
-      s"the sketch must partial-aggregate map-side (k longs per group per task):\n${planStr.take(2000)}")
-    assert(!planStr.contains("Window"),
-      "distinct estimation must not move every key through a window")
-  }
-
-  test("shard_assign: prefix sum is two-level — no corpus-wide single-partition window") {
-    val q = SparkEntry.queries("shard_assign")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(planStr.contains("hashpartitioning(_bucket"),
-      s"the data-grain window must partition by bucket:\n${planStr.take(2000)}")
-    assert(planStr.contains("BroadcastHashJoin"),
-      "bucket base offsets must broadcast back")
-    val single = planStr.linesIterator
-      .count(_.contains("Exchange SinglePartition"))
-    assert(single <= 1,
-      s"only the tiny bucket-table cumsum may single-partition ($single found)")
-  }
-
-  test("sitemap_entries: one typed tokenizer stage, one scan, no UDF") {
-    val q = SparkEntry.queries("sitemap_entries")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF"))
-    assert(planStr.linesIterator.count(_.contains("SerializeFromObject")) == 1,
-      s"sitemap explode must be a single typed stage:\n${planStr.take(2000)}")
-  }
-
-  test("bloom_seen: bitmap broadcasts to the probe; pure codegen hashing") {
-    val q = SparkEntry.queries("bloom_seen")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(q).head.toString
-    assert(planStr.contains("BroadcastHashJoin"),
-      s"the m/64-row bitmap must broadcast, never shuffle the frontier:\n${planStr.take(2000)}")
-    assert(!planStr.contains("ScalaUDF"))
-    assert(!planStr.contains("SerializeFromObject"),
-      "bloom build/probe must stay in column expressions (codegen), no typed detour")
-  }
-
-  test("page_meta: one typed tokenizer stage, one scan, no UDF") {
-    val q = SparkEntry.queries("page_meta")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1)
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF"))
-    assert(planStr.linesIterator.count(_.contains("SerializeFromObject")) == 1,
-      s"head-metadata extraction must be a single typed stage:\n${planStr.take(2000)}")
-  }
-
-  test("warc_extract: map-only framing — one scan, shuffle only to sort") {
-    val q = SparkEntry.queries("warc_extract")(spark, "/root/testdata/sf0.001")
-    assert(scans(q).length == 1, "WARC ingest must read the shard once")
-    val planStr = finalPlans(q).head.toString
-    assert(!planStr.contains("ScalaUDF"))
-    val exchanges = planStr.linesIterator.count(_.contains("Exchange"))
-    assert(exchanges <= 1,
-      s"framing+HTTP split must not shuffle (only the output sort may):\n${planStr.take(2000)}")
-  }
-
-  test("ann_recall caches the brute-force ground truth (no 4x corpus scan)") {
-    val df = SparkEntry.queries("ann_recall")(spark, "/root/testdata/sf0.001")
-    val planStr = finalPlans(df).map(_.toString).mkString("\n")
-    assert(planStr.contains("InMemoryTableScan") || planStr.contains("InMemoryRelation"),
-      "the brute-force top-k must be persisted — the recall rows otherwise " +
-        s"recompute the heaviest scan per semi-join:\n${planStr.take(2000)}")
+  test("noUdf finds a Scala UDF that the plan text never names") {
+    val plusOne = udf((x: Long) => x + 1)
+    val view = PlanView.of(spark.range(3).select(plusOne(col("id"))))
+    assert(!view.text.contains("ScalaUDF"))
+    assert(!PlanProp.noUdf.holds(view))
   }
 
   test("enhanced v2.1 JSON view is well-formed and deterministic") {
@@ -714,31 +170,6 @@ class PlanQualitySpec extends AnyFunSuite {
       .filter(col("url") === CorpusGen.urlOf(0))
       .select("json").as[String].head()
     assert(json == json2)
-  }
-
-  test("ANN / embedding-dedup plans use the native codegen cosine") {
-    val emb = spark.range(60).select(col("id").as("vec_id"),
-      expr("transform(sequence(1, 8), k -> cast(pmod(id * k, 7) as float))").as("embedding"))
-    for ((name, df) <- Seq(
-        "lshTopK" -> graft.ops.Similarity.lshTopK(emb, emb.filter(col("vec_id") < 2), k = 3, dim = 8),
-        "ivfTopK" -> graft.ops.Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 2), k = 3, nCentroids = 4, nProbe = 4),
-        "cosineDupPairs" -> graft.ops.Similarity.cosineDupPairs(emb, threshold = 0.5, dim = 8))) {
-      // the expression can be collapsed into aggregate result projections
-      // (not rendered by plan toString) — walk the optimized plan's
-      // expression trees for the actual CosineSim node
-      val hasNative = df.queryExecution.optimizedPlan.collect { case p => p }
-        .flatMap(_.expressions)
-        .exists(_.exists(_.isInstanceOf[graft.functions.CosineSim]))
-      assert(hasNative, s"$name must score with the native CosineSim expression")
-    }
-  }
-
-  test("entities view runs exactly one extraction MapPartitions") {
-    val df = Pipeline.entitiesView(Pipeline.run(spark.read.parquet(corpusPath)))
-    val planStr = df.queryExecution.executedPlan.toString
-    val mapParts = "MapPartitions".r.findAllIn(planStr).length
-    assert(mapParts == 1,
-      s"expected ONE MapPartitions (no per-kind recompute), got $mapParts:\n$planStr")
   }
 
   test("doc-structure fields land in the enhanced JSON") {

@@ -3,19 +3,16 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Driver-contract integration: entry + every registered query runs on
+/** Driver-contract integration: every registered query runs on
   * sf0.001 and returns sane results; extraction matches the corpus
   * contract end-to-end through Spark (partitioning-invariant). */
 class SparkEntrySpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val sf = "/root/testdata/sf0.001"
 
-  test("entry returns rows") {
-    assert(SparkEntry.entry(spark).count() > 0)
-  }
-
   test("every query runs on sf0.001 and oracle keys are a subset of query keys") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.queries.size == graft.queries.Queries.all.size, "duplicate query names")
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, sf).count()
       withClue(s"query $name:") { assert(n >= 0) }
