@@ -303,13 +303,13 @@ object TextAnalyzer {
     * (String.replaceAll/split compile per call — measurable per doc);
     * the page-break replace is a literal, so non-regex String.replace
     * is byte-identical. */
-  def splitSentences(text: String): Seq[String] = {
+  def splitSentences(text: String): IndexedSeq[String] = {
     val collapsed = wsRun.matcher(text).replaceAll(" ")
       .replace("--- PAGE BREAK ---", " ")
     val parts = sentenceSep.split(collapsed, -1)
     parts.iterator.map(PyText.strip)
       .filter(s => s.length > 20 && !s.startsWith("[") && !PyText.isUpper(s))
-      .toSeq
+      .toIndexedSeq
   }
 
   // --------------------------------------------------- T10 sentence score
@@ -366,9 +366,10 @@ object TextAnalyzer {
       return Summary("Document vide ou illisible.",
         "Le document ne contient pas de texte exploitable.", Nil, 0.0)
     val freq = wordFrequency(docTokens)
+    val total = sentences.length
     val scored = sentences.zipWithIndex.collect {
       case (s, i) if wordCountWs(s) >= 5 =>
-        (s, scoreSentence(s, i, sentences.length, freq), i)
+        (s, scoreSentence(s, i, total, freq), i)
     }
     val ranked = scored.zipWithIndex
       .sortBy { case ((_, score, _), idx) => (-score, idx) }.map(_._1)
@@ -383,7 +384,7 @@ object TextAnalyzer {
   }
 
   /** `len(s.split())` without materializing the tokens. */
-  private def wordCountWs(s: String): Int = {
+  private[analyzers] def wordCountWs(s: String): Int = {
     var words = 0
     var inWord = false
     var i = 0
@@ -395,17 +396,19 @@ object TextAnalyzer {
     words
   }
 
-  private val bulletPattern = java.util.regex.Pattern.compile("[•\\-\\*]\\s*(.+?)(?=\\n|$)")
-  private val numberedPattern = java.util.regex.Pattern.compile("\\d+[.)\\]]\\s*(.+?)(?=\\n|$)")
+  private[analyzers] val bulletPattern = java.util.regex.Pattern.compile("[•\\-\\*]\\s*(.+?)(?=\\n|$)")
+  private[analyzers] val numberedPattern = java.util.regex.Pattern.compile("\\d+[.)\\]]\\s*(.+?)(?=\\n|$)")
 
+  /** Only the first 5 list items (bullets, then numbered) are read, so
+    * each matcher stops once 5 are known. */
   def extractKeyPoints(text: String, ranked: Seq[(String, Double, Int)]): Seq[String] = {
     val keyPoints = ArrayBuffer.empty[String]
     val bullets = ArrayBuffer.empty[String]
     val m1 = bulletPattern.matcher(text)
-    while (m1.find()) bullets += m1.group(1)
+    while (bullets.length < 5 && m1.find()) bullets += m1.group(1)
     val m2 = numberedPattern.matcher(text)
-    while (m2.find()) bullets += m2.group(1)
-    bullets.take(5).foreach { item =>
+    while (bullets.length < 5 && m2.find()) bullets += m2.group(1)
+    bullets.foreach { item =>
       if (item.length > 20 && item.length < 200) keyPoints += PyText.strip(item)
     }
     if (keyPoints.length < 3) {

@@ -18,15 +18,27 @@ import graft.extract.Pipeline
   * partitions (`partitionOverwriteMode=dynamic` — idempotent under task or
   * driver failure, matching Iceberg's replace-partition commit semantics).
   *
+  * Layout: one data file per bucket per commit. Extraction runs in the
+  * map stage at full input parallelism; the finished rows are then
+  * clustered by bucket (REBALANCE), so each bucket reaches the writer in
+  * one task — AQE coalesces small buckets into one task and splits a
+  * skewed one into several files; without AQE the hint is a hash
+  * repartition by bucket. Writing per input split instead would leave
+  * one small file per split in every bucket it touches (splits × buckets
+  * files a run), paid again by every later read. The cost is one shuffle
+  * of the output rows (a few KB per doc), not of the input payloads.
+  *
   * Per-partition lineage (bucket, doc/ok/fail counts, input bytes,
   * extraction-failure tally, run id, duration) is appended to a metrics
-  * table at `outDir/_metrics` — the analog of the reference's append-only
-  * events/stats tables (`job_queue/local_queue.py:165-186,222-229`).
+  * table at `outDir/_metrics`, one file per run — the analog of the
+  * reference's append-only events/stats tables
+  * (`job_queue/local_queue.py:165-186,222-229`).
   *
   * On a real cluster the manifest directory is the piece a true Iceberg
   * catalog replaces (snapshot commit + manifest pruning); everything else
   * — bucketed layout, dynamic overwrite, lineage append — carries over
-  * unchanged. Bucket count scales independently of executor count: at
+  * unchanged (Iceberg's hash write distribution gives the same one file
+  * per bucket). Bucket count scales independently of executor count: at
   * 10^12 docs pick nBuckets so one bucket ≈ a few GB (e.g. 2^17 buckets),
   * keeping recompute-on-resume granular and partition files pruned.
   */
@@ -79,9 +91,24 @@ object Checkpoint {
       StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** The frame `runResumable` writes: the rows of `input` whose bucket is
+    * not in `done`, extracted, with their `bucket`, and clustered by bucket
+    * so the partitioned write commits one file per bucket. */
+  private[graft] def toWrite(input: DataFrame, done: Set[Int], nBuckets: Int,
+      oversizeBudgetBytes: Long = Pipeline.DefaultOversizeBudget): DataFrame = {
+    val bucketCol = pmod(hash(col("url")), lit(nBuckets))
+    val todo = input
+      .withColumn("bucket", bucketCol)
+      .filter(if (done.isEmpty) lit(true) else !col("bucket").isin(done.toSeq: _*))
+    Pipeline.run(todo, oversizeBudgetBytes)
+      .withColumn("bucket", bucketCol)
+      .hint("rebalance", col("bucket"))
+  }
+
   /** Run extraction over `input` (input_hint schema), resuming past any
     * previously committed buckets. Returns what was skipped vs processed
-    * plus the per-bucket lineage appended to the metrics table. */
+    * plus the per-bucket lineage appended to the metrics table. An input
+    * with nothing left to do writes no data file and processes 0 buckets. */
   def runResumable(input: DataFrame, outDir: String, nBuckets: Int,
       runId: String,
       oversizeBudgetBytes: Long = Pipeline.DefaultOversizeBudget): ResumeReport = {
@@ -90,17 +117,7 @@ object Checkpoint {
     val t0 = System.nanoTime()
 
     val done = completedBuckets(outDir)
-    val bucketCol = pmod(hash(col("url")), lit(nBuckets))
-    val todo = input
-      .withColumn("bucket", bucketCol)
-      .filter(if (done.isEmpty) lit(true) else !col("bucket").isin(done.toSeq: _*))
-
-    if (todo.isEmpty) {
-      return ResumeReport(runId, nBuckets, done.size, 0, Nil)
-    }
-
-    val results = Pipeline.run(todo, oversizeBudgetBytes)
-      .withColumn("bucket", bucketCol)
+    val results = toWrite(input, done, nBuckets, oversizeBudgetBytes)
 
     // Replace exactly the recomputed partitions; completed ones untouched.
     val overwriteKey = "spark.sql.sources.partitionOverwriteMode"
@@ -118,10 +135,12 @@ object Checkpoint {
     }
 
     // Lineage from the data as written (read-back → what a reader will see;
-    // partition pruning keeps this to the recomputed buckets only).
+    // partition pruning keeps this to the recomputed buckets only). The
+    // written schema skips inference, which would also fail on a data
+    // directory holding no file yet.
     val durationMs = (System.nanoTime() - t0) / 1000000L
     val todoBuckets = (0 until nBuckets).filterNot(done)
-    val lineage = spark.read.parquet(dataDir(outDir))
+    val lineage = spark.read.schema(results.schema).parquet(dataDir(outDir))
       .filter(col("bucket").isin(todoBuckets: _*))
       .groupBy(col("bucket"))
       .agg(
@@ -142,7 +161,7 @@ object Checkpoint {
     // Append lineage to the metrics table, then commit manifests last —
     // a bucket counts as done only after data + metrics are durable.
     if (lineage.nonEmpty) {
-      lineage.toDF().write.mode("append").parquet(metricsDir(outDir))
+      lineage.toDF().coalesce(1).write.mode("append").parquet(metricsDir(outDir))
       lineage.foreach(commitBucket(outDir, _))
     }
 

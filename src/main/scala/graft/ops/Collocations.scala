@@ -2,7 +2,7 @@ package graft.ops
 
 import java.util.Locale
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PMI collocation mining (Church & Hanks 1990, "Word association
@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   *            = ln( c(ab)·N² / (c(a)·c(b)·B) )
   *
   * with N = total tokens, B = total bigrams. The ln argument is ONE
-  * integer rational evaluated in a pinned order (int64 products, one
-  * double division) and the score is quantized to FLOOR micro-nats,
-  * so both engines produce the identical int64 (same convention as
-  * the BM25 idf micro-nats).
+  * rational evaluated in a pinned order (double products, one double
+  * division; see `pmiMicro`) and the score is quantized to FLOOR
+  * micro-nats, so both engines produce the identical int64 (same
+  * convention as the BM25 idf micro-nats).
   *
   * Scale shape: ONE corpus-pass shuffle — a typed flatMap emits each
   * token once as `(tok, next-or-null)`, aggregated by (a, b). Every
@@ -34,6 +34,16 @@ import org.apache.spark.sql.functions._
 object Collocations {
 
   private val wordRe = "[A-Za-z]+".r
+
+  /** `floor(1e6 · ln(c·n·n / (n_w1·n_w2·bt)))` as a long. Every operand
+    * is cast to double before it is multiplied: long products wrap once
+    * n·n passes 2^63, at about 3e9 corpus tokens. Products below 2^53
+    * are exact either way. */
+  private[graft] def pmiMicro(c: Column, n: Column, nW1: Column, nW2: Column,
+      bt: Column): Column = {
+    def d(x: Column) = x.cast("double")
+    floor(lit(1e6) * log(d(c) * d(n) * d(n) / (d(nW1) * d(nW2) * d(bt)))).cast("long")
+  }
 
   /** Top-k collocations: (w1, w2, n_pair, n_w1, n_w2, pmi_micro),
     * ranked pmi desc with a (w1, w2) tie-break. */
@@ -67,10 +77,7 @@ object Collocations {
         col("c").cast("long").as("n_pair"),
         col("n_w1").cast("long").as("n_w1"),
         col("n_w2").cast("long").as("n_w2"),
-        floor(lit(1e6) * log(
-          (col("c") * col("n") * col("n")).cast("double") /
-            (col("n_w1") * col("n_w2") * col("bt"))))
-          .cast("long").as("pmi_micro"))
+        pmiMicro(col("c"), col("n"), col("n_w1"), col("n_w2"), col("bt")).as("pmi_micro"))
       .orderBy(col("pmi_micro").desc, col("w1"), col("w2"))
       .limit(k)
   }

@@ -75,6 +75,10 @@ object LibraryPlans {
         Similarity.cosineDupPairs(toyEmb(s), threshold = 0.5, dim = 8),
         plan = Seq(calls("graft_cosine"))),
 
+      Query("checkpoint_write", (s, _) =>
+        Checkpoint.toWrite(s.read.parquet(corpus), done = Set(1), nBuckets = 4),
+        plan = Seq(shuffleKey("bucket"))),
+
       Query("checkpoint_bucket_read", (s, _) => {
         val out = Files.createTempDirectory("graft_plans_ck_").toString
         Checkpoint.runResumable(s.read.parquet(corpus), out, 4, "plans")

@@ -207,8 +207,9 @@ object TextStats {
         |SELECT pc.a AS w1, pc.b AS w2, CAST(pc.c AS BIGINT) AS n_pair,
         |  CAST(u1.ca AS BIGINT) AS n_w1, CAST(u2.ca AS BIGINT) AS n_w2,
         |  CAST(floor(1000000.0 * ln(
-        |    CAST(pc.c * tot.n * tot.n AS DOUBLE) /
-        |    (u1.ca * u2.ca * tot.bt))) AS BIGINT) AS pmi_micro
+        |    CAST(pc.c AS DOUBLE) * CAST(tot.n AS DOUBLE) * CAST(tot.n AS DOUBLE) /
+        |    (CAST(u1.ca AS DOUBLE) * CAST(u2.ca AS DOUBLE) * CAST(tot.bt AS DOUBLE))))
+        |    AS BIGINT) AS pmi_micro
         |FROM pc, uni u1, uni u2, tot
         |WHERE pc.b IS NOT NULL AND pc.c >= 3
         |  AND u1.a = pc.a AND u2.a = pc.b

@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,6 +25,19 @@ class CheckpointSpec extends AnyFunSuite {
 
   private val N = 300L
   private val Buckets = 8
+
+  private def listDir(p: Path): Vector[Path] = {
+    val s = Files.list(p)
+    try s.iterator().asScala.toVector finally s.close()
+  }
+
+  private def parquetCount(p: Path): Int =
+    listDir(p).count(_.getFileName.toString.endsWith(".parquet"))
+
+  /** `.parquet` files in each `bucket=k` directory of the data table. */
+  private def filesPerBucket(out: String): Map[String, Int] =
+    listDir(Paths.get(out, "data")).filter(Files.isDirectory(_))
+      .map(d => d.getFileName.toString -> parquetCount(d)).toMap
 
   test("full run commits every bucket with lineage totals that add up") {
     val out = freshDir()
@@ -96,5 +111,42 @@ class CheckpointSpec extends AnyFunSuite {
     Checkpoint.runResumable(corpus, out, Buckets, runId = "r2")
     val n = Checkpoint.output(spark, out).count()
     assert(n == N, s"dynamic overwrite must not duplicate rows, got $n")
+  }
+
+  test("a run commits at most one data file per bucket") {
+    val out = freshDir()
+    val corpus = CorpusGen.generate(spark, N, partitions = 8).toDF()
+    Checkpoint.runResumable(corpus, out, Buckets, runId = "r1")
+    val full = filesPerBucket(out)
+    assert(full.size == Buckets)
+    assert(full.values.forall(_ == 1), s"files per bucket after a full run: $full")
+
+    val lost = Seq(0, 5)
+    lost.foreach(Checkpoint.invalidateBucket(out, _))
+    Checkpoint.runResumable(corpus, out, Buckets, runId = "r2")
+    val resumed = filesPerBucket(out)
+    assert(resumed == full, s"files per bucket after a resume: $resumed")
+    assert(Checkpoint.output(spark, out).count() == N)
+  }
+
+  test("a run over an empty input processes 0 buckets and does not fail") {
+    val out = freshDir()
+    val empty = CorpusGen.generate(spark, N, partitions = 8).toDF().filter(lit(false))
+    val report = Checkpoint.runResumable(empty, out, Buckets, runId = "r1")
+    assert(report.skippedBuckets == 0)
+    assert(report.processedBuckets == 0)
+    assert(report.lineage.isEmpty)
+    assert(Checkpoint.completedBuckets(out).isEmpty)
+  }
+
+  test("_metrics gets one file per run") {
+    val out = freshDir()
+    val corpus = CorpusGen.generate(spark, N, partitions = 8).toDF()
+    Checkpoint.runResumable(corpus, out, Buckets, runId = "r1")
+    Checkpoint.invalidateBucket(out, 3)
+    Checkpoint.runResumable(corpus, out, Buckets, runId = "r2")
+    val n = parquetCount(Paths.get(out, "_metrics"))
+    assert(n == 2, s"_metrics holds $n parquet files after two runs")
+    assert(Checkpoint.metrics(spark, out).count() == Buckets + 1)
   }
 }

@@ -58,4 +58,16 @@ class CollocationsSpec extends AnyFunSuite {
       .collect().toSeq
     assert(a == b && a.nonEmpty)
   }
+
+  test("pmiMicro is right past 3e9 corpus tokens, where long products overflow") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // c·n·n = 1.6e22 passes 2^63; the ratio is just above 4
+    val (c, n, n1, n2, bt) = (1000L, 4000000000L, 1000000L, 1000000L, 3999999999L)
+    val got = Seq((c, n, n1, n2, bt)).toDF("c", "n", "n_w1", "n_w2", "bt")
+      .select(Collocations.pmiMicro(col("c"), col("n"), col("n_w1"), col("n_w2"), col("bt")))
+      .as[Long].head()
+    val ratio = BigDecimal(c) * n * n / (BigDecimal(n1) * n2 * bt)
+    assert(got == math.floor(1e6 * math.log(ratio.toDouble)).toLong)
+  }
 }

@@ -245,6 +245,32 @@ object GraftProps extends Properties("graft") {
       .map(_.mkString("<html><body>", "", "</body></html>"))
   }
 
+  // texts that reach every branch of summarize: bullets and numbered
+  // items (fewer and more than 5, short and long), page breaks, all-caps
+  // and `[`-prefixed sentences, sentences under 5 words, and texts of
+  // fewer than 3 sentences
+  private val summaryText: Gen[String] = {
+    val sentence = Gen.choose(1, 45).flatMap(n => Gen.listOfN(n, Gen.oneOf("the", "main",
+      "result", "important", "data", "2024", "key", "report", "value", "of", "Lorem")))
+      .map(_.mkString(" ").capitalize + ".")
+    val part = Gen.frequency(
+      5 -> sentence,
+      2 -> Gen.zip(Gen.oneOf("- ", "• ", "* ", "-"), sentence).map { case (b, s) => b + s },
+      2 -> Gen.zip(Gen.choose(1, 12), Gen.oneOf(". ", ") ", "] "), sentence)
+        .map { case (i, d, s) => s"$i$d$s" },
+      1 -> Gen.const("--- PAGE BREAK ---"),
+      1 -> sentence.map(_.toUpperCase),
+      1 -> sentence.map("[" + _))
+    val parts = Gen.oneOf(Gen.choose(0, 2).flatMap(Gen.listOfN(_, part)), Gen.listOf(part))
+    parts.flatMap(ps => Gen.listOfN(ps.length, Gen.oneOf(" ", "\n", "\n\n"))
+      .map(seps => ps.zip(seps).map { case (p, s) => p + s }.mkString))
+  }
+
+  property("summarize equals the reference summary loops") =
+    forAll(summaryText) { t =>
+      TextAnalyzer.summarize(t) == graft.analyzers.SummarizeReference.summarize(t)
+    }
+
   property("fused Boilerplate.segment equals the pre-fusion segment") =
     forAll(markup) { html =>
       val dom = DomBuilder.parse(html)
