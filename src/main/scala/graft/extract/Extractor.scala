@@ -437,7 +437,7 @@ object Extractor {
       "Le document ne contient pas de texte exploitable.",
       Nil, "unknown", "unknown", 0L, 0L, 0.0, "uncertain", "poor", "ocr", "2.1")
 
-  private def errorResult(url: String, warcTs: Timestamp, langHint: String,
+  private[extract] def errorResult(url: String, warcTs: Timestamp, langHint: String,
       format: String, hash: String, size: Long, err: String): DocResult =
     DocResult(url, warcTs, langHint, format, hash, size, "error", err,
       "", 0, "", Nil, Nil, "unsigned", "other", Nil, Nil, Nil, Nil,

@@ -6,15 +6,12 @@ import org.apache.spark.sql.functions._
 /** Dataset-level wiring of the extraction engine (SURVEY.md §3.4):
   * one narrow typed mapPartitions stage over the pruned input columns —
   * parse + extract + doc analytics fused, no shuffle until the caller
-  * aggregates. Skew/size handling per SURVEY.md §4.2:
-  *
-  *  - `rebalancePartitions > 0` round-robin-repartitions the scan so
-  *    pathological mega-documents spread across tasks (salting analog
-  *    for a narrow map; keyed salting belongs to the agg stages);
-  *  - per-document size budget: payloads over `oversizeBudgetBytes` are
-  *    tallied as failures (status = "oversize") without parsing, matching
-  *    the reference's per-job failure path (`local_queue.py:359-403`) —
-  *    budgets never truncate the text of in-budget docs (§7.3).
+  * aggregates. Size handling per SURVEY.md §4.2: payloads over
+  * `oversizeBudgetBytes` are tallied as failures (status = "oversize")
+  * without parsing, matching the reference's per-job failure path
+  * (`local_queue.py:359-403`) — budgets never truncate the text of
+  * in-budget docs (§7.3). A caller whose input is skewed by mega-documents
+  * can `repartition(n)` it first.
   */
 object Pipeline {
 
@@ -33,24 +30,18 @@ object Pipeline {
     *   table detector on top of the ruled-grid one (Extractor/E9). */
   def run(input: DataFrame,
       oversizeBudgetBytes: Long = DefaultOversizeBudget,
-      rebalancePartitions: Int = 0,
       analysis: Boolean = true,
       unruledTables: Boolean = false): Dataset[DocResult] = {
     val spark = input.sparkSession
     import spark.implicits._
     val pruned = input.select(col("url"), col("warc_ts"), col("html"), col("lang"))
-    val balanced =
-      if (rebalancePartitions > 0) pruned.repartition(rebalancePartitions)
-      else pruned
-    balanced.as[InputRow].mapPartitions { rows =>
+    pruned.as[InputRow].mapPartitions { rows =>
       rows.map { r =>
         val size = if (r.html == null) 0L else r.html.length.toLong
         if (size > oversizeBudgetBytes)
-          DocResult(r.url, r.warc_ts, r.lang, "unknown", "", size,
-            "oversize", s"payload $size bytes exceeds budget $oversizeBudgetBytes",
-            "", 0, "", Nil, Nil, "unsigned", "other", Nil, Nil, Nil, Nil,
-            "", "", Nil, "unknown", "unknown", 0L, 0L, 0.0, "uncertain",
-            "poor", "ocr", "2.1")
+          Extractor.errorResult(r.url, r.warc_ts, r.lang, "unknown", "", size,
+            s"payload $size bytes exceeds budget $oversizeBudgetBytes")
+            .copy(status = "oversize")
         else Extractor.extract(r.url, r.warc_ts, r.html, r.lang, analysis,
           unruledTables)
       }

@@ -22,23 +22,6 @@ import org.apache.spark.sql.functions.col
   */
 object Anchors {
 
-  private def collapseWs(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var inWs = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (Character.isWhitespace(c)) inWs = true
-      else {
-        if (inWs && sb.nonEmpty) sb.append(' ')
-        inWs = false
-        sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
-
   /** All (href, anchor_text) pairs in document order. */
   def extract(html: String): List[(String, String)] = {
     val out = List.newBuilder[(String, String)]

@@ -29,23 +29,6 @@ object Meta {
     baseHref: String, charset: String, ogTitle: String,
     noindex: Boolean, nofollow: Boolean, nAlternates: Int)
 
-  private def collapseWs(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var inWs = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (Character.isWhitespace(c)) inWs = true
-      else {
-        if (inWs && sb.nonEmpty) sb.append(' ')
-        inWs = false
-        sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
-
   private def attr(attrs: List[(String, String)], name: String): String =
     attrs.collectFirst { case (k, v) if k == name => v }.getOrElse("")
 

@@ -28,23 +28,6 @@ object Outline {
   private val levelOf = Map("h1" -> 1, "h2" -> 2, "h3" -> 3,
     "h4" -> 4, "h5" -> 5, "h6" -> 6)
 
-  private def collapseWs(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var inWs = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (Character.isWhitespace(c)) inWs = true
-      else {
-        if (inWs && sb.nonEmpty) sb.append(' ')
-        inWs = false
-        sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
-
   /** (level, sectionNumber, text) per heading, document order. */
   def headings(html: String): Vector[(Int, String, String)] = {
     import HtmlTokenizer._

@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.extract.Pipeline
@@ -168,9 +168,12 @@ object Checkpoint {
     ResumeReport(runId, nBuckets, done.size, lineage.size, lineage)
   }
 
-  /** The per-partition lineage/metrics table (append-only across runs). */
+  /** The per-partition lineage/metrics table (append-only across runs),
+    * read with the schema it is written with, so no footer is read to
+    * infer one. */
   def metrics(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(metricsDir(outDir))
+    spark.read.schema(Encoders.product[BucketLineage].schema)
+      .parquet(metricsDir(outDir))
 
   /** The committed output table. */
   def output(spark: SparkSession, outDir: String): DataFrame =

@@ -2,15 +2,18 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Redirect-chain resolution by POINTER DOUBLING — the classic
   * parallel list-ranking trick (Wyllie 1979): each round joins the
   * pointer table with itself, so after r rounds every source sees the
   * node 2^r hops ahead (or its terminal, wherever reached first).
-  * Chains up to 2^rounds resolve in `rounds` self-joins — log-depth,
-  * where the naive walk would need one join PER HOP over the whole
-  * table (64-hop chains: 6 joins instead of 64).
+  * Chains resolve in log-depth self-joins, where the naive walk would
+  * need one join PER HOP over the whole table (64-hop chains: 6 joins
+  * instead of 64).
+  *
+  * Each source keeps one out-edge, its smallest `dst`, so a chain is
+  * never longer than the edge count n: ⌈log₂ n⌉ rounds resolve every
+  * chain, and the rounds stop early once no pointer has an out-edge left.
   *
   * Cycles (including self-loops) never reach a terminal; after the
   * doubling rounds any source whose pointer still has an out-edge is
@@ -18,31 +21,35 @@ import org.apache.spark.storage.StorageLevel
   * signal to drop the redirect family as a trap.
   *
   * Scale shape: the edge table is redirect-cardinality (a small slice
-  * of the corpus), persisted once; every round is one equi-join +
-  * coalesce projection on it. Deterministic: hops accumulate exactly
-  * the chain length for resolved sources.
+  * of the corpus); every round is one equi-join + coalesce projection,
+  * checkpointed so the plan stays one join deep. Deterministic: hops
+  * accumulate exactly the chain length for resolved sources.
   */
 object Redirects {
 
-  /** (src, final_dst, hops, resolved) for every redirect source.
-    * Resolves chains up to 2^doublingRounds hops. */
-  def resolve(edgesIn: DataFrame, doublingRounds: Int = 6): DataFrame = {
-    require(doublingRounds >= 1 && doublingRounds <= 20)
+  /** (src, final_dst, hops, resolved) for every redirect source. */
+  def resolve(edgesIn: DataFrame): DataFrame = {
     val edges = edgesIn.select(col("src").cast("string"),
         col("dst").cast("string"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("src")).agg(min(col("dst")).as("dst"))
+      .localCheckpoint()
+    val outSrcs = edges.select(col("src").as("dst"))
+    // ⌈log₂ n⌉ doublings: 2^rounds hops cover the longest possible chain
+    var rounds = 64 - java.lang.Long.numberOfLeadingZeros(math.max(edges.count() - 1, 0L))
     var f = edges.withColumn("hops", lit(1L))
-    for (_ <- 1 to doublingRounds) {
+    while (rounds > 0 && !f.join(outSrcs, Seq("dst"), "left_semi").isEmpty) {
       val g = f.select(col("src").as("_gs"), col("dst").as("_gd"),
         col("hops").as("_gh"))
+      // localCheckpoint: `f` joins a projection of itself, so without it
+      // the plan doubles every round
       f = f.join(g, col("dst") === col("_gs"), "left")
         .select(col("src"),
           coalesce(col("_gd"), col("dst")).as("dst"),
           (col("hops") + coalesce(col("_gh"), lit(0L))).as("hops"))
+        .localCheckpoint()
+      rounds -= 1
     }
-    val outSrcs = edges.select(col("src").as("dst")).distinct()
-      .withColumn("_has_out", lit(true))
-    f.join(outSrcs, Seq("dst"), "left")
+    f.join(outSrcs.withColumn("_has_out", lit(true)), Seq("dst"), "left")
       .select(col("src"),
         when(col("_has_out").isNotNull, lit(null).cast("string"))
           .otherwise(col("dst")).as("final_dst"),

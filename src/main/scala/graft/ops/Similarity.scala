@@ -106,11 +106,32 @@ object Similarity {
         }
       }
       .toDF("query_id", "neighbor_id", "cos")
+    rankTopK(partial, k)
+  }
+
+  /** The top `k` of scored (query_id, neighbor_id, cos) rows per query,
+    * ranked by cos DESC then neighbor_id ASC: (query_id, neighbor_id,
+    * cos, rank). */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    partial
-      .withColumn("rank", row_number().over(w))
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
+  }
+
+  /** Exact re-rank behind the bucketed ANN paths: corpus rows
+    * (neighbor_id, emb_n, key) meet the broadcast query rows (query_id,
+    * emb_q, key) that share a `key` value, are scored by cosine, and the
+    * top `k` distinct neighbours per query are kept. Scoring comes before
+    * the dedup so the dedup shuffle carries scalars, not embedding
+    * vectors (and hash-aggregates instead of sort-aggregating). */
+  private def rerankTopK(corpus: DataFrame, queries: DataFrame, key: String,
+      k: Int): DataFrame = {
+    val cands = corpus.join(broadcast(queries), Seq(key))
+      .filter(col("query_id") =!= col("neighbor_id"))
+    rankTopK(cands.withColumn("cos", nativeCos(cands, "emb_q", "emb_n"))
+      .select(col("query_id"), col("neighbor_id"), col("cos"))
+      .dropDuplicates("query_id", "neighbor_id"), k)
   }
 
   /** Deterministic random hyperplanes: nPlanes x dim sign matrix. */
@@ -120,8 +141,7 @@ object Similarity {
   }
 
   /** Sign-of-dot-product bucket keys for one embedding across all hash
-    * tables — the single implementation behind both lshTopK and
-    * cosineDupPairs. */
+    * tables. */
   private def signBuckets(planes: Seq[Array[Array[Float]]],
       emb: Seq[Float]): Seq[(Int, Int)] = {
     planes.indices.map { t =>
@@ -138,6 +158,21 @@ object Similarity {
     }
   }
 
+  /** One exploded (table, key) row per LSH bucket of an embedding
+    * column, over `tables` seeded sets of `nPlanes` random hyperplanes
+    * broadcast once per call: the vector's own bucket per table, plus
+    * its hamming-1 neighbours when `multiProbe` ≥ 1 ([[probeBuckets]]).
+    * Every bucket column one call returns uses the same planes. */
+  private def lshBuckets(df: DataFrame, nPlanes: Int, tables: Int,
+      dim: Int): (Column, Int) => Column = {
+    val planes = (0 until tables).map(t => hyperplanes(nPlanes, dim, 42L + t))
+    val bPlanes = df.sparkSession.sparkContext.broadcast(planes)
+    val bucketUdf = udf { (emb: Seq[Float], multiProbe: Int) =>
+      probeBuckets(bPlanes.value, emb, multiProbe)
+    }
+    (emb, multiProbe) => explode(bucketUdf(emb, lit(multiProbe)))
+  }
+
   /** Embedding-cosine near-duplicate pairs: random-hyperplane LSH buckets
     * generate candidates (vectors agreeing on all nPlanes signs in ≥1 of
     * `tables` tables), exact cosine verifies. The self-join runs on
@@ -146,17 +181,11 @@ object Similarity {
   def cosineDupPairs(embeddings: DataFrame, threshold: Double = 0.95,
       nPlanes: Int = 12, tables: Int = 4, dim: Int = 64,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val spark = embeddings.sparkSession
-    val planes = (0 until tables).map(t => hyperplanes(nPlanes, dim, 42L + t))
-    val bPlanes = spark.sparkContext.broadcast(planes)
-    val bucketUdf = udf { (emb: Seq[Float]) => signBuckets(bPlanes.value, emb) }
+    val buckets = lshBuckets(embeddings, nPlanes, tables, dim)
     val bucketed = embeddings
       .select(col(idCol).as("id"), col(embCol).as("emb"))
-      .withColumn("bucket", explode(bucketUdf(col("emb"))))
-    val a = bucketed.select(col("bucket"), col("id").as("id_a"), col("emb").as("emb_a"))
-    val b = bucketed.select(col("bucket"), col("id").as("id_b"), col("emb").as("emb_b"))
-    val joined = a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
+      .withColumn("bucket", buckets(col("emb"), 0))
+    val joined = Dedup.candidatePairs(bucketed, Seq("bucket"), "emb")
     // verify + threshold BEFORE the cross-table dedup: pairs colliding in
     // k tables recompute the O(dim) codegen cosine k times (k ≤ tables),
     // but the dedup shuffle then carries (id, id, cos) rows instead of
@@ -270,17 +299,7 @@ object Similarity {
       .select(col(idCol).as("query_id"), col(embCol).as("emb_q"))
       .withColumn("centroid", explode(probeUdf(col("emb_q"))))
 
-    val cands = corpus.join(broadcast(qs), Seq("centroid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-    // score before the dedup so the dedup shuffle carries scalars, not
-    // embedding vectors (and hash-aggregates instead of sort-aggregating)
-    val scored = cands.withColumn("cos", nativeCos(cands, "emb_q", "emb_n"))
-      .select(col("query_id"), col("neighbor_id"), col("cos"))
-      .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
+    rerankTopK(corpus, qs, "centroid", k)
   }
 
   /** Query-side multi-probe keys: the query's own bucket per table plus
@@ -319,30 +338,13 @@ object Similarity {
   def lshTopK(embeddings: DataFrame, queries: DataFrame, k: Int,
       nPlanes: Int = 8, tables: Int = 8, dim: Int = 64, multiProbe: Int = 1,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val spark = embeddings.sparkSession
-    val planes = (0 until tables).map(t => hyperplanes(nPlanes, dim, 42L + t))
-    val bPlanes = spark.sparkContext.broadcast(planes)
-    def bucketUdf = udf { (emb: Seq[Float]) => signBuckets(bPlanes.value, emb) }
-    def probeUdf = udf { (emb: Seq[Float]) =>
-      probeBuckets(bPlanes.value, emb, multiProbe)
-    }
-
+    val buckets = lshBuckets(embeddings, nPlanes, tables, dim)
     val corpus = embeddings
       .select(col(idCol).as("neighbor_id"), col(embCol).as("emb_n"))
-      .withColumn("bucket", explode(bucketUdf(col("emb_n"))))
+      .withColumn("bucket", buckets(col("emb_n"), 0))
     val qs = queries
       .select(col(idCol).as("query_id"), col(embCol).as("emb_q"))
-      .withColumn("bucket", explode(probeUdf(col("emb_q"))))
-
-    val cands = corpus.join(broadcast(qs), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-    // as in ivfTopK: score first, dedup scalars
-    val scored = cands.withColumn("cos", nativeCos(cands, "emb_q", "emb_n"))
-      .select(col("query_id"), col("neighbor_id"), col("cos"))
-      .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
+      .withColumn("bucket", buckets(col("emb_q"), multiProbe))
+    rerankTopK(corpus, qs, "bucket", k)
   }
 }

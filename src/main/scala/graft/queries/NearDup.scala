@@ -64,12 +64,12 @@ object NearDup {
             size(array_union(col("toks_a"), col("toks_b"))), 4))
         .filter(col("jaccard") >= 0.9)
         .select(col("id_a"), col("id_b"))
-      Dedup.components(pairs, rounds = 20)
+      Dedup.components(pairs)
         .orderBy(col("id"))
     },
       // min reachable id per node == connected component: the recursive
       // CTE's UNION-dedup fixpoint is the ground-truth transitive closure
-      // the Spark side's bounded min-label propagation must agree with
+      // the Spark side's hooking-and-shortcutting fixpoint must agree with
       oracle = Some("""WITH RECURSIVE d AS (
         | SELECT doc_id, list_distinct(string_split(lower(text), ' ')) AS toks
         | FROM documents WHERE doc_id < 200),

@@ -10,9 +10,9 @@ class RedirectsSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
 
-  private def resolve(edges: Seq[(String, String)], rounds: Int = 6) = {
+  private def resolve(edges: Seq[(String, String)]) = {
     import spark.implicits._
-    Redirects.resolve(edges.toDF("src", "dst"), rounds)
+    Redirects.resolve(edges.toDF("src", "dst"))
       .as[(String, Option[String], Option[Long], Boolean)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
   }
@@ -29,6 +29,21 @@ class RedirectsSpec extends AnyFunSuite {
     val got = resolve(chain)
     assert(got("n0") == ((Some("n64"), Some(64L), true)))
     assert(got("n63") == ((Some("n64"), Some(1L), true)))
+  }
+
+  test("a 100-hop chain resolves: the round count follows the edge count") {
+    val chain = (0 until 100).map(i => (s"n$i", s"n${i + 1}"))
+    val got = resolve(chain)
+    assert(got("n0") == ((Some("n100"), Some(100L), true)))
+    assert(got("n99") == ((Some("n100"), Some(1L), true)))
+  }
+
+  test("duplicate out-edges keep one edge per source, the smallest dst") {
+    import spark.implicits._
+    val rows = Redirects.resolve(Seq(("a", "b"), ("a", "c"), ("c", "end"))
+        .toDF("src", "dst"))
+      .as[(String, Option[String], Option[Long], Boolean)].collect()
+    assert(rows.filter(_._1 == "a").toSeq == Seq(("a", Some("b"), Some(1L), true)))
   }
 
   test("cycles and self-loops report unresolved with NULLs") {

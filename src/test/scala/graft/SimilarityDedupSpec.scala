@@ -161,6 +161,14 @@ class SimilarityDedupSpec extends AnyFunSuite {
     assert(got == want, s"components mismatch: $got")
   }
 
+  test("components labels a 1,000-node path with shuffled ids by its minimum") {
+    val ids = new scala.util.Random(7).shuffle((0L until 1000L).toVector)
+    val pairs = ids.zip(ids.tail).toDF("id_a", "id_b")
+    val got = Dedup.components(pairs).as[(Long, Long)].collect()
+    assert(got.length == 1000)
+    assert(got.map(_._2).distinct.toSeq == Seq(0L))
+  }
+
   test("shingleJaccardExact: hash-free metric, python-split semantics, edge cases") {
     assert(Dedup.shingleJaccardExact("", "", 3) == 1.0)
     assert(Dedup.shingleJaccardExact("a b c d", "", 3) == 0.0)

@@ -68,6 +68,16 @@ class SparkEntrySpec extends AnyFunSuite {
     val statuses = out.groupBy(col("status")).count().as[(String, Long)].collect().toMap
     assert(statuses.getOrElse("oversize", 0L) > 0, s"statuses=$statuses")
     assert(statuses.getOrElse("ok", 0L) > 0)
+    // the oversize row is exactly this literal, field by field
+    val got = out.filter(col("status") === "oversize").head()
+    val want = graft.extract.DocResult(got.url, got.warcTs, got.lang, "unknown",
+      "", got.sizeBytes, "oversize",
+      s"payload ${got.sizeBytes} bytes exceeds budget 10000",
+      "", 0, "", Nil, Nil, "unsigned", "other", Nil, Nil, Nil, Nil,
+      "", "", Nil, "unknown", "unknown", 0L, 0L, 0.0, "uncertain",
+      "poor", "ocr", "2.1")
+    got.productElementNames.zip(got.productIterator.zip(want.productIterator))
+      .foreach { case (name, (g, w)) => assert(g == w, s"field $name") }
   }
 
   test("minhash finds the jittered near-duplicates") {
