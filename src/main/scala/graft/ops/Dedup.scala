@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -329,16 +329,19 @@ object Dedup {
 
   // --------------------------------------------- clusters & canonicals
 
-  /** Connected components over near-duplicate pairs by hooking and
-    * shortcutting (Shiloach & Vishkin 1982), run until the labels stop
-    * changing. Each round every node and the owner of its label (the
-    * node whose id the label is) take the smallest label around the
-    * node, then every label jumps to its owner's label. Labels only
-    * decrease and always name a node of the same component, so the
-    * fixpoint is the component minimum, reached in rounds logarithmic in
-    * the chain length (a path of 1,000 nodes with shuffled ids: 9;
-    * 100,000 nodes: 16). Each round is DataFrame joins and aggregates,
-    * no driver-side graph. Returns (id, component). */
+  /** Connected components over near-duplicate pairs by min-label
+    * propagation with root hooking and shortcutting, run until no node
+    * sees a neighbour label below its own. Each round every node finds
+    * the smallest label m among itself and its neighbours; the node and
+    * the owner of its label (the node whose id the label is) both take m,
+    * then every label jumps to its owner's label. Labels only decrease and
+    * always name a node of the same component, so the fixpoint is the
+    * component minimum. No bound on the round count is claimed; measured
+    * on paths with shuffled ids it is 9 rounds for 1,000 nodes and 16 for
+    * 100,000, where min-label propagation alone needs one round per hop.
+    * The fixpoint test is a metric observed on the neighbour aggregate,
+    * so the last round ends after that aggregate and no round runs a
+    * separate convergence job. Returns (id, component). */
   def components(pairs: DataFrame): DataFrame = {
     // localCheckpoint (not just persist): iterative self-joins otherwise
     // grow the logical plan superlinearly and analysis time explodes
@@ -350,30 +353,31 @@ object Dedup {
     var labels = edges.select(col("id_a").as("id")).distinct()
       .withColumn("component", col("id"))
       .localCheckpoint()
-    var prevSum = Option.empty[java.math.BigDecimal]
+    // a self-edge per node lets the neighbour aggregate read the node's
+    // own label too
+    val withSelf = edges.union(labels.select(col("id").as("id_a"), col("id").as("id_b")))
     var converged = false
     while (!converged) {
-      val hook = edges
+      val below = Observation()
+      val hook = withSelf
         .join(labels.select(col("id").as("id_b"), col("component").as("nbr")), "id_b")
-        .groupBy(col("id_a").as("id"))
-        .agg(min(col("nbr")).as("nbrMin"))
-        .join(labels, "id")
-        .select(col("id"), col("component"),
-          least(col("component"), col("nbrMin")).as("m"))
-      val hooked = hook.select(col("id"), col("m"))
-        .union(hook.select(col("component").as("id"), col("m")))
-        .groupBy(col("id"))
-        .agg(min(col("m")).as("component"))
-      labels = hooked
-        .join(hooked.select(col("id").as("component"), col("component").as("root")),
-          "component")
-        .select(col("id"), col("root").as("component"))
+        .groupBy(col("id_a"))
+        .agg(min(col("nbr")).as("m"),
+          min(when(col("id_a") === col("id_b"), col("nbr"))).as("component"))
+        .observe(below, count_if(col("m") < col("component")).as("n"))
         .localCheckpoint()
-      // per-node labels only ever decrease, so an unchanged sum means
-      // an unchanged labelling: the fixpoint
-      val s = labels.agg(sum(col("component")).cast("decimal(38,0)")).head.getDecimal(0)
-      converged = prevSum.contains(s)
-      prevSum = Some(s)
+      converged = below.get("n") == 0L
+      if (!converged) {
+        val hooked = hook
+          .select(explode(array(col("id_a"), col("component"))).as("id"), col("m"))
+          .groupBy(col("id"))
+          .agg(min(col("m")).as("component"))
+        labels = hooked
+          .join(hooked.select(col("id").as("component"), col("component").as("root")),
+            "component")
+          .select(col("id"), col("root").as("component"))
+          .localCheckpoint()
+      }
     }
     labels
   }

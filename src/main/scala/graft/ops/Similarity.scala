@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -158,20 +159,13 @@ object Similarity {
     }
   }
 
-  /** One exploded (table, key) row per LSH bucket of an embedding
-    * column, over `tables` seeded sets of `nPlanes` random hyperplanes
-    * broadcast once per call: the vector's own bucket per table, plus
-    * its hamming-1 neighbours when `multiProbe` ≥ 1 ([[probeBuckets]]).
-    * Every bucket column one call returns uses the same planes. */
-  private def lshBuckets(df: DataFrame, nPlanes: Int, tables: Int,
-      dim: Int): (Column, Int) => Column = {
-    val planes = (0 until tables).map(t => hyperplanes(nPlanes, dim, 42L + t))
-    val bPlanes = df.sparkSession.sparkContext.broadcast(planes)
-    val bucketUdf = udf { (emb: Seq[Float], multiProbe: Int) =>
-      probeBuckets(bPlanes.value, emb, multiProbe)
-    }
-    (emb, multiProbe) => explode(bucketUdf(emb, lit(multiProbe)))
-  }
+  /** `tables` seeded sets of `nPlanes` random hyperplanes, built and
+    * broadcast once per call and shared by its corpus and query bucket
+    * UDFs. */
+  private def lshPlanes(spark: SparkSession, nPlanes: Int, tables: Int,
+      dim: Int): Broadcast[Seq[Array[Array[Float]]]] =
+    spark.sparkContext.broadcast(
+      (0 until tables).map(t => hyperplanes(nPlanes, dim, 42L + t)))
 
   /** Embedding-cosine near-duplicate pairs: random-hyperplane LSH buckets
     * generate candidates (vectors agreeing on all nPlanes signs in ≥1 of
@@ -181,10 +175,11 @@ object Similarity {
   def cosineDupPairs(embeddings: DataFrame, threshold: Double = 0.95,
       nPlanes: Int = 12, tables: Int = 4, dim: Int = 64,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val buckets = lshBuckets(embeddings, nPlanes, tables, dim)
+    val planes = lshPlanes(embeddings.sparkSession, nPlanes, tables, dim)
+    val bucketUdf = udf { (emb: Seq[Float]) => signBuckets(planes.value, emb) }
     val bucketed = embeddings
       .select(col(idCol).as("id"), col(embCol).as("emb"))
-      .withColumn("bucket", buckets(col("emb"), 0))
+      .withColumn("bucket", explode(bucketUdf(col("emb"))))
     val joined = Dedup.candidatePairs(bucketed, Seq("bucket"), "emb")
     // verify + threshold BEFORE the cross-table dedup: pairs colliding in
     // k tables recompute the O(dim) codegen cosine k times (k ≤ tables),
@@ -338,13 +333,17 @@ object Similarity {
   def lshTopK(embeddings: DataFrame, queries: DataFrame, k: Int,
       nPlanes: Int = 8, tables: Int = 8, dim: Int = 64, multiProbe: Int = 1,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val buckets = lshBuckets(embeddings, nPlanes, tables, dim)
+    val planes = lshPlanes(embeddings.sparkSession, nPlanes, tables, dim)
+    val bucketUdf = udf { (emb: Seq[Float]) => signBuckets(planes.value, emb) }
+    val probeUdf = udf { (emb: Seq[Float]) =>
+      probeBuckets(planes.value, emb, multiProbe)
+    }
     val corpus = embeddings
       .select(col(idCol).as("neighbor_id"), col(embCol).as("emb_n"))
-      .withColumn("bucket", buckets(col("emb_n"), 0))
+      .withColumn("bucket", explode(bucketUdf(col("emb_n"))))
     val qs = queries
       .select(col(idCol).as("query_id"), col(embCol).as("emb_q"))
-      .withColumn("bucket", buckets(col("emb_q"), multiProbe))
+      .withColumn("bucket", explode(probeUdf(col("emb_q"))))
     rerankTopK(corpus, qs, "bucket", k)
   }
 }

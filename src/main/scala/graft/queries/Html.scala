@@ -565,8 +565,8 @@ object Html {
     // pointer-doubling resolution: 4-page article groups chain
     // p0->p1->p2->p3 (terminal), group 0's last page links back to
     // its first (gallery-trap cycle -> unresolved). The oracle
-    // derives the same edges and resolves them with the hop-capped
-    // recursive CTE.
+    // derives the same edges and resolves them with a recursive CTE
+    // walk bounded by the edge count.
     Query("pagination_chains", (s, dir) => {
       import s.implicits._
       val pages = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -602,7 +602,8 @@ object Html {
         |  SELECT src, dst, 1 AS hops FROM e
         |  UNION ALL
         |  SELECT w.src, e.dst, w.hops + 1
-        |  FROM walk w JOIN e ON w.dst = e.src WHERE w.hops < 64),
+        |  FROM walk w JOIN e ON w.dst = e.src
+        |  WHERE w.hops < (SELECT count(*) FROM e)),
         |term AS (
         |  SELECT w.src, w.dst, w.hops FROM walk w
         |  WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.src = w.dst))
