@@ -50,17 +50,10 @@ object Anchors {
 
   /** Explodes each row into (id, href, anchor_text) rows — one typed
     * flatMap, map-only. */
-  def anchorRows(df: DataFrame, idCol: String, htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .flatMap { case (id, html) =>
-        extract(Option(html).getOrElse(""))
-          .map { case (h, t) => (id, h, t) }
-      }
-      .toDF(idCol, "href", "anchor_text")
-  }
+  def anchorRows(df: DataFrame, idCol: String, htmlCol: String): DataFrame =
+    pageRows(df, idCol, htmlCol) { (id, html) =>
+      extract(Option(html).getOrElse("")).map { case (h, t) => (id, h, t) }
+    }.toDF(idCol, "href", "anchor_text")
 
   private def hostOf(url: String): String = {
     val at = url.indexOf("://")

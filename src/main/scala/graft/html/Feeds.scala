@@ -1,7 +1,6 @@
 package graft.html
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** RSS 2.0 / Atom feed parsing for crawl discovery — the other half of
   * the discovery pair with `html.Sitemap`: feeds carry the NEW urls of
@@ -100,15 +99,9 @@ object Feeds {
   /** One row per feed item: (idCol, kind, item_idx, title, link,
     * item_date) — one typed flatMap, map-only; non-feed documents
     * emit no row. */
-  def itemRows(df: DataFrame, idCol: String, xmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(xmlCol).cast("string"))
-      .as[(Long, String)]
-      .flatMap { case (id, x) =>
-        items(x).map(it =>
-          (id, it.kind, it.itemIdx.toLong, it.title, it.link, it.date))
-      }
-      .toDF(idCol, "kind", "item_idx", "title", "link", "item_date")
-  }
+  def itemRows(df: DataFrame, idCol: String, xmlCol: String): DataFrame =
+    pageRows(df, idCol, xmlCol) { (id, x) =>
+      items(x).map(it =>
+        (id, it.kind, it.itemIdx.toLong, it.title, it.link, it.date))
+    }.toDF(idCol, "kind", "item_idx", "title", "link", "item_date")
 }

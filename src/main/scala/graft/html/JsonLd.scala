@@ -46,16 +46,10 @@ object JsonLd {
 
   /** One row per ld+json block: (idCol, block_idx, blob) — one typed
     * flatMap, map-only; documents without a block emit no row. */
-  def blockRows(df: DataFrame, idCol: String, htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .flatMap { case (id, h) =>
-        blocks(h).zipWithIndex.map { case (b, i) => (id, i.toLong, b) }
-      }
-      .toDF(idCol, "block_idx", "blob")
-  }
+  def blockRows(df: DataFrame, idCol: String, htmlCol: String): DataFrame =
+    pageRows(df, idCol, htmlCol) { (id, h) =>
+      blocks(h).zipWithIndex.map { case (b, i) => (id, i.toLong, b) }
+    }.toDF(idCol, "block_idx", "blob")
 
   /** Blocks + the article fields as codegen JSON-path projections:
     * `@type`, headline, datePublished, author.name — NULL when the

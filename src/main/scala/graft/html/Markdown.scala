@@ -1,7 +1,6 @@
 package graft.html
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** HTML → Markdown rendering over the error-tolerant DOM — the text
   * format modern LLM-corpus pipelines emit for web pages (structure
@@ -195,15 +194,10 @@ object Markdown {
     renderChildren(DomBuilder.parse(Option(html).getOrElse("")).children)
       .mkString("\n\n")
 
-  /** One row per document: (idCol, markdown) — one typed map,
+  /** One row per document: (idCol, markdown) — one typed stage,
     * map-only. */
   def markdownRows(df: DataFrame, idCol: String,
-                   htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .map { case (id, h) => (id, render(h)) }
+                   htmlCol: String): DataFrame =
+    pageRows(df, idCol, htmlCol)((id, h) => Some((id, render(h))))
       .toDF(idCol, "markdown")
-  }
 }

@@ -1,7 +1,6 @@
 package graft.html
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Head-metadata extraction from real HTML via the streaming tokenizer
   * — the page-level fields a web corpus indexes next to the extracted
@@ -132,16 +131,10 @@ object Meta {
   /** One row per document WITH a valid refresh: (idCol, delay_sec,
     * target_url) — one typed flatMap, map-only. */
   def refreshRows(df: DataFrame, idCol: String,
-                  htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .flatMap { case (id, h) =>
-        metaRefresh(h).map { case (d, u) => (id, d, u) }
-      }
-      .toDF(idCol, "delay_sec", "target_url")
-  }
+                  htmlCol: String): DataFrame =
+    pageRows(df, idCol, htmlCol) { (id, h) =>
+      metaRefresh(h).map { case (d, u) => (id, d, u) }
+    }.toDF(idCol, "delay_sec", "target_url")
 
   /** `<link rel="alternate" hreflang=… href=…>` pairs in document
     * order — the multilingual cluster map (one page's translations),
@@ -184,32 +177,18 @@ object Meta {
   /** One row per alternate: (idCol, alt_idx, hreflang, href) — one
     * typed flatMap, map-only. */
   def alternateRows(df: DataFrame, idCol: String,
-                    htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .flatMap { case (id, h) =>
-        alternates(h).zipWithIndex.map { case ((l, u), i) =>
-          (id, i.toLong, l, u)
-        }
-      }
-      .toDF(idCol, "alt_idx", "hreflang", "href")
-  }
+                    htmlCol: String): DataFrame =
+    pageRows(df, idCol, htmlCol) { (id, h) =>
+      alternates(h).zipWithIndex.map { case ((l, u), i) => (id, i.toLong, l, u) }
+    }.toDF(idCol, "alt_idx", "hreflang", "href")
 
   /** One row per document: the PageMeta fields as columns — one typed
-    * map, map-only. */
-  def metaRows(df: DataFrame, idCol: String, htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .map { case (id, h) =>
-        val m = extract(Option(h).getOrElse(""))
-        (id, m.title, m.description, m.canonical, m.baseHref, m.charset,
-          m.ogTitle, m.noindex, m.nofollow, m.nAlternates)
-      }
-      .toDF(idCol, "title", "description", "canonical", "base_href",
-        "charset", "og_title", "noindex", "nofollow", "n_alternates")
-  }
+    * stage, map-only. */
+  def metaRows(df: DataFrame, idCol: String, htmlCol: String): DataFrame =
+    pageRows(df, idCol, htmlCol) { (id, h) =>
+      val m = extract(Option(h).getOrElse(""))
+      Some((id, m.title, m.description, m.canonical, m.baseHref, m.charset,
+        m.ogTitle, m.noindex, m.nofollow, m.nAlternates))
+    }.toDF(idCol, "title", "description", "canonical", "base_href",
+      "charset", "og_title", "noindex", "nofollow", "n_alternates")
 }

@@ -1,7 +1,6 @@
 package graft.html
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Document outline extraction — the h1-h6 heading hierarchy with
   * computed section numbers, the structure signal layout-aware
@@ -59,16 +58,10 @@ object Outline {
   /** One row per heading: (idCol, heading_idx, level, section, text)
     * — one typed flatMap, map-only. */
   def headingRows(df: DataFrame, idCol: String,
-                  htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .flatMap { case (id, h) =>
-        headings(h).zipWithIndex.map { case ((l, num, txt), i) =>
-          (id, i.toLong, l.toLong, num, txt)
-        }
+                  htmlCol: String): DataFrame =
+    pageRows(df, idCol, htmlCol) { (id, h) =>
+      headings(h).zipWithIndex.map { case ((l, num, txt), i) =>
+        (id, i.toLong, l.toLong, num, txt)
       }
-      .toDF(idCol, "heading_idx", "level", "section", "heading_text")
-  }
+    }.toDF(idCol, "heading_idx", "level", "section", "heading_text")
 }

@@ -1,7 +1,6 @@
 package graft.html
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Sitemap parsing (sitemaps.org XML protocol) via the streaming
   * tokenizer — crawl discovery: the per-host list of fetchable URLs
@@ -76,15 +75,9 @@ object Sitemap {
 
   /** Explodes each row into (id, kind, loc, lastmod, changefreq,
     * priority) — one typed flatMap, map-only. */
-  def entryRows(df: DataFrame, idCol: String, xmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(xmlCol).cast("string"))
-      .as[(Long, String)]
-      .flatMap { case (id, xml) =>
-        parse(Option(xml).getOrElse("")).map(e =>
-          (id, e.kind, e.loc, e.lastmod, e.changefreq, e.priority))
-      }
-      .toDF(idCol, "kind", "loc", "lastmod", "changefreq", "priority")
-  }
+  def entryRows(df: DataFrame, idCol: String, xmlCol: String): DataFrame =
+    pageRows(df, idCol, xmlCol) { (id, xml) =>
+      parse(Option(xml).getOrElse("")).map(e =>
+        (id, e.kind, e.loc, e.lastmod, e.changefreq, e.priority))
+    }.toDF(idCol, "kind", "loc", "lastmod", "changefreq", "priority")
 }

@@ -1,7 +1,6 @@
 package graft.html
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** DOM template fingerprinting — pages generated by the same CMS
   * template share their tag STRUCTURE while differing in text and
@@ -51,21 +50,15 @@ object Template {
     h
   }
 
-  /** (id, template_hash, n_tags) — one typed map, map-only. */
+  /** (id, template_hash, n_tags) — one typed stage, map-only. */
   def templateRows(df: DataFrame, idCol: String,
-                   htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .map { case (id, h) =>
-        val s = Option(h).getOrElse("")
-        val nTags = HtmlTokenizer.tokenize(s).count {
-          case HtmlTokenizer.StartTag(_, _, _) => true
-          case _ => false
-        }
-        (id, fingerprint(s), nTags.toLong)
+                   htmlCol: String): DataFrame =
+    pageRows(df, idCol, htmlCol) { (id, h) =>
+      val s = Option(h).getOrElse("")
+      val nTags = HtmlTokenizer.tokenize(s).count {
+        case HtmlTokenizer.StartTag(_, _, _) => true
+        case _ => false
       }
-      .toDF(idCol, "template_hash", "n_tags")
-  }
+      Some((id, fingerprint(s), nTags.toLong))
+    }.toDF(idCol, "template_hash", "n_tags")
 }

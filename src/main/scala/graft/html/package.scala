@@ -1,6 +1,20 @@
 package graft
 
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.functions.col
+
 package object html {
+
+  /** The per-page row stage behind the parsers' `*Rows` wrappers: reads
+    * `(idCol as long, srcCol as string)` and emits `f`'s rows — one typed
+    * flatMap, map-only. A null page reaches `f` as null. */
+  private[graft] def pageRows[T <: Product : TypeTag](df: DataFrame, idCol: String,
+      srcCol: String)(f: (Long, String) => IterableOnce[T]): Dataset[T] =
+    df.select(col(idCol).cast("long"), col(srcCol).cast("string"))
+      .as(Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
+      .flatMap { case (id, src) => f(id, src) }(Encoders.product[T])
 
   /** Runs of Unicode whitespace collapse to one space; leading and
     * trailing whitespace is dropped. */

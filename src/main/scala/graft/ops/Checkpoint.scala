@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.extract.Pipeline
@@ -51,6 +51,17 @@ object Checkpoint {
   final case class ResumeReport(
       runId: String, nBuckets: Int, skippedBuckets: Int,
       processedBuckets: Int, lineage: Seq[BucketLineage])
+
+  /** The lineage tallies over extraction results, as aggregate columns:
+    * docCount, okCount, failCount (error, oversize or unsupported),
+    * emptyCount and inputBytes. */
+  private[graft] val lineageCounts: Seq[Column] = Seq(
+    count(lit(1)).as("docCount"),
+    sum(when(col("status") === "ok", 1L).otherwise(0L)).as("okCount"),
+    sum(when(col("status").isin("error", "oversize", "unsupported"), 1L)
+      .otherwise(0L)).as("failCount"),
+    sum(when(col("status") === "empty", 1L).otherwise(0L)).as("emptyCount"),
+    sum(col("sizeBytes")).as("inputBytes"))
 
   private def manifestDir(outDir: String): Path = Paths.get(outDir, "_manifest")
   private def dataDir(outDir: String): String = s"$outDir/data"
@@ -143,14 +154,7 @@ object Checkpoint {
     val lineage = spark.read.schema(results.schema).parquet(dataDir(outDir))
       .filter(col("bucket").isin(todoBuckets: _*))
       .groupBy(col("bucket"))
-      .agg(
-        count(lit(1)).as("docCount"),
-        sum(when(col("status") === "ok", 1L).otherwise(0L)).as("okCount"),
-        sum(when(col("status") === "error" || col("status") === "oversize" ||
-            col("status") === "unsupported", 1L)
-          .otherwise(0L)).as("failCount"),
-        sum(when(col("status") === "empty", 1L).otherwise(0L)).as("emptyCount"),
-        sum(col("sizeBytes")).as("inputBytes"))
+      .agg(lineageCounts.head, lineageCounts.tail: _*)
       .collect()
       .map { r =>
         BucketLineage(runId, r.getAs[Int]("bucket"), r.getAs[Long]("docCount"),

@@ -31,12 +31,6 @@ object Dedup {
       .drop("__digest", "__rn")
   }
 
-  /** Duplicate-cluster report: digest, cluster size, canonical (min) id. */
-  def exactDupGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(sha2(col(textCol), 256).as("digest"))
-      .agg(count(lit(1)).as("cluster_size"), min(col(idCol)).as("canonical_id"))
-      .filter(col("cluster_size") > 1)
-
   // ------------------------------------------------------------- minhash
 
   /** Deterministic universal-hash parameters (a, b) for numHashes

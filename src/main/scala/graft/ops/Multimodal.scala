@@ -396,12 +396,4 @@ object Multimodal {
       }
     }
   }
-
-  /** Attach a metadata struct column to a raw (id, payload) binary table.
-    * Pure column expressions ([[mimeColumn]] is a when/substring chain) —
-    * the whole projection stays inside whole-stage codegen. */
-  def withMediaMeta(df: DataFrame, payloadCol: String = "payload"): DataFrame =
-    df.withColumn("mime", mimeColumn(col(payloadCol)))
-      .withColumn("size_bytes", when(col(payloadCol).isNull, 0L)
-        .otherwise(length(col(payloadCol)).cast("long")))
 }

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Sequence packing for LLM pretraining batches — the concat-and-chunk
   * scheme (GPT-style: concatenate documents in a fixed order with a
@@ -11,17 +10,13 @@ import org.apache.spark.storage.StorageLevel
   * boundary). Every doc's placement is a pure function of the EXCLUSIVE
   * prefix sum of padded token counts in document order.
   *
-  * Scale shape: the global prefix sum runs as the classic TWO-PASS
-  * distributed scan — per-partition totals (one number per partition,
-  * collected to the driver: bounded by partition count, never rows),
-  * cumulative partition offsets broadcast back, then one partition-local
-  * running sum. NO single-partition window, NO global shuffle beyond the
-  * initial range sort; at 100 TB the sort is the only exchange and each
-  * partition packs independently. The per-partition imperative scan is
-  * the one genuinely RDD-shaped step in this library (a running sum
-  * cannot be expressed as a Catalyst window without collapsing to one
-  * partition) — the driver's DuckDB oracle (`packing_chunks`) checks the
-  * distributed result against an independent sequential window cumsum. */
+  * Scale shape: the global prefix sum is the two-level distributed sum
+  * `Shards.prefixSum` (per-bucket totals, an exclusive cumsum over the
+  * bucket table, bases broadcast back, a running sum within each
+  * bucket), so the whole operator is Catalyst transforms. Ids should be
+  * dense: the bucket table has one row per occupied id bucket. The
+  * driver's DuckDB oracle (`packing_chunks`) checks the distributed
+  * result against an independent sequential window cumsum. */
 object Packing {
 
   /** Returns (doc_id, padded_tokens, start_offset, chunk_id,
@@ -31,43 +26,14 @@ object Packing {
   def concatChunkPack(df: DataFrame, idCol: String, tokensCol: String,
       contextLen: Long, sepTokens: Long = 1L): DataFrame = {
     require(contextLen > 0, "contextLen must be positive")
-    val spark = df.sparkSession
-    import spark.implicits._
-    // range-partitioned global sort: partitions are id-contiguous and
-    // internally sorted, so the two-pass scan below reproduces the exact
-    // sequential prefix sum regardless of where the boundaries fall
-    val sorted = df
-      .select(col(idCol).cast("long").as("doc_id"),
-        (col(tokensCol).cast("long") + sepTokens).as("toks"))
-      .orderBy(col("doc_id"))
-      .as[(Long, Long)]
-    // persisted across the two passes AND the caller's job — unpersisting
-    // before the caller executes would re-run the range sort; the cache
-    // holds (long, long) rows only and falls out via LRU
-    val rdd = sorted.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    // pass 1: one Long per partition reaches the driver
-      val partTotals = rdd
-        .mapPartitionsWithIndex { (pid, it) =>
-          var s = 0L
-          it.foreach(s += _._2)
-          Iterator((pid, s))
-        }
-        .collect().sortBy(_._1).map(_._2)
-      val partOffsets = partTotals.scanLeft(0L)(_ + _) // exclusive
-      val bOffsets = spark.sparkContext.broadcast(partOffsets)
-      // pass 2: partition-local running sum seeded with the broadcast offset
-      val packed = rdd.mapPartitionsWithIndex { (pid, it) =>
-        var run = bOffsets.value(pid)
-        it.map { case (id, toks) =>
-          val start = run
-          run += toks
-          val chunk = start / contextLen
-          val lastChunk = (start + toks - 1) / contextLen
-          (id, toks, start, chunk, start % contextLen,
-            if (chunk != lastChunk) 1 else 0)
-        }
-      }
-      spark.createDataFrame(packed).toDF("doc_id", "padded_tokens",
-        "start_offset", "chunk_id", "offset_in_chunk", "spans_boundary")
+    val d = df.select(col(idCol).cast("long").as("_id"),
+      (col(tokensCol).cast("long") + sepTokens).as("_w"))
+    Shards.prefixSum(d, Shards.DefaultBucketSize).select(
+      col("_id").as("doc_id"), col("_w").as("padded_tokens"),
+      col("_start").as("start_offset"),
+      expr(s"_start div $contextLen").as("chunk_id"),
+      (col("_start") % contextLen).as("offset_in_chunk"),
+      expr(s"CAST(_start div $contextLen != (_start + _w - 1) div $contextLen AS INT)")
+        .as("spans_boundary"))
   }
 }

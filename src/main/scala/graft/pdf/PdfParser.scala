@@ -62,13 +62,26 @@ object PdfParser {
       status: String,
       error: String)
 
+  /** Bytes one document may inflate, summed over all of its streams: a
+    * Flate bomb (kilobytes that inflate to gigabytes) fails its document
+    * with status "error" instead of running the executor out of memory.
+    * Text content and object streams of real documents stay far below. */
+  val MaxInflatedBytes: Long = 64L << 20
+
+  /** What is left of one document's [[MaxInflatedBytes]]. */
+  private final class InflateBudget {
+    var left: Long = MaxInflatedBytes
+    def exceeded: Boolean = left < 0
+  }
+
   def parse(bytes: Array[Byte]): PdfDoc = {
     try {
-      val objs = scanObjects(bytes)
+      val budget = new InflateBudget
+      val objs = scanObjects(bytes, budget)
       val resolver = new Resolver(objs)
       val pageDicts = findPages(resolver)
       val pages = pageDicts.zipWithIndex.map { case (pd, i) =>
-        val content = contentBytes(pd, resolver)
+        val content = contentBytes(pd, resolver, budget)
         val imgNames = imageXObjectNames(pd, resolver)
         val (lines, runs, rects, imgArea) = extractContent(content, imgNames)
         val area = pageArea(pd, resolver)
@@ -76,7 +89,10 @@ object PdfParser {
         PdfPage(i + 1, lines, runs, rects, imgNames.size, coverage)
       }
       val sigs = findSignatures(resolver)
-      PdfDoc(pages, sigs, "ok", "")
+      if (budget.exceeded)
+        PdfDoc(Vector.empty, Vector.empty, "error",
+          s"inflated streams exceed $MaxInflatedBytes bytes")
+      else PdfDoc(pages, sigs, "ok", "")
     } catch {
       case e @ (_: Exception | _: StackOverflowError) =>
         PdfDoc(Vector.empty, Vector.empty, "error",
@@ -88,7 +104,7 @@ object PdfParser {
     * `smart_router.py:187-196`). */
   def pageCount(bytes: Array[Byte]): Int = {
     try {
-      val resolver = new Resolver(scanObjects(bytes))
+      val resolver = new Resolver(scanObjects(bytes, new InflateBudget))
       findPages(resolver).length
     } catch { case _: Exception | _: StackOverflowError => 0 }
   }
@@ -109,7 +125,7 @@ object PdfParser {
 
   /** Brute-force scan for `N G obj ... endobj` — robust to broken xref
     * tables (the adversarial fixtures include truncated files). */
-  private def scanObjects(bytes: Array[Byte]): Map[Int, PdfObj] = {
+  private def scanObjects(bytes: Array[Byte], budget: InflateBudget): Map[Int, PdfObj] = {
     val out = MHashMap.empty[Int, PdfObj]
     val n = bytes.length
     var i = 0
@@ -145,7 +161,7 @@ object PdfParser {
       }
       i += 1
     }
-    expandObjectStreams(out)
+    expandObjectStreams(out, budget)
     out.toMap
   }
 
@@ -156,13 +172,14 @@ object PdfParser {
     * were visible to the brute scan and are what a classic-xref reader
     * would use). Common-Crawl PDFs are predominantly 1.5+ — without this
     * the page tree of such files is invisible. */
-  private def expandObjectStreams(out: MHashMap[Int, PdfObj]): Unit = {
+  private def expandObjectStreams(out: MHashMap[Int, PdfObj],
+      budget: InflateBudget): Unit = {
     val streams = out.values.collect {
       case s @ PStream(d, _) if nameOf(d, "Type").contains("ObjStm") => s
     }.toVector
     streams.foreach { s =>
       try {
-        val data = decodeStream(s.dict, s.data)
+        val data = decodeStream(s.dict, s.data, budget)
         val nObjs = s.dict.get("N") match {
           case Some(PNum(v)) => v.toInt
           case _ => 0
@@ -525,9 +542,10 @@ object PdfParser {
     612.0 * 792.0
   }
 
-  private def contentBytes(page: PDict, r: Resolver): Array[Byte] = {
+  private def contentBytes(page: PDict, r: Resolver,
+      budget: InflateBudget): Array[Byte] = {
     def streamData(o: PdfObj): Array[Byte] = r.resolve(o) match {
-      case PStream(dict, raw) => decodeStream(dict, raw)
+      case PStream(dict, raw) => decodeStream(dict, raw, budget)
       case _ => Array.emptyByteArray
     }
     page.get("Contents") match {
@@ -535,14 +553,15 @@ object PdfParser {
       case Some(o) =>
         r.resolve(o) match {
           case PArr(items) => items.toArray.flatMap(streamData)
-          case s: PStream => decodeStream(s.dict, s.data)
+          case s: PStream => decodeStream(s.dict, s.data, budget)
           case _ => Array.emptyByteArray
         }
       case None => Array.emptyByteArray
     }
   }
 
-  private def decodeStream(dict: PDict, raw: Array[Byte]): Array[Byte] = {
+  private def decodeStream(dict: PDict, raw: Array[Byte],
+      budget: InflateBudget): Array[Byte] = {
     val filters: Vector[String] = dict.get("Filter") match {
       case Some(PName(f)) => Vector(f)
       case Some(PArr(fs)) => fs.collect { case PName(f) => f }
@@ -550,22 +569,28 @@ object PdfParser {
     }
     filters.foldLeft(raw) { (data, f) =>
       f match {
-        case "FlateDecode" => inflate(data)
+        case "FlateDecode" => inflate(data, budget)
         case "ASCIIHexDecode" => asciiHexDecode(data)
         case _ => data // unsupported filter — pass through (documented subset)
       }
     }
   }
 
-  private def inflate(data: Array[Byte]): Array[Byte] = {
+  /** Inflates `data`, charging the output to `budget`; once the budget is
+    * spent every stream decodes empty and `parse` fails the document. */
+  private def inflate(data: Array[Byte], budget: InflateBudget): Array[Byte] = {
+    if (budget.exceeded) return Array.emptyByteArray
     val inf = new java.util.zip.Inflater()
     try {
       inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 4))
+      val out = new java.io.ByteArrayOutputStream(
+        math.max(64L, math.min(data.length * 4L, budget.left)).toInt)
       val buf = new Array[Byte](8192)
       while (!inf.finished() && !inf.needsInput()) {
         val k = inf.inflate(buf)
         if (k == 0 && !inf.finished()) return out.toByteArray // truncated
+        budget.left -= k
+        if (budget.exceeded) return Array.emptyByteArray
         out.write(buf, 0, k)
       }
       out.toByteArray

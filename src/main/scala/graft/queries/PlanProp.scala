@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Attribute, ScalaUDF}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{ExternalRDDScanExec, FileSourceScanExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -113,6 +113,15 @@ object PlanProp {
     PlanProp("no Scala UDF and no Python eval", v => !v.after.exists { n =>
       n.nodeName.contains("EvalPython") ||
         n.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))
+    })
+
+  /** No leaf reads an RDD: its lineage would be opaque to the planner. A
+    * scan of an RDD of rows prints as `Scan ExistingRDD`, but a scan of an
+    * RDD of objects prints as `Scan[obj#…]`, so this matches node classes. */
+  val noRdd: PlanProp =
+    PlanProp("no RDD scan", !_.after.exists {
+      case _: RDDScanExec | _: ExternalRDDScanExec[_] => true
+      case _ => false
     })
 
   /** `p` read on the plan before execution: for shapes AQE may erase at

@@ -15,12 +15,12 @@ object TextStats {
   val all: Seq[Query] = Seq(
 
     // sequence packing (concat-and-chunk, GPT-style pretraining batches):
-    // the DISTRIBUTED two-pass prefix sum (per-partition totals →
-    // broadcast offsets → partition-local scan, no single-partition
-    // window) must reproduce the exact sequential cumsum — the DuckDB
-    // twin computes it with an ordered window, so a green row certifies
-    // the distributed scan, not merely that rows landed. Cost unit is
-    // chars + 1 separator; context window 2048.
+    // the two-level prefix sum (per-bucket totals → exclusive cumsum over
+    // the bucket table → broadcast bases → per-bucket running sums) must
+    // reproduce the exact sequential cumsum — the DuckDB twin computes it
+    // with an ordered window, so a green row certifies the distributed
+    // sum, not merely that rows landed. Cost unit is chars + 1
+    // separator; context window 2048.
     Query("packing_chunks", (s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), length(col("text")).as("n_chars"))
@@ -29,7 +29,7 @@ object TextStats {
         .orderBy(col("doc_id"))
     },
       // sequential window cumsum — the independent ground truth for the
-      // distributed two-pass prefix sum in Packing.concatChunkPack
+      // two-level prefix sum in Packing.concatChunkPack
       oracle = Some("""WITH t AS (
         |  SELECT doc_id, CAST(length(text) + 1 AS BIGINT) AS padded_tokens
         |  FROM documents),
@@ -45,7 +45,8 @@ object TextStats {
         |  CAST(CASE WHEN start_offset // 2048 !=
         |    (start_offset + padded_tokens - 1) // 2048 THEN 1 ELSE 0 END AS INT)
         |    AS spans_boundary
-        |FROM c ORDER BY doc_id""".stripMargin)),
+        |FROM c ORDER BY doc_id""".stripMargin),
+      plan = Seq(noRdd, atMost("Exchange SinglePartition", 1))),
 
     // BM25 keyword search over the inverted index — integer-rational
     // tf part and micro-nat-quantized idf make per-doc scores integer

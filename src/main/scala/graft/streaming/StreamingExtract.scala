@@ -1,11 +1,14 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.extract.Pipeline
+import graft.ops.Checkpoint
 
 /** Structured-Streaming ingest — the Spark re-expression of the
   * reference's work-queue streaming design (SURVEY.md §2.8): the poll
@@ -65,14 +68,9 @@ object StreamingExtract {
             // committed batch ids from _metrics)
             results.write.mode("append").parquet(s"$outDir/data")
             // lineage event row per micro-batch (events-table analog)
+            val counts = Checkpoint.lineageCounts
             results.groupBy()
-              .agg(count(lit(1)).as("docCount"),
-                sum(when(col("status") === "ok", 1L).otherwise(0L)).as("okCount"),
-                sum(when(col("status") === "error" || col("status") === "oversize" ||
-                    col("status") === "unsupported", 1L)
-                  .otherwise(0L)).as("failCount"),
-                sum(col("sizeBytes")).as("inputBytes"),
-                max(col("batchId")).as("batchId"))
+              .agg(counts.head, counts.tail :+ max(col("batchId")).as("batchId"): _*)
               .write.mode("append").parquet(s"$outDir/_metrics")
           } finally results.unpersist()
         }
@@ -128,8 +126,7 @@ object StreamingExtract {
       // full input copy on disk and a complete-mode sink table in driver
       // memory per invocation
       val rows = out.collect().toSeq
-      val local = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), out.schema)
+      val local = spark.createDataFrame(rows.asJava, out.schema)
       spark.catalog.dropTempView(sink)
       local
     } finally deleteRecursively(stagedPath)

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Packing
 
-/** Sequence packing (concat-and-chunk): the distributed two-pass prefix
-  * sum must equal the sequential scan exactly, across many partitions. */
+/** Sequence packing (concat-and-chunk): the distributed prefix sum must
+  * equal the sequential scan exactly, across many partitions. */
 class PackingSpec extends AnyFunSuite {
 
   private val spark = SparkTestBase.spark
@@ -28,6 +28,27 @@ class PackingSpec extends AnyFunSuite {
       assert(r.getLong(3) == run / 256)
       assert(r.getLong(4) == run % 256)
       assert(r.getInt(5) == (if (run / 256 != (run + toks - 1) / 256) 1 else 0))
+      run += toks
+    }
+  }
+
+  test("ids with gaps across many prefix-sum buckets equal the sequential scan") {
+    import spark.implicits._
+    // multiples of 50,000 fall into most of the ~230 buckets of 2^16 ids
+    // that the range covers, one or two rows each
+    val df = (0L until 300L).map(i => (i * 50000L, i * 13 % 97 + 1)).toDF("doc_id", "cost")
+      .repartition(5)
+    val out = Packing.concatChunkPack(df, "doc_id", "cost",
+        contextLen = 128, sepTokens = 1)
+      .as[(Long, Long, Long, Long, Long, Int)].collect().sortBy(_._1)
+    assert(out.length == 300)
+    var run = 0L
+    out.zipWithIndex.foreach { case ((id, toks, start, chunk, off, spans), i) =>
+      assert(id == i * 50000L)
+      assert(toks == i * 13 % 97 + 2)
+      assert(start == run, s"start_offset diverges at row $i")
+      assert(chunk == run / 128 && off == run % 128)
+      assert(spans == (if (run / 128 != (run + toks - 1) / 128) 1 else 0))
       run += toks
     }
   }

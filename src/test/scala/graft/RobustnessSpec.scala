@@ -5,7 +5,7 @@ import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.extract.Extractor
+import graft.extract.{Extractor, Pipeline}
 import graft.pdf.PdfParser
 
 /** Adversarial-input regressions: pathological crawled payloads must
@@ -110,6 +110,61 @@ class RobustnessSpec extends AnyFunSuite {
     assert(doc.status == "ok")
     assert(doc.pages.length == 1, "ghost catalog must not replace the real page tree")
     assert(doc.pages.head.text == "real text")
+  }
+
+  private def deflate(data: Array[Byte]): Array[Byte] = {
+    val d = new java.util.zip.Deflater()
+    d.setInput(data); d.finish()
+    val out = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](65536)
+    while (!d.finished()) { val k = d.deflate(buf); out.write(buf, 0, k) }
+    d.end(); out.toByteArray
+  }
+
+  /** A one-page PDF whose /Contents are `streams`, each FlateDecoded:
+    * "(real text) Tj" followed by `pad(i)` spaces. */
+  private def flatePdf(pad: Long*): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
+    w("%PDF-1.4\n1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n")
+    w("2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n")
+    val refs = pad.indices.map(i => s"${i + 4} 0 R").mkString(" ")
+    w(s"3 0 obj << /Type /Page /Parent 2 0 R /Contents [$refs] >> endobj\n")
+    pad.zipWithIndex.foreach { case (n, i) =>
+      val raw = "BT /F1 12 Tf (real text) Tj ET".getBytes(StandardCharsets.ISO_8859_1) ++
+        Array.fill(n.toInt)(' '.toByte)
+      val d = deflate(raw)
+      w(s"${i + 4} 0 obj << /Filter /FlateDecode /Length ${d.length} >>\nstream\n")
+      out.write(d)
+      w("\nendstream\nendobj\n")
+    }
+    w("%%EOF")
+    out.toByteArray
+  }
+
+  test("a Flate bomb fails its document; the inflate cap sums over all streams") {
+    val cap = PdfParser.MaxInflatedBytes
+    val bomb = flatePdf(cap)
+    assert(bomb.length < 256 * 1024, s"bomb is ${bomb.length} bytes compressed")
+    val doc = PdfParser.parse(bomb)
+    assert(doc.status == "error")
+    assert(doc.error.contains("inflated"))
+    // two streams, each under the cap alone, together over it
+    assert(PdfParser.parse(flatePdf(cap / 2, cap / 2)).status == "error")
+    val under = PdfParser.parse(flatePdf(cap / 4, cap / 4))
+    assert(under.status == "ok")
+    assert(under.pages.head.text.contains("real text"))
+  }
+
+  test("a Flate bomb yields one error row and the Spark task survives") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val rows = Seq(
+      ("https://bomb.example/", ts, flatePdf(PdfParser.MaxInflatedBytes), "en"),
+      ("https://fine.example/", ts, flatePdf(0L), "en"))
+    val got = Pipeline.run(rows.toDF("url", "warc_ts", "html", "lang"), analysis = false)
+      .select("url", "status").as[(String, String)].collect().sortBy(_._1)
+    assert(got.toSeq == Seq(("https://bomb.example/", "error"), ("https://fine.example/", "ok")))
   }
 
   test("table-only HTML page keeps its tables and title on the empty-status row") {

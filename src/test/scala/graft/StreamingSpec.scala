@@ -137,6 +137,22 @@ class StreamingSpec extends AnyFunSuite {
       ("C", "u/c1"), ("D", "u/d1"), ("E", "u/e1")))
   }
 
+  test("per-batch lineage row tallies ok, fail and empty like the checkpoint") {
+    val root = Files.createTempDirectory("graft_stream_lineage_").toString
+    val in = s"$root/in"; val out = s"$root/out"
+    CorpusGen.generate(spark, 100, partitions = 1).toDF()
+      .write.mode("append").parquet(in)
+    StreamingExtract.start(spark, in, out, s"$root/ckpt").awaitTermination()
+    val byStatus = spark.read.parquet(s"$out/data")
+      .groupBy("status").count().as[(String, Long)].collect().toMap
+    def n(statuses: String*): Long = statuses.map(byStatus.getOrElse(_, 0L)).sum
+    val lineage = spark.read.parquet(s"$out/_metrics")
+      .select("docCount", "okCount", "failCount", "emptyCount")
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    assert(lineage == Seq((100L, n("ok"), n("error", "oversize", "unsupported"), n("empty"))))
+    assert(n("empty") > 0)
+  }
+
   test("watermarked daily roll-up over the results stream") {
     val root = Files.createTempDirectory("graft_stream_wm_").toString
     implicit val sqlCtx = spark.sqlContext
