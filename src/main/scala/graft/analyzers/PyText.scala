@@ -20,11 +20,11 @@ object PyText {
     out.toArray
   }
 
-  /** Python `str` whitespace (space, \t\n\r\v\f + unicode spaces). */
+  /** Python `str` whitespace (space, \t\n\v\f\r, \x1c-\x1f, U+0085 and
+    * the unicode space chars). */
   def isPyWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\u000B' ||
-    c == '\f' || c == '\u001C' || c == '\u001D' || c == '\u001E' ||
-    c == '\u001F' || c == '\u0085' || Character.isSpaceChar(c)
+    if (c < 128) c == ' ' || (c >= '\t' && c <= '\r') || (c >= '\u001C' && c <= '\u001F')
+    else c == '\u0085' || Character.isSpaceChar(c)
 
   /** Python `s.split(sep)` — keeps empty strings ("a\n\nb".split("\n") has 3). */
   def splitKeepEmpty(s: String, sep: String): Array[String] = {

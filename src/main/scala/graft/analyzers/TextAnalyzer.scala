@@ -1,6 +1,6 @@
 package graft.analyzers
 
-import scala.collection.mutable.{ArrayBuffer, LinkedHashMap}
+import scala.collection.mutable.ArrayBuffer
 
 /** Deterministic text analytics (SURVEY.md §2.4 T1–T12): tokenizer,
   * word frequency, word cloud, keywords, doc-type classification,
@@ -86,41 +86,47 @@ object TextAnalyzer {
     "marketing" -> Seq("marketing", "publicité", "advertising", "campagne", "campaign",
       "client", "customer", "marque", "brand", "promotion", "vente"))
 
+  // ------------------------------------------------------ one analyzer pass
+
+  /** Everything the doc-level analyzers report for one text. */
+  final case class Analysis(wordCloud: WordCloud, summary: Summary, docType: String,
+      categories: Seq[String], keywords: Seq[String], entities: Seq[String])
+
+  /** What `Extractor` reports with the analyzers off. */
+  val NoAnalysis: Analysis = Analysis(WordCloud(Nil, 0.0, 0L, 0L),
+    Summary("", "", Nil, 0.0), "other", Nil, Nil, Nil)
+
+  /** The T4–T12 suite over `fullText` in one pass: one token table feeds
+    * the word cloud, the keywords and the summary's sentence weights; the
+    * doc type and categories come from one indicator automaton pass; the
+    * entity scanners read the text once each. A pure function of the
+    * text. */
+  def analyze(fullText: String): Analysis = {
+    val table = TokenTable.of(fullText)
+    val (docType, cats) = docTypeAndCategoriesFoldCase(fullText)
+    Analysis(wordCloudOf(table, 10), Summarizer.summarize(fullText, table),
+      docType, cats, keywordsOf(table, 15), entities(fullText))
+  }
+
   // ----------------------------------------------------------- T1 tokenize
 
   /** `doc_analyzer._tokenize`: lower, non-[\w\s-] → space, collapse ws,
     * split. Mapping junk to spaces and whitespace-splitting is exactly
-    * "tokens = maximal runs of word chars / hyphens", done here in one
-    * scan over the lowered text (no intermediate mapped copy — this is
-    * the hottest analyzer primitive). */
+    * "tokens = maximal runs of word chars / hyphens" in the lowered text;
+    * `TokenTable` counts the same runs without materializing them. */
   def tokenize(text: String): Array[String] = {
     val lowered = text.toLowerCase(java.util.Locale.ROOT)
     val n = lowered.length
     val out = ArrayBuffer.empty[String]
     var i = 0
     while (i < n) {
-      while (i < n && {
-        val c = lowered.charAt(i); !(PyText.isWordChar(c) || c == '-')
-      }) i += 1
+      while (i < n && !TokenTable.isTokenChar(lowered.charAt(i), fold = false)) i += 1
       val start = i
-      while (i < n && {
-        val c = lowered.charAt(i); PyText.isWordChar(c) || c == '-'
-      }) i += 1
+      while (i < n && TokenTable.isTokenChar(lowered.charAt(i), fold = false)) i += 1
       if (i > start) out += lowered.substring(start, i)
     }
     out.toArray
   }
-
-  /** T3: word frequency — first-occurrence order preserved (Counter). */
-  def wordFrequency(tokens: Array[String]): LinkedHashMap[String, Int] = {
-    val m = LinkedHashMap.empty[String, Int]
-    tokens.foreach { t => m.update(t, m.getOrElse(t, 0) + 1) }
-    m
-  }
-
-  /** Token is all digits / non-word chars (`^[\d\W]+$` on a \w- token). */
-  private def isDigitOrSymbolToken(w: String): Boolean =
-    w.nonEmpty && w.forall(c => Character.isDigit(c) || !PyText.isWordChar(c))
 
   // --------------------------------------------------------- T4 word cloud
 
@@ -131,23 +137,42 @@ object TextAnalyzer {
   /** `generate_word_cloud` (doc_analyzer.py:513-568). Ties break by first
     * occurrence (Counter.most_common insertion order). */
   def wordCloud(text: String, topN: Int = 10): WordCloud =
-    wordCloudFromTokens(tokenize(text), topN)
+    wordCloudOf(TokenTable.of(text), topN)
 
-  /** Same, over a pre-tokenized text — lets the extraction hot path
-    * tokenize the document once and share across analyzers. */
-  def wordCloudFromTokens(tokens: Array[String], topN: Int = 10): WordCloud = {
-    val filtered = tokens.filter(w =>
-      !allStopwords(w) && w.length > 2 && !PyText.isDigit(w) && !isDigitOrSymbolToken(w))
-    val total = filtered.length
-    val counts = wordFrequency(filtered)
-    if (total == 0) return WordCloud(Nil, 0.0, 0, 0)
-    val top = counts.toSeq.sortBy { case (_, c) => -c }.take(topN) // stable sort keeps insertion order on ties
-    val entries = top.map { case (w, c) =>
-      WordCloudEntry(w, c, PyText.pyRound(c.toDouble / total * 100, 2))
+  /** Same, over a pre-tokenized text. */
+  def wordCloudFromTokens(tokens: Array[String], topN: Int = 10): WordCloud =
+    wordCloudOf(TokenTable.ofTokens(tokens), topN)
+
+  private def wordCloudOf(table: TokenTable, topN: Int): WordCloud = {
+    var total = 0
+    var unique = 0
+    var e = 0
+    while (e < table.size) {
+      if ((table.flags(e) & TokenTable.Cloud) != 0) { total += table.counts(e); unique += 1 }
+      e += 1
     }
-    val topCount = top.map(_._2).sum
+    if (total == 0) return WordCloud(Nil, 0.0, 0, 0)
+    val top = topEntries(table, TokenTable.Cloud, topN, e => table.counts(e).toDouble)
+    val entries = top.map { e =>
+      WordCloudEntry(table.key(e), table.counts(e),
+        PyText.pyRound(table.counts(e).toDouble / total * 100, 2))
+    }
+    val topCount = top.map(table.counts(_)).sum
     val others = PyText.pyRound((total - topCount).toDouble / total * 100, 2)
-    WordCloud(entries, others, total.toLong, counts.size.toLong)
+    WordCloud(entries, others, total.toLong, unique.toLong)
+  }
+
+  /** The first `k` entries carrying `flag`, by `weight` descending; ties
+    * keep first-occurrence order. */
+  private def topEntries(table: TokenTable, flag: Byte, k: Int,
+      weight: Int => Double): Seq[Int] = {
+    val top = new TopK(k)
+    var e = 0
+    while (e < table.size) {
+      if ((table.flags(e) & flag) != 0) top.offer(e, weight(e))
+      e += 1
+    }
+    top.ids
   }
 
   // ----------------------------------------------------------- T5 keywords
@@ -155,19 +180,24 @@ object TextAnalyzer {
   /** `_extract_keywords` (doc_analyzer.py:442-478): TF-IDF-ish top-15.
     * The capitalization boost is dead code (tokens lowercased) — kept as-is. */
   def keywords(text: String, topN: Int = 15): Seq[String] =
-    keywordsFromTokens(tokenize(text), topN)
+    keywordsOf(TokenTable.of(text), topN)
 
-  def keywordsFromTokens(tokens: Array[String], topN: Int = 15): Seq[String] = {
-    val filtered = tokens.filter(w =>
-      !allStopwords(w) && w.length > 3 && !PyText.isDigit(w) && !isDigitOrSymbolToken(w))
-    val total = filtered.length
-    val counts = wordFrequency(filtered)
-    val scored = counts.toSeq.map { case (w, c) =>
+  def keywordsFromTokens(tokens: Array[String], topN: Int = 15): Seq[String] =
+    keywordsOf(TokenTable.ofTokens(tokens), topN)
+
+  private def keywordsOf(table: TokenTable, topN: Int): Seq[String] = {
+    var total = 0
+    var e = 0
+    while (e < table.size) {
+      if ((table.flags(e) & TokenTable.Keyword) != 0) total += table.counts(e)
+      e += 1
+    }
+    topEntries(table, TokenTable.Keyword, topN, { e =>
+      val c = table.counts(e)
       val tf = if (total > 0) c.toDouble / total else 0.0
       val idf = math.log(1 + total.toDouble / (c + 1))
-      (w, tf * idf)
-    }
-    scored.sortBy { case (_, s) => -s }.take(topN).map(_._1) // stable: ties keep first-occurrence order
+      tf * idf
+    }).map(table.key)
   }
 
   // ----------------------------------------------------------- T6 doc type
@@ -210,10 +240,12 @@ object TextAnalyzer {
   }
 
   // one automaton over the distinct indicator vocabulary (built once,
-  // broadcast-free: executor-side object initialization)
-  private lazy val indicatorMatcher: (MultiPattern, Map[String, Int]) = {
+  // broadcast-free: executor-side object initialization), and each doc
+  // type's indicators as pattern indices
+  private lazy val indicatorMatcher: (MultiPattern, Array[Array[Int]]) = {
     val distinctWords = docTypeIndicators.flatMap(_._2).distinct
-    (new MultiPattern(distinctWords), distinctWords.zipWithIndex.toMap)
+    val idx = distinctWords.zipWithIndex.toMap
+    (new MultiPattern(distinctWords), docTypeIndicators.map(_._2.map(idx).toArray).toArray)
   }
 
   /** T6 + T7 fused: ONE Aho-Corasick pass over the indicator vocabulary
@@ -233,196 +265,90 @@ object TextAnalyzer {
 
   private def docTypeAndCategoriesImpl(text: String, foldCase: Boolean)
       : (String, Seq[String]) = {
-    val (mp, idx) = indicatorMatcher
+    val (mp, indicatorsOf) = indicatorMatcher
     val counts = if (foldCase) mp.countAllFoldCase(text) else mp.countAll(text)
     var best = "other"
     var bestScore = 0
     val cats = ArrayBuffer.empty[String]
-    docTypeIndicators.foreach { case (t, indicators) =>
+    var t = 0
+    while (t < indicatorsOf.length) {
       var score = 0
       var hits = 0
-      indicators.foreach { ind =>
-        val c = counts(idx(ind))
-        score += c
-        if (c > 0) hits += 1
+      indicatorsOf(t).foreach { w =>
+        score += counts(w)
+        if (counts(w) > 0) hits += 1
       }
-      if (score > bestScore) { best = t; bestScore = score }
-      if (hits >= 2) cats += t
+      val docType = docTypeIndicators(t)._1
+      if (score > bestScore) { best = docType; bestScore = score }
+      if (hits >= 2) cats += docType
+      t += 1
     }
     (best, cats.distinct.sorted.take(5).toSeq)
   }
 
   // ----------------------------------------------------------- T8 entities
 
-  private val namePattern = java.util.regex.Pattern.compile(
-    "\\b([A-Z][a-zéèêëàâùûîïôö]+(?:\\s+[A-Z][a-zéèêëàâùûîïôö]+)+)\\b")
-  private val companyPattern = java.util.regex.Pattern.compile(
-    "\\b([A-Z][A-Za-z\\s&\\-\\.]+(?:SA|SAS|SARL|Ltd|Inc|LLC|GmbH|AG))\\b")
-  // every company match must contain one of these literals — a cheap
-  // contains() prefilter skips the heavily-backtracking regex on the
-  // (common) documents that cannot match at all
+  // every company match contains one of these literals, so a text
+  // without any skips the company scan
   private val companySuffixes = Array("SA", "Ltd", "Inc", "LLC", "GmbH", "AG")
-  private val emailPattern = java.util.regex.Pattern.compile(
-    "@([a-zA-Z0-9\\-]+)\\.")
   private val webmail = Set("gmail", "yahoo", "hotmail", "outlook")
   private val sentenceStarts = Seq("Le ", "La ", "Les ", "Un ", "Une ", "The ", "A ")
 
-  /** `_extract_entities` (doc_analyzer.py:480-507); set order pinned to
-    * lexicographic sort before the [:10] slice. */
+  /** `_extract_entities` (doc_analyzer.py:480-507): names, companies and
+    * email domains (`Entities`); set order pinned to lexicographic sort
+    * before the [:10] slice. */
   def entities(text: String): Seq[String] = {
     // LinkedHashSet: O(1) membership (the per-match contains() made
     // entity-dense docs quadratic) while keeping insertion order
     val out = scala.collection.mutable.LinkedHashSet.empty[String]
-    val m1 = namePattern.matcher(text)
-    while (m1.find()) {
-      val name = m1.group(1)
+    val found = ArrayBuffer.empty[String]
+    Entities.names(text, found)
+    found.foreach { name =>
       if (!out.contains(name) && name.length > 3 && !sentenceStarts.exists(name.startsWith))
         out += name
     }
-    if (companySuffixes.exists(text.contains)) {
-      val m2 = companyPattern.matcher(text)
-      while (m2.find()) {
-        val c = m2.group(1).trim
-        if (c.nonEmpty) out += c
-      }
-    }
-    val m3 = emailPattern.matcher(text)
-    while (m3.find()) {
-      val d = m3.group(1)
-      if (!webmail(d)) out += PyText.capitalize(d)
-    }
+    if (companySuffixes.exists(text.contains)) Entities.companies(text, out)
+    found.clear()
+    Entities.emails(text, found)
+    found.foreach(d => if (!webmail(d)) out += PyText.capitalize(d))
     out.toSeq.sorted.take(10)
   }
 
-  // ---------------------------------------------------- T9 sentence split
-
-  private val wsRun = java.util.regex.Pattern.compile("\\s+")
-  private val sentenceSep = java.util.regex.Pattern.compile("(?<=[.!?])\\s+")
-
-  /** `_split_sentences` (doc_analyzer.py:287-303). Patterns precompiled
-    * (String.replaceAll/split compile per call — measurable per doc);
-    * the page-break replace is a literal, so non-regex String.replace
-    * is byte-identical. */
-  def splitSentences(text: String): IndexedSeq[String] = {
-    val collapsed = wsRun.matcher(text).replaceAll(" ")
-      .replace("--- PAGE BREAK ---", " ")
-    val parts = sentenceSep.split(collapsed, -1)
-    parts.iterator.map(PyText.strip)
-      .filter(s => s.length > 20 && !s.startsWith("[") && !PyText.isUpper(s))
-      .toIndexedSeq
-  }
-
-  // --------------------------------------------------- T10 sentence score
-
-  private val keyIndicators = Seq("important", "essentiel", "objectif", "but",
-    "conclusion", "résultat", "result", "key", "main", "principal")
-  // one fold-case Aho-Corasick pass replaces lowercase-copy + 10
-  // substring scans per sentence (count > 0 ⇔ lower.contains(ind));
-  // scoreSentence runs per sentence per document — the analyzer suite's
-  // hottest loop
-  private lazy val keyIndicatorMatcher = new MultiPattern(keyIndicators)
-
-  /** `_score_sentence` (doc_analyzer.py:305-342). */
-  def scoreSentence(sentence: String, position: Int, total: Int,
-      wordFreq: collection.Map[String, Int]): Double = {
-    var score = 0.0
-    if (position < 3) score += 2.0 - position * 0.5
-    else if (position == total - 1) score += 0.5
-    val words = tokenize(sentence)
-    words.foreach { w =>
-      wordFreq.get(w) match { // one hash lookup, not contains+apply
-        case Some(f) if !allStopwords(w) => score += f * 0.1
-        case _ =>
-      }
-    }
-    val wc = words.length
-    if (wc >= 10 && wc <= 30) score += 1.0
-    else if (wc < 10) score -= 0.5
-    else if (wc > 50) score -= 1.0
-    if (sentence.exists(Character.isDigit)) score += 0.5
-    val indCounts = keyIndicatorMatcher.countAllFoldCase(sentence)
-    var ii = 0
-    while (ii < indCounts.length) {
-      if (indCounts(ii) > 0) score += 0.5
-      ii += 1
-    }
-    score
-  }
-
-  // ------------------------------------------------------- T11/T12 summary
+  // ------------------------------------------------------- T9-T12 summary
 
   final case class Summary(brief: String, detailed: String,
       keyPoints: Seq[String], confidence: Double)
 
   /** `generate_summary` (doc_analyzer.py:235-285) + `_extract_key_points`
-    * (:344-369). Python list.sort is stable — tie-break preserved by
-    * sorting on (score desc, insertion index asc). */
-  def summarize(text: String): Summary = summarize(text, tokenize(text))
+    * (:344-369); see `Summarizer`. */
+  def summarize(text: String): Summary = Summarizer.summarize(text, TokenTable.of(text))
 
-  /** Same, sharing the document token array with the other analyzers. */
-  def summarize(text: String, docTokens: Array[String]): Summary = {
-    val sentences = splitSentences(text)
-    if (sentences.isEmpty)
-      return Summary("Document vide ou illisible.",
-        "Le document ne contient pas de texte exploitable.", Nil, 0.0)
-    val freq = wordFrequency(docTokens)
-    val total = sentences.length
-    val scored = sentences.zipWithIndex.collect {
-      case (s, i) if wordCountWs(s) >= 5 =>
-        (s, scoreSentence(s, i, total, freq), i)
+  /** Same, for a text already tokenized: `docTokens` is `tokenize(text)`,
+    * whose counts the table scanned from `text` holds too. */
+  def summarize(text: String, docTokens: Array[String]): Summary = summarize(text)
+}
+
+/** The first `k` of ids offered in order, by weight descending, ties in
+  * offer order: Python's stable `sort(key=..., reverse=True)[:k]` without
+  * sorting the rest. */
+private[analyzers] final class TopK(k: Int) {
+  private val top = new Array[Int](k)
+  private val weights = new Array[Double](k)
+  private var n = 0
+
+  def offer(id: Int, weight: Double): Unit = {
+    // after every kept id that ranks at or above it
+    var at = n
+    while (at > 0 && java.lang.Double.compare(-weight, -weights(at - 1)) < 0) at -= 1
+    if (at < k) {
+      var m = math.min(n, k - 1)
+      while (m > at) { top(m) = top(m - 1); weights(m) = weights(m - 1); m -= 1 }
+      top(at) = id
+      weights(at) = weight
+      if (n < k) n += 1
     }
-    val ranked = scored.zipWithIndex
-      .sortBy { case ((_, score, _), idx) => (-score, idx) }.map(_._1)
-    val brief = ranked.take(2).sortBy(_._3).map(_._1).mkString(" ")
-    val detailed = ranked.take(math.min(5, ranked.length)).sortBy(_._3).map(_._1).mkString(" ")
-    val keyPoints = extractKeyPoints(text, ranked)
-    Summary(
-      if (brief.length > 500) brief.substring(0, 500) else brief,
-      if (detailed.length > 1000) detailed.substring(0, 1000) else detailed,
-      keyPoints.take(5),
-      if (ranked.length >= 3) 0.75 else 0.5)
   }
 
-  /** `len(s.split())` without materializing the tokens. */
-  private[analyzers] def wordCountWs(s: String): Int = {
-    var words = 0
-    var inWord = false
-    var i = 0
-    while (i < s.length) {
-      if (PyText.isPyWs(s.charAt(i))) inWord = false
-      else if (!inWord) { inWord = true; words += 1 }
-      i += 1
-    }
-    words
-  }
-
-  private[analyzers] val bulletPattern = java.util.regex.Pattern.compile("[•\\-\\*]\\s*(.+?)(?=\\n|$)")
-  private[analyzers] val numberedPattern = java.util.regex.Pattern.compile("\\d+[.)\\]]\\s*(.+?)(?=\\n|$)")
-
-  /** Only the first 5 list items (bullets, then numbered) are read, so
-    * each matcher stops once 5 are known. */
-  def extractKeyPoints(text: String, ranked: Seq[(String, Double, Int)]): Seq[String] = {
-    val keyPoints = ArrayBuffer.empty[String]
-    val bullets = ArrayBuffer.empty[String]
-    val m1 = bulletPattern.matcher(text)
-    while (bullets.length < 5 && m1.find()) bullets += m1.group(1)
-    val m2 = numberedPattern.matcher(text)
-    while (bullets.length < 5 && m2.find()) bullets += m2.group(1)
-    bullets.foreach { item =>
-      if (item.length > 20 && item.length < 200) keyPoints += PyText.strip(item)
-    }
-    if (keyPoints.length < 3) {
-      var i = 0
-      var done = false
-      while (i < math.min(5, ranked.length) && !done) {
-        val s = ranked(i)._1
-        if (!keyPoints.contains(s)) {
-          keyPoints += (if (s.length > 150) s.substring(0, 150) + "..." else s)
-          if (keyPoints.length >= 5) done = true
-        }
-        i += 1
-      }
-    }
-    keyPoints.toSeq
-  }
+  /** The kept ids, best first. */
+  def ids: Seq[Int] = top.take(n).toSeq
 }

@@ -300,9 +300,6 @@ object Extractor {
       if (bs.length == 1) bs.head._2 else bs.iterator.map(_._2).mkString("\n"))
     val fullText =
       if (pageTexts.length == 1) pageTexts.head else pageTexts.mkString(PageBreak)
-    // one tokenize pass shared across the doc-level analyzers (language
-    // ID has its own zero-alloc marker scanner and no longer needs it)
-    val tokens = if (analysis) TextAnalyzer.tokenize(fullText) else null
 
     val scans = pageTexts.map(LangScript.scan)
     var pageOffset = 0 // running start of the current page's fullText slice
@@ -366,24 +363,10 @@ object Extractor {
         ("mixed", "hybrid_extraction",
           0.05 * (digitalCount - mixedCount) + 10.0 * ocrCount + 12.0 * mixedCount)
 
-    // doc-level analysis (doc_analyzer suite, T4-T12) over the shared
-    // token array — skipped wholesale when the caller only consumes the
-    // extraction contract
-    val (wc, summary, docType, cats, kws, ents) =
-      if (analysis) {
-        // no full-document toLowerCase copy: the indicator automaton
-        // folds case during its own pass
-        val (dt, cats) = TextAnalyzer.docTypeAndCategoriesFoldCase(fullText)
-        (TextAnalyzer.wordCloudFromTokens(tokens),
-          TextAnalyzer.summarize(fullText, tokens),
-          dt, cats,
-          TextAnalyzer.keywordsFromTokens(tokens),
-          TextAnalyzer.entities(fullText))
-      } else {
-        (TextAnalyzer.WordCloud(Nil, 0.0, 0L, 0L),
-          TextAnalyzer.Summary("", "", Nil, 0.0),
-          "other", Nil, Nil, Nil)
-      }
+    // doc-level analysis (doc_analyzer suite, T4-T12) in one pass —
+    // skipped wholesale when the caller only consumes the extraction
+    // contract
+    val an = if (analysis) TextAnalyzer.analyze(fullText) else TextAnalyzer.NoAnalysis
     // E7 stays on with analysis off (signatureStatus is contract
     // metadata, not an analyzer); no pattern spans a PageBreak
     val handwritten = handwrittenOverride.getOrElse(scans.exists(_.sigPattern))
@@ -410,10 +393,11 @@ object Extractor {
       sha256 = hash, sizeBytes = size, status = "ok", error = "",
       title = title, pageCount = pages.length, fullText = fullText,
       pages = pages, signatures = signatures, signatureStatus = sigStatus,
-      docType = docType, categories = cats, keywords = kws, entities = ents,
-      topWords = wc.topWords.map(e => WordCloudOut(e.word, e.count, e.percentage)),
-      summaryBrief = summary.brief, summaryDetailed = summary.detailed,
-      keyPoints = summary.keyPoints,
+      docType = an.docType, categories = an.categories, keywords = an.keywords,
+      entities = an.entities,
+      topWords = an.wordCloud.topWords.map(e => WordCloudOut(e.word, e.count, e.percentage)),
+      summaryBrief = an.summary.brief, summaryDetailed = an.summary.detailed,
+      keyPoints = an.summary.keyPoints,
       detectedLanguage = detectedLang,
       script = LangScript.joinedScript(scans, pageBreakScan),
       totalChars = pages.map(_.charCount.toLong).sum,

@@ -1,6 +1,6 @@
 package graft.extract
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Dataset-level wiring of the extraction engine (SURVEY.md §3.4):
@@ -22,6 +22,11 @@ object Pipeline {
 
   val DefaultOversizeBudget: Long = 256L * 1024 * 1024
 
+  // derived once: deriving a product encoder walks the case class by
+  // reflection, which costs milliseconds per `run`
+  private val inputRowEncoder: Encoder[InputRow] = Encoders.product[InputRow]
+  private val docResultEncoder: Encoder[DocResult] = Encoders.product[DocResult]
+
   /** @param analysis run the T4-T12 doc-analyzer suite inside the map
     *   stage. Pass false when downstream only consumes the extraction
     *   contract (text/spans/pages/language/structure) — compute pruning
@@ -32,10 +37,8 @@ object Pipeline {
       oversizeBudgetBytes: Long = DefaultOversizeBudget,
       analysis: Boolean = true,
       unruledTables: Boolean = false): Dataset[DocResult] = {
-    val spark = input.sparkSession
-    import spark.implicits._
     val pruned = input.select(col("url"), col("warc_ts"), col("html"), col("lang"))
-    pruned.as[InputRow].mapPartitions { rows =>
+    pruned.as(inputRowEncoder).mapPartitions { rows =>
       rows.map { r =>
         val size = if (r.html == null) 0L else r.html.length.toLong
         if (size > oversizeBudgetBytes)
@@ -45,7 +48,7 @@ object Pipeline {
         else Extractor.extract(r.url, r.warc_ts, r.html, r.lang, analysis,
           unruledTables)
       }
-    }
+    }(docResultEncoder)
   }
 
   /** S2 base64 ingest (the Lambda body path,

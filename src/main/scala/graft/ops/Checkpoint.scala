@@ -3,7 +3,11 @@ package graft.ops
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.extract.Pipeline
@@ -28,10 +32,12 @@ import graft.extract.Pipeline
   * files a run), paid again by every later read. The cost is one shuffle
   * of the output rows (a few KB per doc), not of the input payloads.
   *
-  * Per-partition lineage (bucket, doc/ok/fail counts, input bytes,
-  * extraction-failure tally, run id, duration) is appended to a metrics
-  * table at `outDir/_metrics`, one file per run — the analog of the
-  * reference's append-only events/stats tables
+  * Per-partition lineage (bucket, doc/ok/fail/empty counts, input bytes,
+  * run id, duration) is counted while the data is written — an
+  * `Observation` on the written rows keeps one tally per bucket in the
+  * write tasks, so no job reads the table back — and appended to a
+  * metrics table at `outDir/_metrics`, one file per run — the analog of
+  * the reference's append-only events/stats tables
   * (`job_queue/local_queue.py:165-186,222-229`).
   *
   * On a real cluster the manifest directory is the piece a true Iceberg
@@ -52,16 +58,51 @@ object Checkpoint {
       runId: String, nBuckets: Int, skippedBuckets: Int,
       processedBuckets: Int, lineage: Seq[BucketLineage])
 
-  /** The lineage tallies over extraction results, as aggregate columns:
-    * docCount, okCount, failCount (error, oversize or unsupported),
-    * emptyCount and inputBytes. */
-  private[graft] val lineageCounts: Seq[Column] = Seq(
-    count(lit(1)).as("docCount"),
-    sum(when(col("status") === "ok", 1L).otherwise(0L)).as("okCount"),
-    sum(when(col("status").isin("error", "oversize", "unsupported"), 1L)
-      .otherwise(0L)).as("failCount"),
-    sum(when(col("status") === "empty", 1L).otherwise(0L)).as("emptyCount"),
-    sum(col("sizeBytes")).as("inputBytes"))
+  /** The lineage classification of one extraction result, stated once:
+    * per row, one doc, one if ok, one if failed (error, oversize or
+    * unsupported), one if empty, and its input bytes. */
+  private val lineageTerms: Seq[(String, Column)] = Seq(
+    "docCount" -> lit(1L),
+    "okCount" -> when(col("status") === "ok", 1L).otherwise(0L),
+    "failCount" -> when(col("status").isin("error", "oversize", "unsupported"), 1L)
+      .otherwise(0L),
+    "emptyCount" -> when(col("status") === "empty", 1L).otherwise(0L),
+    "inputBytes" -> col("sizeBytes"))
+
+  /** The lineage tallies over extraction results, as aggregate columns
+    * named as in `BucketLineage`. */
+  private[graft] val lineageCounts: Seq[Column] =
+    lineageTerms.map { case (name, term) => sum(term).as(name) }
+
+  /** The lineage terms summed per bucket, in one map-valued aggregate:
+    * bucket → (docCount, okCount, failCount, emptyCount, inputBytes). An
+    * `Observation` can only hold global aggregates, so the grouping is
+    * the aggregate's own buffer, a map from bucket to its five sums. */
+  private object BucketTally extends Aggregator[(Int, Long, Long, Long, Long, Long),
+      mutable.HashMap[Int, Array[Long]], Map[Int, Array[Long]]] {
+    def zero: mutable.HashMap[Int, Array[Long]] = mutable.HashMap.empty
+    def reduce(acc: mutable.HashMap[Int, Array[Long]],
+        r: (Int, Long, Long, Long, Long, Long)): mutable.HashMap[Int, Array[Long]] = {
+      val t = acc.getOrElseUpdate(r._1, new Array[Long](5))
+      t(0) += r._2; t(1) += r._3; t(2) += r._4; t(3) += r._5; t(4) += r._6
+      acc
+    }
+    def merge(a: mutable.HashMap[Int, Array[Long]],
+        b: mutable.HashMap[Int, Array[Long]]): mutable.HashMap[Int, Array[Long]] = {
+      b.foreach { case (bucket, sums) =>
+        val t = a.getOrElseUpdate(bucket, new Array[Long](5))
+        var i = 0
+        while (i < 5) { t(i) += sums(i); i += 1 }
+      }
+      a
+    }
+    def finish(acc: mutable.HashMap[Int, Array[Long]]): Map[Int, Array[Long]] = acc.toMap
+    def bufferEncoder: Encoder[mutable.HashMap[Int, Array[Long]]] =
+      Encoders.kryo[mutable.HashMap[Int, Array[Long]]]
+    def outputEncoder: Encoder[Map[Int, Array[Long]]] = ExpressionEncoder[Map[Int, Array[Long]]]()
+  }
+
+  private val bucketTally = udaf(BucketTally)
 
   private def manifestDir(outDir: String): Path = Paths.get(outDir, "_manifest")
   private def dataDir(outDir: String): String = s"$outDir/data"
@@ -119,7 +160,12 @@ object Checkpoint {
   /** Run extraction over `input` (input_hint schema), resuming past any
     * previously committed buckets. Returns what was skipped vs processed
     * plus the per-bucket lineage appended to the metrics table. An input
-    * with nothing left to do writes no data file and processes 0 buckets. */
+    * with nothing left to do writes no data file and processes 0 buckets.
+    *
+    * The lineage is counted in the write: an `Observation` on the written
+    * frame, after the rebalance, tallies each bucket's rows in the write
+    * tasks as they pass, so it counts exactly the rows this run commits
+    * and the table is never read back. */
   def runResumable(input: DataFrame, outDir: String, nBuckets: Int,
       runId: String,
       oversizeBudgetBytes: Long = Pipeline.DefaultOversizeBudget): ResumeReport = {
@@ -128,7 +174,9 @@ object Checkpoint {
     val t0 = System.nanoTime()
 
     val done = completedBuckets(outDir)
+    val tally = Observation()
     val results = toWrite(input, done, nBuckets, oversizeBudgetBytes)
+      .observe(tally, bucketTally(col("bucket") +: lineageTerms.map(_._2): _*).as("t"))
 
     // Replace exactly the recomputed partitions; completed ones untouched.
     val overwriteKey = "spark.sql.sources.partitionOverwriteMode"
@@ -145,22 +193,14 @@ object Checkpoint {
       }
     }
 
-    // Lineage from the data as written (read-back → what a reader will see;
-    // partition pruning keeps this to the recomputed buckets only). The
-    // written schema skips inference, which would also fail on a data
-    // directory holding no file yet.
+    // the write has finished, so the observation is (or is about to be)
+    // delivered: get waits for the listener bus, not for another job
     val durationMs = (System.nanoTime() - t0) / 1000000L
-    val todoBuckets = (0 until nBuckets).filterNot(done)
-    val lineage = spark.read.schema(results.schema).parquet(dataDir(outDir))
-      .filter(col("bucket").isin(todoBuckets: _*))
-      .groupBy(col("bucket"))
-      .agg(lineageCounts.head, lineageCounts.tail: _*)
-      .collect()
-      .map { r =>
-        BucketLineage(runId, r.getAs[Int]("bucket"), r.getAs[Long]("docCount"),
-          r.getAs[Long]("okCount"), r.getAs[Long]("failCount"),
-          r.getAs[Long]("emptyCount"), r.getAs[Long]("inputBytes"), durationMs)
-      }.toSeq.sortBy(_.bucket)
+    val lineage = tally.get("t").asInstanceOf[collection.Map[Int, collection.Seq[Long]]]
+      .toSeq.sortBy(_._1)
+      .map { case (bucket, t) =>
+        BucketLineage(runId, bucket, t(0), t(1), t(2), t(3), t(4), durationMs)
+      }
 
     // Append lineage to the metrics table, then commit manifests last —
     // a bucket counts as done only after data + metrics are durable.

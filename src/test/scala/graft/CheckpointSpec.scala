@@ -2,8 +2,14 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -148,5 +154,76 @@ class CheckpointSpec extends AnyFunSuite {
     val n = parquetCount(Paths.get(out, "_metrics"))
     assert(n == 2, s"_metrics holds $n parquet files after two runs")
     assert(Checkpoint.metrics(spark, out).count() == Buckets + 1)
+  }
+
+  /** Per-bucket (bucket, docs, ok, fail, empty, bytes) of the committed
+    * table, read back and counted by status. */
+  private def readBack(out: String, buckets: Set[Int]): Seq[(Int, Long, Long, Long, Long, Long)] =
+    Checkpoint.output(spark, out)
+      .filter(col("bucket").isin(buckets.toSeq: _*))
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)), count(when(col("status") === "ok", 1)),
+        count(when(col("status").isin("error", "oversize", "unsupported"), 1)),
+        count(when(col("status") === "empty", 1)), sum(col("sizeBytes")))
+      .as[(Int, Long, Long, Long, Long, Long)].collect().toSeq.sortBy(_._1)
+
+  private def observed(r: Checkpoint.ResumeReport): Seq[(Int, Long, Long, Long, Long, Long)] =
+    r.lineage.map(l => (l.bucket, l.docCount, l.okCount, l.failCount, l.emptyCount, l.inputBytes))
+
+  test("observed lineage equals a read-back of the committed table (full run and resume)") {
+    val out = freshDir()
+    val corpus = CorpusGen.generate(spark, N, partitions = 8).toDF()
+    val full = Checkpoint.runResumable(corpus, out, Buckets, runId = "r1")
+    assert(observed(full) == readBack(out, (0 until Buckets).toSet))
+    // the corpus has error, empty and unsupported rows: every tally is live
+    assert(full.lineage.map(_.failCount).sum > 0 && full.lineage.map(_.emptyCount).sum > 0)
+
+    val lost = Set(2, 7)
+    lost.foreach(Checkpoint.invalidateBucket(out, _))
+    val resumed = Checkpoint.runResumable(corpus, out, Buckets, runId = "r2")
+    assert(resumed.lineage.map(_.bucket).toSet == lost)
+    assert(observed(resumed) == readBack(out, lost))
+  }
+
+  test("runs with nothing to write return without waiting on the lineage") {
+    val out = freshDir()
+    val corpus = CorpusGen.generate(spark, N, partitions = 8).toDF()
+    val empty = Future(Checkpoint.runResumable(corpus.filter(lit(false)), out, Buckets, "r1"))
+    assert(Await.result(empty, 2.minutes).lineage.isEmpty)
+    Checkpoint.runResumable(corpus, out, Buckets, runId = "r2")
+    val noop = Future(Checkpoint.runResumable(corpus, out, Buckets, runId = "r3"))
+    assert(Await.result(noop, 2.minutes).processedBuckets == 0)
+  }
+
+  test("a resume runs 3 Spark jobs: the write and the lineage append, no read-back") {
+    val out = freshDir()
+    val corpus = CorpusGen.generate(spark, N, partitions = 8).toDF()
+    Checkpoint.runResumable(corpus, out, Buckets, runId = "r1")
+    Seq(0, 5).foreach(Checkpoint.invalidateBucket(out, _))
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val fenceSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case "ckpt-resume" => jobs.incrementAndGet()
+          case "ckpt-fence" => fenceSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("ckpt-resume", "resume")
+      Checkpoint.runResumable(corpus, out, Buckets, runId = "r2")
+      // the bus delivers events in order: once the fence job's start is
+      // seen, every job of the resume has been counted
+      sc.setJobGroup("ckpt-fence", "fence")
+      spark.range(1).collect()
+      assert(fenceSeen.await(1, java.util.concurrent.TimeUnit.MINUTES))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 3, s"a resume ran ${jobs.get} jobs")
   }
 }

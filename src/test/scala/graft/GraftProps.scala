@@ -268,7 +268,76 @@ object GraftProps extends Properties("graft") {
 
   property("summarize equals the reference summary loops") =
     forAll(summaryText) { t =>
-      TextAnalyzer.summarize(t) == graft.analyzers.SummarizeReference.summarize(t)
+      TextAnalyzer.summarize(t) == graft.analyzers.AnalyzerReference.summarize(t)
+    }
+
+  // texts for the one analyzer pass: the chars whose per-char lowercase
+  // differs from String.toLowerCase (İ, Σ) and ς, surrogate pairs (one
+  // that lowercases), Java's line terminators and Python-only whitespace,
+  // list markers, company suffixes and `&`, emails, page-break marks,
+  // all-caps and `[`-prefixed sentences, name chains, a combining mark
+  private val analyzerText: Gen[String] = {
+    val words = Seq("the", "main", "result", "important", "data", "2024", "key",
+      "report", "value", "of", "Lorem", "contrat", "facture", "résultat", "Jean",
+      "Marie", "Dupont", "Curie", "Paris", "ΣΟΦΙΑ", "σοφός", "İstanbul", "naïve",
+      "e\u0301", "a_b", "ab-cd", "x-", "1.", "42", "---", "Acme", "Inc")
+    val sentence = Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, Gen.oneOf(words)))
+      .map(_.mkString(" ").capitalize + ".")
+    val pieces = Seq("İ", "Σ", "ς", "σ", "\uD83D\uDE00", "\uD801\uDC00", "\r",
+      "\r\n", "\n", "\n\n", "\u0085", "\u2028", "\u2029", "\u000B", "\u00A0", "\f",
+      "\t", " ", "•", "* ", "- ", "-", "• ", "3.", "4)", "5]", "12. ", "Acme SA",
+      "Big SAS", "Foo SARL", "Bar Inc", "Baz GmbH", "Qux Ltd", "Zed LLC", "Kraft AG",
+      "Smith & Sons Inc.", "ACME-CORP SA", " & ", "USA", "SAS", "_SA", "AGé",
+      "john@gmail.com", "sales@acme.com", "x@acme-corp.fr", "@acme.", "@gmail.", "@@x.",
+      "Jean Dupont", "Marie Curie2", "Paul Émile", "Jean\tMarie\nCurie", "Anne Bé_",
+      "Le Monde", "Éric Rohmer", "Zoë Ölçü",
+      "x--- PAGE BREAK ---y", "--- PAGE BREAK ---", "\n\n--- PAGE BREAK ---\n\n",
+      "THE MAIN RESULT IS IMPORTANT FOR ALL THE PARTIES.",
+      "[Note] the main result is important for all of the data.", "!", "?", ".",
+      ",", "_", "\u0301")
+    val part = Gen.frequency(4 -> sentence, 5 -> Gen.oneOf(pieces),
+      1 -> Gen.asciiPrintableStr.map(_.take(12)))
+    val sep = Gen.oneOf("", " ", " ", "\n", "\n\n", "\r\n", "\u0085")
+    Gen.listOf(Gen.zip(part, sep)).map(_.map { case (p, s) => p + s }.mkString)
+  }
+
+  property("analyze equals the reference analyzers over 5,000 texts") = {
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(5000),
+      Prop.forAllNoShrink(analyzerText) { t =>
+        val got = TextAnalyzer.analyze(t)
+        val want = graft.analyzers.AnalyzerReference.analyze(t)
+        (got == want) :| s"text ${t.take(400)}: got $got, reference $want"
+      })
+    (res.passed && res.succeeded >= 5000) :| res.status.toString
+  }
+
+  // texts whose summary turns on one sentence's tokens: the last of four
+  // short sentences gains 2 tokens, and with them the 10-30 length band,
+  // if a page-break mark replaced inside it is scored as the text's
+  // tokens; a sentence touching a mark would weigh "zeta---" or
+  // "---zeta" (1 occurrence) for "zeta" (26) and fall from the brief;
+  // sigma and dotted-I sentences take the string-lowering path
+  property("analyze equals the reference on sentences a page break or a fold splits") = {
+    val short = "Alpha beta gamma delta epsilon zeta."
+    val zetas = Seq.fill(25)("zeta").mkString("[", " ", "]. ")
+    val three = "Alpha beta gamma delta epsilon eta. Beta gamma delta epsilon eta theta. " +
+      "Gamma delta epsilon eta theta iota. "
+    val texts = Seq(
+      zetas + three + "Kappa lambda mu nu xi zeta--- PAGE BREAK ---",
+      zetas + three + "Kappa lambda.--- PAGE BREAK ---Zeta kappa lambda mu nu xi.",
+      s"$short Beta gamma delta epsilon eta theta. Gamma delta epsilon zeta theta iota. " +
+        "One two three four five six seven x--- PAGE BREAK ---y.",
+      s"$short Kappa ΣΟΦΙΑ σοφός alpha beta gamma. İstanbul alpha beta gamma delta. $short",
+      s"x--- PAGE BREAK --- PAGE BREAK ---y $short\n\n--- PAGE BREAK ---\n\n$short")
+    val bad = texts.filter(t => TextAnalyzer.analyze(t) != graft.analyzers.AnalyzerReference.analyze(t))
+    bad.isEmpty :| bad.mkString(" | ")
+  }
+
+  property("list-item and entity scanners equal their regexes") =
+    forAll(analyzerText) { t =>
+      val m = graft.analyzers.AnalyzerReference.scannerMismatch(t)
+      m.isEmpty :| m.getOrElse("")
     }
 
   property("fused Boilerplate.segment equals the pre-fusion segment") =

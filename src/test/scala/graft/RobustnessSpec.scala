@@ -177,4 +177,88 @@ class RobustnessSpec extends AnyFunSuite {
     assert(r.tables.nonEmpty)
     assert(r.tables.head.data == Seq(Seq("Qty", "Price"), Seq("2", "$5.00")))
   }
+
+  // -- hostile text for the analyzers: long runs that backtracking regexes
+  // rescanned once per start, quadratic in the run's length
+
+  /** `body` on a worker thread, failing past `limitMs`; its wall time. A
+    * runaway regex ignores interrupts, so the thread is left to the JVM's
+    * exit (it is a daemon) rather than holding the suite. */
+  private def withinMs[T](limitMs: Long)(body: => T): (T, Long) = {
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor { (r: Runnable) =>
+      val t = new Thread(r, "hostile-text")
+      t.setDaemon(true)
+      t
+    }
+    try {
+      val t0 = System.nanoTime()
+      val f = pool.submit(() => body)
+      val v =
+        try f.get(limitMs, java.util.concurrent.TimeUnit.MILLISECONDS)
+        catch {
+          case _: java.util.concurrent.TimeoutException => fail(s"not done within $limitMs ms")
+        }
+      (v, (System.nanoTime() - t0) / 1000000L)
+    } finally pool.shutdownNow()
+  }
+
+  /** `kb` KB of `unit` repeated, with `head` before and `tail` after. */
+  private def shape(head: String, unit: String, tail: String, kb: Int): String = {
+    val sb = new StringBuilder(head)
+    while (sb.length < kb * 1024) sb ++= unit
+    sb ++= tail
+    sb.toString
+  }
+
+  private def htmlPage(text: String): Array[Byte] =
+    s"<html><body><main><p>$text</p></main></body></html>".getBytes(StandardCharsets.UTF_8)
+
+  /** The 256 KB shape gives one `ok` row in under 1 s, and costs at most
+    * 5× the 64 KB shape (the best of 3 runs each, after a 16 KB warm-up). */
+  private def linearAnalysis(name: String, run: Int => String): Unit = {
+    withinMs(20000)(run(16))
+    def best(kb: Int, limitMs: Long): Long =
+      (1 to 3).map { _ =>
+        val (status, ms) = withinMs(limitMs)(run(kb))
+        assert(status == "ok", s"$name at $kb KB")
+        ms
+      }.min
+    val small = best(64, 5000)
+    val large = best(256, 1000)
+    assert(large <= 5 * math.max(small, 20), s"$name: 64 KB $small ms, 256 KB $large ms")
+  }
+
+  private def extracted(text: Int => String)(kb: Int): String =
+    Extractor.extract("u", ts, htmlPage(text(kb)), "en").status
+
+  test("an all-caps legal paragraph is analyzed in linear time") {
+    // the company pattern: every word start scanned the run back to its
+    // end looking for a suffix; "DAMAGES" holds "AG", "WARRANTIES" none
+    linearAnalysis("all caps", extracted(kb => shape("", "THE SOFTWARE IS PROVIDED AS IS " +
+      "WITHOUT WARRANTY OF ANY KIND AND IN NO EVENT SHALL THE AUTHORS BE LIABLE FOR " +
+      "ANY DAMAGES OR OTHER LIABILITY ", "", kb)))
+  }
+
+  test("Title-Case words after one USA are analyzed in linear time") {
+    // the company suffix "SA" sits before every later start, so no start
+    // after it matched and each rescanned the whole run
+    linearAnalysis("title case", extracted(kb => shape("USA ", "Annual Report Of The " +
+      "Board On Results And Outlook ", "", kb)))
+  }
+
+  test("a line of dash bullets with U+0085 before its end is analyzed in linear time") {
+    // every '-' started a list item that ran to the U+0085, which ends
+    // neither the item nor the text; HTML normalization keeps U+0085
+    linearAnalysis("dash bullets", extracted(kb => shape("", "word - ", "\u0085end", kb)))
+  }
+
+  test("key points of marker runs before a stray line terminator take linear time") {
+    // `x-` and `1.` runs with a \r before the end: each marker's item ran to the \r
+    Seq("x-", "1.").foreach { unit =>
+      linearAnalysis(s"'$unit' run", kb => {
+        graft.analyzers.TextAnalyzer.summarize(shape("", unit, "\rend", kb))
+        "ok"
+      })
+    }
+  }
 }
