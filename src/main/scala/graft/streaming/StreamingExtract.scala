@@ -1,8 +1,10 @@
 package graft.streaming
 
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -58,21 +60,21 @@ object StreamingExtract {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
+          // batchId rides on every data row so a batch replayed after a
+          // crash-between-write-and-checkpoint-commit can be deduped
+          // downstream (keep max batchId per url, or filter on the
+          // committed batch ids from _metrics)
           val results = Pipeline.run(batch, oversizeBudgetBytes)
             .withColumn("batchId", lit(batchId))
-            .persist()
-          try {
-            // batchId rides on every data row so a batch replayed after a
-            // crash-between-write-and-checkpoint-commit can be deduped
-            // downstream (keep max batchId per url, or filter on the
-            // committed batch ids from _metrics)
-            results.write.mode("append").parquet(s"$outDir/data")
-            // lineage event row per micro-batch (events-table analog)
-            val counts = Checkpoint.lineageCounts
-            results.groupBy()
-              .agg(counts.head, counts.tail :+ max(col("batchId")).as("batchId"): _*)
-              .write.mode("append").parquet(s"$outDir/_metrics")
-          } finally results.unpersist()
+          // lineage event row per micro-batch (events-table analog),
+          // counted in the data write by an `Observation`
+          val counts = Checkpoint.lineageCounts :+ max(col("batchId")).as("batchId")
+          val lineage = Observation()
+          results.observe(lineage, counts.head, counts.tail: _*)
+            .write.mode("append").parquet(s"$outDir/data")
+          val row = Await.result(lineage.future, Duration.Inf)
+          spark.createDataFrame(Seq(row).asJava, row.schema)
+            .write.mode("append").parquet(s"$outDir/_metrics")
         }
         ()
       }
