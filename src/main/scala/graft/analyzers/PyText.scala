@@ -49,12 +49,25 @@ object PyText {
     s.substring(a, b)
   }
 
-  /** Python `round(x, n)` — round-half-even on the exact binary value. */
+  private val Pow10 = Array.tabulate(23)(i => math.pow(10, i)) // each exact
+  private val TwoP52 = 4503599627370496.0
+
+  /** Python `round(x, n)` — round-half-even on the exact binary value.
+    * Away from a tie, `rint(x·10ⁿ)` in doubles is the integer the exact
+    * product rounds to (the product errs by at most half an ulp), and
+    * dividing it by 10ⁿ rounds like `BigDecimal.doubleValue`. Within 2 ulp
+    * of a .5 tie, at |x·10ⁿ| ≥ 2⁵², for n outside 0..22 and for non-finite
+    * x, the exact `BigDecimal` formula decides. */
   def pyRound(x: Double, n: Int): Double = {
-    if (x.isNaN || x.isInfinite) return x
-    new java.math.BigDecimal(x)
-      .setScale(n, java.math.RoundingMode.HALF_EVEN)
-      .doubleValue()
+    if (n >= 0 && n < Pow10.length) {
+      val y = x * Pow10(n)
+      if (Math.abs(y) < TwoP52 && Math.abs(y - Math.floor(y) - 0.5) > 2 * Math.ulp(y)) {
+        val r = Math.rint(y)
+        return if (r == 0) 0.0 else r / Pow10(n) // BigDecimal has no -0
+      }
+    }
+    if (x.isNaN || x.isInfinite) x
+    else new java.math.BigDecimal(x).setScale(n, java.math.RoundingMode.HALF_EVEN).doubleValue()
   }
 
   /** Python `s.isdigit()` (ASCII + unicode decimal digits; false for ""). */

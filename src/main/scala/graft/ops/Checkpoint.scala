@@ -2,11 +2,14 @@ package graft.ops
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.UUID
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -35,10 +38,11 @@ import graft.extract.Pipeline
   * Per-partition lineage (bucket, doc/ok/fail/empty counts, input bytes,
   * run id, duration) is counted while the data is written — an
   * `Observation` on the written rows keeps one tally per bucket in the
-  * write tasks, so no job reads the table back — and appended to a
-  * metrics table at `outDir/_metrics`, one file per run — the analog of
-  * the reference's append-only events/stats tables
-  * (`job_queue/local_queue.py:165-186,222-229`).
+  * write tasks, so no job reads the table back. After the data write the
+  * driver, as an Iceberg commit writes its metadata, appends it to a
+  * metrics table at `outDir/_metrics`, one JSON-lines file per run, then
+  * writes the manifest files, with no Spark job. `_metrics` is the analog
+  * of the reference's events/stats tables (`job_queue/local_queue.py:165-186,222-229`).
   *
   * On a real cluster the manifest directory is the piece a true Iceberg
   * catalog replaces (snapshot commit + manifest pruning); everything else
@@ -106,7 +110,30 @@ object Checkpoint {
 
   private def manifestDir(outDir: String): Path = Paths.get(outDir, "_manifest")
   private def dataDir(outDir: String): String = s"$outDir/data"
-  private def metricsDir(outDir: String): String = s"$outDir/_metrics"
+  private def metricsDir(outDir: String): Path = Paths.get(outDir, "_metrics")
+
+  private val lineageSchema = Encoders.product[BucketLineage].schema
+  private def lineageRow(l: BucketLineage): Row =
+    new GenericRowWithSchema(l.productIterator.toArray, lineageSchema)
+  private val ManifestFile = """bucket-(\d+)\.json""".r
+
+  /** Commits `rows` as the JSON-lines file `dir/name` from the driver,
+    * the way an Iceberg commit writes its metadata: to a dot-prefixed temp
+    * name (which no reader lists), then moved with ATOMIC_MOVE. A crash
+    * between data write and manifest write re-runs the bucket (dynamic
+    * overwrite makes that idempotent); a bucket is only ever skipped if its
+    * manifest file exists, i.e. its data write completed. */
+  private def commitJson(dir: Path, name: String, rows: Seq[Row]): Unit = {
+    Files.createDirectories(dir)
+    val tmp = dir.resolve(s".$name.tmp")
+    Files.write(tmp, rows.map(_.json + "\n").mkString.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Appends `rows` (each carrying its schema) to `outDir/_metrics` as one
+    * run file: the one writer of every `_metrics` table in the engine. */
+  private[graft] def appendMetrics(outDir: String, rows: Seq[Row]): Unit =
+    commitJson(metricsDir(outDir), s"run-${UUID.randomUUID()}.json", rows)
 
   /** Buckets already committed in a previous (possibly partial) run. */
   def completedBuckets(outDir: String): Set[Int] = {
@@ -114,33 +141,10 @@ object Checkpoint {
     if (!Files.exists(d)) Set.empty
     else {
       val it = Files.list(d)
-      try {
-        import scala.jdk.CollectionConverters._
-        it.iterator().asScala
-          .map(_.getFileName.toString)
-          .collect { case s if s.startsWith("bucket-") && s.endsWith(".json") =>
-            s.stripPrefix("bucket-").stripSuffix(".json").toInt
-          }.toSet
-      } finally it.close()
+      try it.iterator().asScala.map(_.getFileName.toString)
+        .collect { case ManifestFile(b) => b.toInt }.toSet
+      finally it.close()
     }
-  }
-
-  /** Atomic per-bucket commit: write JSON to a temp name, then rename.
-    * A crash between data write and manifest write re-runs the bucket
-    * (dynamic overwrite makes that idempotent); a bucket is only ever
-    * skipped if its manifest file exists, i.e. its data write completed. */
-  private def commitBucket(outDir: String, l: BucketLineage): Unit = {
-    val d = manifestDir(outDir)
-    Files.createDirectories(d)
-    val json =
-      s"""{"run_id":"${l.runId}","bucket":${l.bucket},"doc_count":${l.docCount},
-         |"ok_count":${l.okCount},"fail_count":${l.failCount},
-         |"empty_count":${l.emptyCount},"input_bytes":${l.inputBytes},
-         |"duration_ms":${l.durationMs}}""".stripMargin.replace("\n", "")
-    val tmp = d.resolve(s".bucket-${l.bucket}.json.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, d.resolve(f"bucket-${l.bucket}%05d.json"),
-      StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** The frame `runResumable` writes: the rows of `input` whose bucket is
@@ -170,7 +174,6 @@ object Checkpoint {
       runId: String,
       oversizeBudgetBytes: Long = Pipeline.DefaultOversizeBudget): ResumeReport = {
     val spark = input.sparkSession
-    import spark.implicits._
     val t0 = System.nanoTime()
 
     val done = completedBuckets(outDir)
@@ -202,22 +205,21 @@ object Checkpoint {
         BucketLineage(runId, bucket, t(0), t(1), t(2), t(3), t(4), durationMs)
       }
 
-    // Append lineage to the metrics table, then commit manifests last —
-    // a bucket counts as done only after data + metrics are durable.
+    // Lineage first, manifests last: a bucket is done once data + metrics are durable.
     if (lineage.nonEmpty) {
-      lineage.toDF().coalesce(1).write.mode("append").parquet(metricsDir(outDir))
-      lineage.foreach(commitBucket(outDir, _))
+      appendMetrics(outDir, lineage.map(lineageRow))
+      lineage.foreach(l =>
+        commitJson(manifestDir(outDir), f"bucket-${l.bucket}%05d.json", Seq(lineageRow(l))))
     }
 
     ResumeReport(runId, nBuckets, done.size, lineage.size, lineage)
   }
 
-  /** The per-partition lineage/metrics table (append-only across runs),
-    * read with the schema it is written with, so no footer is read to
-    * infer one. */
+  /** The per-partition lineage/metrics table (append-only across runs):
+    * its committed run files, read with the schema they are written with,
+    * so no pass infers one. */
   def metrics(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.schema(Encoders.product[BucketLineage].schema)
-      .parquet(metricsDir(outDir))
+    spark.read.schema(lineageSchema).json(s"${metricsDir(outDir)}/*.json")
 
   /** The committed output table. */
   def output(spark: SparkSession, outDir: String): DataFrame =

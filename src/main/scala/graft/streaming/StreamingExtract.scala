@@ -37,8 +37,9 @@ object StreamingExtract {
     StructField("lang", StringType)))
 
   /** Start the extraction stream: parquet files arriving under `inputDir`
-    * → typed extraction → append to `outDir/data`, with per-batch lineage
-    * rows appended to `outDir/_metrics`. Exactly-once per micro-batch via
+    * → typed extraction → append to `outDir/data`, with each batch's
+    * lineage row in its own JSON-lines file of `outDir/_metrics` (written
+    * by `Checkpoint.appendMetrics`). Exactly-once per micro-batch via
     * the streaming checkpoint (re-delivered batches rewrite the same
     * batchId — dedup downstream on batch_id if the sink is reused).
     *
@@ -49,8 +50,6 @@ object StreamingExtract {
       checkpointDir: String, availableNow: Boolean = true,
       maxFilesPerTrigger: Int = 64,
       oversizeBudgetBytes: Long = Pipeline.DefaultOversizeBudget): StreamingQuery = {
-    import spark.implicits._
-
     val stream = spark.readStream
       .schema(inputSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -67,14 +66,13 @@ object StreamingExtract {
           val results = Pipeline.run(batch, oversizeBudgetBytes)
             .withColumn("batchId", lit(batchId))
           // lineage event row per micro-batch (events-table analog),
-          // counted in the data write by an `Observation`
+          // counted in the data write by an `Observation` and appended to
+          // `_metrics` from the driver: no Spark job after the write
           val counts = Checkpoint.lineageCounts :+ max(col("batchId")).as("batchId")
           val lineage = Observation()
           results.observe(lineage, counts.head, counts.tail: _*)
             .write.mode("append").parquet(s"$outDir/data")
-          val row = Await.result(lineage.future, Duration.Inf)
-          spark.createDataFrame(Seq(row).asJava, row.schema)
-            .write.mode("append").parquet(s"$outDir/_metrics")
+          Checkpoint.appendMetrics(outDir, Seq(Await.result(lineage.future, Duration.Inf)))
         }
         ()
       }

@@ -40,6 +40,10 @@ class CheckpointSpec extends AnyFunSuite {
   private def parquetCount(p: Path): Int =
     listDir(p).count(_.getFileName.toString.endsWith(".parquet"))
 
+  /** Committed `_metrics` run files: `run-<uuid>.json`, no temp files. */
+  private def runFileCount(p: Path): Int =
+    listDir(p).count(f => f.getFileName.toString.matches("run-[0-9a-f-]{36}\\.json"))
+
   /** `.parquet` files in each `bucket=k` directory of the data table. */
   private def filesPerBucket(out: String): Map[String, Int] =
     listDir(Paths.get(out, "data")).filter(Files.isDirectory(_))
@@ -151,8 +155,8 @@ class CheckpointSpec extends AnyFunSuite {
     Checkpoint.runResumable(corpus, out, Buckets, runId = "r1")
     Checkpoint.invalidateBucket(out, 3)
     Checkpoint.runResumable(corpus, out, Buckets, runId = "r2")
-    val n = parquetCount(Paths.get(out, "_metrics"))
-    assert(n == 2, s"_metrics holds $n parquet files after two runs")
+    val n = runFileCount(Paths.get(out, "_metrics"))
+    assert(n == 2, s"_metrics holds $n run files after two runs")
     assert(Checkpoint.metrics(spark, out).count() == Buckets + 1)
   }
 
@@ -195,7 +199,7 @@ class CheckpointSpec extends AnyFunSuite {
     assert(Await.result(noop, 2.minutes).processedBuckets == 0)
   }
 
-  test("a resume runs 3 Spark jobs: the write and the lineage append, no read-back") {
+  test("a resume runs 2 Spark jobs: the data write only, no lineage job or read-back") {
     val out = freshDir()
     val corpus = CorpusGen.generate(spark, N, partitions = 8).toDF()
     Checkpoint.runResumable(corpus, out, Buckets, runId = "r1")
@@ -224,6 +228,45 @@ class CheckpointSpec extends AnyFunSuite {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    assert(jobs.get == 3, s"a resume ran ${jobs.get} jobs")
+    assert(jobs.get == 2, s"a resume ran ${jobs.get} jobs")
+  }
+
+  test("a run id with a quote, a backslash and a newline round-trips through manifest and metrics") {
+    val out = freshDir()
+    val runId = "r\"1\\x\n"
+    val corpus = CorpusGen.generate(spark, N, partitions = 8).toDF()
+    Checkpoint.runResumable(corpus, out, Buckets, runId)
+    val manifest = spark.read.option("mode", "FAILFAST")
+      .schema("runId STRING, bucket INT, docCount LONG")
+      .json(Paths.get(out, "_manifest", "bucket-00003.json").toString)
+      .as[(String, Int, Long)].collect().toSeq
+    assert(manifest.map(r => (r._1, r._2)) == Seq((runId, 3)))
+    assert(Checkpoint.metrics(spark, out).select("runId").distinct().as[String]
+      .collect().toSeq == Seq(runId))
+  }
+
+  test("temp files a crash leaves in _metrics and _manifest are ignored; the resume redoes their buckets") {
+    val out = freshDir()
+    val corpus = CorpusGen.generate(spark, N, partitions = 8).toDF()
+    val full = Checkpoint.runResumable(corpus, out, Buckets, runId = "r1")
+    // a crash between write and move: bucket 3's manifest and the run file
+    // of the lineage of the run that redid it were written, never renamed
+    Checkpoint.invalidateBucket(out, 3)
+    val line = Checkpoint.metrics(spark, out).filter(col("bucket") === 3).toJSON.head()
+    Files.write(Paths.get(out, "_manifest", ".bucket-00003.json.tmp"), line.getBytes("UTF-8"))
+    Files.write(Paths.get(out, "_metrics", s".run-${java.util.UUID.randomUUID()}.json.tmp"),
+      line.replace("r1", "crashed").getBytes("UTF-8"))
+
+    assert(Checkpoint.metrics(spark, out).count() == Buckets)
+    assert(Checkpoint.metrics(spark, out).filter(col("runId") === "crashed").count() == 0)
+    assert(Checkpoint.completedBuckets(out) == (0 until Buckets).toSet - 3)
+
+    val resumed = Checkpoint.runResumable(corpus, out, Buckets, runId = "r2")
+    assert(resumed.lineage.map(_.bucket) == Seq(3))
+    assert(observed(resumed) == observed(full).filter(_._1 == 3))
+    assert(Checkpoint.completedBuckets(out) == (0 until Buckets).toSet)
+    assert(Checkpoint.metrics(spark, out).count() == Buckets + 1)
+    assert(runFileCount(Paths.get(out, "_metrics")) == 2)
+    assert(Checkpoint.output(spark, out).count() == N)
   }
 }

@@ -145,6 +145,38 @@ object GraftProps extends Properties("graft") {
       dt == best && cats == expCats.distinct.sorted.take(5).toSeq
     }
 
+  property("pyRound equals the BigDecimal formula on 10^6 draws and every k+0.5 tie") = {
+    def exact(x: Double, n: Int): Double =
+      if (x.isNaN || x.isInfinite) x
+      else new java.math.BigDecimal(x).setScale(n, java.math.RoundingMode.HALF_EVEN).doubleValue()
+    val rnd = new java.util.Random(1301)
+    def signed(x: Double) = if (rnd.nextBoolean()) x else -x
+    val specials = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 0.0,
+      -0.0, Double.MaxValue, Double.MinPositiveValue, 4503599627370496.5 / 100)
+    val draws = Iterator.fill(1000000) {
+      rnd.nextInt(4) match {
+        case 0 => // word-cloud percentage
+          val total = 1 + rnd.nextInt(20000)
+          (rnd.nextInt(total + 1).toDouble / total * 100, 2)
+        case 1 => // language confidence
+          val total = 1 + rnd.nextInt(500)
+          (rnd.nextInt(total + 1).toDouble / total, 3)
+        case 2 => (signed(rnd.nextDouble() * 1e6), rnd.nextInt(7))
+        case _ => (signed(math.pow(10, rnd.nextDouble() * 40 - 20)), rnd.nextInt(9))
+      }
+    } ++ specials.iterator.flatMap(x => Iterator(-1, 0, 2, 3, 22, 23).map(n => (x, n)))
+    val ties = for {
+      n <- Iterator(2, 3)
+      k <- Iterator.range(0, 100 * math.pow(10, n).toInt)
+      t = (k + 0.5) / math.pow(10, n)
+      x <- Iterator(t, Math.nextUp(t), Math.nextDown(t), -t)
+    } yield (x, n)
+    val bad = (draws ++ ties)
+      .filter { case (x, n) => java.lang.Double.compare(PyText.pyRound(x, n), exact(x, n)) != 0 }
+      .take(5).toList
+    bad.isEmpty :| s"pyRound differs from the BigDecimal formula at $bad"
+  }
+
   property("pageStats counting loops equal the split-based definitions") =
     forAll(anyText) { s =>
       val got = graft.analyzers.LangScript.pageStats(s)

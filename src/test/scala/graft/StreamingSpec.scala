@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -41,7 +42,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(outDf.select("url").distinct().count() == 300)
 
     // per-batch lineage rows in the metrics table cover all docs
-    val metrics = spark.read.parquet(s"$out/_metrics")
+    val metrics = spark.read.json(s"$out/_metrics")
     assert(metrics.agg(sum("docCount")).as[Long].head() == 300)
     assert(metrics.select("batchId").distinct().count() >= 2)
 
@@ -146,11 +147,47 @@ class StreamingSpec extends AnyFunSuite {
     val byStatus = spark.read.parquet(s"$out/data")
       .groupBy("status").count().as[(String, Long)].collect().toMap
     def n(statuses: String*): Long = statuses.map(byStatus.getOrElse(_, 0L)).sum
-    val lineage = spark.read.parquet(s"$out/_metrics")
+    val lineage = spark.read.json(s"$out/_metrics")
       .select("docCount", "okCount", "failCount", "emptyCount")
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(lineage == Seq((100L, n("ok"), n("error", "oversize", "unsupported"), n("empty"))))
     assert(n("empty") > 0)
+  }
+
+  test("a micro-batch runs 2 Spark jobs: the emptiness probe and the data write, no lineage job") {
+    val root = Files.createTempDirectory("graft_stream_jobs_").toString
+    val in = s"$root/in"; val out = s"$root/out"
+    CorpusGen.generate(spark, 100, partitions = 1).toDF()
+      .write.mode("append").parquet(in)
+    val sc = spark.sparkContext
+    val jobsByQuery = new java.util.concurrent.ConcurrentHashMap[String, Int]
+    val fenceSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties) match {
+        case Some(p) if p.getProperty("spark.jobGroup.id") == "stream-fence" => fenceSeen.countDown()
+        case Some(p) if p.getProperty("sql.streaming.queryId") != null =>
+          jobsByQuery.merge(p.getProperty("sql.streaming.queryId"), 1, Integer.sum)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    val q = try {
+      val q = StreamingExtract.start(spark, in, out, s"$root/ckpt")
+      q.awaitTermination()
+      // the bus delivers events in order: once the fence job's start is
+      // seen, every job of the stream has been counted
+      sc.setJobGroup("stream-fence", "fence")
+      spark.range(1).collect()
+      assert(fenceSeen.await(1, java.util.concurrent.TimeUnit.MINUTES))
+      q
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val batches = q.recentProgress.count(_.numInputRows > 0)
+    assert(batches == 1)
+    val jobs = jobsByQuery.getOrDefault(q.id.toString, 0)
+    assert(jobs == 2, s"a micro-batch ran $jobs jobs")
   }
 
   test("watermarked daily roll-up over the results stream") {
