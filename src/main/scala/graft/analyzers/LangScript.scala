@@ -333,13 +333,17 @@ object LangScript {
 
   // ------------------------------------------ T16/T17 confidence semantics
 
-  /** `intermediate_format.py:44-55` thresholds. */
+  /** T16 confidence levels (`intermediate_format.py:44-55`), highest
+    * first: a confidence takes the first level whose floor it reaches, and
+    * `Uncertain` below the last. Every view that buckets confidences
+    * reads this table. */
+  val ConfidenceLevels: Seq[(String, Double)] =
+    Seq("certain" -> 0.95, "high" -> 0.80, "medium" -> 0.60, "low" -> 0.40)
+  val Uncertain = "uncertain"
+
   def confidenceLevel(conf: Double): String =
-    if (conf >= 0.95) "certain"
-    else if (conf >= 0.80) "high"
-    else if (conf >= 0.60) "medium"
-    else if (conf >= 0.40) "low"
-    else "uncertain"
+    ConfidenceLevels.collectFirst { case (level, floor) if conf >= floor => level }
+      .getOrElse(Uncertain)
 
   /** `ocr_engine.py:1641-1657`: clarity + source type from confidence. */
   def clarity(conf: Double): (String, String) =

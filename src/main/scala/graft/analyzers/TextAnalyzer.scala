@@ -104,8 +104,8 @@ object TextAnalyzer {
   def analyze(fullText: String): Analysis = {
     val table = TokenTable.of(fullText)
     val (docType, cats) = docTypeAndCategoriesFoldCase(fullText)
-    Analysis(wordCloudOf(table, 10), Summarizer.summarize(fullText, table),
-      docType, cats, keywordsOf(table, 15), entities(fullText))
+    Analysis(wordCloudOf(table), Summarizer.summarize(fullText, table),
+      docType, cats, keywordsOf(table), entities(fullText))
   }
 
   // ----------------------------------------------------------- T1 tokenize
@@ -134,16 +134,20 @@ object TextAnalyzer {
   final case class WordCloud(topWords: Seq[WordCloudEntry], othersPercentage: Double,
       totalWords: Long, uniqueWords: Long)
 
-  /** `generate_word_cloud` (doc_analyzer.py:513-568). Ties break by first
-    * occurrence (Counter.most_common insertion order). */
-  def wordCloud(text: String, topN: Int = 10): WordCloud =
-    wordCloudOf(TokenTable.of(text), topN)
+  /** Words in a word cloud and keywords per document. */
+  private val WordCloudTop = 10
+  private val KeywordTop = 15
+
+  /** `generate_word_cloud` (doc_analyzer.py:513-568): the top 10 words.
+    * Ties break by first occurrence (Counter.most_common insertion order). */
+  def wordCloud(text: String): WordCloud =
+    wordCloudOf(TokenTable.of(text))
 
   /** Same, over a pre-tokenized text. */
-  def wordCloudFromTokens(tokens: Array[String], topN: Int = 10): WordCloud =
-    wordCloudOf(TokenTable.ofTokens(tokens), topN)
+  def wordCloudFromTokens(tokens: Array[String]): WordCloud =
+    wordCloudOf(TokenTable.ofTokens(tokens))
 
-  private def wordCloudOf(table: TokenTable, topN: Int): WordCloud = {
+  private def wordCloudOf(table: TokenTable): WordCloud = {
     var total = 0
     var unique = 0
     var e = 0
@@ -152,7 +156,7 @@ object TextAnalyzer {
       e += 1
     }
     if (total == 0) return WordCloud(Nil, 0.0, 0, 0)
-    val top = topEntries(table, TokenTable.Cloud, topN, e => table.counts(e).toDouble)
+    val top = topEntries(table, TokenTable.Cloud, WordCloudTop, e => table.counts(e).toDouble)
     val entries = top.map { e =>
       WordCloudEntry(table.key(e), table.counts(e),
         PyText.pyRound(table.counts(e).toDouble / total * 100, 2))
@@ -177,22 +181,20 @@ object TextAnalyzer {
 
   // ----------------------------------------------------------- T5 keywords
 
-  /** `_extract_keywords` (doc_analyzer.py:442-478): TF-IDF-ish top-15.
-    * The capitalization boost is dead code (tokens lowercased) — kept as-is. */
-  def keywords(text: String, topN: Int = 15): Seq[String] =
-    keywordsOf(TokenTable.of(text), topN)
+  /** `_extract_keywords` (doc_analyzer.py:442-478): TF-IDF-ish top-15,
+    * over a pre-tokenized text. The capitalization boost is dead code
+    * (tokens lowercased) — kept as-is. */
+  def keywordsFromTokens(tokens: Array[String]): Seq[String] =
+    keywordsOf(TokenTable.ofTokens(tokens))
 
-  def keywordsFromTokens(tokens: Array[String], topN: Int = 15): Seq[String] =
-    keywordsOf(TokenTable.ofTokens(tokens), topN)
-
-  private def keywordsOf(table: TokenTable, topN: Int): Seq[String] = {
+  private def keywordsOf(table: TokenTable): Seq[String] = {
     var total = 0
     var e = 0
     while (e < table.size) {
       if ((table.flags(e) & TokenTable.Keyword) != 0) total += table.counts(e)
       e += 1
     }
-    topEntries(table, TokenTable.Keyword, topN, { e =>
+    topEntries(table, TokenTable.Keyword, KeywordTop, { e =>
       val c = table.counts(e)
       val tf = if (total > 0) c.toDouble / total else 0.0
       val idf = math.log(1 + total.toDouble / (c + 1))
@@ -201,16 +203,6 @@ object TextAnalyzer {
   }
 
   // ----------------------------------------------------------- T6 doc type
-
-  /** `_classify_document_type` (doc_analyzer.py:407-424): substring-count
-    * scoring, argmax in indicator-table order, "other" if all zero. */
-  def classifyDocType(textLower: String): String =
-    docTypeAndCategories(textLower)._1
-
-  /** T7 `_extract_categories` (doc_analyzer.py:426-440): types with ≥2
-    * distinct indicator hits; Python set order pinned to lexicographic. */
-  def categories(textLower: String): Seq[String] =
-    docTypeAndCategories(textLower)._2
 
   /** Stage-2 organizer doc-type variant (`organizer_engine.py:443-465`):
     * PRESENCE scoring (1 per keyword found, not occurrence counts) over
@@ -248,7 +240,12 @@ object TextAnalyzer {
     (new MultiPattern(distinctWords), docTypeIndicators.map(_._2.map(idx).toArray).toArray)
   }
 
-  /** T6 + T7 fused: ONE Aho-Corasick pass over the indicator vocabulary
+  /** T6 `_classify_document_type` (doc_analyzer.py:407-424: substring-
+    * count scoring, argmax in indicator-table order, "other" if all zero)
+    * and T7 `_extract_categories` (doc_analyzer.py:426-440: types with ≥2
+    * distinct indicator hits; Python set order pinned to lexicographic).
+    *
+    * T6 + T7 fused: ONE Aho-Corasick pass over the indicator vocabulary
     * (Python count semantics per word — equivalence property-tested)
     * serves both the argmax score and the ≥2-distinct-hits category
     * filter (contains ⇔ count > 0). Replaces ~150 full-text indexOf

@@ -1,7 +1,9 @@
 package graft.extract
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
+
+import graft.analyzers.LangScript
 
 /** Dataset-level wiring of the extraction engine (SURVEY.md §3.4):
   * one narrow typed mapPartitions stage over the pruned input columns —
@@ -53,16 +55,46 @@ object Pipeline {
 
   /** S2 base64 ingest (the Lambda body path,
     * `aws-lambda-ocr/lambda/handler.py:125-143`): rows arrive with the
-    * payload base64-encoded in a string column; `unbase64` (built-in,
+    * payload base64-encoded in the string column `html_b64`; `unbase64` (built-in,
     * codegen'd) decodes it into the binary `html` column and the
     * standard pipeline runs. Spark-first: the decode is a Catalyst
     * expression in the scan projection, not a UDF. */
-  def runBase64(input: DataFrame, b64Col: String = "html_b64",
-      oversizeBudgetBytes: Long = DefaultOversizeBudget,
-      analysis: Boolean = true): Dataset[DocResult] = {
-    run(input.withColumn("html", unbase64(col(b64Col))),
-      oversizeBudgetBytes, analysis = analysis)
-  }
+  def runBase64(input: DataFrame): Dataset[DocResult] =
+    run(input.withColumn("html", unbase64(col("html_b64"))))
+
+  /** The T16 level of a confidence, by `LangScript.ConfidenceLevels`. */
+  private def confidenceLevel(conf: Column): Column =
+    LangScript.ConfidenceLevels.foldRight(lit(LangScript.Uncertain)) {
+      case ((level, floor), lower) => when(conf >= floor, level).otherwise(lower)
+    }
+
+  /** Every T16 level, highest first. */
+  private val levels = LangScript.ConfidenceLevels.map(_._1) :+ LangScript.Uncertain
+
+  /** A block is low-confidence at the two lowest levels, low and uncertain. */
+  private def isLowConfidence(conf: Column): Column =
+    confidenceLevel(conf).isin(levels.takeRight(2): _*)
+
+  /** A block's low-confidence segment: its first 100 chars of `fullText`. */
+  private def blockSegment(b: Column): Column =
+    substring(col("fullText"), b("start") + 1, least(lit(100), b("end") - b("start")))
+
+  /** Totals and languages, reported alike by both enhanced-output versions. */
+  private def rollUps: Seq[Column] = Seq(
+    col("pageCount").as("total_pages"),
+    col("totalChars").as("total_characters"),
+    col("totalWords").as("total_words"),
+    col("detectedLanguage").as("primary_language"),
+    expr("array_distinct(transform(pages, p -> p.language))").as("languages_detected"))
+
+  /** The signatures block of both enhanced-output versions, then `extra`. */
+  private def signatures(extra: Column*): Column = struct(Seq(
+    col("signatureStatus").as("status"),
+    (size(col("signatures")) > 0).as("has_digital_signature"),
+    col("signatureStatus").isin("manually_signed", "both").as("has_handwritten_signature"),
+    size(col("signatures")).as("total_signature_count"),
+    expr("transform(signatures, s -> struct(s.fieldName as field_name, s.signed as signed))")
+      .as("digital_signatures")) ++ extra: _*).as("signatures")
 
   /** v2.1 enhanced-output JSON per document (SURVEY.md S6/§1.3): one
     * JSON-string column shaped like the reference's
@@ -75,7 +107,7 @@ object Pipeline {
     * in a byte-reproducible engine). Built with to_json(struct(...)) —
     * stays columnar until the final serialize. */
   def enhancedJsonView(results: Dataset[DocResult]): DataFrame = {
-    results.select(col("url"), to_json(struct(
+    results.select(col("url"), to_json(struct(Seq(
       lit("2.1").as("schema_version"),
       col("url").as("job_id"),
       struct(
@@ -96,20 +128,9 @@ object Pipeline {
       ).as("processing"),
       // R2 roll-up computed from R1 per-page classification
       // (`ocr_engine.py:993-1023`) — pure_digital / pure_scanned / mixed
-      col("documentStructure").as("document_structure"),
-      col("pageCount").as("total_pages"),
-      col("totalChars").as("total_characters"),
-      col("totalWords").as("total_words"),
-      col("detectedLanguage").as("primary_language"),
-      expr("array_distinct(transform(pages, p -> p.language))").as("languages_detected"),
-      struct(
-        col("signatureStatus").as("status"),
-        (size(col("signatures")) > 0).as("has_digital_signature"),
-        col("signatureStatus").isin("manually_signed", "both").as("has_handwritten_signature"),
-        size(col("signatures")).as("total_signature_count"),
-        expr("transform(signatures, s -> struct(s.fieldName as field_name, s.signed as signed))")
-          .as("digital_signatures")
-      ).as("signatures"),
+      col("documentStructure").as("document_structure")) ++
+      rollUps ++ Seq(
+      signatures(),
       expr("transform(pages, p -> struct(" +
         "p.pageNumber as page_number, p.charCount as char_count, " +
         "p.wordCount as word_count, p.lineCount as line_count, " +
@@ -160,7 +181,7 @@ object Pipeline {
       when(col("error") =!= "", array(col("error")))
         .otherwise(array().cast("array<string>")).as("errors"),
       col("fullText").as("full_text")
-    )).as("json"))
+    ): _*)).as("json"))
   }
 
   /** v2.0 enhanced-output JSON (`ocr_engine.py:1544-1596` — the builder
@@ -173,7 +194,8 @@ object Pipeline {
     * model name pinned to "deterministic_direct" (no model inference in
     * this engine). */
   def v20JsonView(results: Dataset[DocResult]): DataFrame = {
-    results.select(col("url"), to_json(struct(
+    val blocks = flatten(transform(col("pages"), _("blocks")))
+    results.select(col("url"), to_json(struct(Seq(
       lit("2.0").as("schema_version"),
       col("url").as("job_id"),
       struct(
@@ -191,21 +213,9 @@ object Pipeline {
         col("pageCount").as("ocr_pages_processed"),
         lit(0.0).as("extraction_seconds"),
         col("docType").as("strategy")
-      ).as("processing"),
-      col("pageCount").as("total_pages"),
-      col("totalChars").as("total_characters"),
-      col("totalWords").as("total_words"),
-      col("detectedLanguage").as("primary_language"),
-      expr("array_distinct(transform(pages, p -> p.language))").as("languages_detected"),
-      struct(
-        col("signatureStatus").as("status"),
-        (size(col("signatures")) > 0).as("has_digital_signature"),
-        col("signatureStatus").isin("manually_signed", "both").as("has_handwritten_signature"),
-        size(col("signatures")).as("total_signature_count"),
-        expr("transform(signatures, s -> struct(s.fieldName as field_name, s.signed as signed))")
-          .as("digital_signatures"),
-        array().cast("array<string>").as("handwritten_signatures")
-      ).as("signatures"),
+      ).as("processing")) ++
+      rollUps ++ Seq(
+      signatures(array().cast("array<string>").as("handwritten_signatures")),
       // page text = lazy slice of fullText (the tree stores spans only)
       expr("transform(pages, p -> struct(" +
         "p.pageNumber as page_number, " +
@@ -213,19 +223,13 @@ object Pipeline {
         "p.charCount as char_count, p.wordCount as word_count, " +
         "p.language as language, p.confidence as confidence))").as("pages"),
       col("avgConfidence").as("overall_confidence"),
-      struct(
-        expr("size(filter(flatten(transform(pages, p -> p.blocks)), b -> b.confidence >= 0.95))").as("certain"),
-        expr("size(filter(flatten(transform(pages, p -> p.blocks)), b -> b.confidence >= 0.80 and b.confidence < 0.95))").as("high"),
-        expr("size(filter(flatten(transform(pages, p -> p.blocks)), b -> b.confidence >= 0.60 and b.confidence < 0.80))").as("medium"),
-        expr("size(filter(flatten(transform(pages, p -> p.blocks)), b -> b.confidence >= 0.40 and b.confidence < 0.60))").as("low"),
-        expr("size(filter(flatten(transform(pages, p -> p.blocks)), b -> b.confidence < 0.40))").as("uncertain")
+      struct(levels.map(l =>
+        size(filter(blocks, b => confidenceLevel(b("confidence")) === l)).as(l)): _*
       ).as("confidence_distribution"),
-      expr("transform(filter(flatten(transform(pages, p -> p.blocks)), " +
-        "b -> b.confidence < 0.6), " +
-        "b -> substring(fullText, b.start + 1, least(100, b.end - b.start)))")
+      transform(filter(blocks, b => isLowConfidence(b("confidence"))), blockSegment(_))
         .as("low_confidence_segments"),
       col("fullText").as("full_text")
-    )).as("json"))
+    ): _*)).as("json"))
   }
 
   /** Compact JSON view (`EnhancedJSONOutput.to_compact_json`,
@@ -276,22 +280,17 @@ object Pipeline {
     // the 100-char snippet is sliced from fullText BEFORE the explode so
     // the exploded rows never carry the document text
     val blocks = results.select(col("url"),
-      expr("flatten(transform(pages, p -> transform(p.blocks, b -> " +
-        "struct(b.confidence as conf, " +
-        "substring(fullText, b.start + 1, least(100, b.end - b.start)) as text))))")
-        .as("bs"))
+      flatten(transform(col("pages"), p => transform(p("blocks"), b =>
+        struct(b("confidence").as("conf"), blockSegment(b).as("text"))))).as("bs"))
       .select(col("url"), explode(col("bs")).as("b"))
-    blocks.groupBy(col("url")).agg(
-      sum(when(col("b.conf") >= 0.95, 1L).otherwise(0L)).as("certain"),
-      sum(when(col("b.conf") >= 0.80 && col("b.conf") < 0.95, 1L).otherwise(0L)).as("high"),
-      sum(when(col("b.conf") >= 0.60 && col("b.conf") < 0.80, 1L).otherwise(0L)).as("medium"),
-      sum(when(col("b.conf") >= 0.40 && col("b.conf") < 0.60, 1L).otherwise(0L)).as("low"),
-      sum(when(col("b.conf") < 0.40, 1L).otherwise(0L)).as("uncertain"),
-      avg(col("b.conf")).as("avg_confidence"),
-      min(col("b.conf")).as("min_confidence"),
-      max(col("b.conf")).as("max_confidence"),
-      collect_list(when(col("b.conf") < 0.6, col("b.text")))
-        .as("low_confidence_segments"))
+    val conf = col("b.conf")
+    val counts = levels.map(l => sum(when(confidenceLevel(conf) === l, 1L).otherwise(0L)).as(l))
+    blocks.groupBy(col("url")).agg(counts.head, counts.tail ++ Seq(
+      avg(conf).as("avg_confidence"),
+      min(conf).as("min_confidence"),
+      max(conf).as("max_confidence"),
+      collect_list(when(isLowConfidence(conf), col("b.text")))
+        .as("low_confidence_segments")): _*)
   }
 
   /** Projection of the per-url byte-identity contract (url, extracted

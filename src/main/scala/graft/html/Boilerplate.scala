@@ -162,10 +162,6 @@ object Boilerplate {
     blocks.zipWithIndex.map { case (b, j) => b.copy(isContent = decided(j)) }
   }
 
-  /** Extract the main content: classified content blocks, in order. */
-  def mainContentBlocks(html: String): Vector[HtmlBlock] =
-    segment(DomBuilder.parse(html)).filter(_.isContent)
-
   /** The page <title>, if any (metadata, not body text). */
   def title(root: Element): String = {
     def find(node: Node): Option[String] = node match {

@@ -39,9 +39,6 @@ object Feeds {
     var field: String = null // which text field we're collecting
     val sb = new StringBuilder
 
-    def attr(attrs: List[(String, String)], name: String): String =
-      attrs.collectFirst { case (k, v) if k == name => v }.getOrElse("")
-
     def endField(): Unit = {
       if (field != null) {
         var v = sb.toString.trim

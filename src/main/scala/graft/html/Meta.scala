@@ -28,9 +28,6 @@ object Meta {
     baseHref: String, charset: String, ogTitle: String,
     noindex: Boolean, nofollow: Boolean, nAlternates: Int)
 
-  private def attr(attrs: List[(String, String)], name: String): String =
-    attrs.collectFirst { case (k, v) if k == name => v }.getOrElse("")
-
   private def relTokens(rel: String): Set[String] =
     rel.toLowerCase(java.util.Locale.ROOT).split("\\s+")
       .iterator.filter(_.nonEmpty).toSet

@@ -85,9 +85,6 @@ object PubDate {
     ""
   }
 
-  private def attr(attrs: List[(String, String)], name: String): String =
-    attrs.collectFirst { case (k, v) if k == name => v }.getOrElse("")
-
   /** (isoDate, source) per the object doc's precedence chain. */
   def extract(url: String, html: String): (String, String) = {
     // first-seen raw candidate per source (null = source absent)

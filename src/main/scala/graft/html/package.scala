@@ -16,6 +16,10 @@ package object html {
       .as(Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
       .flatMap { case (id, src) => f(id, src) }(Encoders.product[T])
 
+  /** The value of the first tokenizer attribute called `name`, or "". */
+  private[html] def attr(attrs: List[(String, String)], name: String): String =
+    attrs.collectFirst { case (k, v) if k == name => v }.getOrElse("")
+
   /** Runs of Unicode whitespace collapse to one space; leading and
     * trailing whitespace is dropped. */
   private[html] def collapseWs(s: String): String = {

@@ -116,6 +116,16 @@ object Checkpoint {
   private def lineageRow(l: BucketLineage): Row =
     new GenericRowWithSchema(l.productIterator.toArray, lineageSchema)
   private val ManifestFile = """bucket-(\d+)\.json""".r
+  private val RunFile = """run-.*\.json""".r
+
+  /** The names of the files in `d`; none when `d` does not exist. */
+  private def fileNames(d: Path): Seq[String] =
+    if (!Files.isDirectory(d)) Nil
+    else {
+      val it = Files.list(d)
+      try it.iterator().asScala.map(_.getFileName.toString).toList
+      finally it.close()
+    }
 
   /** Commits `rows` as the JSON-lines file `dir/name` from the driver,
     * the way an Iceberg commit writes its metadata: to a dot-prefixed temp
@@ -136,27 +146,18 @@ object Checkpoint {
     commitJson(metricsDir(outDir), s"run-${UUID.randomUUID()}.json", rows)
 
   /** Buckets already committed in a previous (possibly partial) run. */
-  def completedBuckets(outDir: String): Set[Int] = {
-    val d = manifestDir(outDir)
-    if (!Files.exists(d)) Set.empty
-    else {
-      val it = Files.list(d)
-      try it.iterator().asScala.map(_.getFileName.toString)
-        .collect { case ManifestFile(b) => b.toInt }.toSet
-      finally it.close()
-    }
-  }
+  def completedBuckets(outDir: String): Set[Int] =
+    fileNames(manifestDir(outDir)).collect { case ManifestFile(b) => b.toInt }.toSet
 
   /** The frame `runResumable` writes: the rows of `input` whose bucket is
     * not in `done`, extracted, with their `bucket`, and clustered by bucket
     * so the partitioned write commits one file per bucket. */
-  private[graft] def toWrite(input: DataFrame, done: Set[Int], nBuckets: Int,
-      oversizeBudgetBytes: Long = Pipeline.DefaultOversizeBudget): DataFrame = {
+  private[graft] def toWrite(input: DataFrame, done: Set[Int], nBuckets: Int): DataFrame = {
     val bucketCol = pmod(hash(col("url")), lit(nBuckets))
     val todo = input
       .withColumn("bucket", bucketCol)
       .filter(if (done.isEmpty) lit(true) else !col("bucket").isin(done.toSeq: _*))
-    Pipeline.run(todo, oversizeBudgetBytes)
+    Pipeline.run(todo)
       .withColumn("bucket", bucketCol)
       .hint("rebalance", col("bucket"))
   }
@@ -171,14 +172,13 @@ object Checkpoint {
     * tasks as they pass, so it counts exactly the rows this run commits
     * and the table is never read back. */
   def runResumable(input: DataFrame, outDir: String, nBuckets: Int,
-      runId: String,
-      oversizeBudgetBytes: Long = Pipeline.DefaultOversizeBudget): ResumeReport = {
+      runId: String): ResumeReport = {
     val spark = input.sparkSession
     val t0 = System.nanoTime()
 
     val done = completedBuckets(outDir)
     val tally = Observation()
-    val results = toWrite(input, done, nBuckets, oversizeBudgetBytes)
+    val results = toWrite(input, done, nBuckets)
       .observe(tally, bucketTally(col("bucket") +: lineageTerms.map(_._2): _*).as("t"))
 
     // Replace exactly the recomputed partitions; completed ones untouched.
@@ -217,9 +217,13 @@ object Checkpoint {
 
   /** The per-partition lineage/metrics table (append-only across runs):
     * its committed run files, read with the schema they are written with,
-    * so no pass infers one. */
-  def metrics(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.schema(lineageSchema).json(s"${metricsDir(outDir)}/*.json")
+    * so no pass infers one. An output with no run file (a run over empty
+    * input commits none) has an empty table, not a missing path. */
+  def metrics(spark: SparkSession, outDir: String): DataFrame = {
+    val d = metricsDir(outDir)
+    if (fileNames(d).exists(RunFile.matches)) spark.read.schema(lineageSchema).json(s"$d/*.json")
+    else spark.createDataFrame(java.util.List.of[Row](), lineageSchema)
+  }
 
   /** The committed output table. */
   def output(spark: SparkSession, outDir: String): DataFrame =

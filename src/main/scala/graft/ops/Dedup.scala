@@ -34,12 +34,13 @@ object Dedup {
   // ------------------------------------------------------------- minhash
 
   /** Deterministic universal-hash parameters (a, b) for numHashes
-    * functions h_i(x) = (a_i * x + b_i) mod p. Seed-fixed. a, b < 2^31
+    * functions h_i(x) = (a_i * x + b_i) mod p. Seed-fixed (42). a, b < 2^31
     * and x < 2^32 so a*x + b fits in a signed Long without overflow. */
   private val Prime = 4294967311L // smallest prime > 2^32
+  private val HashSeed = 42L
 
-  def hashParams(numHashes: Int, seed: Long = 42L): Array[(Long, Long)] = {
-    val r = new java.util.Random(seed)
+  def hashParams(numHashes: Int): Array[(Long, Long)] = {
+    val r = new java.util.Random(HashSeed)
     Array.fill(numHashes) {
       val a = 1L + r.nextInt(Int.MaxValue - 1)
       val b = r.nextInt(Int.MaxValue).toLong
@@ -160,12 +161,15 @@ object Dedup {
     else sa.intersect(sb).size.toDouble / sa.union(sb).size
   }
 
+  /** Word-shingle length of the MinHash and n-gram Jaccard pipelines. */
+  private val ShingleK = 3
+
   /** MinHash-LSH near-duplicate pairs: returns (id_a, id_b, est_jaccard)
     * for candidate pairs sharing an LSH band bucket, filtered by
     * signature Jaccard >= threshold. The shuffled payload is
     * (id, band, bandHash) + compact signatures — never the text. */
   def minhashDupPairs(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
+      numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7, maxBucketSize: Int = 1000,
       auditGuard: Boolean = false): DataFrame = {
     val spark = df.sparkSession
@@ -178,7 +182,7 @@ object Dedup {
     val sigs = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
       .as[(Long, String)]
       .map { case (id, text) =>
-        (id, minhashSignature(shingleHashes(if (text == null) "" else text, shingleK), bParams.value))
+        (id, minhashSignature(shingleHashes(if (text == null) "" else text, ShingleK), bParams.value))
       }
       .toDF("id", "sig")
 
@@ -218,13 +222,13 @@ object Dedup {
     * candidate set (tiny vs the corpus), never for the full cross
     * product. The standard two-stage exact-near-dup pipeline. */
   def ngramJaccardDupPairs(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
+      numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7, maxBucketSize: Int = 1000,
       auditGuard: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     // candidate generation at a permissive signature threshold
-    val cands = minhashDupPairs(df, idCol, textCol, numHashes, bands, shingleK,
+    val cands = minhashDupPairs(df, idCol, textCol, numHashes, bands,
       threshold = math.max(0.0, threshold - 0.2), maxBucketSize, auditGuard)
       .select(col("id_a"), col("id_b"))
     val texts = df.select(col(idCol).cast("long").as("tid"), col(textCol).as("ttext"))
@@ -233,7 +237,7 @@ object Dedup {
       .join(texts.withColumnRenamed("tid", "id_b").withColumnRenamed("ttext", "text_b"), "id_b")
       .select(col("id_a"), col("id_b"), col("text_a"), col("text_b"))
       .as[(Long, Long, String, String)]
-      .map { case (ia, ib, ta, tb) => (ia, ib, ngramJaccard(ta, tb, shingleK)) }
+      .map { case (ia, ib, ta, tb) => (ia, ib, ngramJaccard(ta, tb, ShingleK)) }
       .toDF("id_a", "id_b", "jaccard")
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"),
@@ -382,9 +386,9 @@ object Dedup {
     * The anti-join keeps the wide text column out of every shuffle
     * except the final semi/anti joins on ids. */
   def dedupByMinhash(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
+      numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7, auditGuard: Boolean = false): DataFrame = {
-    val pairs = minhashDupPairs(df, idCol, textCol, numHashes, bands, shingleK,
+    val pairs = minhashDupPairs(df, idCol, textCol, numHashes, bands,
       threshold, auditGuard = auditGuard)
     val comps = components(pairs)
     val losers = comps.filter(col("id") =!= col("component"))
@@ -471,8 +475,6 @@ object Dedup {
     while (bit < 64) { if (acc(bit) > 0) out |= (1L << bit); bit += 1 }
     out
   }
-
-  def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
   /** SimHash near-dup pairs: bucket by 4 x 16-bit chunks (any identical
     * chunk => candidate, guaranteed for hamming distance <= 3), verify

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *
   * All-pairs Levenshtein is O(N²) and impossible at corpus scale; the
   * standard mitigation is BLOCKING: candidate pairs form only inside a
-  * block key (here the lower-cased first `prefixLen` characters — the
+  * block key (here the lower-cased first six characters — the
   * classic prefix block, which by design misses pairs differing inside
   * the prefix; that tradeoff is the documented contract, as in any
   * record-linkage system). The self-join keys on the block, id1 < id2
@@ -28,14 +28,16 @@ import org.apache.spark.sql.functions._
   */
 object FuzzyTitle {
 
+  private val PrefixLen = 6
+
   /** (id1, id2, dist) for pairs with distance ≤ maxDist inside shared
     * prefix blocks. */
   def nearDupPairs(df: DataFrame, idCol: String, titleCol: String,
-                   maxDist: Int, prefixLen: Int = 6): DataFrame = {
+                   maxDist: Int): DataFrame = {
     graft.functions.GraftExtensions.register(df.sparkSession)
     val base = df.select(col(idCol).cast("long").as("_id"),
         col(titleCol).cast("string").as("_title"))
-      .withColumn("_block", lower(substring(col("_title"), 1, prefixLen)))
+      .withColumn("_block", lower(substring(col("_title"), 1, PrefixLen)))
     val left = base.select(col("_block"), col("_id").as("id1"),
       col("_title").as("t1"))
     val right = base.select(col("_block"), col("_id").as("id2"),

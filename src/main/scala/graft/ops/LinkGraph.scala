@@ -41,16 +41,16 @@ object LinkGraph {
       .where(col("src") =!= col("dst"))
       .distinct()
 
+  private val DampingPct = 85
+  private val ScaleMicro = 1000000L
+
   /** `iterations` PageRank power steps over `edges` (`src`,`dst`),
-    * all-integer: every host starts at `scaleMicro`, each step gives
-    * `base + (dampingPct * Σ_in (rank div out_deg)) div 100`. Returns
-    * (host, rank_micro). Hosts with no in-links keep the base term. */
-  def pageRankMicro(edgesIn: DataFrame, iterations: Int,
-                    dampingPct: Int = 85,
-                    scaleMicro: Long = 1000000L): DataFrame = {
+    * all-integer: every host starts at `ScaleMicro` (10⁶), each step gives
+    * `base + (DampingPct * Σ_in (rank div out_deg)) div 100` with a
+    * damping of 85%. Returns (host, rank_micro). Hosts with no in-links
+    * keep the base term. */
+  def pageRankMicro(edgesIn: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "pageRankMicro needs >= 1 iteration")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      "dampingPct is an integer percentage")
     // persist: every iteration re-reads the graph; without this the
     // corpus-derived edge plan would recompute per iteration (lazy, so
     // building the plan stays side-effect-free — first action pays it)
@@ -62,8 +62,8 @@ object LinkGraph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val outDeg = edges.groupBy(col("src"))
       .agg(count(lit(1)).as("deg"))
-    val base = scaleMicro * (100 - dampingPct) / 100
-    var ranks = nodes.withColumn("rank_micro", lit(scaleMicro))
+    val base = ScaleMicro * (100 - DampingPct) / 100
+    var ranks = nodes.withColumn("rank_micro", lit(ScaleMicro))
     for (_ <- 1 to iterations) {
       val contribs = edges
         .join(ranks.select(col("host").as("src"), col("rank_micro")), "src")
@@ -75,7 +75,7 @@ object LinkGraph {
       ranks = nodes.join(contribs, Seq("host"), "left")
         .select(col("host"),
           (lit(base) +
-            coalesce(expr(s"($dampingPct * s) div 100"), lit(0L)))
+            coalesce(expr(s"($DampingPct * s) div 100"), lit(0L)))
             .as("rank_micro"))
     }
     ranks

@@ -53,25 +53,6 @@ object Multimodal {
     else "application/octet-stream"
   }
 
-  /** [[sniffMime]] as a pure Catalyst column expression (when/substring
-    * chain over the binary column — stays inside whole-stage codegen,
-    * where the earlier per-row UDF form broke the span). Semantics match
-    * [[sniffMime]] byte for byte; AudioMimeSpec pins the parity. */
-  def mimeColumn(payload: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    def magic(offset1Based: Int, s: String): org.apache.spark.sql.Column =
-      substring(payload, offset1Based, s.length) === lit(s.getBytes("ISO-8859-1"))
-    when(payload.isNull || length(payload) < 12, "application/octet-stream")
-      .when(magic(1, "PNG"), "image/png")
-      .when(magic(1, "ÿØ"), "image/jpeg")
-      .when(magic(1, "GIF"), "image/gif")
-      .when(magic(1, "RIFF") && magic(9, "WEBP"), "image/webp")
-      .when(magic(1, "RIFF") && magic(9, "WAVE"), "audio/wav")
-      .when(magic(1, "FORM") && magic(9, "AIF"), "audio/aiff")
-      .when(magic(1, ".snd"), "audio/basic")
-      .when(magic(5, "ftyp"), "video/mp4")
-      .otherwise("application/octet-stream")
-  }
-
   /** Decode an image payload with the JDK's built-in readers. Returns
     * null when the bytes are not a decodable image (ImageIO probes
     * registered readers by content) — callers fall back to the stub so

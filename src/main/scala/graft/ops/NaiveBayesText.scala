@@ -27,13 +27,11 @@ import org.apache.spark.sql.functions._
   */
 object NaiveBayesText {
 
-  /** The engine-wide tokenization: whitespace split, lowercase,
-    * length > 2; one row per (doc, term) with the count. */
+  /** The engine-wide tokenization (`Search.tokens`); one row per
+    * (doc, term) with the count. */
   private def termCounts(docs: DataFrame, idCol: String,
                          textCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        explode(split(lower(col(textCol)), " ", -1)).as("term"))
-      .where(length(col("term")) > 2)
+    Search.tokens(docs, idCol, textCol)
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("cnt"))
 
@@ -43,10 +41,7 @@ object NaiveBayesText {
     *    unseen-term fallback ln(1/(tot_label+V)). */
   def train(docs: DataFrame, idCol: String, textCol: String,
             labelCol: String): (DataFrame, DataFrame) = {
-    val toks = docs
-      .select(col(idCol).as("doc_id"), col(labelCol).as("label"),
-        explode(split(lower(col(textCol)), " ", -1)).as("term"))
-      .where(length(col("term")) > 2)
+    val toks = Search.tokens(docs, idCol, textCol, col(labelCol).as("label"))
     val labelTerm = toks.groupBy(col("label"), col("term"))
       .agg(count(lit(1)).as("c"))
     val labelTot = labelTerm.groupBy(col("label"))

@@ -27,23 +27,22 @@ import org.apache.spark.sql.functions._
   */
 object ParaDedup {
 
-  /** CCNet splits on newline; "\n\n" treats blank-line-separated blocks
-    * as paragraphs — the web-text convention after HTML extraction. */
-  val DefaultSep = "\n\n"
+  /** The paragraph separator. CCNet splits on newline; "\n\n" treats
+    * blank-line-separated blocks as paragraphs — the web-text convention
+    * after HTML extraction. */
+  val Sep = "\n\n"
 
   /** Exploded (id, pos, para) view; split keeps trailing empties (Java
     * limit -1) so offsets reconstruct the document exactly. */
-  def explodeParagraphs(df: DataFrame, idCol: String, textCol: String,
-                        sep: String = DefaultSep): DataFrame =
+  def explodeParagraphs(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol),
-      posexplode(split(col(textCol), sep)).as(Seq("pos", "para")))
+      posexplode(split(col(textCol), Sep)).as(Seq("pos", "para")))
 
   /** Adds a corpus-wide first-seen `kept` flag per paragraph occurrence.
     * The only wide dependency: a row_number window keyed on the 8-byte
     * paragraph hash. */
-  def paragraphFlags(df: DataFrame, idCol: String, textCol: String,
-                     sep: String = DefaultSep): DataFrame = {
-    val ex = explodeParagraphs(df, idCol, textCol, sep)
+  def paragraphFlags(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val ex = explodeParagraphs(df, idCol, textCol)
       .withColumn("para_hash", xxhash64(col("para")))
     val w = Window.partitionBy(col("para_hash"))
       .orderBy(col(idCol), col("pos"))
@@ -53,9 +52,8 @@ object ParaDedup {
   /** Per-doc report: paragraph counts and the cleaned text (kept
     * paragraphs re-joined in original order; docs whose every paragraph
     * was seen earlier collapse to ""). */
-  def dedupParagraphs(df: DataFrame, idCol: String, textCol: String,
-                      sep: String = DefaultSep): DataFrame =
-    paragraphFlags(df, idCol, textCol, sep)
+  def dedupParagraphs(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    paragraphFlags(df, idCol, textCol)
       .groupBy(col(idCol))
       .agg(
         count(lit(1)).as("n_paras"),
@@ -65,5 +63,5 @@ object ParaDedup {
             array_sort(collect_list(
               when(col("kept"), struct(col("pos"), col("para"))))),
             x => x.getField("para")),
-          sep).as("cleaned"))
+          Sep).as("cleaned"))
 }

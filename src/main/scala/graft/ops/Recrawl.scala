@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * refetched proportionally sooner. Per key the estimated
   * inter-change time sets the next interval:
   *
-  *   interval = clamp(span_sec div max(1, n_changes), min, max)
+  *   interval = clamp(span_sec div max(1, n_changes), 1 h, 7 d)
   *   next_fetch_epoch = last_seen_epoch + interval
   *
   * where a CHANGE is an observation whose payload differs from the
@@ -26,9 +26,11 @@ import org.apache.spark.sql.functions._
   */
 object Recrawl {
 
+  private val MinSec = 3600L
+  private val MaxSec = 604800L
+
   def schedule(obs: DataFrame, keyCol: String, tsCol: String,
-               payloadCol: String, minSec: Long = 3600L,
-               maxSec: Long = 604800L): DataFrame = {
+               payloadCol: String): DataFrame = {
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col(tsCol), col(payloadCol))
     obs.select(col(keyCol), col(tsCol), col(payloadCol))
@@ -44,8 +46,8 @@ object Recrawl {
         max(col("_epoch")).as("_last"))
       .withColumn("interval_sec",
         least(greatest(
-          expr("span_sec div greatest(1L, n_changes)"), lit(minSec)),
-          lit(maxSec)))
+          expr("span_sec div greatest(1L, n_changes)"), lit(MinSec)),
+          lit(MaxSec)))
       .withColumn("next_fetch_epoch", col("_last") + col("interval_sec"))
       .drop("_last")
   }

@@ -32,11 +32,12 @@ import org.apache.spark.sql.functions._
 object Search {
 
   /** Whitespace tokens, lowercased, length > 2 — the corpus-wide
-    * tokenization every text roll-up in this engine shares. */
-  private def tokens(docs: DataFrame, idCol: String,
-                     textCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        explode(split(lower(col(textCol)), " ", -1)).as("term"))
+    * tokenization every text roll-up in this engine shares: one
+    * (doc_id, `extra`…, term) row per token. */
+  private[ops] def tokens(docs: DataFrame, idCol: String,
+                          textCol: String, extra: Column*): DataFrame =
+    docs.select((col(idCol).as("doc_id") +: extra :+
+        explode(split(lower(col(textCol)), " ", -1)).as("term")): _*)
       .where(length(col("term")) > 2)
 
   /** The inverted index: one row per (term, doc_id) with the term

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -136,10 +135,20 @@ object Similarity {
   }
 
   /** Deterministic random hyperplanes: nPlanes x dim sign matrix. */
-  def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Array[Array[Float]] = {
+  private def hyperplanes(nPlanes: Int, dim: Int, seed: Long): Array[Array[Float]] = {
     val r = new java.util.Random(seed)
     Array.fill(nPlanes)(Array.fill(dim)(if (r.nextBoolean()) 1.0f else -1.0f))
   }
+
+  private val planeSets =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), Seq[Array[Array[Float]]]]()
+
+  /** `tables` seeded sets of `nPlanes` random hyperplanes over `dim`
+    * coordinates — the embedding's own length — built once per shape in
+    * each JVM and shared by every bucket UDF there. */
+  private def planeSet(nPlanes: Int, tables: Int, dim: Int): Seq[Array[Array[Float]]] =
+    planeSets.computeIfAbsent((nPlanes, tables, dim),
+      _ => (0 until tables).map(t => hyperplanes(nPlanes, dim, 42L + t)))
 
   /** Sign-of-dot-product bucket keys for one embedding across all hash
     * tables. */
@@ -159,24 +168,19 @@ object Similarity {
     }
   }
 
-  /** `tables` seeded sets of `nPlanes` random hyperplanes, built and
-    * broadcast once per call and shared by its corpus and query bucket
-    * UDFs. */
-  private def lshPlanes(spark: SparkSession, nPlanes: Int, tables: Int,
-      dim: Int): Broadcast[Seq[Array[Array[Float]]]] =
-    spark.sparkContext.broadcast(
-      (0 until tables).map(t => hyperplanes(nPlanes, dim, 42L + t)))
+  private val DupPlanes = 12
+  private val DupTables = 4
 
   /** Embedding-cosine near-duplicate pairs: random-hyperplane LSH buckets
-    * generate candidates (vectors agreeing on all nPlanes signs in ≥1 of
-    * `tables` tables), exact cosine verifies. The self-join runs on
+    * generate candidates (vectors agreeing on all 12 plane signs in ≥1 of
+    * 4 tables), exact cosine verifies. The self-join runs on
     * (table, bucketKey) — never the full N² cross product; near-identical
-    * vectors collide with probability ≈ (1 − θ/π)^nPlanes per table. */
+    * vectors collide with probability ≈ (1 − θ/π)^12 per table. */
   def cosineDupPairs(embeddings: DataFrame, threshold: Double = 0.95,
-      nPlanes: Int = 12, tables: Int = 4, dim: Int = 64,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val planes = lshPlanes(embeddings.sparkSession, nPlanes, tables, dim)
-    val bucketUdf = udf { (emb: Seq[Float]) => signBuckets(planes.value, emb) }
+    val bucketUdf = udf { (emb: Seq[Float]) =>
+      signBuckets(planeSet(DupPlanes, DupTables, emb.length), emb)
+    }
     val bucketed = embeddings
       .select(col(idCol).as("id"), col(embCol).as("emb"))
       .withColumn("bucket", explode(bucketUdf(col("emb"))))
@@ -195,12 +199,13 @@ object Similarity {
 
   // ------------------------------------------------------------------ IVF
 
+  private val TrainIters = 5
+
   /** Deterministic k-means coarse quantizer trained on a driver-side
-    * sample (seeded init from evenly-spaced sample points, `iters`
-    * Lloyd rounds). Sample size stays driver-small; at 100 TB the
-    * sample is a `TABLESAMPLE`-style fraction, not the corpus. */
-  def trainCentroids(sample: Array[Array[Float]], k: Int, iters: Int = 5)
-      : Array[Array[Float]] = {
+    * sample (seeded init from evenly-spaced sample points, five Lloyd
+    * rounds). Sample size stays driver-small; at 100 TB the sample is a
+    * `TABLESAMPLE`-style fraction, not the corpus. */
+  def trainCentroids(sample: Array[Array[Float]], k: Int): Array[Array[Float]] = {
     require(sample.nonEmpty, "empty centroid training sample")
     val dim = sample.head.length
     // evenly-spaced deterministic init (sample order is caller-fixed)
@@ -208,7 +213,7 @@ object Similarity {
       sample((j.toLong * sample.length / math.min(k, sample.length)).toInt).clone()
     }
     var it = 0
-    while (it < iters) {
+    while (it < TrainIters) {
       val sums = Array.fill(centroids.length)(new Array[Double](dim))
       val counts = new Array[Int](centroids.length)
       sample.foreach { v =>
@@ -226,58 +231,60 @@ object Similarity {
     centroids
   }
 
+  /** Squared distance from `v` to `cent` over their common prefix. */
+  private def sqDist(v: Seq[Float], cent: Array[Float]): Double = {
+    var d = 0.0; var i = 0
+    while (i < cent.length && i < v.length) {
+      val diff = v(i) - cent(i); d += diff * diff; i += 1
+    }
+    d
+  }
+
+  /** The closest centroid; ties go to the lowest index. */
   def nearestCentroid(v: Seq[Float], centroids: Array[Array[Float]]): Int = {
     var best = 0; var bestD = Double.MaxValue
     var c = 0
     while (c < centroids.length) {
-      var d = 0.0; var i = 0
-      val cent = centroids(c)
-      while (i < cent.length && i < v.length) {
-        val diff = v(i) - cent(i); d += diff * diff; i += 1
-      }
+      val d = sqDist(v, centroids(c))
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
     best
   }
 
+  /** The `nProbe` closest centroids, nearest first; ties keep index order. */
   private def nearestCentroids(v: Seq[Float], centroids: Array[Array[Float]],
-      nProbe: Int): Seq[Int] = {
-    centroids.indices.map { c =>
-      var d = 0.0; var i = 0
-      val cent = centroids(c)
-      while (i < cent.length && i < v.length) {
-        val diff = v(i) - cent(i); d += diff * diff; i += 1
-      }
-      (c, d)
-    }.sortBy(_._2).take(nProbe).map(_._1)
-  }
+      nProbe: Int): Seq[Int] =
+    centroids.indices.map(c => (c, sqDist(v, centroids(c))))
+      .sortBy(_._2).take(nProbe).map(_._1)
+
+  private val SampleSize = 2048
+  private val SampleMod = 16
 
   /** IVF-flat ANN: corpus vectors are assigned to their nearest coarse
     * centroid (one narrow projection — at scale this is the partition /
     * clustering key of the stored index); each query probes its `nProbe`
     * closest centroids and re-ranks exactly within those inverted lists.
     * Recall improves with nProbe; nProbe = nCentroids degrades to brute
-    * force. Centroids train on `sampleSize` rows ordered by id
+    * force. Centroids train on up to 2,048 rows ordered by id
     * (deterministic). */
   def ivfTopK(embeddings: DataFrame, queries: DataFrame, k: Int,
-      nCentroids: Int = 16, nProbe: Int = 4, sampleSize: Int = 2048,
-      sampleMod: Int = 16,
+      nCentroids: Int = 16, nProbe: Int = 4,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     val spark = embeddings.sparkSession
     // Deterministic hash-thinned training sample: the pmod filter keeps
-    // ~1/sampleMod of the corpus BEFORE the orderBy+limit (which compiles
+    // ~1/16 of the corpus BEFORE the orderBy+limit (which compiles
     // to TakeOrderedAndProject — per-partition k-heaps, no global sort of
     // the full corpus). Round 1 ordered the whole corpus by id to pick
     // 2048 rows — a full-corpus ordering pass at 100 TB.
     val base = embeddings.select(col(idCol).as("id"), col(embCol).as("emb"))
     val thinned = base
-      .filter(pmod(xxhash64(col("id")), lit(sampleMod)) === 0)
-      .orderBy(col("id")).limit(sampleSize)
+      .filter(pmod(xxhash64(col("id")), lit(SampleMod)) === 0)
+      .orderBy(col("id")).limit(SampleSize)
       .collect().map(_.getSeq[Float](1).toArray)
     val sample =
       if (thinned.length >= math.max(nCentroids, 32)) thinned
-      else base.orderBy(col("id")).limit(sampleSize) // tiny corpus fallback
+      else base.orderBy(col("id")).limit(SampleSize) // tiny corpus fallback
         .collect().map(_.getSeq[Float](1).toArray)
     val centroids = trainCentroids(sample, nCentroids)
     val bCent = spark.sparkContext.broadcast(centroids)
@@ -297,6 +304,9 @@ object Similarity {
     rerankTopK(corpus, qs, "centroid", k)
   }
 
+  private val AnnPlanes = 8
+  private val AnnTables = 8
+
   /** Query-side multi-probe keys: the query's own bucket per table plus
     * (at multiProbe ≥ 1) every bucket one flipped hyperplane sign away —
     * the standard multi-probe LSH construction (Lv et al., VLDB 2007):
@@ -315,7 +325,7 @@ object Similarity {
   }
 
   /** LSH-bucketed ANN: sign-of-dot-product per hyperplane → bucket key;
-    * candidates share a bucket in at least one of `tables` independent
+    * candidates share a bucket in at least one of 8 independent
     * tables (queries also probe hamming-1 buckets when multiProbe ≥ 1);
     * exact cosine re-rank inside buckets. At scale this replaces the
     * O(N·Q) cross product with a bucket-join whose fan-in is bounded by
@@ -325,18 +335,19 @@ object Similarity {
     * neighbors here sit at cos 0.33–0.45 (θ ≈ 65–70°, per-plane
     * agreement p ≈ 0.62) — the hard regime for sign-LSH, where the
     * round-3 defaults (12 planes, 4 tables, no probes) collide with
-    * probability ~0.003/table and recall was ≈ 0. The defaults below
-    * (8 planes, 8 tables, 1-probe) give per-table hit rate ≈ 0.13 and
-    * measured recall ≈ 0.6–0.8 while probing a bounded slice of the
-    * corpus; `ann_recall` reports the number per run. nPlanes should
-    * grow with log(N/targetBucketSize) at cluster scale. */
+    * probability ~0.003/table and recall was ≈ 0. The shape used here
+    * (8 planes, 8 tables, 1-probe by default) gives per-table hit rate
+    * ≈ 0.13 and measured recall ≈ 0.6–0.8 while probing a bounded slice
+    * of the corpus; `ann_recall` reports the number per run. The plane
+    * count should grow with log(N/targetBucketSize) at cluster scale. */
   def lshTopK(embeddings: DataFrame, queries: DataFrame, k: Int,
-      nPlanes: Int = 8, tables: Int = 8, dim: Int = 64, multiProbe: Int = 1,
+      multiProbe: Int = 1,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val planes = lshPlanes(embeddings.sparkSession, nPlanes, tables, dim)
-    val bucketUdf = udf { (emb: Seq[Float]) => signBuckets(planes.value, emb) }
+    val bucketUdf = udf { (emb: Seq[Float]) =>
+      signBuckets(planeSet(AnnPlanes, AnnTables, emb.length), emb)
+    }
     val probeUdf = udf { (emb: Seq[Float]) =>
-      probeBuckets(planes.value, emb, multiProbe)
+      probeBuckets(planeSet(AnnPlanes, AnnTables, emb.length), emb, multiProbe)
     }
     val corpus = embeddings
       .select(col(idCol).as("neighbor_id"), col(embCol).as("emb_n"))

@@ -22,8 +22,12 @@ import org.apache.spark.sql.functions._
 object UrlFilter {
 
   /** Crawler-trap patterns (RE2-safe). */
-  val DefaultTrapPatterns: Seq[String] = Seq(
+  val TrapPatterns: Seq[String] = Seq(
     "/tag/", "sessionid=", "/calendar/[0-9]{4}", "replytocom=")
+
+  private val MaxLen = 2048
+  private val MaxDepth = 8
+  private val MaxParams = 8
 
   /** Path depth proxy: '/' count minus the scheme's two. */
   def pathDepth(url: Column): Column =
@@ -34,22 +38,17 @@ object UrlFilter {
     regexp_count(url, lit("[?&][^?&=]+="))
 
   /** Adds `url_drop_reason` (null = kept) and `url_keep`. Reasons in
-    * precedence order: scheme, too_long, too_deep, too_many_params,
-    * trap_pattern. */
-  def withUrlRules(df: DataFrame, urlCol: String,
-                   maxLen: Int = 2048, maxDepth: Int = 8,
-                   maxParams: Int = 8,
-                   trapPatterns: Seq[String] = DefaultTrapPatterns)
-      : DataFrame = {
-    require(trapPatterns.nonEmpty, "need at least one trap pattern")
+    * precedence order: scheme, too_long (over 2,048 chars), too_deep
+    * (over 8 levels), too_many_params (over 8), trap_pattern. */
+  def withUrlRules(df: DataFrame, urlCol: String): DataFrame = {
     val u = col(urlCol)
-    val trap = trapPatterns.map(u.rlike).reduce(_ || _)
+    val trap = TrapPatterns.map(u.rlike).reduce(_ || _)
     val reason =
       when(!(u.startsWith("http://") || u.startsWith("https://")),
         lit("scheme"))
-      .when(length(u) > maxLen, lit("too_long"))
-      .when(pathDepth(u) > maxDepth, lit("too_deep"))
-      .when(queryParams(u) > maxParams, lit("too_many_params"))
+      .when(length(u) > MaxLen, lit("too_long"))
+      .when(pathDepth(u) > MaxDepth, lit("too_deep"))
+      .when(queryParams(u) > MaxParams, lit("too_many_params"))
       .when(trap, lit("trap_pattern"))
       .otherwise(lit(null).cast("string"))
     df.withColumn("url_drop_reason", reason)

@@ -6,8 +6,8 @@ import scala.collection.mutable.ArrayBuffer
   * (SURVEY.md E9) — the from-scratch stand-in for PyMuPDF
   * `page.find_tables()` (`idp_pipeline/models/ocr_engine.py:1469-1517`).
   * v1 documented scope: tables whose grid is drawn as thin `re`
-  * rectangles (height ≤ `thin` = horizontal rule, width ≤ `thin` =
-  * vertical rule); borderless tables are out of scope.
+  * rectangles (height ≤ `Thin` = horizontal rule, width ≤ `Thin` =
+  * vertical rule, `Thin` = 2pt); borderless tables are out of scope.
   *
   * Algorithm: cluster horizontal-rule y's and vertical-rule x's
   * (tolerance 2pt); ≥2 of each spanning a common bounding box form a
@@ -22,6 +22,7 @@ object PdfTables {
       matrix: Vector[Vector[String]])
 
   private val Tol = 2.0
+  private val Thin = 2.0
 
   private def cluster(vs: Seq[Double]): Vector[Double] = {
     val sorted = vs.sorted
@@ -36,9 +37,9 @@ object PdfTables {
     out.toVector.map { case (sum, cnt) => sum / cnt }
   }
 
-  def detect(page: PdfParser.PdfPage, thin: Double = 2.0): Vector[DetectedTable] = {
-    val hRules = page.rects.filter(r => r.h <= thin && r.w > thin)
-    val vRules = page.rects.filter(r => r.w <= thin && r.h > thin)
+  def detect(page: PdfParser.PdfPage): Vector[DetectedTable] = {
+    val hRules = page.rects.filter(r => r.h <= Thin && r.w > Thin)
+    val vRules = page.rects.filter(r => r.w <= Thin && r.h > Thin)
     if (hRules.length < 2 || vRules.length < 2) return Vector.empty
 
     val ys = cluster(hRules.map(r => r.y + r.h / 2)) // ascending
@@ -77,9 +78,9 @@ object PdfTables {
     * paragraphs with coincidental alignment can false-positive, so
     * callers opt in. Runs inside already-detected ruled bboxes are
     * excluded from the unruled pass (no double detection). */
-  def detectAll(page: PdfParser.PdfPage, includeUnruled: Boolean = false,
-      thin: Double = 2.0): Vector[DetectedTable] = {
-    val ruled = detect(page, thin)
+  def detectAll(page: PdfParser.PdfPage,
+      includeUnruled: Boolean = false): Vector[DetectedTable] = {
+    val ruled = detect(page)
     if (!includeUnruled) ruled
     else ruled ++ detectUnruled(page, ruled.map(_.bbox))
   }
@@ -94,7 +95,7 @@ object PdfTables {
     * (tolerance 4 pt). Cells = runs assigned to their x-column; rows
     * emitted top-to-bottom. */
   def detectUnruled(page: PdfParser.PdfPage,
-      exclude: Seq[(Double, Double, Double, Double)] = Nil): Vector[DetectedTable] = {
+      exclude: Seq[(Double, Double, Double, Double)]): Vector[DetectedTable] = {
     def excluded(r: PdfParser.TextRun): Boolean = exclude.exists {
       case (x0, y0, x1, y1) =>
         r.x >= x0 - Tol && r.x <= x1 + Tol && r.y >= y0 - Tol && r.y <= y1 + Tol

@@ -583,7 +583,7 @@ object Curation {
     // a tail slice, and an even-doc-only footer — so the oracle certifies
     // the first-seen semantics AND the in-order reassembly, per row.
     Query("para_dedup", (s, dir) => {
-      val sep = lit(ops.ParaDedup.DefaultSep)
+      val sep = lit(ops.ParaDedup.Sep)
       val ptext = concat(
         substring(col("text"), 1, 60), sep,
         lit("shared boilerplate paragraph "),

@@ -63,7 +63,7 @@ object LibraryPlans {
         plan = Seq(has("MapPartitions"), noCartesian)),
 
       Query("ann_cosine_lsh", (s, _) =>
-        Similarity.lshTopK(toyEmb(s), toyEmb(s).filter(col("vec_id") < 2), k = 3, dim = 8),
+        Similarity.lshTopK(toyEmb(s), toyEmb(s).filter(col("vec_id") < 2), k = 3),
         plan = Seq(calls("graft_cosine"))),
 
       Query("ann_cosine_ivf", (s, _) =>
@@ -72,7 +72,7 @@ object LibraryPlans {
         plan = Seq(calls("graft_cosine"))),
 
       Query("ann_cosine_pairs", (s, _) =>
-        Similarity.cosineDupPairs(toyEmb(s), threshold = 0.5, dim = 8),
+        Similarity.cosineDupPairs(toyEmb(s), threshold = 0.5),
         plan = Seq(calls("graft_cosine"))),
 
       Query("checkpoint_write", (s, _) =>

@@ -36,6 +36,8 @@ object StreamingExtract {
     StructField("text", StringType),
     StructField("lang", StringType)))
 
+  private val MaxFilesPerTrigger = 64
+
   /** Start the extraction stream: parquet files arriving under `inputDir`
     * → typed extraction → append to `outDir/data`, with each batch's
     * lineage row in its own JSON-lines file of `outDir/_metrics` (written
@@ -43,16 +45,14 @@ object StreamingExtract {
     * the streaming checkpoint (re-delivered batches rewrite the same
     * batchId — dedup downstream on batch_id if the sink is reused).
     *
-    * `maxFilesPerTrigger` bounds micro-batch size so one pathological
+    * `MaxFilesPerTrigger` bounds micro-batch size so one pathological
     * landing burst cannot blow executor memory (the streaming analog of
     * the per-partition size budget, SURVEY.md §4.2). */
   def start(spark: SparkSession, inputDir: String, outDir: String,
-      checkpointDir: String, availableNow: Boolean = true,
-      maxFilesPerTrigger: Int = 64,
-      oversizeBudgetBytes: Long = Pipeline.DefaultOversizeBudget): StreamingQuery = {
+      checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
     val stream = spark.readStream
       .schema(inputSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", MaxFilesPerTrigger)
       .parquet(inputDir)
 
     val writer = stream.writeStream
@@ -63,7 +63,7 @@ object StreamingExtract {
           // crash-between-write-and-checkpoint-commit can be deduped
           // downstream (keep max batchId per url, or filter on the
           // committed batch ids from _metrics)
-          val results = Pipeline.run(batch, oversizeBudgetBytes)
+          val results = Pipeline.run(batch)
             .withColumn("batchId", lit(batchId))
           // lineage event row per micro-batch (events-table analog),
           // counted in the data write by an `Observation` and appended to
@@ -145,11 +145,11 @@ object StreamingExtract {
   /** Event-time windowed roll-up with a watermark — the streaming form of
     * the daily-stats aggregation (`local_queue.py:222-229`): one row per
     * (day window, status) with doc and byte counts, late data beyond the
-    * watermark dropped. Demonstrates watermark + windowed agg over the
-    * extraction results stream. */
-  def dailyStats(results: DataFrame, watermark: String = "1 hour"): DataFrame = {
+    * one-hour watermark dropped. Demonstrates watermark + windowed agg
+    * over the extraction results stream. */
+  def dailyStats(results: DataFrame): DataFrame = {
     results
-      .withWatermark("warcTs", watermark)
+      .withWatermark("warcTs", "1 hour")
       .groupBy(window(col("warcTs"), "1 day").as("day"), col("status"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("sizeBytes")).as("total_bytes"))

@@ -7,7 +7,7 @@ import graft.ops.Multimodal.{MediaMeta, MediaRow}
 
 /** REAL audio parsing via the JDK's javax.sound.sampled (WAV headers +
   * PCM level stats), pinned against an independently hand-rolled RIFF
-  * writer; plus the codegen mime-column parity with sniffMime. */
+  * writer. */
 class AudioSpec extends AnyFunSuite {
 
   private val spark = SparkTestBase.spark
@@ -91,29 +91,5 @@ class AudioSpec extends AnyFunSuite {
     assert(Multimodal.sniffMime("RIFFxxxxWAVExxxx".getBytes) == "audio/wav")
     assert(Multimodal.sniffMime("FORMxxxxAIFFxxxx".getBytes) == "audio/aiff")
     assert(Multimodal.sniffMime(".sndxxxxxxxxxxxx".getBytes) == "audio/basic")
-  }
-
-  test("mimeColumn (codegen when/substring chain) matches sniffMime on every branch") {
-    val payloads: Seq[Array[Byte]] = Seq(
-      Array[Byte](0x89.toByte, 'P', 'N', 'G', 0, 0, 0, 0, 0, 0, 0, 0),
-      Array(0xFF.toByte, 0xD8.toByte) ++ Array.fill[Byte](10)(0),
-      "GIF89a......".getBytes,
-      "RIFFxxxxWEBP".getBytes,
-      "RIFFxxxxWAVE".getBytes,
-      "FORMxxxxAIFF".getBytes,
-      ".sndxxxxxxxx".getBytes,
-      "xxxxftypisom".getBytes,
-      "plain text payload".getBytes,
-      Array[Byte](1, 2, 3), // < 12 bytes
-      null)
-    val df = payloads.zipWithIndex
-      .map { case (p, i) => (i.toLong, p) }.toDF("id", "payload")
-    val got = df.select(org.apache.spark.sql.functions.col("id"),
-        Multimodal.mimeColumn(org.apache.spark.sql.functions.col("payload")).as("mime"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    payloads.zipWithIndex.foreach { case (p, i) =>
-      assert(got(i.toLong) == Multimodal.sniffMime(p),
-        s"branch $i: column=${got(i.toLong)} fn=${Multimodal.sniffMime(p)}")
-    }
   }
 }

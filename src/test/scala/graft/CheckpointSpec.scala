@@ -149,6 +149,13 @@ class CheckpointSpec extends AnyFunSuite {
     assert(Checkpoint.completedBuckets(out).isEmpty)
   }
 
+  test("metrics after a run over an empty input has 0 rows") {
+    val out = freshDir()
+    val empty = CorpusGen.generate(spark, N, partitions = 8).toDF().filter(lit(false))
+    Checkpoint.runResumable(empty, out, Buckets, runId = "r1")
+    assert(Checkpoint.metrics(spark, out).count() == 0L)
+  }
+
   test("_metrics gets one file per run") {
     val out = freshDir()
     val corpus = CorpusGen.generate(spark, N, partitions = 8).toDF()

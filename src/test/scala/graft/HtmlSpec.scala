@@ -57,7 +57,7 @@ class HtmlSpec extends AnyFunSuite {
         |<div><a href="/x">link one here</a> <a href="/y">link two here</a> <a href="/z">link three here</a></div>
         |<footer>Copyright 2026 Example Media All rights reserved</footer>
         |</body></html>""".stripMargin
-    val blocks = Boilerplate.mainContentBlocks(html)
+    val blocks = Boilerplate.segment(DomBuilder.parse(html)).filter(_.isContent)
     val texts = blocks.map(_.text)
     assert(texts.exists(_.startsWith("This is the main content")))
     assert(texts.exists(_.startsWith("Second content paragraph")))

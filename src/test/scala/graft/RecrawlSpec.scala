@@ -14,11 +14,10 @@ class RecrawlSpec extends AnyFunSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  private def run(rows: Seq[(String, Timestamp, String)],
-                  minSec: Long = 3600L, maxSec: Long = 604800L) = {
+  private def run(rows: Seq[(String, Timestamp, String)]) = {
     import spark.implicits._
     Recrawl.schedule(rows.toDF("url", "ts", "payload"), "url", "ts",
-        "payload", minSec, maxSec)
+        "payload")
       .as[(String, Long, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4, r._5, r._6))).toMap
   }
